@@ -1,8 +1,7 @@
 package graft
 
+import graft.ScaleHarness.{report, secs, timed}
 import graft.queries.Similarity
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the stored-IVF ANN serving path
@@ -54,39 +53,20 @@ object AnnScale {
   private final val PqCodes = 16
   private final val Shortlist = 20
 
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1,16,64")
-      .split(",").map(_.trim.toInt).toSeq
     // every closed form (self-copy dominance counts, kept_k == kept_1)
     // derives from the k=1 run — without it the dedup invariant would
     // be vacuously true, so refuse to run blind
-    require(reps.headOption.contains(1),
-      s"SPARK_GRAFT_REPS must start with 1 (closed-form baselines), got " +
-        reps.mkString(","))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
-    import graft.functions.Vectors.{dot, l2norm}
+    val reps = ScaleHarness.reps("1,16,64")
+    val spark = ScaleHarness.session()
+    import graft.functions.Vectors.l2norm
 
     val maxRep = reps.max.toLong.max(1L)
     val base = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .repartition(spark.sparkContext.defaultParallelism)
       .localCheckpoint()
-    val n0 = base.count()
 
     // k=1 survivor set of the COSINE dedup verb — the closed-form
     // baseline every later k must reproduce exactly
@@ -191,24 +171,12 @@ object AnnScale {
 
       // brute-force truth over the SAME replicated corpus, same rounding
       // and tie-break — recall is measured against it per query
-      val bw = Window.partitionBy("qid")
-        .orderBy(col("cosine").desc, col("cid"))
-      val truth = corpus
-        .select(col("vec_id").as("cid"), col("v").as("cv"),
-          col("nrm").as("cnrm"))
-        .crossJoin(broadcast(queries))
-        .where(col("qid") =!= col("cid"))
-        .withColumn("cosine",
-          round(dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")), 6))
-        .withColumn("rank", row_number().over(bw))
-        .where(col("rank") <= TopK)
-        .select(col("qid"), col("cid")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val got = byQ.view.mapValues(_.map(_._2).toSet).toMap
-      val recall = truth.map { case (q, want) =>
-        got.getOrElse(q, Set.empty).intersect(want).size.toDouble / want.size
-      }.sum / truth.size
+      val truth = ScaleHarness.cosineTopK(corpus.select(col("vec_id").as("cid"),
+          col("v").as("cv"), col("nrm").as("cnrm")),
+        queries, TopK, col("qid") =!= col("cid"))
+      val recall = ScaleHarness.recall(
+        ScaleHarness.neighborSets(rows.map(r => (r._1, r._2))),
+        ScaleHarness.neighborSets(truth.map(r => (r._1, r._2))))
 
       // ---- NEARDEDUP METHOD COSINE on the replicated corpus: the
       // verb's exact-first collapse must make dedup cost ~flat in copy
@@ -228,7 +196,7 @@ object AnnScale {
       // vacuously (reps are require'd to start at 1 above)
       val dedupOk = k == 1 || kept1.exists(_ == keptK)
 
-      val checks = Map(
+      val checks = Seq(
         "ranks_contiguous" -> ranksOk,
         "self_copy_dominance" -> selfDom,
         "index_complete" -> (idxRows == n),
@@ -243,39 +211,22 @@ object AnnScale {
         // candidate, so the exact rerank must equal the full-vector
         // probe row-for-row (both served from the PQ artifact)
         "adc_saturating_equals_full" -> (adcSat == fullOnPq))
-      val ok = checks.values.forall(identity)
-      println(
-        s"""{"metric":"ann_scale","k":$k,"corpus":$n,"cells":$cells,""" +
-        s""""nprobe":$NProbe,"answered_cells":$answeredCells,""" +
-        s""""recall":${math.round(recall * 10000) / 10000.0},""" +
-        s""""kept":${keptK.size},""" +
-        s""""sec":{"build":${math.round(buildS * 1000) / 1000.0},""" +
-        buildRepeatS.fold("")(r =>
-          s""""build_repeat":${math.round(r * 1000) / 1000.0},""") +
-        s""""probe":${math.round(probeS * 1000) / 1000.0},""" +
-        s""""build_pq":${math.round(buildPqS * 1000) / 1000.0},""" +
-        s""""probe_adc":${math.round(probeAdcS * 1000) / 1000.0},""" +
-        s""""dedup":${math.round(dedupS * 1000) / 1000.0}},""" +
-        s""""adc_rows":${adcRows.size},""" +
-        s""""codes_bytes":$codesBytes,"index_bytes":$indexBytes,""" +
-        s""""invariants_ok":$ok,""" +
-        s""""failed":[${checks.filterNot(_._2).keys.map("\"" + _ + "\"")
-          .mkString(",")}]}""")
-      require(ok, s"ann scale invariants failed at k=$k: " +
-        checks.filterNot(_._2).keys.mkString(", "))
-      (k, buildS, probeS, dedupS, probeAdcS)
+      report("ann_scale", Seq("k" -> k, "corpus" -> n, "cells" -> cells,
+        "nprobe" -> NProbe, "answered_cells" -> answeredCells,
+        "recall" -> math.round(recall * 10000) / 10000.0,
+        "kept" -> keptK.size,
+        "sec" -> secs(Seq("build" -> buildS) ++
+          buildRepeatS.map("build_repeat" -> _) ++
+          Seq("probe" -> probeS, "build_pq" -> buildPqS,
+            "probe_adc" -> probeAdcS, "dedup" -> dedupS): _*),
+        "adc_rows" -> adcRows.size, "codes_bytes" -> codesBytes,
+        "index_bytes" -> indexBytes),
+        checks)
+      (k, Seq("build" -> buildS, "probe" -> probeS, "dedup" -> dedupS,
+        "probe_adc" -> probeAdcS))
     }
 
-    for {
-      (1, b1, p1, d1, a1) <- lines.find(_._1 == 1).toSeq
-      (k, bk, pk, dk, ak) <- lines if k > 1
-    } {
-      def exp(t: Double, t0: Double) =
-        math.round(math.log(t / t0) / math.log(k.toDouble) * 1000) / 1000.0
-      println(s"""{"metric":"ann_scale_exponent","k":$k,""" +
-        s""""build":${exp(bk, b1)},"probe":${exp(pk, p1)},""" +
-        s""""dedup":${exp(dk, d1)},"probe_adc":${exp(ak, a1)}}""")
-    }
+    ScaleHarness.exponents("ann_scale", lines)
     spark.stop()
   }
 }

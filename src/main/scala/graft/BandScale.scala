@@ -1,8 +1,8 @@
 package graft
 
+import graft.ScaleHarness.{report, secs, timed}
 import graft.functions.Text
 import graft.transforms.NearDup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the STORED banded text index
@@ -65,28 +65,10 @@ object BandScale {
   private final val NumBands = 64
   private final val RowsPerBand = 2
 
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1,4,16")
-      .split(",").map(_.trim.toInt).toSeq
-    require(reps.headOption.contains(1),
-      s"SPARK_GRAFT_REPS must start with 1 (matched-set baseline), got " +
-        reps.mkString(","))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
+    val reps = ScaleHarness.reps("1,4,16")
+    val spark = ScaleHarness.session()
 
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -177,11 +159,17 @@ object BandScale {
       val shRawBytes = dirBytes(s"$rawDir/shingles")
       org.apache.commons.io.FileUtils.deleteQuietly(rawDir.toFile)
 
-      val (matchedK, probeS) = timed {
-        NearDup.minhashCrossMatchesStored(spark, base, shB,
-            Threshold, NumPerm, NumBands, RowsPerBand)
-          .collect().map(_.getLong(0)).toSet
-      }
+      def probe(): Set[Long] = NearDup.minhashCrossMatchesStored(spark, base,
+          shB, Threshold, NumPerm, NumBands, RowsPerBand)
+        .collect().map(_.getLong(0)).toSet
+      // the bands store's entry count as INDEX DESCRIBE reports it
+      def describeBands(): Long = graft.transforms.TransformParser
+        .parse(s"INDEX DESCRIBE '$base'")
+        .build(Map.empty, shB)
+        .collect()
+        .find(_.getAs[String]("store") == "bands")
+        .map(_.getAs[Long]("entries")).getOrElse(-1L)
+      val (matchedK, probeS) = timed(probe())
       // the routing the probe just used, recomputed for the report
       // (outside the timed section — it is a diagnostic, not probe
       // work): distinct band-store cells of the batch's keys
@@ -210,11 +198,7 @@ object BandScale {
       val (_, appendS) = timed {
         NearDup.bandStoreAppend(base, appendSh)
       }
-      val (matchedAfter, reprobeS) = timed {
-        NearDup.minhashCrossMatchesStored(spark, base, shB,
-            Threshold, NumPerm, NumBands, RowsPerBand)
-          .collect().map(_.getLong(0)).toSet
-      }
+      val (matchedAfter, reprobeS) = timed(probe())
       val allBatchIds = shB.select(col("id")).collect()
         .map(_.getLong(0)).toSet
 
@@ -233,11 +217,7 @@ object BandScale {
       val (_, deleteS) = timed {
         NearDup.bandStoreDelete(base, appendSh)
       }
-      val (matchedAfterDelete, reprobe2S) = timed {
-        NearDup.minhashCrossMatchesStored(spark, base, shB,
-            Threshold, NumPerm, NumBands, RowsPerBand)
-          .collect().map(_.getLong(0)).toSet
-      }
+      val (matchedAfterDelete, reprobe2S) = timed(probe())
 
       // DESCRIBE leg (round 12): the statement recommended as the
       // skew/COMPACT monitor must carry its own price tag at the cell
@@ -248,14 +228,7 @@ object BandScale {
       // figure doubles as a closed-form check: after append-then-delete
       // of the same content, the bands store must hold EXACTLY the
       // original row count.
-      val (descEntries, describeS) = timed {
-        graft.transforms.TransformParser
-          .parse(s"INDEX DESCRIBE '$base'")
-          .build(Map.empty, shB)
-          .collect()
-          .find(_.getAs[String]("store") == "bands")
-          .map(_.getAs[Long]("entries")).getOrElse(-1L)
-      }
+      val (descEntries, describeS) = timed(describeBands())
 
       // stats-served DESCRIBE leg (round 13): every mutating writer
       // maintains <dir>/stats, and a routine DESCRIBE then reads one
@@ -268,19 +241,10 @@ object BandScale {
       // round-12 curve demands. Refresh stats once (pricing what a
       // build statement absorbs) and measure the served path,
       // closed-form checked against the same truth.
-      val (_, statsRefreshS) = timed {
-        graft.transforms.IndexMaintenance.Stats.write(spark, base,
-          graft.transforms.IndexMaintenance.storesFor("lsh_text",
-            "BandScale"))
-      }
-      val (descEntries2, describeStatsS) = timed {
-        graft.transforms.TransformParser
-          .parse(s"INDEX DESCRIBE '$base'")
-          .build(Map.empty, shB)
-          .collect()
-          .find(_.getAs[String]("store") == "bands")
-          .map(_.getAs[Long]("entries")).getOrElse(-1L)
-      }
+      val im = graft.transforms.IndexMaintenance
+      val stores = im.storesFor("lsh_text", "BandScale")
+      val (_, statsRefreshS) = timed(im.Stats.write(spark, base, stores))
+      val (descEntries2, describeStatsS) = timed(describeBands())
 
       // incremental stats leg (round 14): every append's stats
       // epilogue recomputes only the batch's TOUCHED cells and merges
@@ -295,8 +259,6 @@ object BandScale {
       // the cap). Closed-form: the merged stats equal the full
       // recompute row-for-row — on the SAME artifact state,
       // immediately after the merge.
-      val im = graft.transforms.IndexMaintenance
-      val stores = im.storesFor("lsh_text", "BandScale")
       val prior = im.Stats.read(spark, base).get
       // invalidate BEFORE the append so the wrapper's own internal
       // merge is skipped (no prior present): the timed merge below is
@@ -340,7 +302,7 @@ object BandScale {
       NearDup.bandStoreDelete(base, appendSh) // restore the artifact
       mf.invalidate(spark.sparkContext.hadoopConfiguration, base)
 
-      val checks = Map(
+      val checks = Seq(
         "manifest_merge_closed_form" -> (incremental == fullSnapshot),
         "stats_merge_closed_form" -> (merged == full),
         // exists, not forall: a missing baseline must FAIL (reps are
@@ -353,51 +315,30 @@ object BandScale {
         "delete_closed_form" -> (matchedAfterDelete == matchedK),
         "describe_entries" -> (descEntries == idxRows),
         "describe_stats_entries" -> (descEntries2 == idxRows))
-      val ok = checks.values.forall(identity)
-      println(
-        s"""{"metric":"band_scale","k":$k,"corpus":$n,"index_rows":$idxRows,""" +
-        s""""cells":$cells,"cells_rule":"IndexGeometry.storeCells",""" +
-        s""""probe_cells":$probeCells,""" +
-        s""""matched":${matchedK.size},""" +
-        s""""matched_after_append":${matchedAfter.size},""" +
-        s""""matched_after_delete":${matchedAfterDelete.size},""" +
-        s""""sec":{"build":${math.round(buildS * 1000) / 1000.0},""" +
-        s""""probe":${math.round(probeS * 1000) / 1000.0},""" +
-        s""""append":${math.round(appendS * 1000) / 1000.0},""" +
-        s""""reprobe":${math.round(reprobeS * 1000) / 1000.0},""" +
-        s""""delete":${math.round(deleteS * 1000) / 1000.0},""" +
-        s""""reprobe2":${math.round(reprobe2S * 1000) / 1000.0},""" +
-        s""""describe":${math.round(describeS * 1000) / 1000.0},""" +
-        s""""stats_refresh":${math.round(statsRefreshS * 1000) / 1000.0},""" +
-        s""""describe_stats":${math.round(describeStatsS * 1000) / 1000.0},""" +
-        s""""stats_merge":${math.round(statsMergeS * 1000) / 1000.0},""" +
-        s""""stats_full":${math.round(statsFullS * 1000) / 1000.0},""" +
-        s""""manifest_publish":${math.round(publishS * 1000) / 1000.0},""" +
-        s""""manifest_republish":${
-          math.round(republishS * 1000) / 1000.0},""" +
-        s""""manifest_publish2":${
-          math.round(publish2S * 1000) / 1000.0}},""" +
-        s""""touched_cells":$touchedCells,""" +
-        s""""artifact_bytes":{"bands":$bandsBytes,""" +
-        s""""shingles_hashed":$shHashedBytes,""" +
-        s""""shingles_raw":$shRawBytes},""" +
-        s""""invariants_ok":$ok,""" +
-        s""""failed":[${checks.filterNot(_._2).keys.map("\"" + _ + "\"")
-          .mkString(",")}]}""")
-      require(ok, s"band scale invariants failed at k=$k: " +
-        checks.filterNot(_._2).keys.mkString(", "))
-      (k, buildS, probeS)
+      report("band_scale", Seq("k" -> k, "corpus" -> n,
+        "index_rows" -> idxRows, "cells" -> cells,
+        "cells_rule" -> "IndexGeometry.storeCells",
+        "probe_cells" -> probeCells, "matched" -> matchedK.size,
+        "matched_after_append" -> matchedAfter.size,
+        "matched_after_delete" -> matchedAfterDelete.size,
+        "sec" -> secs("build" -> buildS, "probe" -> probeS,
+          "append" -> appendS, "reprobe" -> reprobeS, "delete" -> deleteS,
+          "reprobe2" -> reprobe2S, "describe" -> describeS,
+          "stats_refresh" -> statsRefreshS,
+          "describe_stats" -> describeStatsS,
+          "stats_merge" -> statsMergeS, "stats_full" -> statsFullS,
+          "manifest_publish" -> publishS,
+          "manifest_republish" -> republishS,
+          "manifest_publish2" -> publish2S),
+        "touched_cells" -> touchedCells,
+        "artifact_bytes" -> Map("bands" -> bandsBytes,
+          "shingles_hashed" -> shHashedBytes,
+          "shingles_raw" -> shRawBytes)),
+        checks)
+      (k, Seq("build" -> buildS, "probe" -> probeS))
     }
 
-    for {
-      (1, b1, p1) <- lines.find(_._1 == 1).toSeq
-      (k, bk, pk) <- lines if k > 1
-    } {
-      def exp(t: Double, t0: Double) =
-        math.round(math.log(t / t0) / math.log(k.toDouble) * 1000) / 1000.0
-      println(s"""{"metric":"band_scale_exponent","k":$k,""" +
-        s""""build":${exp(bk, b1)},"probe":${exp(pk, p1)}}""")
-    }
+    ScaleHarness.exponents("band_scale", lines)
     spark.stop()
   }
 }

@@ -1,25 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Explicit-cell-path reads (stored-index probes, incremental
-      // stats recounts) pass ≤ `cells` directories per read; above this
-      // threshold Spark schedules a distributed listing JOB (~0.2 s of
-      // fixed latency at microbatch scale) where a driver-side listing
-      // is microseconds per directory on local/HDFS namenodes. 1024
-      // covers every artifact geometry the gates build; deployments
-      // with larger cell counts on object stores should lower it (or
-      // commit a manifest, which skips listing entirely).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // SPARK_GRAFT_ONLY="q32,q39" restricts to matching queries (local
     // profiling aid; the driver never sets it).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -80,16 +65,20 @@ object Bench {
     // of an identical plan, so the recorded artifact tracks the code, not
     // the box's load average at driver time.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
-    // Per pass: (name, seconds, succeeded). A pass where the query threw
+    // One observation: (seconds, succeeded). A pass where the query threw
     // must NOT contribute its (fast) failure time to the min — that would
     // record a failing query as a good benchmark number.
+    def observe(fn: (SparkSession, String) => DataFrame): (Double, Boolean) = {
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).count(); true }
+        catch { case _: Throwable => false }
+      ((System.nanoTime() - t0) / 1e9, ok)
+    }
     val timed = (1 to passes).map { _ =>
       selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        (name, (System.nanoTime() - t0) / 1e9, ok)
+        val (sec, ok) = observe(fn)
+        (name, sec, ok)
       }
     }
     val byPass = timed.map(_.map(t => t._1 -> (t._2, t._3)).toMap)
@@ -104,13 +93,7 @@ object Bench {
     val retried = selected.filter { case (name, _) =>
       val good = byPass.map(_.apply(name)).filter(_._2).map(_._1)
       good.size >= 2 && good.max > good.min * spreadFactor
-    }.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      name -> ((System.nanoTime() - t0) / 1e9, ok)
-    }.toMap
+    }.map { case (name, fn) => name -> observe(fn) }.toMap
     val results = selected.map(_._1).map { name =>
       val obs = byPass.map(_.apply(name)) ++ retried.get(name)
       val good = obs.filter(_._2).map(_._1)
@@ -118,15 +101,12 @@ object Bench {
       // instead of a plausible-looking duration
       name -> (if (good.nonEmpty) good.min else -1.0)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     // A failed query records -1 per-query; summing that into the headline
     // would make a FAILING run look FASTER than a clean one to a harness
     // scraping only the total. Any failure → total = -1 (unmistakably
     // broken) + the failed names, never a plausible-looking number.
     val failed = results.filter(_._2 < 0).map(_._1)
     val total = if (failed.nonEmpty) -1.0 else results.map(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Family split so cross-round totals compare like-for-like: the
     // stored-index LIFECYCLE gates are multi-engine-run chains by
     // construction (q159 alone is four full engine invocations) and the
@@ -143,28 +123,6 @@ object Bench {
     val lifecycleN = results.count(r => isLifecycle(r._1))
     val lifecycleSec = famTotal(isLifecycle)
     val querySec = famTotal(n => !isLifecycle(n))
-    // Contention honesty: record every pass's per-query time (not just
-    // the min) so a reader can separate a code regression (slow in ALL
-    // passes) from co-tenant load (slow in one) without a re-run. A
-    // failed observation records -1 in its pass.
-    val passesRaw = timed.map { pass =>
-      pass.map { case (n, sec, ok) =>
-        s"\"" + n + "\":" + (if (ok) sec else -1.0)
-      }.mkString("{", ",", "}")
-    }.mkString("[", ",", "]")
-    // retried queries' third (solo) observation, for the same audit
-    val retriedRaw = retried.toSeq.sortBy(_._1).map { case (n, (sec, ok)) =>
-      s"\"" + n + "\":" + (if (ok) sec else -1.0)
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","passes":$passes,"agg":"min","lifecycle_sec":$lifecycleSec,"lifecycle_n":$lifecycleN,"query_sec":$querySec,"query_n":${results.size - lifecycleN},"passes_raw":$passesRaw,"spread_retries":$retriedRaw}"""
-    println(json)
-    // Belt-and-braces for harnesses that scrape logged (prefixed) stdout:
-    // leave the same line in a well-known file too.
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_LATEST.json"),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
     // Durable PER-RUN full map (round 16): BENCH_LATEST.json is
     // overwritten by every invocation, so when the driver benches twice
     // (32-core then low-core scaling run) the second run clobbers the
@@ -172,20 +130,46 @@ object Bench {
     // exactly how PERF_r15's per_query/scaling blocks came up empty.
     // A core-count-derived sibling name keeps the two runs' maps
     // side by side; same JSON line, no contract change.
-    val runFile = s"BENCH_LATEST_c$cpus.json"
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(runFile),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val runFile = s"BENCH_LATEST_c${GraftSession.cpus}.json"
+    val headline = ListMap("metric" -> "total", "value" -> total,
+      "unit" -> "sec")
+    val families = ListMap("lifecycle_sec" -> lifecycleSec,
+      "lifecycle_n" -> lifecycleN, "query_sec" -> querySec,
+      "query_n" -> (results.size - lifecycleN))
+    // Contention honesty: record every pass's per-query time (not just
+    // the min) so a reader can separate a code regression (slow in ALL
+    // passes) from co-tenant load (slow in one) without a re-run. A
+    // failed observation records -1 in its pass.
+    def observed(sec: Double, ok: Boolean): Double = if (ok) sec else -1.0
+    val passesRaw = timed.map(pass =>
+      ListMap(pass.map { case (n, sec, ok) => n -> observed(sec, ok) }: _*))
+    // retried queries' third (solo) observation, for the same audit
+    val retriedRaw = ListMap(retried.toSeq.sortBy(_._1)
+      .map { case (n, (sec, ok)) => n -> observed(sec, ok) }: _*)
+    val json = Json(headline ++ ListMap("queries" -> ListMap(results: _*),
+      "failed" -> failed, "sf" -> sfDir, "passes" -> passes, "agg" -> "min")
+      ++ families ++ ListMap("passes_raw" -> passesRaw,
+        "spread_retries" -> retriedRaw))
+    println(json)
+    // Belt-and-braces for harnesses that scrape logged (prefixed) stdout:
+    // leave the same line in a well-known file too, and in the per-run
+    // file above. A SPARK_GRAFT_ONLY subset run only prints: its partial
+    // map must not overwrite the full-run maps.
+    if (only.isEmpty) Seq("BENCH_LATEST.json", runFile).foreach { f =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(f),
+        (json + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
+    }
     // The full line above has outgrown tail-capture windows (~2 KB):
     // every per-round artifact since the query count passed ~60 records
     // "parsed": null because the window holds only a fragment of it.
     // Print a COMPACT summary LAST — same headline numbers, family
     // split, failure list, and a pointer to the committed full map —
     // so a tail capture always ends with one complete JSON object.
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"agg":"min","queries_n":${results.size},"failed":$failedJson,"lifecycle_sec":$lifecycleSec,"lifecycle_n":$lifecycleN,"query_sec":$querySec,"query_n":${results.size - lifecycleN},"full_map":"BENCH_LATEST.json","full_map_run":"$runFile"}"""
-    println(compact)
+    println(Json(headline ++ ListMap("sf" -> sfDir, "passes" -> passes,
+      "agg" -> "min", "queries_n" -> results.size, "failed" -> failed)
+      ++ families ++ ListMap("full_map" -> "BENCH_LATEST.json",
+        "full_map_run" -> runFile)))
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
+import graft.ScaleHarness.{report, secs, timed}
 import graft.transforms.VecKnn
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the STORED sign-LSH bucket index
@@ -63,35 +63,18 @@ object CosineScale {
     */
   private final val Dims = 64
 
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  /** Deterministic pseudo-random vector for any id: component c =
+    * xxhash64(id, c) mapped to [-1, 1] — a pure column function, so the
+    * "corpus" is reproducible at any k without storing anything.
+    */
+  private[graft] def synthVec(id: org.apache.spark.sql.Column) =
+    transform(sequence(lit(1), lit(Dims)),
+      c => (xxhash64(id, c).cast("double") / lit(Long.MaxValue.toDouble)))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1,4,16")
-      .split(",").map(_.trim.toInt).toSeq
-    require(reps.headOption.contains(1),
-      s"SPARK_GRAFT_REPS must start with 1 (matched-set baseline), got " +
-        reps.mkString(","))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
+    val reps = ScaleHarness.reps("1,4,16")
+    val spark = ScaleHarness.session()
     import graft.functions.Vectors.l2norm
-
-    // deterministic pseudo-random vector for any id: component c =
-    // xxhash64(id, c) mapped to [-1, 1] — a pure column function, so the
-    // "corpus" is reproducible at any k without storing anything
-    def synthVec(id: org.apache.spark.sql.Column) =
-      transform(sequence(lit(1), lit(Dims)),
-        c => (xxhash64(id, c).cast("double") / lit(Long.MaxValue.toDouble)))
 
     val n0 = 2000L
     // base corpus: ids 0..n0-1; batch = 8 re-ingested corpus vectors
@@ -175,10 +158,12 @@ object CosineScale {
       val probeCells = routed.length.toLong
       val bPaths = graft.transforms.NearDup.existingCellPaths(
         spark, s"$base/buckets", "pc", routed)
-      val bucketRowsScanned =
-        if (bPaths.isEmpty) 0L
-        else spark.read.option("basePath", s"$base/buckets")
-          .parquet(bPaths: _*).count()
+      // rows held by the given cell paths of one store
+      def rowsIn(store: String, paths: Seq[String]): Long =
+        if (paths.isEmpty) 0L
+        else spark.read.option("basePath", s"$base/$store")
+          .parquet(paths: _*).count()
+      val bucketRowsScanned = rowsIn("buckets", bPaths)
       // vector-store side: candidate ids route into vectors/ cells
       val cand = spark.read.option("basePath", s"$base/buckets")
         .parquet(bPaths: _*)
@@ -191,49 +176,29 @@ object CosineScale {
         .distinct().collect().map(_.getInt(0)).sorted
       val vPaths = graft.transforms.NearDup.existingCellPaths(
         spark, s"$base/vectors", "sc", vRouted)
-      val vectorRowsScanned =
-        if (vPaths.isEmpty) 0L
-        else spark.read.option("basePath", s"$base/vectors")
-          .parquet(vPaths: _*).count()
+      val vectorRowsScanned = rowsIn("vectors", vPaths)
       if (k == 1) matched1 = Some(matchedK)
 
-      val checks = Map(
+      val checks = Seq(
         "matched_closed_form" -> (k == 1 || matched1.exists(_ == matchedK)),
         "baseline_nonempty" -> matched1.exists(_.nonEmpty),
         "cell_subset" -> (probeCells <= math.min(batchKeys, cells.toLong) &&
           (cells <= batchKeys || probeCells < cells)),
         "knn_rank1_self" -> knnRank1Self)
-      val ok = checks.values.forall(identity)
-      println(
-        s"""{"metric":"cosine_scale","k":$k,"corpus":$n,"bits":$bits,""" +
-        s""""index_rows":$idxRows,"cells":$cells,""" +
-        s""""geometry_rule":"IndexGeometry.cosineBits+storeCells",""" +
-        s""""probe_cells":$probeCells,"vector_cells":${vPaths.length},""" +
-        s""""rows_scanned":{"buckets":$bucketRowsScanned,""" +
-        s""""vectors":$vectorRowsScanned},""" +
-        s""""matched":${matchedK.size},""" +
-        s""""sec":{"build":${math.round(buildS * 1000) / 1000.0},""" +
-        s""""probe":${math.round(probeS * 1000) / 1000.0},""" +
-        s""""knn":${math.round(knnS * 1000) / 1000.0}},""" +
-        s""""knn_rows":${knnRows.size},""" +
-        s""""invariants_ok":$ok,""" +
-        s""""failed":[${checks.filterNot(_._2).keys.map("\"" + _ + "\"")
-          .mkString(",")}]}""")
-      require(ok, s"cosine scale invariants failed at k=$k: " +
-        checks.filterNot(_._2).keys.mkString(", "))
-      (k, buildS, probeS, knnS)
+      report("cosine_scale", Seq("k" -> k, "corpus" -> n, "bits" -> bits,
+        "index_rows" -> idxRows, "cells" -> cells,
+        "geometry_rule" -> "IndexGeometry.cosineBits+storeCells",
+        "probe_cells" -> probeCells, "vector_cells" -> vPaths.length,
+        "rows_scanned" -> Map("buckets" -> bucketRowsScanned,
+          "vectors" -> vectorRowsScanned),
+        "matched" -> matchedK.size,
+        "sec" -> secs("build" -> buildS, "probe" -> probeS, "knn" -> knnS),
+        "knn_rows" -> knnRows.size),
+        checks)
+      (k, Seq("build" -> buildS, "probe" -> probeS, "knn" -> knnS))
     }
 
-    for {
-      (1, b1, p1, kn1) <- lines.find(_._1 == 1).toSeq
-      (k, bk, pk, knk) <- lines if k > 1
-    } {
-      def exp(t: Double, t0: Double) =
-        math.round(math.log(t / t0) / math.log(k.toDouble) * 1000) / 1000.0
-      println(s"""{"metric":"cosine_scale_exponent","k":$k,""" +
-        s""""build":${exp(bk, b1)},"probe":${exp(pk, p1)},""" +
-        s""""knn":${exp(knk, kn1)}}""")
-    }
+    ScaleHarness.exponents("cosine_scale", lines)
     spark.stop()
   }
 }

@@ -1,9 +1,9 @@
 package graft
 
+import graft.ScaleHarness.{report, timed}
 import graft.queries.Similarity
 import graft.transforms.IndexGeometry
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Append-drift harness for the stored-IVF family — turns
@@ -62,32 +62,16 @@ object DriftScale {
   private final val TopK = 5
   private final val Panel = 32
 
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n0 = sys.env.getOrElse("SPARK_GRAFT_N0", "8192").toLong
-    val fracs = sys.env.getOrElse("SPARK_GRAFT_FRACS", "0.1,0.25,0.5")
-      .split(",").map(_.trim.toDouble).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
-    import graft.functions.Vectors.{dot, l2norm}
+    val fracs = ScaleHarness.list("SPARK_GRAFT_FRACS", "0.1,0.25,0.5")(
+      _.toDouble)
+    val spark = ScaleHarness.session()
+    import graft.functions.Vectors.l2norm
 
     // CosineScale's generator: components ~U(−1, 1), a pure function of
     // (id, dim) so every run is deterministic
-    def synthVec(id: org.apache.spark.sql.Column) =
-      transform(sequence(lit(1), lit(Dims)),
-        c => xxhash64(id, c).cast("double") / lit(Long.MaxValue.toDouble))
+    import CosineScale.synthVec
     // the drifted cone: component 1 ≈ 4, the rest ~U(−0.5, 0.5) — unit
     // vectors within ~10° of the first axis, a region the base
     // distribution (isotropic, E‖v‖ ≈ √(Dims/3) ≈ 4.6, any single
@@ -109,14 +93,13 @@ object DriftScale {
     // panels: NEW draws from each distribution (ids disjoint from every
     // corpus id range), so recall measures serving of NEIGHBORS, not
     // self-copy lookup
-    val baseQ = frame(spark.range(20000000L, 20000000L + Panel).toDF("id"),
-        synthVec)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qnrm")).localCheckpoint()
-    val driftQ = frame(spark.range(30000000L, 30000000L + Panel).toDF("id"),
-        driftVec)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qnrm")).localCheckpoint()
+    def panel(from: Long, gen: org.apache.spark.sql.Column
+        => org.apache.spark.sql.Column): DataFrame =
+      frame(spark.range(from, from + Panel).toDF("id"), gen)
+        .select(col("vec_id").as("qid"), col("v").as("qv"),
+          col("nrm").as("qnrm")).localCheckpoint()
+    val baseQ = panel(20000000L, synthVec)
+    val driftQ = panel(30000000L, driftVec)
 
     for (f <- fracs) {
       val m = math.ceil(n0 * f).toLong
@@ -142,34 +125,17 @@ object DriftScale {
 
       // one brute-force truth over the union per panel (AnnScale's
       // rounding + tie-break)
-      def truthOf(queries: DataFrame): Map[Long, Set[Long]] = {
-        val bw = Window.partitionBy("qid")
-          .orderBy(col("cosine").desc, col("cid"))
-        union
-          .select(col("vec_id").as("cid"), col("v").as("cv"),
-            col("nrm").as("cnrm"))
-          .crossJoin(broadcast(queries))
-          .withColumn("cosine",
-            round(dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")),
-              6))
-          .withColumn("rank", row_number().over(bw))
-          .where(col("rank") <= TopK)
-          .select(col("qid"), col("cid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      }
+      def truthOf(queries: DataFrame): Map[Long, Set[Long]] =
+        ScaleHarness.neighborSets(ScaleHarness.cosineTopK(
+          union.select(col("vec_id").as("cid"), col("v").as("cv"),
+            col("nrm").as("cnrm")),
+          queries, TopK).map(r => (r._1, r._2)))
       def recallOf(dir: String, queries: DataFrame,
-          truth: Map[Long, Set[Long]]): Double = {
-        val got = Similarity
+          truth: Map[Long, Set[Long]]): Double = ScaleHarness.recall(
+        ScaleHarness.neighborSets(Similarity
           .ivfProbeStored(spark, dir, queries, NProbe, TopK)
           .select(col("qid"), col("neighbor_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        truth.map { case (q, want) =>
-          got.getOrElse(q, Set.empty).intersect(want).size.toDouble /
-            want.size
-        }.sum / truth.size
-      }
+          .map(r => (r.getLong(0), r.getLong(1)))), truth)
       // the drift caveat in its load-bearing currency: rows the panel's
       // probes scan = Σ over (query, probed cell) of the cell's row
       // count (per-cluster counts come from footers; routing reuses the
@@ -213,27 +179,25 @@ object DriftScale {
         s"drift advisory must fire on the frozen artifact at f=$f " +
           s"(skew=$skewFrozen, advisory=$advisory)")
       def r4(d: Double) = math.round(d * 10000) / 10000.0
-      println(
-        s"""{"metric":"drift_scale","n0":$n0,"append_frac":$f,""" +
-        s""""appended":$m,"cells_frozen":${IndexGeometry.ivfCells(n0)},""" +
-        s""""cells_fresh":${IndexGeometry.ivfCells(n0 + m)},""" +
-        s""""panel":$Panel,"nprobe":$NProbe,""" +
-        s""""scanned_base_frozen":${scannedOf(frozenDir.toString, baseQ)},""" +
-        s""""scanned_base_fresh":${scannedOf(freshDir.toString, baseQ)},""" +
-        s""""scanned_drift_frozen":${
-          scannedOf(frozenDir.toString, driftQ)},""" +
-        s""""scanned_drift_fresh":${scannedOf(freshDir.toString, driftQ)},""" +
-        s""""skew_frozen":$skewFrozen,"skew_fresh":$skewFresh,""" +
-        s""""advisory_frozen":$advisory,""" +
-        s""""append_sec":${r4(appendS)},""" +
-        s""""recall_base_frozen":${r4(recallOf(frozenDir.toString, baseQ,
-          baseTruth))},""" +
-        s""""recall_base_fresh":${r4(recallOf(freshDir.toString, baseQ,
-          baseTruth))},""" +
-        s""""recall_drift_frozen":${r4(recallOf(frozenDir.toString, driftQ,
-          driftTruth))},""" +
-        s""""recall_drift_fresh":${r4(recallOf(freshDir.toString, driftQ,
-          driftTruth))}}""")
+      report("drift_scale", Seq("n0" -> n0, "append_frac" -> f,
+        "appended" -> m, "cells_frozen" -> IndexGeometry.ivfCells(n0),
+        "cells_fresh" -> IndexGeometry.ivfCells(n0 + m),
+        "panel" -> Panel, "nprobe" -> NProbe,
+        "scanned_base_frozen" -> scannedOf(frozenDir.toString, baseQ),
+        "scanned_base_fresh" -> scannedOf(freshDir.toString, baseQ),
+        "scanned_drift_frozen" -> scannedOf(frozenDir.toString, driftQ),
+        "scanned_drift_fresh" -> scannedOf(freshDir.toString, driftQ),
+        "skew_frozen" -> skewFrozen, "skew_fresh" -> skewFresh,
+        "advisory_frozen" -> advisory,
+        "append_sec" -> ScaleHarness.round3(appendS),
+        "recall_base_frozen" ->
+          r4(recallOf(frozenDir.toString, baseQ, baseTruth)),
+        "recall_base_fresh" ->
+          r4(recallOf(freshDir.toString, baseQ, baseTruth)),
+        "recall_drift_frozen" ->
+          r4(recallOf(frozenDir.toString, driftQ, driftTruth)),
+        "recall_drift_fresh" ->
+          r4(recallOf(freshDir.toString, driftQ, driftTruth))))
     }
     spark.stop()
   }

@@ -25,18 +25,7 @@ import java.nio.file.{Files, Paths}
 object Main {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // driver-side listing for explicit-cell-path reads ≤ 1024 dirs —
-      // see Bench.scala's note
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     val code = try run(args.toSeq, spark)
     finally spark.stop()
     if (code != 0) sys.exit(code)

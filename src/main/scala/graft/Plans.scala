@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import java.nio.file.{Files, Paths}
@@ -8,9 +7,12 @@ import java.nio.file.{Files, Paths}
 /** Physical-plan audit dump: writes PLANS.md with `explain("formatted")`
   * output for the flagship queries, so the plan shapes the PlanSpec
   * contracts assert (pushdown, broadcast, partial agg, codegen spans,
-  * no-join window ops) are reviewable without running Spark.
+  * no-join window ops) are reviewable without running Spark. With
+  * `--out DIR --suffix S` it writes one `DIR/<query>_S.txt` per query
+  * instead — the before/after dumps an optimization commits under
+  * `plans/` — for the queries named, or the flagship list.
   *
-  *   SPARK_GRAFT_SF_DIR=… sbt "runMain graft.Plans"
+  *   SPARK_GRAFT_SF_DIR=… sbt "runMain graft.Plans [--out DIR --suffix S] [queries…]"
   */
 object Plans {
 
@@ -103,26 +105,41 @@ object Plans {
   )
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb ++= "# PLANS — physical plans of flagship queries\n\n"
-    sb ++= s"Auto-generated by `graft.Plans` (explain mode: formatted) at $sfDir.\n"
-    sb ++= "Plan-shape contracts are enforced by PlanSpec; this file is the\n"
-    sb ++= "human-readable audit trail.\n"
-    flagship.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb ++= s"\n## $name — $note\n\n```\n"
-      sb ++= df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      sb ++= "```\n"
+    val (out, named) = args.toSeq match {
+      case Seq("--out", dir, "--suffix", suffix, rest @ _*) =>
+        (Some((Paths.get(dir), suffix)), rest)
+      case rest if !rest.exists(_.startsWith("--")) => (None, rest)
+      case _ =>
+        sys.error("usage: graft.Plans [--out DIR --suffix S] [queries…]")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[plans] wrote PLANS.md (${flagship.size} queries)")
+    val queries = if (named.nonEmpty) named else flagship.map(_._1)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = GraftSession()
+    def plan(name: String): String = SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    out match {
+      case Some((dir, suffix)) =>
+        Files.createDirectories(dir)
+        queries.foreach { name =>
+          val file = dir.resolve(s"${name}_$suffix.txt")
+          Files.writeString(file, plan(name))
+          println(s"[plans] wrote $file")
+        }
+      case None =>
+        val notes = flagship.toMap
+        val sb = new StringBuilder
+        sb ++= "# PLANS — physical plans of flagship queries\n\n"
+        sb ++= s"Auto-generated by `graft.Plans` (explain mode: formatted) at $sfDir.\n"
+        sb ++= "Plan-shape contracts are enforced by PlanSpec; this file is the\n"
+        sb ++= "human-readable audit trail.\n"
+        queries.foreach { name =>
+          sb ++= s"\n## $name — ${notes.getOrElse(name, "")}\n\n```\n"
+          sb ++= plan(name)
+          sb ++= "```\n"
+        }
+        Files.writeString(Paths.get("PLANS.md"), sb.toString)
+        println(s"[plans] wrote PLANS.md (${queries.size} queries)")
+    }
     spark.stop()
   }
 }

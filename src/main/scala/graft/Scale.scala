@@ -1,7 +1,8 @@
 package graft
 
+import graft.ScaleHarness.{report, secs, timed, timedIf}
 import graft.transforms.NearDup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the dedup pipeline: runs
@@ -48,19 +49,8 @@ object Scale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1,4,16")
-      .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM the same way Bench does, so k=1 isn't charged session
-    // startup and the exponent compares like with like
-    try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
+    val reps = ScaleHarness.reps("1,4,16", baseline = false)
+    val spark = ScaleHarness.session()
 
     val maxRep = reps.max.toLong.max(1L)
     val base = Tables.load(spark, sfDir, "documents")
@@ -73,8 +63,10 @@ object Scale {
     val pairs1 = NearDup.pairs(sh1, Threshold)
       .select("doc_a", "doc_b").localCheckpoint()
     val e1 = pairs1.count()
-    val p1 = pairs1.select(explode(array(col("doc_a"), col("doc_b"))))
-      .distinct().count()
+    // distinct docs appearing in a pair set
+    def docsIn(pairs: DataFrame): Long =
+      pairs.select(explode(array(col("doc_a"), col("doc_b")))).distinct().count()
+    val p1 = docsIn(pairs1)
     val c1 = NearDup.clusters(pairs1)
       .select(col("cluster_id")).distinct().count()
     val texts1 = base.select(col("text")).distinct().count()
@@ -105,8 +97,7 @@ object Scale {
     val pairs08 = NearDup.pairs(sh1, LshThreshold)
       .select("doc_a", "doc_b").localCheckpoint()
     val e08 = pairs08.count()
-    val p08 = pairs08.select(explode(array(col("doc_a"), col("doc_b"))))
-      .distinct().count()
+    val p08 = docsIn(pairs08)
     val c08 = NearDup.clusters(pairs08)
       .select(col("cluster_id")).distinct().count()
     // Above this k the Θ(k²)-work exact stages (inverted-index pairs,
@@ -122,7 +113,7 @@ object Scale {
     // for 50 query vectors over the base embeddings. At k, every neighbor
     // expands to its k copies in id order (same-original families
     // excluded), so the replicated top-5 is THIS list expanded+truncated.
-    import graft.functions.Vectors.{dot, l2norm}
+    import graft.functions.Vectors.l2norm
     val par = spark.sparkContext.defaultParallelism
     val NumQ = 50L
     val TopK = 5
@@ -131,38 +122,23 @@ object Scale {
       .repartition(par)
       .localCheckpoint()
     def knn(embKeyed: DataFrame, queryPred: org.apache.spark.sql.Column,
-        familyExcl: Boolean, maxR: Long): Array[(Long, Long, Double)] = {
-      import org.apache.spark.sql.expressions.Window
+        familyExcl: Boolean, maxR: Long): Seq[(Long, Long, Double)] = {
       val en = embKeyed.withColumn("nrm", l2norm(col("v")))
-      val q = en.where(queryPred).toDF("qid", "qv", "qnrm")
-      val c = en.toDF("cid", "cv", "cnrm")
       val excl =
         if (familyExcl) (col("qid") / maxR).cast("long") =!=
           (col("cid") / maxR).cast("long")
         else col("qid") =!= col("cid")
-      val w = Window.partitionBy("qid")
-        .orderBy(col("cosine").desc, col("cid"))
-      c.join(broadcast(q), excl)
-        .withColumn("cosine",
-          round(dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")), 6))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= TopK)
-        .select(col("qid"), col("cid"), col("cosine"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      ScaleHarness.cosineTopK(en.toDF("cid", "cv", "cnrm"),
+        en.where(queryPred).toDF("qid", "qv", "qnrm"), TopK, excl)
     }
+    // each query's (neighbor, cosine) list in rank order
+    def ranked(rows: Seq[(Long, Long, Double)]) =
+      rows.groupBy(_._1).map { case (q, rs) =>
+        q -> rs.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3))
+      }
     // same-original exclusion at k=1 is plain self-exclusion, so this IS
     // q34's ranking restricted to 50 queries
-    val knn1 = knn(emb0, col("vec_id") < NumQ, familyExcl = false, 1L)
-      .groupBy(_._1).map { case (q, rows) =>
-        q -> rows.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3)).toSeq
-      }
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val knn1 = ranked(knn(emb0, col("vec_id") < NumQ, familyExcl = false, 1L))
 
     // replication copies n_chars unchanged, so the pack-balance bound's
     // max-doc term is k-invariant — computed once from the base corpus
@@ -198,18 +174,12 @@ object Scale {
       val (sh, tShingle) = timed {
         NearDup.shingled(docs, "doc_id", "text").localCheckpoint()
       }
-      val (pairsOpt, tPairs) =
-        if (full) {
-          val (p, t) = timed {
-            NearDup.pairs(sh, Threshold)
-              .select("doc_a", "doc_b").localCheckpoint()
-          }
-          (Some(p), t)
-        } else (None, -1.0)
+      val (pairsOpt, tPairs) = timedIf(full) {
+        NearDup.pairs(sh, Threshold)
+          .select("doc_a", "doc_b").localCheckpoint()
+      }
       val nPairs = pairsOpt.fold(-1L)(_.count())
-      val docsInPairs = pairsOpt.fold(-1L)(
-        _.select(explode(array(col("doc_a"), col("doc_b"))))
-          .distinct().count())
+      val docsInPairs = pairsOpt.fold(-1L)(docsIn)
 
       val (lshPairs, tLsh) = timed {
         NearDup.minhashPairs(sh, LshThreshold)
@@ -223,15 +193,13 @@ object Scale {
       // verification after. MUST be a subset of the exact answer (no
       // false positives by construction); recall is corpus-dependent and
       // REPORTED, not assumed.
-      val (nCapped, cappedSpurious, tCapped) = pairsOpt match {
-        case Some(p) =>
-          val (capped, t) = timed {
-            NearDup.pairsCapped(sh, Threshold, 4L * k)
-              .select("doc_a", "doc_b").localCheckpoint()
-          }
-          (capped.count(), capped.except(p).count(), t)
-        case None => (-1L, 0L, -1.0)
+      val (cappedOpt, tCapped) = timedIf(full) {
+        NearDup.pairsCapped(sh, Threshold, 4L * k)
+          .select("doc_a", "doc_b").localCheckpoint()
       }
+      val nCapped = cappedOpt.fold(-1L)(_.count())
+      val cappedSpurious = cappedOpt.zip(pairsOpt)
+        .fold(0L) { case (capped, p) => capped.except(p).count() }
 
       val (labels, tCc) = timed {
         NearDup.clusters(pairsOpt.getOrElse(lshPairs))
@@ -246,24 +214,22 @@ object Scale {
       // The near-dup stages must now cost the same at every k (their
       // input is the constant survivor set); the pair set must equal the
       // k=1 survivor pairs with ids scaled by maxRep — exactly.
-      val (efDiff, efCount, tEfPairs) =
-        if (!full) (0L, e1d, -1.0)
-        else {
-          val (pairsEf, t) = timed {
-            val surv = docs.groupBy(col("text"))
-              .agg(min(col("doc_id")).as("doc_id"))
-              .select(col("doc_id"), col("text"))
-              .repartition(spark.sparkContext.defaultParallelism)
-            NearDup.pairs(
-                NearDup.shingled(surv, "doc_id", "text"), Threshold)
-              .select("doc_a", "doc_b").localCheckpoint()
-          }
-          val mapped = pairsD1.select(
-            (col("doc_a") * maxRep).as("doc_a"),
-            (col("doc_b") * maxRep).as("doc_b"))
-          (pairsEf.except(mapped).count() + mapped.except(pairsEf).count(),
-            pairsEf.count(), t)
-        }
+      val (pairsEfOpt, tEfPairs) = timedIf(full) {
+        val surv = docs.groupBy(col("text"))
+          .agg(min(col("doc_id")).as("doc_id"))
+          .select(col("doc_id"), col("text"))
+          .repartition(spark.sparkContext.defaultParallelism)
+        NearDup.pairs(
+            NearDup.shingled(surv, "doc_id", "text"), Threshold)
+          .select("doc_a", "doc_b").localCheckpoint()
+      }
+      val (efDiff, efCount) = pairsEfOpt.fold((0L, e1d)) { pairsEf =>
+        val mapped = pairsD1.select(
+          (col("doc_a") * maxRep).as("doc_a"),
+          (col("doc_b") * maxRep).as("doc_b"))
+        (pairsEf.except(mapped).count() + mapped.except(pairsEf).count(),
+          pairsEf.count())
+      }
 
       // ---- kNN under replication: queries are copy 0 of the k=1 query
       // panel; every base neighbor expands to its k copies in id order.
@@ -276,9 +242,7 @@ object Scale {
           col("vec_id") % maxRep === 0 && col("vec_id") < NumQ * maxRep,
           familyExcl = true, maxRep)
       }
-      val knnGot = knnK.groupBy(_._1).map { case (q, rows) =>
-        q -> rows.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3)).toSeq
-      }
+      val knnGot = ranked(knnK)
       val knnWant = knn1.map { case (q, lst) =>
         (q * maxRep) -> lst.flatMap { case (nid, cos) =>
           (0L until k.toLong).map(r => (nid * maxRep + r, cos))
@@ -320,7 +284,7 @@ object Scale {
       val expClusters =
         if (full) c1 + (if (k == 1) 0L else s1 - p1)
         else c08 + (if (k == 1) 0L else s1 - p08)
-      val checks = Map(
+      val checks = Seq(
         "distinct_texts" -> (distinctTexts == texts1),
         "dup_groups_divisible" -> (badGroups == 0L),
         "pair_count" -> (!full || nPairs == expPairs),
@@ -334,40 +298,24 @@ object Scale {
         "knn_top5_expansion" -> knnOk,
         "capped_subset_of_exact" -> (cappedSpurious == 0L),
         "pack_balance" -> (nWriters == 8 && packSpread <= 8L * maxDoc))
-      val ok = checks.values.forall(identity)
-      val line =
-        s"""{"metric":"scale","k":$k,"mode":"${
-          if (full) "full" else "lsh_only"}","docs":$n,"pairs":$nPairs,""" +
-        s""""lsh_pairs":$nLsh,"capped_pairs":$nCapped,""" +
-        // Double.toString, not f"%.4f": the f-interpolator is
-        // default-locale-dependent (a comma decimal separator would
-        // break the JSON line)
-        s""""capped_recall":${
-          if (nPairs <= 0) -1.0
-          else math.round(nCapped.toDouble / nPairs * 10000) / 10000.0},""" +
-        s""""clusters":$nClusters,"keeps":$nKeeps,""" +
-        s""""pack_spread":$packSpread,""" +
-        s""""sec":{"exact":$tExact,"shingle":$tShingle,"pairs":$tPairs,""" +
-        s""""lsh":$tLsh,""" +
-        s""""cc":$tCc,"canonical":$tCanon,"exact_first_pairs":$tEfPairs,""" +
-        s""""knn":$tKnn,"capped_pairs":$tCapped,"pack":$tPack},""" +
-        s""""invariants_ok":$ok,""" +
-        s""""failed":[${checks.filterNot(_._2).keys.map("\"" + _ + "\"")
-          .mkString(",")}]}"""
-      println(line)
-      require(ok, s"scale invariants failed at k=$k: " +
-        checks.filterNot(_._2).keys.mkString(", "))
+      report("scale", Seq("k" -> k,
+        "mode" -> (if (full) "full" else "lsh_only"), "docs" -> n,
+        "pairs" -> nPairs, "lsh_pairs" -> nLsh, "capped_pairs" -> nCapped,
+        "capped_recall" -> (if (nPairs <= 0) -1.0
+          else math.round(nCapped.toDouble / nPairs * 10000) / 10000.0),
+        "clusters" -> nClusters, "keeps" -> nKeeps,
+        "pack_spread" -> packSpread,
+        "sec" -> secs("exact" -> tExact, "shingle" -> tShingle,
+          "pairs" -> tPairs, "lsh" -> tLsh, "cc" -> tCc,
+          "canonical" -> tCanon, "exact_first_pairs" -> tEfPairs,
+          "knn" -> tKnn, "capped_pairs" -> tCapped, "pack" -> tPack)),
+        checks)
       // pipeline total: the pair stage that actually drove CC
-      (k, tShingle + (if (full) tPairs else tLsh) + tCc + tCanon)
+      (k, Seq("exponent" ->
+        (tShingle + (if (full) tPairs else tLsh) + tCc + tCanon)))
     }
 
-    val t1 = lines.find(_._1 == 1).map(_._2)
-    for ((k, t) <- lines; t0 <- t1 if k > 1) {
-      // locale-independent formatting (see capped_recall note)
-      val exp = math.round(math.log(t / t0) / math.log(k.toDouble) * 1000) /
-        1000.0
-      println(s"""{"metric":"scale_exponent","k":$k,"exponent":$exp}""")
-    }
+    ScaleHarness.exponents("scale", lines)
     spark.stop()
   }
 }

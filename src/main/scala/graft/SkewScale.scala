@@ -1,7 +1,8 @@
 package graft
 
+import graft.ScaleHarness.{report, secs, timed, timedIf}
 import graft.transforms.NearDup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Band-skew harness for the banded (MinHash-LSH) dedup pipeline.
@@ -51,25 +52,20 @@ object SkewScale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ms = sys.env.getOrElse("SPARK_GRAFT_SKEW_MS", "500,2000,16000")
-      .split(",").map(_.trim.toInt).toSeq
+    val ms = ScaleHarness.list("SPARK_GRAFT_SKEW_MS", "500,2000,16000")(
+      _.toInt)
     val fullMax = sys.env.getOrElse("SPARK_GRAFT_SKEW_FULL_MAX", "2000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
+    val spark = ScaleHarness.session()
     val par = spark.sparkContext.defaultParallelism
 
     val base = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
       .localCheckpoint()
-    val famBase = Option(base.agg(max(col("doc_id"))).head().get(0))
-      .fold(0L)(_.asInstanceOf[Long]) + 1000000L
+    // family ids start well above every corpus id
+    def idsAbove(df: DataFrame, id: String): Long =
+      Option(df.agg(max(col(id))).head().get(0))
+        .fold(0L)(_.asInstanceOf[Long]) + 1000000L
+    val famBase = idsAbove(base, "doc_id")
 
     // base-corpus 0.8-threshold ground truth (once)
     val sh0 = NearDup.shingled(base, "doc_id", "text").localCheckpoint()
@@ -79,12 +75,6 @@ object SkewScale {
     val baseLabels = NearDup.clusters(basePairs)
       .toDF("doc_id", "cluster_id").localCheckpoint()
     val c08 = baseLabels.select(col("cluster_id")).distinct().count()
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // 30 synthetic tokens no real doc contains → the family's shingles
     // are disjoint from the corpus vocabulary: it can only pair within
@@ -106,16 +96,13 @@ object SkewScale {
       }
 
       val full = m <= fullMax
-      val (fullPairsN, fullLabels, tFull) =
-        if (!full) (-1L, None, -1.0)
-        else {
-          val (p, t) = timed {
-            NearDup.minhashPairs(sh, Threshold)
-              .select("doc_a", "doc_b").localCheckpoint()
-          }
-          (p.count(), Some(NearDup.clusters(p)
-            .toDF("doc_id", "cluster_id").localCheckpoint()), t)
-        }
+      val (fullPairs, tFull) = timedIf(full) {
+        NearDup.minhashPairs(sh, Threshold)
+          .select("doc_a", "doc_b").localCheckpoint()
+      }
+      val fullPairsN = fullPairs.fold(-1L)(_.count())
+      val fullLabels = fullPairs.map(p => NearDup.clusters(p)
+        .toDF("doc_id", "cluster_id").localCheckpoint())
 
       val (starPairs, tStar) = timed {
         NearDup.minhashPairsStar(sh, Threshold, StarAbove)
@@ -137,7 +124,7 @@ object SkewScale {
       val fullDiff = fullLabels.fold(0L)(fl =>
         starLabels.exceptAll(fl).count() + fl.exceptAll(starLabels).count())
 
-      val checks = Map(
+      val checks = Seq(
         "hh_reports_skew" -> (hotBuckets >= 16L),
         "full_family_complete" ->
           (!full || fullPairsN == e08 + m.toLong * (m - 1) / 2),
@@ -146,17 +133,12 @@ object SkewScale {
         "star_cluster_count" -> (starClusters == c08 + 1),
         "star_base_partition_identical" -> (baseDiff == 0L),
         "star_equals_full_partition" -> (fullDiff == 0L))
-      val ok = checks.values.forall(identity)
-      println(
-        s"""{"metric":"skew","m":$m,"full":$full,"hot_buckets":$hotBuckets,""" +
-        s""""full_pairs":$fullPairsN,"star_pairs":$starPairsN,""" +
-        s""""clusters":$starClusters,""" +
-        s""""sec":{"hh":$tHh,"full_pairs":$tFull,"star_pairs":$tStar},""" +
-        s""""invariants_ok":$ok,""" +
-        s""""failed":[${checks.filterNot(_._2).keys.map("\"" + _ + "\"")
-          .mkString(",")}]}""")
-      require(ok, s"skew invariants failed at m=$m: " +
-        checks.filterNot(_._2).keys.mkString(", "))
+      report("skew", Seq("m" -> m, "full" -> full,
+        "hot_buckets" -> hotBuckets, "full_pairs" -> fullPairsN,
+        "star_pairs" -> starPairsN, "clusters" -> starClusters,
+        "sec" -> secs("hh" -> tHh, "full_pairs" -> tFull,
+          "star_pairs" -> tStar)),
+        checks)
     }
 
     // ================= vector-side family (NEARDEDUP METHOD COSINE) ====
@@ -176,8 +158,7 @@ object SkewScale {
     val vecBase = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .repartition(par).localCheckpoint()
-    val vFamBase = Option(vecBase.agg(max(col("vec_id"))).head().get(0))
-      .fold(0L)(_.asInstanceOf[Long]) + 1000000L
+    val vFamBase = idsAbove(vecBase, "vec_id")
     val uArr = (0 until 64).map(j => (((j * 37) % 13) - 6) / 6.0)
     // the D suffix matters: bare decimal literals parse as DECIMAL(p,s)
     // and would silently turn every cosine into decimal arithmetic
@@ -223,32 +204,23 @@ object SkewScale {
       }
 
       val full = m <= fullMax
-      val (fullKept, tFull) =
-        if (!full) (Set.empty[Long], -1.0)
-        else timed { cosineKept(corpus, cosVerb) }
+      val (fullKeptOpt, tFull) = timedIf(full)(cosineKept(corpus, cosVerb))
+      val fullKept = fullKeptOpt.getOrElse(Set.empty[Long])
 
       val (starKept, tStar) = timed {
         cosineKept(corpus, s"$cosVerb STAR ABOVE $StarAbove")
       }
 
       val wantKept = vecKept0 + vFamBase
-      val checks = Map(
+      val checks = Seq(
         "vec_hh_reports_skew" -> (hotBuckets >= 16L),
         "vec_full_closed_form" -> (!full || fullKept == wantKept),
         "vec_star_closed_form" -> (starKept == wantKept),
         "vec_star_equals_full" -> (!full || starKept == fullKept))
-      val ok = checks.values.forall(identity)
-      println(
-        s"""{"metric":"skew_cosine","m":$m,"full":$full,""" +
-        s""""hot_buckets":$hotBuckets,"kept":${starKept.size},""" +
-        s""""sec":{"hh":${math.round(tHh * 1000) / 1000.0},""" +
-        s""""full":${math.round(tFull * 1000) / 1000.0},""" +
-        s""""star":${math.round(tStar * 1000) / 1000.0}},""" +
-        s""""invariants_ok":$ok,""" +
-        s""""failed":[${checks.filterNot(_._2).keys.map("\"" + _ + "\"")
-          .mkString(",")}]}""")
-      require(ok, s"cosine skew invariants failed at m=$m: " +
-        checks.filterNot(_._2).keys.mkString(", "))
+      report("skew_cosine", Seq("m" -> m, "full" -> full,
+        "hot_buckets" -> hotBuckets, "kept" -> starKept.size,
+        "sec" -> secs("hh" -> tHh, "full" -> tFull, "star" -> tStar)),
+        checks)
     }
     spark.stop()
   }

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Explicit-cell-path reads (stored-index probes, incremental
-      // stats recounts) pass ≤ `cells` directories per read; above this
-      // threshold Spark schedules a distributed listing JOB (~0.2 s of
-      // fixed latency at microbatch scale) where a driver-side listing
-      // is microseconds per directory on local/HDFS namenodes. 1024
-      // covers every artifact geometry the gates build; deployments
-      // with larger cell counts on object stores should lower it (or
-      // commit a manifest, which skips listing entirely).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q74,q75 → verify just those queries (and dump just
     // their oracle SQL) for fast targeted iteration; driver leaves it unset.
@@ -38,21 +20,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json(SparkEntry.oracleSql.filter(kv => selected(kv._1))))
     spark.stop()
   }
 }

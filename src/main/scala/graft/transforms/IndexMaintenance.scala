@@ -61,31 +61,41 @@ private[graft] object IndexMaintenance {
     * background — a subsequent writer (e.g. a foreachBatch retry of the
     * same append) could then acquire the lock and interleave with it,
     * breaking the mechanically-held single-writer contract. Both legs
-    * are awaited to completion (Try), then the first failure rethrows.
+    * are awaited to completion (Try), then the first failure rethrows,
+    * carrying the second leg's failure (if any) as a suppressed
+    * exception.
     *
     * Each leg also runs under the CALLER's SparkContext local
     * properties (job group/description/scheduler pool): the global
     * pool's threads inherit local properties only at thread-creation
     * time and are reused, so without the explicit copy a leg's jobs
     * could carry a stale job group — and a future cancelJobGroup or
-    * per-statement pool would silently miss them.
+    * per-statement pool would silently miss them. For the same reason
+    * the pooled thread's own values are restored when the leg ends, so
+    * the next job it runs for anyone else does not carry this caller's.
     */
   private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.Try
+    import scala.util.{Failure, Try}
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
       "spark.job.interruptOnCancel", "spark.scheduler.pool")
     val props = propKeys.map(k => k -> sc.getLocalProperty(k))
     def withProps[T](body: => T): T = {
+      val own = propKeys.map(k => k -> sc.getLocalProperty(k))
       props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      body
+      try body
+      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
     val fa = Future(blocking(withProps(a)))
     val fb = Future(blocking(withProps(b)))
     val ra = Try(Await.result(fa, scala.concurrent.duration.Duration.Inf))
     val rb = Try(Await.result(fb, scala.concurrent.duration.Duration.Inf))
+    (ra, rb) match {
+      case (Failure(ea), Failure(eb)) if ea ne eb => ea.addSuppressed(eb)
+      case _ => ()
+    }
     (ra.get, rb.get)
   }
 
