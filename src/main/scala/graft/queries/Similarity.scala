@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.transforms.MetaParquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -371,7 +372,6 @@ object Similarity {
       supersOpt.foreach(_.write.mode("overwrite").parquet(s"$base/supers"))
     }
     val spark = e.sparkSession
-    import spark.implicits._
     pq match {
       case Some((pm, pk)) =>
         // PQ codes ride the SAME cell layout as the full vectors, so the
@@ -404,14 +404,15 @@ object Similarity {
             cb.coalesce(1).write.mode("overwrite")
               .parquet(s"$base/codebook")
           })
-        Seq(("ivf_vec", cells, derived.mkString(","), pm, subDim, pk))
-          .toDF("kind", "cells", "derived", "pq_m", "pq_subdim", "pq_codes")
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
+        MetaParquet.write(spark, s"$base/meta", MetaParquet.record(
+          "kind" -> "ivf_vec", "cells" -> cells,
+          "derived" -> derived.mkString(","), "pq_m" -> pm,
+          "pq_subdim" -> subDim, "pq_codes" -> pk))
       case None =>
         writeIndexSide()
-        Seq(("ivf_vec", cells, derived.mkString(",")))
-          .toDF("kind", "cells", "derived")
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
+        MetaParquet.write(spark, s"$base/meta", MetaParquet.record(
+          "kind" -> "ivf_vec", "cells" -> cells,
+          "derived" -> derived.mkString(",")))
     }
   }
 
@@ -451,7 +452,7 @@ object Similarity {
       graft.transforms.IndexMaintenance.withMaintLock(
         e.sparkSession, base, "APPEND") {
     val s = e.sparkSession
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     graft.transforms.NearDup.requireKind(meta, base, "ivf_vec",
       "INDEX … APPEND")
     graft.transforms.IndexMaintenance.Stats.mergeForWriter(
@@ -569,7 +570,7 @@ object Similarity {
       graft.transforms.IndexMaintenance.withMaintLock(
         e.sparkSession, base, "DELETE") {
     val s = e.sparkSession
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     graft.transforms.NearDup.requireKind(meta, base, "ivf_vec",
       "INDEX … DELETE")
     graft.transforms.IndexMaintenance.Stats.mergeForWriter(
@@ -684,7 +685,7 @@ object Similarity {
   private[graft] def ivfProbeStoredAdc(s: SparkSession, base: String,
       queries: DataFrame, nprobe: Int = StoredProbes,
       shortlist: Int = StoredPqShortlist, topK: Int = K): DataFrame = {
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     graft.transforms.NearDup.requireKind(meta, base, "ivf_vec",
       "KNN … STORED ADC")
     require(meta.schema.fieldNames.contains("pq_m"),
@@ -702,7 +703,7 @@ object Similarity {
       val paths = graft.transforms.NearDup.existingCellPaths(
         s, s"$base/$store", "cluster", cells)
       if (paths.isEmpty) s.read.parquet(s"$base/$store").where(lit(false))
-      else s.read.option("basePath", s"$base/$store").parquet(paths: _*)
+      else MetaParquet.readCells(s, s"$base/$store", "cluster", paths)
     }
     val cb = s.read.parquet(s"$base/codebook")
     val qsubs = queries.select(col("qid"), posexplode(expr(
@@ -984,7 +985,7 @@ object Similarity {
       val mfs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (mfs.exists(mp))
         graft.transforms.NearDup.requireKind(
-          s.read.parquet(s"$base/meta").head(), base, "ivf_vec",
+          MetaParquet.readRow(s, s"$base/meta"), base, "ivf_vec",
           "KNN … STORED")
       true
     })
@@ -1008,8 +1009,7 @@ object Similarity {
       s, s"$base/index", "cluster", cells)
     val idx = (if (cellPaths.isEmpty)
         s.read.parquet(s"$base/index").where(lit(false))
-      else s.read.option("basePath", s"$base/index")
-        .parquet(cellPaths: _*))
+      else MetaParquet.readCells(s, s"$base/index", "cluster", cellPaths))
       .select(col("vec_id").as("cid"), col("v").as("cv"),
         col("nrm").as("cnrm"), col("cluster"))
     val w2 = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))

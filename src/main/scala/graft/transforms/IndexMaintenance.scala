@@ -1,6 +1,6 @@
 package graft.transforms
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,7 +13,7 @@ import VerbSupport.{intOption, spreadForCpu, CosineDefaults}
   * single-writer maintenance lock, the atomic-rename storage contract,
   * and the advisory [[Warnings]] channel the stored-artifact probes
   * share. (The round-13 move also changed DESCRIBE's recompute body —
-  * see [[Stats.storeCells]] for the file-count semantics.) The
+  * see [[Stats.recount]] for the file-count semantics.) The
   * reference has no stored indexes; this whole surface is the
   * 100 TB-scale extension documented in SURVEY.md §8.
   */
@@ -202,6 +202,12 @@ private[graft] object IndexMaintenance {
     * footer-order pass for its own summary row, instead of once per
     * DESCRIBE.
     *
+    * Cost: reading and writing `<dir>/stats` is driver-side
+    * ([[MetaParquet]] — no Spark job), so a served DESCRIBE runs no job
+    * at all and a mutation's stats epilogue runs exactly ONE: the
+    * [[recount]] over every store's touched (or, for a full refresh,
+    * all) cells.
+    *
     * Honesty protocol: the Scala-API writers (bandStoreRows /
     * typoStoreRows / cosineStoreRows / ivfStore* — the streaming
     * ingestion hot path, where a per-batch full recount would break
@@ -217,107 +223,107 @@ private[graft] object IndexMaintenance {
     */
   private[graft] object Stats {
 
-    /** (cell, files, rows) per present cell of `<dir>/<sub>` — ONE
-      * footer-only Spark job per store: the scan projects only the
-      * partition column (row counts come from parquet row-group
-      * metadata, never data pages) and per-cell FILE counts ride the
-      * same scan as countDistinct(input_file_name()) — scan metadata,
-      * not a driver-side enumeration. This is the round-12 negative
-      * result applied once more: the distributed footer pass beat
-      * driver-side parallel footer reads (617 vs 280 s at the
+    /** (cell, files, rows) per present cell of each store in `stores`,
+      * in ONE Spark job: the DESCRIBE fallback/VERIFY cost body, shared
+      * with the stats refresh so the two paths can never disagree.
+      * `cells` None recounts every cell (the store roots are read);
+      * Some(touched) recounts only each store's listed cells, read as
+      * EXPLICIT cell paths (the probes' partition-pruning idiom — never
+      * a listing of the whole store), the ∝-touched-cells body of the
+      * round-14 incremental refresh. Every store maps to its rows —
+      * empty when absent, without data files, or without a touched
+      * cell present (a cell fully deleted by the statement contributes
+      * no rows, which is exactly its post-statement truth).
+      *
+      * The scan reads ONLY the cell column, with that schema given (no
+      * schema-inference job): row counts come from parquet row-group
+      * metadata, never data pages. The union of the stores' scans is
+      * one narrow job whose partitions each emit (store, cell, file,
+      * rows) from the scan's own input_file_name; the driver folds
+      * files as DISTINCT files and rows as a sum. This is the round-12
+      * negative result applied once more: the distributed footer pass
+      * beat driver-side parallel footer reads (617 vs 280 s at the
       * 32 768-cell point), and round 13 removes the remaining
       * driver-side RECURSIVE LISTING the same way (on a local fs that
       * listing shell-execs a permission probe per file; on an object
-      * store it is a round-trip storm). This IS the DESCRIBE
-      * fallback/VERIFY cost body, shared with the stats refresh so the
-      * two paths can never disagree. Empty when the store is absent or
-      * holds no data files (hidden/staged paths are skipped by the
-      * reader exactly as the old listing skipped them). File counts
-      * are FILES WITH ≥ 1 ROW (input_file_name only surfaces for files
-      * that yield rows) — a zero-row data file, which the pre-round-13
-      * recursive listing counted, is invisible here. That is the
-      * semantics DESCRIBE documents: such files carry no entries and
-      * no probe cost; only COMPACT's own dirty-cell listing, which
-      * must see every physical file, still lists directories.
+      * store it is a round-trip storm). Hidden/staged paths are skipped
+      * by the reader. File counts are FILES WITH ≥ 1 ROW
+      * (input_file_name only surfaces for files that yield rows) — a
+      * zero-row data file is invisible here. That is the semantics
+      * DESCRIBE documents: such files carry no entries and no probe
+      * cost; only COMPACT's own dirty-cell listing, which must see
+      * every physical file, still lists directories.
       */
-    def storeCells(spark: org.apache.spark.sql.SparkSession,
-        dir: String, sub: String, cellCol: String)
-        : Seq[(Int, Long, Long)] = {
+    def recount(spark: org.apache.spark.sql.SparkSession, dir: String,
+        stores: Seq[(String, String)],
+        cells: Option[Map[String, Seq[Int]]] = None)
+        : Map[String, Seq[(Int, Long, Long)]] = {
       import org.apache.hadoop.fs.Path
-      val live = new Path(s"$dir/$sub")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(live)) return Seq.empty
-      try cellAgg(spark.read.parquet(s"$dir/$sub"), cellCol)
-      catch {
-        // a store root whose every cell was deleted has no data files
-        // and no inferable schema — that IS the empty store. The
-        // catch is NARROW on purpose: swallowing any analysis error
-        // would zero the stats of a live store
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-              e.getMessage.contains("Unable to infer schema") =>
-          Seq.empty
+      val fs = new Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val scans = stores.zipWithIndex.flatMap { case ((sub, cellCol), i) =>
+        val root = s"$dir/$sub"
+        val paths = cells match {
+          case None =>
+            if (fs.exists(new Path(root))) Seq(root) else Seq.empty
+          case Some(t) =>
+            val want = t.getOrElse(sub, Seq.empty).distinct.sorted
+            if (want.isEmpty) Seq.empty
+            else NearDup.existingCellPaths(spark, root, cellCol, want.toArray)
+        }
+        if (paths.isEmpty) None
+        else Some(spark.read
+          .schema(new StructType().add(cellCol, IntegerType))
+          .option("basePath", root).parquet(paths: _*)
+          .select(lit(i).as("s"), col(cellCol).as("c"),
+            input_file_name().as("f")))
       }
+      val perFile =
+        if (scans.isEmpty) Array.empty[(Int, Int, String, Long)]
+        else scans.reduce(_ union _).queryExecution.toRdd
+          .mapPartitions(fileRuns).collect()
+      stores.zipWithIndex.map { case ((sub, _), i) =>
+        sub -> perFile.toSeq.filter(_._1 == i).groupBy(_._2).toSeq
+          .map { case (cell, runs) => (cell,
+            runs.map(_._3).distinct.size.toLong, runs.map(_._4).sum) }
+          .sortBy(_._1)
+      }.toMap
     }
 
-    /** [[storeCells]] restricted to the given cells, read as EXPLICIT
-      * cell paths (the probes' partition-pruning idiom — never a
-      * listing of the whole store): the cost body of the round-14
-      * incremental refresh, ∝ the touched cells' files. Cells with no
-      * directory (never occupied, or fully deleted by the statement)
-      * contribute no rows — which is exactly their post-statement
-      * truth.
+    /** One recount partition's (store, cell, file, rows): rows of one
+      * file arrive as a run, so only a run's first row copies its file
+      * name (the scan reuses its row buffers).
       */
-    def storeCellsAt(spark: org.apache.spark.sql.SparkSession,
-        dir: String, sub: String, cellCol: String, cells: Seq[Int])
-        : Seq[(Int, Long, Long)] = {
-      val paths = NearDup.existingCellPaths(spark, s"$dir/$sub", cellCol,
-        cells.distinct.sorted.toArray)
-      if (paths.isEmpty) Seq.empty
-      else cellAgg(
-        spark.read.option("basePath", s"$dir/$sub").parquet(paths: _*),
-        cellCol)
+    private def fileRuns(
+        it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+        : Iterator[(Int, Int, String, Long)] = {
+      val out = Seq.newBuilder[(Int, Int, String, Long)]
+      var s = -1
+      var c = 0
+      var f: org.apache.spark.unsafe.types.UTF8String = null
+      var n = 0L
+      it.foreach { r =>
+        if (f != null && r.getInt(0) == s && r.getInt(1) == c &&
+            r.getUTF8String(2) == f) n += 1
+        else {
+          if (f != null) out += ((s, c, f.toString, n))
+          s = r.getInt(0); c = r.getInt(1)
+          f = r.getUTF8String(2).clone(); n = 1L
+        }
+      }
+      if (f != null) out += ((s, c, f.toString, n))
+      out.result().iterator
     }
-
-    /** The ONE per-cell aggregation body of [[storeCells]] /
-      * [[storeCellsAt]] — footer-only row counts, file counts as
-      * countDistinct over the scan's own input_file_name (shared so
-      * the full and incremental paths can never disagree on the
-      * semantics).
-      */
-    private def cellAgg(df: DataFrame, cellCol: String)
-        : Seq[(Int, Long, Long)] =
-      df
-        // input_file_name is per-row scan metadata — project it
-        // BEFORE the aggregate (non-deterministic expressions may
-        // not appear inside aggregate arguments)
-        .select(col(cellCol), input_file_name().as("__f"))
-        .groupBy(col(cellCol))
-        .agg(count(lit(1)).as("rows"),
-          countDistinct(col("__f")).as("files"))
-        .collect()
-        .map(r => (r.getAs[Int](cellCol), r.getAs[Long]("files"),
-          r.getAs[Long]("rows"))).toSeq.sortBy(_._1)
 
     /** Recompute per-cell stats for every store of the artifact and
-      * replace `<dir>/stats`. Returns the computed map so the calling
-      * statement's summary row reuses it instead of re-counting.
+      * replace `<dir>/stats` — one recount job, then a driver-side
+      * write. Returns the computed map so the calling statement's
+      * summary row reuses it instead of re-counting.
       */
     def write(spark: org.apache.spark.sql.SparkSession, dir: String,
         stores: Seq[(String, String)])
         : Map[String, Seq[(Int, Long, Long)]] = {
-      // the per-store jobs are independent Spark actions — run them
-      // concurrently so the statement's refresh wall-clock is the
-      // slowest store, not the sum (2 stores per kind). blocking{}:
-      // each future BLOCKS on Spark job completion, so without the
-      // marker they would pin threads of the CPU-bounded global pool
-      // that concurrent statements on a busy driver share
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val computed = Await.result(
-        Future.sequence(stores.map { case (sub, cellCol) =>
-          Future(blocking { sub -> storeCells(spark, dir, sub, cellCol) })
-        }), scala.concurrent.duration.Duration.Inf).toMap
+      val computed = recount(spark, dir, stores)
       writeRows(spark, dir, computed)
       computed
     }
@@ -353,19 +359,12 @@ private[graft] object IndexMaintenance {
         prior: Map[String, Seq[(Int, Long, Long)]],
         touched: Map[String, Seq[Int]])
         : Map[String, Seq[(Int, Long, Long)]] = {
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val computed = Await.result(
-        Future.sequence(stores.map { case (sub, cellCol) =>
-          Future(blocking {
-            val t = touched.getOrElse(sub, Seq.empty).distinct
-            val tSet = t.toSet
-            val recomputed = storeCellsAt(spark, dir, sub, cellCol, t)
-            val kept = prior.getOrElse(sub, Seq.empty)
-              .filterNot(r => tSet(r._1))
-            sub -> (kept ++ recomputed).sortBy(_._1)
-          })
-        }), scala.concurrent.duration.Duration.Inf).toMap
+      val recomputed = recount(spark, dir, stores, Some(touched))
+      val computed = stores.map { case (sub, _) =>
+        val tSet = touched.getOrElse(sub, Seq.empty).toSet
+        val kept = prior.getOrElse(sub, Seq.empty).filterNot(r => tSet(r._1))
+        sub -> (kept ++ recomputed(sub)).sortBy(_._1)
+      }.toMap
       writeRows(spark, dir, computed)
       computed
     }
@@ -380,12 +379,12 @@ private[graft] object IndexMaintenance {
       * under continuous DIRECT-API ingest — the streaming foreachBatch
       * path (gate q161), previously the one writer whose batches left
       * DESCRIBE on the full-recompute fallback for the whole streaming
-      * window. The epilogue's DATA work (per-cell recount) is ∝ the
-      * batch's routed cells, like the mutation itself — a batch-sized
-      * call never pays an artifact-sized reCOUNT. Two bookkeeping legs
-      * are ∝ cells PRESENT, not cells touched: the prior read (one
-      * driver collect of the stats rows) and [[mergeTouched]]'s
-      * [[writeRows]] (the full stats-file rewrite) — both bounded by
+      * window. The epilogue's DATA work (per-cell recount, one Spark
+      * job) is ∝ the batch's routed cells, like the mutation itself —
+      * a batch-sized call never pays an artifact-sized reCOUNT. Two
+      * bookkeeping legs are ∝ cells PRESENT, not cells touched: the
+      * prior read and [[mergeTouched]]'s [[writeRows]] (the full
+      * stats-file rewrite), both driver-side file I/O — both bounded by
       * the 65 536-cell cap and metadata-row-sized (a few MB at the
       * cap), but a fixed per-statement driver cost that can dominate a
       * 1-row streamed append on a max-cell artifact. With NO prior
@@ -437,15 +436,13 @@ private[graft] object IndexMaintenance {
     private def writeRows(spark: org.apache.spark.sql.SparkSession,
         dir: String, computed: Map[String, Seq[(Int, Long, Long)]])
         : Unit = {
-      import spark.implicits._
       val stage = new org.apache.hadoop.fs.Path(s"$dir/.stats_stage")
       val live = new org.apache.hadoop.fs.Path(s"$dir/stats")
       val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      computed.toSeq
-        .flatMap { case (sub, cs) =>
-          cs.map { case (cell, files, rows) => (sub, cell, files, rows) } }
-        .toDF("store", "cell", "files", "rows")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      MetaParquet.write(spark, stage.toString, StatsSchema,
+        computed.toSeq.flatMap { case (sub, cs) =>
+          cs.map { case (cell, files, rows) => Row(sub, cell, files, rows) }
+        })
       fs.delete(live, true)
       if (!fs.rename(stage, live)) throw new IllegalStateException(
         s"stats refresh: cannot swap $stage into $live — stats are " +
@@ -453,6 +450,15 @@ private[graft] object IndexMaintenance {
           "the next mutating statement rewrites them)")
       ()
     }
+
+    /** `<dir>/stats`'s columns, typed as the former
+      * `Seq[(String, Int, Long, Long)].toDF` typed them.
+      */
+    private val StatsSchema = new StructType()
+      .add("store", StringType)
+      .add("cell", IntegerType, nullable = false)
+      .add("files", LongType, nullable = false)
+      .add("rows", LongType, nullable = false)
 
     /** Drop `<dir>/stats` AND the committed file manifest — the first
       * step of every row-writing mutation step (append row writes,
@@ -500,9 +506,7 @@ private[graft] object IndexMaintenance {
       val p = new org.apache.hadoop.fs.Path(s"$dir/stats")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) return None
-      Some(spark.read.parquet(s"$dir/stats")
-        .select(col("store"), col("cell"), col("files"), col("rows"))
-        .collect()
+      Some(MetaParquet.readRows(spark, s"$dir/stats")
         .map(r => (r.getAs[String]("store"), r.getAs[Int]("cell"),
           r.getAs[Long]("files"), r.getAs[Long]("rows")))
         .groupBy(_._1)
@@ -764,7 +768,7 @@ private[graft] object IndexMaintenance {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$dir/meta"))) throw TransformError(
       s"$what: no stored index at $dir")
-    val metaRow = spark.read.parquet(s"$dir/meta").head()
+    val metaRow = MetaParquet.readRow(spark, s"$dir/meta")
     val kind =
       if (metaRow.schema.fieldNames.contains("kind"))
         metaRow.getAs[String]("kind")
@@ -823,13 +827,14 @@ private[graft] object IndexMaintenance {
     * [[Warnings.persist]] events, e.g. a below-derived-bits cosine
     * probe; the ring a spec asserts dies with the probing process, so
     * the artifact carries its own telemetry). Cost (round 13): a
-    * routine DESCRIBE reads the per-cell counters in `<dir>/stats`
-    * ([[Stats]] — refreshed by every mutating statement as its last
-    * step, invalidated by non-verb mutations) — one small parquet
-    * read regardless of cell count. When stats are absent, or under
-    * `INDEX DESCRIBE '<dir>' VERIFY`, the full recompute runs: ONE
-    * recursive listing per store plus one footer-only Spark
-    * aggregation per store, measured ∝ cells in SCALING.md round 12
+    * routine DESCRIBE reads `meta/` and the per-cell counters in
+    * `<dir>/stats` on the driver ([[MetaParquet]]; [[Stats]] —
+    * refreshed by every mutating statement as its last step,
+    * invalidated by non-verb mutations) — two small file reads
+    * regardless of cell count, and no Spark job. When stats are
+    * absent, or under `INDEX DESCRIBE '<dir>' VERIFY`, the full
+    * recompute runs: ONE footer-only Spark job over every store
+    * ([[Stats.recount]]), measured ∝ cells in SCALING.md round 12
     * (≈ 5 min at half the cell cap on local[32] — the cost the stats
     * path exists to amortize into the mutations, which already pay a
     * footer-order pass for their own summary rows). The per-cell
@@ -915,15 +920,15 @@ private[graft] object IndexMaintenance {
         .filterNot(Set("kind", "cells", "derived"))
         .map(f => s"$f=${metaRow.getAs[Any](f)}")
         .mkString(" ")
-      // Round-12 DESCRIBE cost lesson (SCALING.md): one recursive
-      // listing + one footer-only aggregation per store, measured
-      // ∝ cells (exponent 0.93–0.96) — that body now lives in
-      // Stats.storeCells and runs here only as the FALLBACK/VERIFY
-      // path. The default serves from `<dir>/stats`, the per-cell
-      // counters every mutating statement refreshes as its last step
-      // (and every non-verb mutation invalidates — absent means
-      // recompute, never lie), so a routine DESCRIBE is one small
-      // parquet read regardless of cell count.
+      // Round-12 DESCRIBE cost lesson (SCALING.md): the footer-only
+      // recount is measured ∝ cells (exponent 0.93–0.96) — that body
+      // now lives in Stats.recount (one job over every store) and runs
+      // here only as the FALLBACK/VERIFY path. The default serves from
+      // `<dir>/stats`, the per-cell counters every mutating statement
+      // refreshes as its last step (and every non-verb mutation
+      // invalidates — absent means recompute, never lie), so a routine
+      // DESCRIBE is one small driver-side read regardless of cell
+      // count, and runs no Spark job.
       val statsOpt: Option[Map[String, Seq[(Int, Long, Long)]]] =
         if (verify) None else Stats.read(spark, dir)
       // "did this DESCRIBE answer from <dir>/stats, or pay the full
@@ -941,18 +946,16 @@ private[graft] object IndexMaintenance {
       if (!verify && statsOpt.isEmpty)
         Warnings.emit(
           s"INDEX DESCRIBE '$dir': per-cell stats are absent — this " +
-            "DESCRIBE paid the full footer recompute (one listing + " +
-            "one footer aggregation per store, ∝ cells); run " +
+            "DESCRIBE paid the full footer recompute (one footer " +
+            "recount job over every store, ∝ cells); run " +
             s"INDEX COMPACT '$dir' to rewrite <dir>/stats and restore " +
             "the served path (a no-op rewrite when no cell is dirty)")
-      val rows = stores.flatMap { case (sub, cellCol) =>
+      val perStore = statsOpt.getOrElse(Stats.recount(spark, dir, stores))
+      val rows = stores.flatMap { case (sub, _) =>
         val live = new Path(s"$dir/$sub")
         if (!fs.exists(live)) None
         else {
-          val per: Seq[(Int, Long, Long)] = statsOpt match {
-            case Some(m) => m.getOrElse(sub, Seq.empty)
-            case None => Stats.storeCells(spark, dir, sub, cellCol)
-          }
+          val per = perStore.getOrElse(sub, Seq.empty)
           val filesPerCell = per.map(_._2)
           val rowCounts = per.map(_._3)
           val entries = rowCounts.sum
@@ -1279,12 +1282,10 @@ private[graft] object IndexMaintenance {
                   // derivation, so meta marks bands_rows derived
                   val derivedAfter = (derivedMinusCells :+ "bands_rows")
                     .distinct.mkString(",")
-                  spark.read.parquet(s"$dir/meta")
-                    .withColumn("cells", lit(c))
-                    .withColumn("num_bands", lit(b))
-                    .withColumn("rows_per_band", lit(r))
-                    .withColumn("derived", lit(derivedAfter))
-                    .coalesce(1).write.parquet(s"$stage/meta")
+                  MetaParquet.write(spark, s"$stage/meta",
+                    MetaParquet.updated(metaRow, "cells" -> c,
+                      "num_bands" -> b, "rows_per_band" -> r,
+                      "derived" -> derivedAfter))
                 case None =>
                   spark.read.parquet(s"$dir/bands")
                     .select(col("id"), col("band"), col("bh"))
@@ -1292,16 +1293,15 @@ private[graft] object IndexMaintenance {
                       col("bh")), lit(c.toLong)).cast("int"))
                     .repartition(cellWriteParts(spark, c), col("pc"))
                     .write.partitionBy("pc").parquet(s"$stage/bands")
-                  val metaBase = spark.read.parquet(s"$dir/meta")
-                    .withColumn("cells", lit(c))
+                  val metaBase = MetaParquet.updated(metaRow, "cells" -> c)
                   // a pinned CELLS leaves the derived list; legacy
                   // pre-derived-flag metas are left schema-unchanged
                   // unless the pin demands the column
-                  (if (reCells.isDefined)
-                     metaBase.withColumn("derived",
-                       lit(derivedMinusCells.mkString(",")))
-                   else metaBase)
-                    .coalesce(1).write.parquet(s"$stage/meta")
+                  MetaParquet.write(spark, s"$stage/meta",
+                    if (reCells.isDefined)
+                      MetaParquet.updated(metaBase,
+                        "derived" -> derivedMinusCells.mkString(","))
+                    else metaBase)
               }
               sh.withColumn("sc",
                   pmod(xxhash64(col("id")), lit(c.toLong)).cast("int"))
@@ -1813,7 +1813,7 @@ private[graft] object IndexMaintenance {
           if (!fs.exists(mp)) throw TransformError(
             s"INDEX … $maintWord: no stored index at $dir (build one " +
               "first with INDEX … INTO)")
-          Some(spark.read.parquet(s"$dir/meta").head())
+          Some(MetaParquet.readRow(spark, s"$dir/meta"))
         }
       // cells: meta for maintenance, the user's pin for a fresh build,
       // else DERIVED from the corpus's distinct-entry count (the
@@ -1998,17 +1998,17 @@ private[graft] object IndexMaintenance {
       // stats refresh is the statement's LAST step (under the same
       // lock for maintenance): the summary row's entry count is read
       // from the refreshed per-cell stats instead of a separate full
-      // count. A build pays ONE full footer pass (it rewrote every
-      // cell); APPEND/DELETE ride the API writers' own
+      // count. A build pays ONE full footer recount job (it rewrote
+      // every cell); APPEND/DELETE ride the API writers' own
       // Stats.mergeForWriter epilogue (prior read under this
-      // statement's re-entrant lock, recompute ∝ the batch's routed
-      // cells, merge — one stats body for verb and direct-API
+      // statement's re-entrant lock, one recount job ∝ the batch's
+      // routed cells, merge — one stats body for verb and direct-API
       // callers), so here the refreshed stats are simply READ BACK,
       // falling back to the full pass when they are absent (stats
       // were already absent before the mutation — this statement
-      // self-heals the fast path). The read-back is one small
-      // driver-side parquet read bounded by the 65 536-cell cap — a
-      // deliberate trade against widening every wrapper's public
+      // self-heals the fast path). The read-back is a driver-side
+      // file read (MetaParquet, no Spark job) bounded by the
+      // 65 536-cell cap — it spares widening every wrapper's public
       // return type to carry the merged map out.
       def writeAndCount(): (String, Int, Long) = {
         val (kind, entriesPath, cellCount, _) = writeStores()

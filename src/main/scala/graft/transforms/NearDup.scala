@@ -517,17 +517,15 @@ object NearDup {
     require(cells >= 1, s"bandStoreTo: cells $cells must be >= 1")
     bandStoreRows(base, shC, numPerm, numBands, rowsPerBand, cells,
       hashShingles, org.apache.spark.sql.SaveMode.Overwrite)
-    val spark = shC.sparkSession
-    import spark.implicits._
     // `derived` records which geometry fields came from IndexGeometry's
     // corpus-size derivation rather than a user pin ("" = all pinned) —
     // probes read it to enforce the derivation's threshold contract,
     // and INDEX DESCRIBE surfaces it to operators
-    Seq(("lsh_text", cells, numPerm, numBands, rowsPerBand,
-        if (hashShingles) "xxhash64" else "raw", derived.mkString(",")))
-      .toDF("kind", "cells", "num_perm", "num_bands", "rows_per_band",
-        "shingle_scheme", "derived")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
+    MetaParquet.write(shC.sparkSession, s"$base/meta", MetaParquet.record(
+      "kind" -> "lsh_text", "cells" -> cells, "num_perm" -> numPerm,
+      "num_bands" -> numBands, "rows_per_band" -> rowsPerBand,
+      "shingle_scheme" -> (if (hashShingles) "xxhash64" else "raw"),
+      "derived" -> derived.mkString(",")))
   }
 
   /** Append new docs to an existing [[bandStoreTo]] artifact — the
@@ -565,7 +563,7 @@ object NearDup {
   def bandStoreAppend(base: String, shC: DataFrame)
       : Map[String, Seq[Int]] =
     IndexMaintenance.withMaintLock(shC.sparkSession, base, "APPEND") {
-      val meta = shC.sparkSession.read.parquet(s"$base/meta").head()
+      val meta = MetaParquet.readRow(shC.sparkSession, s"$base/meta")
       requireKind(meta, base, "lsh_text", "INDEX … APPEND")
       val scheme =
         if (meta.schema.fieldNames.contains("shingle_scheme"))
@@ -687,7 +685,7 @@ object NearDup {
       : Map[String, Seq[Int]] =
       IndexMaintenance.withMaintLock(shC.sparkSession, base, "DELETE") {
     val s = shC.sparkSession
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     requireKind(meta, base, "lsh_text", "INDEX … DELETE")
     IndexMaintenance.Stats.mergeForWriter(s, base, "lsh_text") {
     val cells = meta.getAs[Int]("cells")
@@ -864,7 +862,7 @@ object NearDup {
     val stage = new Path(rootPath.getParent,
       s".rewrite_stage_${rootPath.getName}")
     if (fs.exists(stage)) fs.delete(stage, true) // stale from a crash
-    transform(s.read.option("basePath", root).parquet(paths: _*))
+    transform(MetaParquet.readCells(s, root, pcol, paths))
       // parallelism = touched cells (capped — see cellWriteParts): the
       // staging write is per-file-latency-bound like every cell write
       .repartition(IndexMaintenance.cellWriteParts(s, touched.size),
@@ -1049,7 +1047,7 @@ object NearDup {
       base: String, shB: DataFrame, threshold: Double,
       numPerm: Int, numBands: Int, rowsPerBand: Int,
       what: String): DataFrame = {
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     requireKind(meta, base, "lsh_text", what)
     val cells = meta.getAs[Int]("cells")
     for ((want, got, what) <- Seq(
@@ -1107,8 +1105,7 @@ object NearDup {
       col("id").as("doc_b"), lit(0.0).as("jaccard")).limit(0)
     val bandPaths = existingCellPaths(s, s"$base/bands", "pc", probeCells)
     if (bandPaths.isEmpty) return emptyMatches
-    val stored = s.read.option("basePath", s"$base/bands")
-      .parquet(bandPaths: _*)
+    val stored = MetaParquet.readCells(s, s"$base/bands", "pc", bandPaths)
       .select(col("id").as("doc_b"), col("band"), col("bh"))
     // checkpoint: feeds the shingle-cell routing AND the verify join
     val cand = stored.join(broadcast(bb), Seq("band", "bh"))
@@ -1120,8 +1117,7 @@ object NearDup {
       .distinct().collect().map(_.getInt(0)).sorted
     val shPaths = existingCellPaths(s, s"$base/shingles", "sc", shCells)
     if (shPaths.isEmpty) return emptyMatches
-    val shStored = s.read.option("basePath", s"$base/shingles")
-      .parquet(shPaths: _*)
+    val shStored = MetaParquet.readCells(s, s"$base/shingles", "sc", shPaths)
       .select(col("id"), col("shs"))
     verifyPairsAcross(cand, shBVerify, shStored, threshold)
   }
@@ -1195,11 +1191,9 @@ object NearDup {
       cells: Int = BandStoreCells, derived: Seq[String] = Nil): Unit = {
     require(cells >= 1, s"typoStoreTo: cells $cells must be >= 1")
     typoStoreRows(base, reps, cells, org.apache.spark.sql.SaveMode.Overwrite)
-    val spark = reps.sparkSession
-    import spark.implicits._
-    Seq(("typo_text", cells, derived.mkString(",")))
-      .toDF("kind", "cells", "derived")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
+    MetaParquet.write(reps.sparkSession, s"$base/meta", MetaParquet.record(
+      "kind" -> "typo_text", "cells" -> cells,
+      "derived" -> derived.mkString(",")))
   }
 
   /** Append new strings to an existing [[typoStoreTo]] artifact —
@@ -1211,7 +1205,7 @@ object NearDup {
   def typoStoreAppend(base: String, reps: DataFrame)
       : Map[String, Seq[Int]] =
     IndexMaintenance.withMaintLock(reps.sparkSession, base, "APPEND") {
-      val meta = reps.sparkSession.read.parquet(s"$base/meta").head()
+      val meta = MetaParquet.readRow(reps.sparkSession, s"$base/meta")
       requireKind(meta, base, "typo_text", "INDEX … APPEND")
       IndexMaintenance.Stats.mergeForWriter(
         reps.sparkSession, base, "typo_text") {
@@ -1234,7 +1228,7 @@ object NearDup {
       : Map[String, Seq[Int]] =
       IndexMaintenance.withMaintLock(reps.sparkSession, base, "DELETE") {
     val s = reps.sparkSession
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     requireKind(meta, base, "typo_text", "INDEX … DELETE")
     IndexMaintenance.Stats.mergeForWriter(s, base, "typo_text") {
     val cells = meta.getAs[Int]("cells")
@@ -1330,7 +1324,7 @@ object NearDup {
     */
   def typoCrossMatchesStored(s: org.apache.spark.sql.SparkSession,
       base: String, bReps: DataFrame): DataFrame = {
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     requireKind(meta, base, "typo_text", "NEARDEDUP METHOD TYPO AGAINST STORED")
     val cells = meta.getAs[Int]("cells")
     val br = bReps.select(col("id"), col("txt")).localCheckpoint(false)
@@ -1344,8 +1338,7 @@ object NearDup {
     def emptyMatches = br.select(col("id").as("b_id")).limit(0)
     val vPaths = existingCellPaths(s, s"$base/variants", "pc", probeCells)
     if (vPaths.isEmpty) return emptyMatches
-    val stored = s.read.option("basePath", s"$base/variants")
-      .parquet(vPaths: _*)
+    val stored = MetaParquet.readCells(s, s"$base/variants", "pc", vPaths)
       .select(col("id").as("c_id"), col("vh"))
     // checkpoint: feeds the string-cell routing AND the verify join
     val cand = stored.join(broadcast(bv), Seq("vh"))
@@ -1357,8 +1350,7 @@ object NearDup {
       .distinct().collect().map(_.getInt(0)).sorted
     val sPaths = existingCellPaths(s, s"$base/strings", "sc", sCells)
     if (sPaths.isEmpty) return emptyMatches
-    val cStr = s.read.option("basePath", s"$base/strings")
-      .parquet(sPaths: _*)
+    val cStr = MetaParquet.readCells(s, s"$base/strings", "sc", sPaths)
       .select(col("id").as("c_id"), col("txt").as("tc"))
     cand
       .join(br.select(col("id").as("b_id"), col("txt").as("tb")), "b_id")

@@ -315,14 +315,12 @@ object VecKnn {
     val dims = probeDims(e, "INDEX METHOD COSINE")
     cosineStoreRows(base, e, tables, bits, cells, dims,
       org.apache.spark.sql.SaveMode.Overwrite)
-    val spark = e.sparkSession
-    import spark.implicits._
     // `derived` names the IndexGeometry-derived fields ("" = all
     // pinned); a derived `bits` carries the dedup-grade threshold
     // contract that stored probes enforce with a warning
-    Seq(("cosine_vec", cells, tables, bits, dims, derived.mkString(",")))
-      .toDF("kind", "cells", "tables", "bits", "dims", "derived")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
+    MetaParquet.write(e.sparkSession, s"$base/meta", MetaParquet.record(
+      "kind" -> "cosine_vec", "cells" -> cells, "tables" -> tables,
+      "bits" -> bits, "dims" -> dims, "derived" -> derived.mkString(",")))
   }
 
   /** Append new vectors to an existing [[cosineStoreTo]] artifact —
@@ -338,7 +336,7 @@ object VecKnn {
       : Map[String, Seq[Int]] =
       graft.transforms.IndexMaintenance.withMaintLock(
         e.sparkSession, base, "APPEND") {
-    val meta = e.sparkSession.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(e.sparkSession, s"$base/meta")
     NearDup.requireKind(meta, base, "cosine_vec", "INDEX … APPEND")
     val dims = meta.getAs[Int]("dims")
     val ad = probeDims(e, "INDEX … APPEND METHOD COSINE")
@@ -427,7 +425,7 @@ object VecKnn {
       graft.transforms.IndexMaintenance.withMaintLock(
         e.sparkSession, base, "DELETE") {
     val s = e.sparkSession
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     NearDup.requireKind(meta, base, "cosine_vec", "INDEX … DELETE")
     val dims = meta.getAs[Int]("dims")
     val ad = probeDims(e, "INDEX … DELETE METHOD COSINE")
@@ -494,7 +492,7 @@ object VecKnn {
       base: String, batch: DataFrame, threshold: Double,
       tablesOpt: Option[Int] = None, bitsOpt: Option[Int] = None)
       : DataFrame = {
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     NearDup.requireKind(meta, base, "cosine_vec",
       "NEARDEDUP METHOD COSINE AGAINST STORED")
     val cells = meta.getAs[Int]("cells")
@@ -548,8 +546,7 @@ object VecKnn {
     val bPaths = NearDup.existingCellPaths(s, s"$base/buckets", "pc",
       probeCells)
     if (bPaths.isEmpty) return emptyMatches
-    val stored = s.read.option("basePath", s"$base/buckets")
-      .parquet(bPaths: _*)
+    val stored = MetaParquet.readCells(s, s"$base/buckets", "pc", bPaths)
       .select(col("id").as("c_id"), col("t"), col("bucket"))
     // checkpoint: feeds the vector-cell routing AND the verify join
     val cand = stored.join(broadcast(bb), Seq("t", "bucket"))
@@ -561,8 +558,7 @@ object VecKnn {
       .distinct().collect().map(_.getInt(0)).sorted
     val vPaths = NearDup.existingCellPaths(s, s"$base/vectors", "sc", vCells)
     if (vPaths.isEmpty) return emptyMatches
-    val cVec = s.read.option("basePath", s"$base/vectors")
-      .parquet(vPaths: _*)
+    val cVec = MetaParquet.readCells(s, s"$base/vectors", "sc", vPaths)
       .select(col("id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
     verifiedCosine(cand
       .join(batch.toDF("b_id", "bv", "bnrm"), "b_id")
@@ -598,7 +594,7 @@ object VecKnn {
     */
   def cosineKnnStored(s: org.apache.spark.sql.SparkSession, base: String,
       queries: DataFrame, k: Int): DataFrame = {
-    val meta = s.read.parquet(s"$base/meta").head()
+    val meta = MetaParquet.readRow(s, s"$base/meta")
     NearDup.requireKind(meta, base, "cosine_vec", "KNN … METHOD LSH STORED")
     val cells = meta.getAs[Int]("cells")
     val dims = meta.getAs[Int]("dims")
@@ -655,8 +651,7 @@ object VecKnn {
     val bPaths = NearDup.existingCellPaths(s, s"$base/buckets", "pc",
       probeCells)
     if (bPaths.isEmpty) return empty
-    val stored = s.read.option("basePath", s"$base/buckets")
-      .parquet(bPaths: _*)
+    val stored = MetaParquet.readCells(s, s"$base/buckets", "pc", bPaths)
       .select(col("id").as("c_id"), col("t"), col("bucket"))
     // self-exclusion is by CONTENT, matching the store's key: the
     // query's own indexed vector must not be its nearest neighbor
@@ -673,8 +668,7 @@ object VecKnn {
       .distinct().collect().map(_.getInt(0)).sorted
     val vPaths = NearDup.existingCellPaths(s, s"$base/vectors", "sc", vCells)
     if (vPaths.isEmpty) return empty
-    val cVec = s.read.option("basePath", s"$base/vectors")
-      .parquet(vPaths: _*)
+    val cVec = MetaParquet.readCells(s, s"$base/vectors", "sc", vPaths)
       .select(col("id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cosine").desc, col("c_id"))

@@ -18,6 +18,17 @@ import VerbSupport.{CosineDefaults, intOption}
   * package: every implementation lives in `graft.transforms`, and the
   * verb registry in `parse` is the closed list of what a block can
   * contain.
+  *
+  * Snapshot at build: `build` may run Spark jobs, and what it returns
+  * can be a snapshot rather than a plan over the sources. Verbs that
+  * share a frame between several consumers (the NEARDEDUP/KNN band,
+  * bucket and variant frames, the stored probes' batch side) and the
+  * INDEX writers materialize it with an EAGER `localCheckpoint` while
+  * the statement is built — so the sources are read once, at build
+  * time. Executing the returned frame again after a source changed
+  * answers for the source as it was when the statement was built, and
+  * `explain` on it runs the checkpointed fan-out first. Build the
+  * statement again to see new source data.
   */
 trait Verb {
   /** Build the output DataFrame. `sources` maps UPPERCASE source alias →

@@ -1,0 +1,94 @@
+package graft
+
+import graft.engine.Aql
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+/** Spark jobs per INDEX statement: metadata (`meta/`, `stats/`) is read
+  * and written on the driver, so the statements that only touch metadata
+  * launch no job, and a mutation's stats epilogue recounts its touched
+  * cells in one job.
+  */
+class IndexJobsSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  /** Names (call sites) of the jobs `body` launches. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(e.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name).getOrElse(""))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  test("INDEX DESCRIBE, MANIFEST and a no-op COMPACT run no Spark job; " +
+      "a verb APPEND's stats epilogue runs one recount job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_indexjobs")
+    graft.queries.Advanced.registerTmpDir(dir)
+    val aPq = dir.resolve("a.parquet").toString
+    val bPq = dir.resolve("b.parquet").toString
+    (1 to 40).map(i => (i.toLong, s"document $i about topic ${i % 7} " +
+        s"with words w${i % 5} v${i % 3} and tail t$i"))
+      .toDF("id", "txt").write.parquet(aPq)
+    (41 to 60).map(i => (i.toLong, s"appended text $i on subject " +
+        s"${i % 4} carrying u${i % 6} and marker m$i"))
+      .toDF("id", "txt").write.parquet(bPq)
+    val idx = dir.resolve("lsh").toString
+    def fromFile(pq: String, body: String): Unit = {
+      Aql.run(spark,
+        s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$pq',
+           |  FORMAT = 'parquet')
+           |TRANSFORM 'T' FROM CONNECTION D (
+           |  $body
+           |) INTO CONSOLE""".stripMargin)
+      ()
+    }
+    def maintain(verb: String): Seq[org.apache.spark.sql.Row] =
+      Aql.run(spark,
+        s"""DATA 'One' ([[1]]) WITH (COLUMNS = 'X')
+           |TRANSFORM 'T' FROM BLOCK One (
+           |  INDEX $verb '$idx'
+           |) INTO CONSOLE""".stripMargin).outputs("T").collect().toSeq
+
+    fromFile(aPq, s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 " +
+      s"INTO '$idx'")
+
+    var described = Seq.empty[org.apache.spark.sql.Row]
+    val describeJobs = jobsOf { described = maintain("DESCRIBE") }
+    assert(described.nonEmpty &&
+      described.forall(_.getAs[Boolean]("stats_served")))
+    assert(describeJobs.isEmpty, describeJobs.mkString("; "))
+
+    val manifestJobs = jobsOf { maintain("MANIFEST") }
+    assert(manifestJobs.isEmpty, manifestJobs.mkString("; "))
+
+    // right after a build every cell holds one file: nothing to compact
+    var compacted = Seq.empty[org.apache.spark.sql.Row]
+    val compactJobs = jobsOf { compacted = maintain("COMPACT") }
+    assert(compacted.map(r => (r.getAs[Long]("files_before"),
+      r.getAs[Long]("files_after"))).forall { case (b, a) => b == a })
+    assert(compactJobs.isEmpty, compactJobs.mkString("; "))
+
+    // the APPEND's own jobs (source scan, writes, routing) are its
+    // batch's; the stats epilogue — the only job launched from
+    // IndexMaintenance — recounts the touched cells of both stores once
+    val appendJobs = jobsOf {
+      fromFile(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' APPEND")
+    }
+    val recounts = appendJobs.filter(_.contains("IndexMaintenance.scala"))
+    assert(recounts.size == 1, appendJobs.mkString("; "))
+    assert(maintain("DESCRIBE").forall(_.getAs[Boolean]("stats_served")))
+  }
+}
