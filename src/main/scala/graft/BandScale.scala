@@ -242,7 +242,8 @@ object BandScale {
       // build statement absorbs) and measure the served path,
       // closed-form checked against the same truth.
       val im = graft.transforms.IndexMaintenance
-      val stores = im.storesFor("lsh_text", "BandScale")
+      val stores =
+        graft.transforms.CellStore.storesFor("lsh_text", "BandScale")
       val (_, statsRefreshS) = timed(im.Stats.write(spark, base, stores))
       val (descEntries2, describeStatsS) = timed(describeBands())
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.transforms.MetaParquet
+import graft.transforms.{CellStore, MetaParquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -348,30 +348,15 @@ object Similarity {
   private[graft] def ivfStoreTo(base: String, e: DataFrame,
       cells: Int, derived: Seq[String] = Nil,
       pq: Option[(Int, Int)] = None): Unit = {
-    // invalidate-before-mutate — see graft.transforms.IndexMaintenance.Stats
-    graft.transforms.IndexMaintenance.Stats.invalidate(
-      e.sparkSession.sparkContext.hadoopConfiguration, base)
     val (cents, supersOpt, assigned) =
       if (cells <= IvfFlatMaxCells) {
         val (c, _, a) = ivfBuildFrom(e, cells); (c, None, a)
       } else {
         val (c, s, a) = ivfBuildHier(e, cells); (c, Some(s), a)
       }
-    // co-locate each cell before the partitionBy write: without it every
-    // write task opens a file in every cell directory (tasks × cells
-    // small files — measured the build bottleneck in graft.AnnScale at
-    // 256 cells); with it the file count is ∝ cells and each directory
-    // is written by one task
-    val parts = graft.transforms.IndexMaintenance.cellWriteParts(
-      e.sparkSession, cells)
-    def writeIndexSide(): Unit = {
-      assigned.repartition(parts, col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(s"$base/index")
-      cents.write.mode("overwrite").parquet(s"$base/centroids")
-      supersOpt.foreach(_.write.mode("overwrite").parquet(s"$base/supers"))
-    }
     val spark = e.sparkSession
+    cents.write.mode("overwrite").parquet(s"$base/centroids")
+    supersOpt.foreach(_.write.mode("overwrite").parquet(s"$base/supers"))
     pq match {
       case Some((pm, pk)) =>
         // PQ codes ride the SAME cell layout as the full vectors, so the
@@ -389,27 +374,19 @@ object Similarity {
         val subs = pqSubsOf(e.select(col("vec_id"), col("v")), pm, subDim)
           .localCheckpoint(false)
         val cb = pqCodebookOf(subs, pm, pk).localCheckpoint(false)
-        // the index-side writes and the codes-side writes are
-        // independent (the codes join recomputes the assignment plan
-        // either way) — overlap them (round 15, guide §2.6)
-        graft.transforms.IndexMaintenance.inParallel(
-          writeIndexSide(),
-          {
+        // `assigned` stays a plan: the index write and the codes join
+        // each recompute it
+        CellStore.write(base, CellStore.ivf(identity, Some(a =>
             pqEncodeFrom(subs, cb)
-              .join(assigned.select(col("vec_id"), col("cluster")),
-                "vec_id")
-              .repartition(parts, col("cluster"))
-              .write.mode("overwrite").partitionBy("cluster")
-              .parquet(s"$base/codes")
-            cb.coalesce(1).write.mode("overwrite")
-              .parquet(s"$base/codebook")
-          })
+              .join(a.select(col("vec_id"), col("cluster")), "vec_id"))),
+          assigned, cells)
+        cb.coalesce(1).write.mode("overwrite").parquet(s"$base/codebook")
         MetaParquet.write(spark, s"$base/meta", MetaParquet.record(
           "kind" -> "ivf_vec", "cells" -> cells,
           "derived" -> derived.mkString(","), "pq_m" -> pm,
           "pq_subdim" -> subDim, "pq_codes" -> pk))
       case None =>
-        writeIndexSide()
+        CellStore.write(base, CellStore.ivf(identity, None), assigned, cells)
         MetaParquet.write(spark, s"$base/meta", MetaParquet.record(
           "kind" -> "ivf_vec", "cells" -> cells,
           "derived" -> derived.mkString(",")))
@@ -449,67 +426,34 @@ object Similarity {
     */
   private[graft] def ivfStoreAppend(base: String, e: DataFrame)
       : Map[String, Seq[Int]] =
-      graft.transforms.IndexMaintenance.withMaintLock(
-        e.sparkSession, base, "APPEND") {
-    val s = e.sparkSession
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    graft.transforms.NearDup.requireKind(meta, base, "ivf_vec",
-      "INDEX … APPEND")
-    graft.transforms.IndexMaintenance.Stats.mergeForWriter(
-        s, base, "ivf_vec") {
-    // invalidate-before-mutate — see graft.transforms.IndexMaintenance.Stats
-    graft.transforms.IndexMaintenance.Stats.invalidate(
-      e.sparkSession.sparkContext.hadoopConfiguration, base)
-    val hasPq = meta.schema.fieldNames.contains("pq_m")
-    // restore crashed cells before appending — see
-    // graft.transforms.NearDup.bandStoreRows
-    val idxRest = graft.transforms.NearDup.sweepOldCells(s,
-      s"$base/index", "cluster")
-    val codesRest =
-      if (hasPq) graft.transforms.NearDup.sweepOldCells(s,
-        s"$base/codes", "cluster")
-      else Seq.empty[Int]
-    // the frozen-centroid assignment feeds ≥ 2 consumers (index rows,
-    // the touched-cells routing, and code rows under PQ) —
-    // materialize it once, EAGERLY: the index and codes writes run
-    // concurrently below (IndexMaintenance.inParallel) and both join it
-    val ids = assignToStored(base, e).localCheckpoint()
-    val cells = meta.getAs[Int]("cells")
-    val parts = graft.transforms.IndexMaintenance
-      .cellWriteParts(s, cells)
-    graft.transforms.IndexMaintenance.inParallel(
-      e.join(ids.hint("merge"), "vec_id")
-        .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-        .repartition(parts, col("cluster"))
-        .write.mode("append").partitionBy("cluster")
-        .parquet(s"$base/index"),
-      if (hasPq) {
-        // encode the batch against the FROZEN codebook — the PQ analogue
-        // of the frozen-centroid assignment (FAISS `add` after `train`):
-        // codebooks are a corpus sample, so re-picking them on append
-        // would re-code the whole artifact; drifted appends degrade
-        // shortlist quality, not correctness (the rerank is exact), and
-        // INDEX REBUILD re-picks codebooks exactly as it re-trains
-        // centroids
-        val pm = meta.getAs[Int]("pq_m")
-        val subDim = meta.getAs[Int]("pq_subdim")
-        val cb = s.read.parquet(s"$base/codebook")
-        pqEncodeFrom(pqSubsOf(e.select(col("vec_id"), col("v")), pm, subDim),
-            cb)
+    CellStore.append(base, "ivf_vec", e)
+
+  /** A maintenance batch of an IVF artifact for [[CellStore]]: the
+    * batch's frozen-centroid assignment (vec_id, cluster) — the frame
+    * the writer materializes once, already routed for both stores — and
+    * the stores that join it back to the batch: full vectors into
+    * `index` and, when the artifact has PQ, the batch encoded against
+    * the FROZEN codebook into `codes`. Frozen for the reason centroids
+    * are (FAISS `add` after `train`): codebooks are a corpus sample, so
+    * re-picking them on append would re-code the whole artifact;
+    * drifted appends degrade shortlist quality, not correctness (the
+    * rerank is exact), and INDEX REBUILD re-picks codebooks exactly as
+    * it re-trains centroids.
+    */
+  private[graft] def ivfBatch(base: String, meta: org.apache.spark.sql.Row,
+      e: DataFrame): (DataFrame, Seq[CellStore]) = {
+    val codes =
+      if (!meta.schema.fieldNames.contains("pq_m")) None
+      else Some { (ids: DataFrame) =>
+        val cb = e.sparkSession.read.parquet(s"$base/codebook")
+        pqEncodeFrom(pqSubsOf(e.select(col("vec_id"), col("v")),
+            meta.getAs[Int]("pq_m"), meta.getAs[Int]("pq_subdim")), cb)
           .join(ids.hint("merge"), "vec_id")
-          .repartition(parts, col("cluster"))
-          .write.mode("append").partitionBy("cluster")
-          .parquet(s"$base/codes")
-      })
-    // the batch's routed cells (codes mirror the index assignment)
-    // plus any crash-swept restored cells — the incremental stats
-    // merge recomputes exactly these
-    val touched = ids.select(col("cluster").cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (hasPq) Map("index" -> (touched ++ idxRest).distinct.sorted,
-      "codes" -> (touched ++ codesRest).distinct.sorted)
-    else Map("index" -> (touched ++ idxRest).distinct.sorted)
-    }
+      }
+    (assignToStored(base, e), CellStore.ivf(ids =>
+      e.join(ids.hint("merge"), "vec_id")
+        .select(col("vec_id"), col("cluster"), col("v"), col("nrm")),
+      codes))
   }
 
   /** The frozen-centroid assignment (vec_id, cluster) of a batch
@@ -557,7 +501,7 @@ object Similarity {
     * over the frozen centroids, so providing the stored vector (the
     * natural case — the delete batch is rows of the indexed corpus)
     * routes to precisely the cell its row lives in, and only the
-    * routed cells are rewritten (NearDup.deleteFromCellStore). Unlike
+    * routed cells are rewritten ([[CellStore.delete]]). Unlike
     * the content-keyed text/cosine stores, the anti-join key is the
     * user's vec_id — re-ingesting a key after deletion is a plain
     * append. Centroids, supers and `meta/` are untouched: deletion
@@ -567,39 +511,7 @@ object Similarity {
     */
   private[graft] def ivfStoreDelete(base: String, e: DataFrame)
       : Map[String, Seq[Int]] =
-      graft.transforms.IndexMaintenance.withMaintLock(
-        e.sparkSession, base, "DELETE") {
-    val s = e.sparkSession
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    graft.transforms.NearDup.requireKind(meta, base, "ivf_vec",
-      "INDEX … DELETE")
-    graft.transforms.IndexMaintenance.Stats.mergeForWriter(
-        s, base, "ivf_vec") {
-    // serial pre-invalidate + eager checkpoint + concurrent store legs
-    // — NearDup.bandStoreDelete's round-15 pattern
-    graft.transforms.IndexMaintenance.Stats.invalidate(
-      s.sparkContext.hadoopConfiguration, base)
-    val ids = assignToStored(base, e).localCheckpoint()
-    val touched = ids.select(col("cluster").cast("int"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    // PQ codes mirror the index cells (same assignment routed them), so
-    // the SAME touched set and anti-join key delete the codes — a
-    // deleted vector can never resurface through an ADC shortlist
-    val hasPq = meta.schema.fieldNames.contains("pq_m")
-    val (idxRest, codesRest) =
-      graft.transforms.IndexMaintenance.inParallel(
-        graft.transforms.NearDup.deleteFromCellStore(s,
-          s"$base/index", "cluster", touched, "vec_id",
-          ids.select(col("vec_id"))),
-        if (hasPq)
-          graft.transforms.NearDup.deleteFromCellStore(s, s"$base/codes",
-            "cluster", touched, "vec_id", ids.select(col("vec_id")))
-        else Seq.empty[Int])
-    if (hasPq) Map("index" -> (touched.toSeq ++ idxRest).distinct,
-      "codes" -> (touched.toSeq ++ codesRest).distinct)
-    else Map("index" -> (touched.toSeq ++ idxRest).distinct)
-    }
-  }
+    CellStore.delete(base, "ivf_vec", e, "vec_id")
 
   // --------------------------------------------------------- stored IVF-PQ
 

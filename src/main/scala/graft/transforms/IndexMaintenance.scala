@@ -18,87 +18,6 @@ import VerbSupport.{intOption, spreadForCpu, CosineDefaults}
   * 100 TB-scale extension documented in SURVEY.md §8.
   */
 private[graft] object IndexMaintenance {
-  /** Shuffle parallelism for a cell-partitioned store write (round-15
-    * optimization). Every store writer repartitions on its cell column
-    * before `partitionBy(cellCol)` so each cell lands WHOLLY in one
-    * task — that keeps file count ∝ cells (1 file per cell per write,
-    * the artifact contract, and any hash partitioning on the cell
-    * column preserves it). But the plain `repartition(col)` form left
-    * the partition COUNT to spark.sql.shuffle.partitions + AQE, and at
-    * microbatch sizes AQE coalesces the tiny exchange to ONE task that
-    * then opens/commits every cell's parquet file SEQUENTIALLY — the
-    * write is per-file-latency-bound, not byte-bound (measured: 0.9–1.1
-    * s per store per streamed append at 64 cells, i.e. ~15 ms/file,
-    * the single largest cost of every maintenance statement; guide
-    * §2.2/§2.6 — idle cores while one task pays serial latency).
-    * Pinning numPartitions spreads the per-file latency: ideally one
-    * cell per task, capped at 4× the cluster's core count so a
-    * 65 536-cell artifact's append doesn't schedule 65 k near-empty
-    * tasks. Scale-adaptive by construction: grows with both the
-    * artifact (cells) and the cluster (defaultParallelism), no
-    * local-mode constant.
-    */
-  private[graft] def cellWriteParts(
-      spark: org.apache.spark.sql.SparkSession, cells: Int): Int =
-    math.max(1, math.min(cells,
-      math.max(64, spark.sparkContext.defaultParallelism * 4)))
-
-  /** Run two INDEPENDENT store pipelines concurrently and return both
-    * results (round-15 optimization, guide §2.6: actions are only
-    * sequential because the driver calls them sequentially). Every
-    * two-store artifact (bands+shingles, variants+strings,
-    * buckets+vectors) writes and routes its stores with NO data
-    * dependency between them once the shared input is checkpointed —
-    * running them on two driver threads lets the second store's jobs
-    * back-fill the executor slots the first one's small tasks leave
-    * idle, halving the statement's critical path. blocking{}: each
-    * thread blocks on Spark job completion, so the marker keeps the
-    * shared global pool from starving under concurrent statements.
-    * Exceptions propagate AFTER BOTH legs settle (round 16, advisor
-    * finding): rethrowing on the first leg's failure while the second
-    * leg's Spark write is still running would release the caller's
-    * maintenance lock with an orphaned writer mutating the store in the
-    * background — a subsequent writer (e.g. a foreachBatch retry of the
-    * same append) could then acquire the lock and interleave with it,
-    * breaking the mechanically-held single-writer contract. Both legs
-    * are awaited to completion (Try), then the first failure rethrows,
-    * carrying the second leg's failure (if any) as a suppressed
-    * exception.
-    *
-    * Each leg also runs under the CALLER's SparkContext local
-    * properties (job group/description/scheduler pool): the global
-    * pool's threads inherit local properties only at thread-creation
-    * time and are reused, so without the explicit copy a leg's jobs
-    * could carry a stale job group — and a future cancelJobGroup or
-    * per-statement pool would silently miss them. For the same reason
-    * the pooled thread's own values are restored when the leg ends, so
-    * the next job it runs for anyone else does not carry this caller's.
-    */
-  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.{Failure, Try}
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-    val props = propKeys.map(k => k -> sc.getLocalProperty(k))
-    def withProps[T](body: => T): T = {
-      val own = propKeys.map(k => k -> sc.getLocalProperty(k))
-      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      try body
-      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-    }
-    val fa = Future(blocking(withProps(a)))
-    val fb = Future(blocking(withProps(b)))
-    val ra = Try(Await.result(fa, scala.concurrent.duration.Duration.Inf))
-    val rb = Try(Await.result(fb, scala.concurrent.duration.Duration.Inf))
-    (ra, rb) match {
-      case (Failure(ea), Failure(eb)) if ea ne eb => ea.addSuppressed(eb)
-      case _ => ()
-    }
-    (ra.get, rb.get)
-  }
-
   /** DESCRIBE's file-growth advisory threshold: a cell whose file
     * count reaches this makes probes pay that many parquet footer
     * reads for the same rows, and the advisory names `INDEX COMPACT`
@@ -208,11 +127,10 @@ private[graft] object IndexMaintenance {
     * [[recount]] over every store's touched (or, for a full refresh,
     * all) cells.
     *
-    * Honesty protocol: the Scala-API writers (bandStoreRows /
-    * typoStoreRows / cosineStoreRows / ivfStore* — the streaming
-    * ingestion hot path, where a per-batch full recount would break
-    * the cost-∝-batch contract) and the shared cell-rewrite
-    * ([[NearDup.rewriteCellsInPlace]]) INVALIDATE stats as their first
+    * Honesty protocol: the cell-store writer ([[CellStore]] — the
+    * API appends and deletes are the streaming ingestion hot path,
+    * where a per-batch full recount would break the cost-∝-batch
+    * contract — and its cell rewrite) INVALIDATE stats as their first
     * step instead of maintaining them: a statement that dies mid-write
     * or an API append outside the verb leaves stats ABSENT, never
     * stale, and `INDEX DESCRIBE` falls back to the full recompute
@@ -373,9 +291,10 @@ private[graft] object IndexMaintenance {
       * mutation itself (round 14, second wave): read the prior
       * per-cell stats BEFORE the mutation invalidates them, run the
       * mutation, and — when a prior existed — merge the mutation's
-      * touched-cell recomputes back in ([[mergeTouched]]). Every API
-      * append/delete wrapper (band/typo/cosine/ivf) runs its mutating
-      * body through this, which is what keeps `<dir>/stats` SERVED
+      * touched-cell recomputes back in ([[mergeTouched]]). Every
+      * append and delete of every kind ([[CellStore.append]] /
+      * [[CellStore.delete]]) runs through this, which keeps
+      * `<dir>/stats` SERVED
       * under continuous DIRECT-API ingest — the streaming foreachBatch
       * path (gate q161), previously the one writer whose batches left
       * DESCRIBE on the full-recompute fallback for the whole streaming
@@ -392,8 +311,8 @@ private[graft] object IndexMaintenance {
       * mutation leaves them absent and the next corpus-shaped
       * statement (build/REBUILD, or a verb APPEND/DELETE's self-heal)
       * or DESCRIBE pays the one full pass. Callers hold the artifact's
-      * maintenance lock — every API wrapper acquires it (re-entrantly
-      * under a verb) — so the prior is exact-when-present and the
+      * maintenance lock — the writer acquires it (re-entrantly under a
+      * verb) — so the prior is exact-when-present and the
       * read → mutate → merge sequence cannot interleave with another
       * writer. Returns the mutation's touched map unchanged.
       */
@@ -407,7 +326,7 @@ private[graft] object IndexMaintenance {
       val manifestPrior = IndexManifest.readVersioned(spark, dir)
       val prior = read(spark, dir)
       val touched = mutate
-      val stores = storesFor(kind, s"stats refresh at '$dir'")
+      val stores = CellStore.storesFor(kind, s"stats refresh at '$dir'")
       prior.foreach { p => mergeTouched(spark, dir, stores, p, touched) }
       // manifest maintained-when-present (round 15): re-publish from
       // the prior + this mutation's touched cells, so probes stay
@@ -611,8 +530,8 @@ private[graft] object IndexMaintenance {
     * (band keys / bucket keys / variant hashes / frozen-centroid
     * assignment — geometry from `meta/`, same option algebra as
     * APPEND), so ONLY the batch's routed cell directories are
-    * rewritten (NearDup.deleteFromCellStore's staging + two-rename
-    * swap; untouched cells are never listed or read) and the cost is
+    * rewritten ([[CellStore.delete]]'s staging + per-cell swap;
+    * untouched cells are never listed or read) and the cost is
     * governed by the batch, never the index. LSH/COSINE/TYPO deletes
     * are CONTENT-KEYED like their stores — deleting a text/vector
     * removes its membership however many rows or appends carried it
@@ -779,22 +698,7 @@ private[graft] object IndexMaintenance {
       else throw TransformError(
         s"$what: artifact at $dir predates kind metadata and " +
           "has no recognizable store layout — rebuild it with INDEX … INTO")
-    (metaRow, kind, storesFor(kind, s"$what: at $dir"))
-  }
-
-  /** The (store sub-directory, cell column) pairs of an artifact kind —
-    * ONE mapping shared by DESCRIBE/COMPACT/REBUILD's layout resolution
-    * and the stats refresh, so they can never disagree on what a kind's
-    * stores are.
-    */
-  private[graft] def storesFor(kind: String, ctx: String)
-      : Seq[(String, String)] = kind match {
-    case "lsh_text" => Seq("bands" -> "pc", "shingles" -> "sc")
-    case "cosine_vec" => Seq("buckets" -> "pc", "vectors" -> "sc")
-    case "typo_text" => Seq("variants" -> "pc", "strings" -> "sc")
-    case "ivf_vec" => Seq("index" -> "cluster", "codes" -> "cluster")
-    case other => throw TransformError(
-      s"$ctx: unknown artifact kind '$other'")
+    (metaRow, kind, CellStore.storesFor(kind, s"$what: at $dir"))
   }
 
   /** INDEX DESCRIBE '<dir>' — the operability statement of the
@@ -1149,7 +1053,10 @@ private[graft] object IndexMaintenance {
     * renames: the swapped-in artifact stays locked for the statement's
     * tail (a racing streaming append fails fast instead of writing
     * into the doomed `.rebuild_old_`), and a crash between the renames
-    * cannot resurrect a stale lock through self-heal.
+    * cannot resurrect a stale lock through self-heal. Cells that a
+    * crashed DELETE or COMPACT left in `.old_` siblings are restored
+    * ([[CellStore.sweep]]) before any store is read, so their rows
+    * reach the rebuilt artifact.
     */
   final case class IndexRebuildVerb(dir: String,
       reThreshold: Option[Double] = None,
@@ -1197,7 +1104,7 @@ private[graft] object IndexMaintenance {
         // artifact leaves rebuilt-and-republished
         val hadManifest = IndexManifest.version(spark, dir).isDefined ||
           IndexManifest.wasCommitted(spark, dir)
-        val (metaRow, kind, _) = storedIndexLayout(spark, dir,
+        val (metaRow, kind, stores) = storedIndexLayout(spark, dir,
           "INDEX REBUILD")
         if (!metaRow.schema.fieldNames.contains("cells")) throw TransformError(
           s"INDEX REBUILD: artifact at $dir predates cells metadata — " +
@@ -1246,6 +1153,13 @@ private[graft] object IndexMaintenance {
               "empty) — APPEND entries first, or rebuild from source " +
               "with INDEX … INTO")
         }
+        // restore the cells a crashed DELETE or COMPACT swap left in
+        // `.old_` siblings before reading the stores: the reader skips
+        // dot-paths, so those rows would be missing from the rebuilt
+        // artifact, and the old one is deleted after the swap. Restored
+        // rows were absent from any stats written since the crash.
+        if (CellStore.sweep(spark, dir, stores).exists(_.nonEmpty))
+          Stats.invalidate(spark.sparkContext.hadoopConfiguration, dir)
         val (cellsAfter, entries) = {
           val res: (Int, Long) = kind match {
             case "lsh_text" =>
@@ -1254,7 +1168,9 @@ private[graft] object IndexMaintenance {
                 .select(col("id"), col("shs")).localCheckpoint(false)
               val n = sh.count()
               val c = resolveCells(IndexGeometry.storeCells, n)
-              reThreshold match {
+              // the shingle sets are stored hashed and move as they are;
+              // band keys are re-banded from them, or re-celled as stored
+              val (bandKeys, meta) = reThreshold match {
                 case Some(t) =>
                   // RE-BAND: signatures + band keys are pure functions
                   // of the persisted shingle sets, so a new threshold's
@@ -1272,41 +1188,32 @@ private[graft] object IndexMaintenance {
                         .contains("shingle_scheme"))
                       metaRow.getAs[String]("shingle_scheme")
                     else "raw"
-                  NearDup.bandKeysFromStored(sh, scheme, numPerm, b, r)
-                    .withColumn("pc", pmod(xxhash64(col("band"),
-                      col("bh")), lit(c.toLong)).cast("int"))
-                    .repartition(cellWriteParts(spark, c), col("pc"))
-                    .write.partitionBy("pc").parquet(s"$stage/bands")
                   // banding is auto-chosen from the given threshold —
                   // exactly a fresh `INDEX … THRESHOLD t` build's
                   // derivation, so meta marks bands_rows derived
                   val derivedAfter = (derivedMinusCells :+ "bands_rows")
                     .distinct.mkString(",")
-                  MetaParquet.write(spark, s"$stage/meta",
+                  (NearDup.bandKeysFromStored(_: DataFrame, scheme, numPerm,
+                    b, r),
                     MetaParquet.updated(metaRow, "cells" -> c,
                       "num_bands" -> b, "rows_per_band" -> r,
                       "derived" -> derivedAfter))
                 case None =>
-                  spark.read.parquet(s"$dir/bands")
+                  val stored = spark.read.parquet(s"$dir/bands")
                     .select(col("id"), col("band"), col("bh"))
-                    .withColumn("pc", pmod(xxhash64(col("band"),
-                      col("bh")), lit(c.toLong)).cast("int"))
-                    .repartition(cellWriteParts(spark, c), col("pc"))
-                    .write.partitionBy("pc").parquet(s"$stage/bands")
                   val metaBase = MetaParquet.updated(metaRow, "cells" -> c)
                   // a pinned CELLS leaves the derived list; legacy
                   // pre-derived-flag metas are left schema-unchanged
                   // unless the pin demands the column
-                  MetaParquet.write(spark, s"$stage/meta",
+                  ((_: DataFrame) => stored,
                     if (reCells.isDefined)
                       MetaParquet.updated(metaBase,
                         "derived" -> derivedMinusCells.mkString(","))
                     else metaBase)
               }
-              sh.withColumn("sc",
-                  pmod(xxhash64(col("id")), lit(c.toLong)).cast("int"))
-                .repartition(cellWriteParts(spark, c), col("sc"))
-                .write.partitionBy("sc").parquet(s"$stage/shingles")
+              CellStore.write(stage.toString,
+                CellStore.lsh(c, bandKeys, hashShingles = false), sh, c)
+              MetaParquet.write(spark, s"$stage/meta", meta)
               (c, n)
             case "typo_text" =>
               requireData("strings")
@@ -1367,8 +1274,7 @@ private[graft] object IndexMaintenance {
           // the staged artifact swaps in COMPLETE, fresh stats
           // included — a crash before the swap leaves the live
           // artifact (and its stats) untouched
-          Stats.write(spark, stage.toString,
-            storesFor(kind, "INDEX REBUILD"))
+          Stats.write(spark, stage.toString, stores)
           // two renames; between them the artifact is absent and a
           // racing probe fails loudly instead of mis-routing
           if (!fs.rename(dirPath, oldP)) throw new IllegalStateException(
@@ -1402,14 +1308,35 @@ private[graft] object IndexMaintenance {
         // the rebuilt artifact starts manifest-absent (fresh stage);
         // restore the serving contract the operator had committed to
         if (hadManifest)
-          IndexManifest.publish(spark, dir,
-            storesFor(kind, "INDEX REBUILD"))
+          IndexManifest.publish(spark, dir, stores)
         import spark.implicits._
         Seq((dir, kind, cellsBefore, cellsAfter, entries))
           .toDF("path", "kind", "cells_before", "cells_after",
             "indexed_rows")
       }
     }
+  }
+
+  /** One store's COMPACT scan: (files before, dirty cells), where a
+    * dirty cell holds ≥ 2 data files — one directory listing per cell
+    * dir (metadata ops ∝ cells, no data read). Extracted so
+    * [[IndexCompactVerb]] can decide up front whether ANY rewrite is
+    * coming (the idempotent no-op contract: a re-COMPACT with nothing
+    * dirty must leave every byte alone, stats included).
+    */
+  private def compactScan(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      sub: String, cellCol: String,
+      dataFiles: org.apache.hadoop.fs.Path => Long): (Long, Seq[Int]) = {
+    import org.apache.hadoop.fs.Path
+    val live = new Path(s"$dir/$sub")
+    if (!fs.exists(live)) return (0L, Seq.empty)
+    val dirty = fs.listStatus(live).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$cellCol="))
+      .filter(st => dataFiles(st.getPath) > 1)
+      .map(_.getPath.getName.stripPrefix(s"$cellCol=").toInt)
+      .sorted
+    (dataFiles(live), dirty)
   }
 
   /** INDEX COMPACT '<dir>' — rewrite MULTI-FILE cells of a stored
@@ -1431,9 +1358,10 @@ private[graft] object IndexMaintenance {
     * and after (q158 pins this bit-for-bit on the oracle of the
     * build→append→probe chain; the AqlSpec case additionally pins
     * files_after < files_before after a double append). Dirty cells
-    * are rewritten through [[NearDup.rewriteCellsInPlace]]'s staging +
-    * two-phase swap (DELETE's machinery with an identity transform) —
-    * atomic per cell on HDFS/posix; object-store schemes without
+    * are rewritten through [[CellStore.rewrite]]'s staging + per-cell
+    * swap (DELETE's machinery with an identity transform), every store
+    * in its own concurrent leg — atomic per cell on HDFS/posix;
+    * object-store schemes without
     * atomic rename are REFUSED up front ([[requireAtomicRenameFs]]).
     * The stats epilogue is incremental like APPEND/DELETE's (round
     * 14): the dirty set IS the touched set, so with prior stats
@@ -1446,37 +1374,6 @@ private[graft] object IndexMaintenance {
     * output is a one-row summary (path, kind, files_before,
     * files_after).
     */
-  /** One store's COMPACT scan (sweep crashed cells → list dirty cells)
-    * — extracted so [[IndexCompactVerb]] can decide up front whether
-    * ANY rewrite is coming (the idempotent no-op contract: a re-COMPACT
-    * with nothing dirty must leave every byte alone, stats included)
-    * and then run the two stores' rewrites concurrently. Returns
-    * (files before, restored cells, dirty cells). Sweeping FIRST
-    * matters: a restored cell participates in this COMPACT's own dirty
-    * listing and joins the touched set so the incremental stats merge
-    * recomputes it.
-    */
-  private def compactScan(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, sub: String,
-      cellCol: String,
-      dataFiles: org.apache.hadoop.fs.Path => Long)
-      : (Long, Seq[Int], Seq[Int]) = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$dir/$sub")
-    if (!fs.exists(live)) return (0L, Seq.empty, Seq.empty)
-    val restored = NearDup.sweepOldCells(spark, live.toString, cellCol)
-    val before = dataFiles(live)
-    // dirty = cells with ≥ 2 data files; one directory listing per
-    // cell dir (cheap metadata ops ∝ cells, no data read)
-    val dirty = fs.listStatus(live).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$cellCol="))
-      .filter(st => dataFiles(st.getPath) > 1)
-      .map(_.getPath.getName.stripPrefix(s"$cellCol=").toInt)
-      .sorted
-    (before, restored, dirty)
-  }
-
   final case class IndexCompactVerb(dir: String) extends Verb {
     def build(sources: Map[String, DataFrame], primary: DataFrame)
         : DataFrame = {
@@ -1509,54 +1406,31 @@ private[graft] object IndexMaintenance {
         // 15: a committed manifest rides the same discipline)
         val manifestPrior = IndexManifest.readVersioned(spark, dir)
         val prior = Stats.read(spark, dir)
-        // phase 1, SERIAL per store: sweep crashed cells + list dirty
-        // cells (cheap metadata ops). Serial because the sweep/listing
-        // decides whether anything will be rewritten at all — an
-        // idempotent re-COMPACT must stay a byte-stable no-op, stats
-        // file included, so the invalidate below only happens when a
-        // rewrite is actually coming.
-        val scans = stores.map { case (sub, cellCol) =>
-          (sub, cellCol, compactScan(spark, fs, dir, sub, cellCol,
-            dataFiles))
+        // phase 1, SERIAL: sweep crashed cells, then list dirty cells
+        // (cheap metadata ops). Sweeping FIRST matters: a restored cell
+        // takes part in this COMPACT's own dirty listing and joins the
+        // touched set, so the incremental stats merge recomputes it.
+        // Serial because the sweep and listing decide whether anything
+        // is rewritten at all — an idempotent re-COMPACT must stay a
+        // byte-stable no-op, stats file included, so the invalidate
+        // below only happens when a rewrite is actually coming.
+        val restored = CellStore.sweep(spark, dir, stores)
+        val scans = stores.zip(restored).map { case ((sub, cellCol), r) =>
+          val (b, dirty) = compactScan(fs, dir, sub, cellCol, dataFiles)
+          (sub, cellCol, b, r, dirty)
         }
-        val anyRewrite = scans.exists { case (_, _, (_, restored, dirty)) =>
-          restored.nonEmpty || dirty.nonEmpty }
-        // invalidate ONCE, serially, before the concurrent rewrites
-        // (each rewrite re-invalidates defensively against an
-        // already-absent path — the bandStoreDelete pattern)
-        if (anyRewrite)
+        if (scans.exists { case (_, _, _, r, dirty) =>
+            r.nonEmpty || dirty.nonEmpty })
           Stats.invalidate(spark.sparkContext.hadoopConfiguration, dir)
-        // phase 2, CONCURRENT: the dirty-cell rewrites touch disjoint
-        // store directories (round 15, the same inParallel the writers
-        // ride). Generic over the store list (round 16, advisor
-        // finding): the old two-leg form silently skipped any third
-        // store a future kind might add — scanned and counted but never
-        // rewritten, with stats refreshed as if compacted. Every kind
-        // today has ≤ 2 stores, so the pairwise fold degenerates to the
-        // same two concurrent legs.
-        def rewriteLeg(sub: String, cellCol: String,
-            dirty: Seq[Int]): Unit =
-          if (dirty.nonEmpty)
-            NearDup.rewriteCellsInPlace(spark, s"$dir/$sub", cellCol,
-              dirty, "INDEX COMPACT",
-              "re-running COMPACT completes the rest (compacting a " +
-                "compacted cell is a no-op)")(identity)
-        scans.grouped(2).foreach {
-          case Seq((sub, cellCol, (_, _, dirty))) =>
-            rewriteLeg(sub, cellCol, dirty)
-          case Seq((subA, colA, (_, _, dirtyA)),
-              (subB, colB, (_, _, dirtyB))) =>
-            inParallel(rewriteLeg(subA, colA, dirtyA),
-              rewriteLeg(subB, colB, dirtyB))
-            ()
-          case _ => ()
-        }
-        for ((sub, _, (b, restored, dirty)) <- scans) {
+        // phase 2: the dirty cells' rewrites, one concurrent leg per store
+        CellStore.compact(spark, dir, scans.map {
+          case (sub, cellCol, _, _, dirty) => (sub, cellCol, dirty) })
+        for ((sub, _, b, r, dirty) <- scans) {
           before += b
           val live = new Path(s"$dir/$sub")
           if (fs.exists(live)) after += dataFiles(live)
-          if (restored.nonEmpty || dirty.nonEmpty) rewrote = true
-          val t = (dirty ++ restored).distinct.sorted
+          if (r.nonEmpty || dirty.nonEmpty) rewrote = true
+          val t = (dirty ++ r).distinct.sorted
           if (t.nonEmpty) touched += sub -> t
         }
         // refresh stats LAST (still under the lock): the compacted
@@ -1592,39 +1466,6 @@ private[graft] object IndexMaintenance {
     }
   }
 
-  /** Single-writer mutual exclusion for stored-index MAINTENANCE —
-    * every mutation of an existing artifact, whether issued as a verb
-    * statement (APPEND / DELETE / COMPACT / REBUILD) or through the
-    * Scala-API writers the streaming ingest path calls per microbatch
-    * (NearDup.bandStoreAppend/Delete, typoStoreAppend/Delete, VecKnn's
-    * cosine append/delete, Similarity's IVF append/delete — each
-    * acquires this lock itself since round 14, so the README's
-    * single-writer contract is MECHANICALLY held rather than left to
-    * operator discipline; before that, a streaming appender racing
-    * REBUILD's two-rename swap could land a microbatch in the doomed
-    * `.rebuild_old_` directory and silently lose it). Two concurrent
-    * writers interleaving their cell writes or rename swaps on one
-    * artifact is undefined, so each acquires the artifact's lock
-    * first — an atomic create-if-absent (create-exclusive on HDFS-like
-    * schemes; on local filesystems a pre-populated hard link, since
-    * Hadoop's LocalFileSystem create is exists-then-create and not
-    * atomic; object-store schemes with NEITHER primitive are refused
-    * before any work — [[requireAtomicRenameFs]]), held for the
-    * statement and released on every exit path. Acquisition is
-    * RE-ENTRANT per thread (the verb statement holds the lock when its
-    * inner API writer re-acquires — one file create per statement, or
-    * per microbatch on the streaming path). Contention is a clear
-    * error naming the holder, not a corrupted artifact. The lock
-    * guards WRITERS against each other only: probes stay lock-free —
-    * each cell swap is atomic, so a probe racing maintenance sees each
-    * cell either before or after its rewrite (never half-written), but
-    * may see a MIX of old and new cells across one scan; deployments
-    * that need a fully consistent view schedule probes around
-    * maintenance windows. A crashed maintenance job leaves the lock
-    * behind by design — the error tells the operator to verify no job
-    * is running and remove it (a TTL that silently self-expired
-    * mid-job would be worse than the ask).
-    */
   /** Schemes with no atomic rename / create-exclusive contract. The
     * maintenance statements' correctness rests on BOTH: the
     * single-writer `.maint_lock` is an atomic create (or hard link),
@@ -1715,6 +1556,38 @@ private[graft] object IndexMaintenance {
     override def initialValue(): Set[String] = Set.empty
   }
 
+  /** Single-writer mutual exclusion for stored-index MAINTENANCE —
+    * every mutation of an existing artifact, whether issued as a verb
+    * statement (APPEND / DELETE / COMPACT / REBUILD) or through the
+    * Scala-API writers the streaming ingest path calls per microbatch
+    * (every kind's append and delete commit through [[CellStore]],
+    * which acquires this lock itself since round 14, so the README's
+    * single-writer contract is MECHANICALLY held rather than left to
+    * operator discipline; before that, a streaming appender racing
+    * REBUILD's two-rename swap could land a microbatch in the doomed
+    * `.rebuild_old_` directory and silently lose it). Two concurrent
+    * writers interleaving their cell writes or rename swaps on one
+    * artifact is undefined, so each acquires the artifact's lock
+    * first — an atomic create-if-absent (create-exclusive on HDFS-like
+    * schemes; on local filesystems a pre-populated hard link, since
+    * Hadoop's LocalFileSystem create is exists-then-create and not
+    * atomic; object-store schemes with NEITHER primitive are refused
+    * before any work — [[requireAtomicRenameFs]]), held for the
+    * statement and released on every exit path. Acquisition is
+    * RE-ENTRANT per thread (the verb statement holds the lock when its
+    * inner API writer re-acquires — one file create per statement, or
+    * per microbatch on the streaming path). Contention is a clear
+    * error naming the holder, not a corrupted artifact. The lock
+    * guards WRITERS against each other only: probes stay lock-free —
+    * each cell swap is atomic, so a probe racing maintenance sees each
+    * cell either before or after its rewrite (never half-written), but
+    * may see a MIX of old and new cells across one scan; deployments
+    * that need a fully consistent view schedule probes around
+    * maintenance windows. A crashed maintenance job leaves the lock
+    * behind by design — the error tells the operator to verify no job
+    * is running and remove it (a TTL that silently self-expired
+    * mid-job would be worse than the ask).
+    */
   private[graft] def withMaintLock[A](
       spark: org.apache.spark.sql.SparkSession,
       dir: String, what: String)(f: => A): A = {
@@ -2012,7 +1885,7 @@ private[graft] object IndexMaintenance {
       // return type to carry the merged map out.
       def writeAndCount(): (String, Int, Long) = {
         val (kind, entriesPath, cellCount, _) = writeStores()
-        val stores = storesFor(kind, s"INDEX INTO '$dir'")
+        val stores = CellStore.storesFor(kind, s"INDEX INTO '$dir'")
         val st =
           if (append || delete)
             Stats.read(spark, dir)

@@ -515,8 +515,10 @@ object NearDup {
       rowsPerBand: Int, cells: Int, hashShingles: Boolean = true,
       derived: Seq[String] = Nil): Unit = {
     require(cells >= 1, s"bandStoreTo: cells $cells must be >= 1")
-    bandStoreRows(base, shC, numPerm, numBands, rowsPerBand, cells,
-      hashShingles, org.apache.spark.sql.SaveMode.Overwrite)
+    CellStore.write(base,
+      CellStore.lsh(cells, bandKeys(_, numPerm, numBands, rowsPerBand),
+        hashShingles),
+      shC.localCheckpoint(), cells)
     // `derived` records which geometry fields came from IndexGeometry's
     // corpus-size derivation rather than a user pin ("" = all pinned) —
     // probes read it to enforce the derivation's threshold contract,
@@ -533,128 +535,23 @@ object NearDup {
     * must not rebuild its whole index to ingest a day's documents).
     * Geometry (banding, cells, shingle scheme) comes from the
     * artifact's `meta/`, never from the caller, so an append can never
-    * silently mix bandings; `meta/` itself is untouched. Because a
-    * doc's band signature and shingle set are pure functions of its own
-    * text, build-then-append is EXACTLY equivalent to one full build of
-    * the union (modulo file layout) — the property the q156 gate pins
-    * bit-for-bit against the full-build oracle. Appended rows land as
-    * new files inside the existing cell directories (cells is fixed in
-    * meta), so probe routing is unchanged and file count grows by
-    * ∝ cells per append — compaction is a plain per-cell parquet
-    * rewrite if appends are frequent. Re-appending an id that is
-    * already stored duplicates its postings: harmless for correctness
-    * (candidates are distinct-ed and the verify is per-pair) but wasted
-    * bytes — callers collapse to distinct texts first, as the INDEX
-    * verb does.
+    * silently mix bandings. Because a doc's band signature and shingle
+    * set are pure functions of its own text, build-then-append is
+    * EXACTLY equivalent to one full build of the union (modulo file
+    * layout) — the property the q156 gate pins bit-for-bit against the
+    * full-build oracle. Re-appending an id that is already stored
+    * duplicates its postings: harmless for correctness (candidates are
+    * distinct-ed and the verify is per-pair) but wasted bytes — callers
+    * collapse to distinct texts first, as the INDEX verb does.
     *
-    * Runs under the artifact's single-writer maintenance lock
-    * ([[IndexMaintenance.withMaintLock]] — re-entrant when the INDEX
-    * verb already holds it), as do all the API append/delete writers:
-    * this is the path a streaming ingest job calls per microbatch, and
-    * an unlocked microbatch racing INDEX REBUILD's two-rename swap
-    * would land its rows in the doomed `.rebuild_old_` directory and
-    * silently lose them. A held lock fails the call fast, naming the
-    * holder. The per-cell stats ride along
-    * ([[IndexMaintenance.Stats.mergeForWriter]] — prior read, mutate,
-    * merge the batch's routed cells back in), so `INDEX DESCRIBE`
-    * stays stats-served under continuous direct-API ingest too; the
-    * epilogue is batch-shaped like the append itself.
+    * This is the path a streaming ingest job calls per microbatch; it
+    * commits through [[CellStore.append]] (single-writer lock, crashed
+    * cells restored first, stats and manifest maintained). Returns the
+    * store → touched-cells routing.
     */
   def bandStoreAppend(base: String, shC: DataFrame)
       : Map[String, Seq[Int]] =
-    IndexMaintenance.withMaintLock(shC.sparkSession, base, "APPEND") {
-      val meta = MetaParquet.readRow(shC.sparkSession, s"$base/meta")
-      requireKind(meta, base, "lsh_text", "INDEX … APPEND")
-      val scheme =
-        if (meta.schema.fieldNames.contains("shingle_scheme"))
-          meta.getAs[String]("shingle_scheme")
-        else "raw"
-      IndexMaintenance.Stats.mergeForWriter(
-        shC.sparkSession, base, "lsh_text") {
-      bandStoreRows(base, shC, meta.getAs[Int]("num_perm"),
-        meta.getAs[Int]("num_bands"), meta.getAs[Int]("rows_per_band"),
-        meta.getAs[Int]("cells"), scheme == "xxhash64",
-        org.apache.spark.sql.SaveMode.Append)
-      }
-    }
-
-  /** The shared row-writing step of [[bandStoreTo]] / [[bandStoreAppend]]
-    * — identical frames and partitioning either way; only the save mode
-    * differs (append adds files inside the existing cell directories).
-    * Returns the store → touched-cells routing of an APPEND (the cells
-    * the batch's own band keys and id hashes land in — what the verb's
-    * incremental stats merge recomputes); empty for a build, whose
-    * statement recomputes every cell anyway. Collecting it checkpoints
-    * the batch's keyed band frame so the distinct-cells pass reads the
-    * materialization instead of re-running the signature chain — a
-    * batch-sized cost (∝ batch × numBands rows), the same bound as the
-    * write itself.
-    */
-  private def bandStoreRows(base: String, shC: DataFrame, numPerm: Int,
-      numBands: Int, rowsPerBand: Int, cells: Int, hashShingles: Boolean,
-      mode: org.apache.spark.sql.SaveMode): Map[String, Seq[Int]] = {
-    // invalidate-before-mutate: stats can be absent, never stale (the
-    // wrapping Stats.mergeForWriter epilogue restores them from the
-    // pre-read prior + this mutation's touched-cell recomputes)
-    IndexMaintenance.Stats.invalidate(
-      shC.sparkSession.sparkContext.hadoopConfiguration, base)
-    val append = mode == org.apache.spark.sql.SaveMode.Append
-    val spark = shC.sparkSession
-    // restore crashed cells BEFORE appending ([[sweepOldCells]] — an
-    // append that re-created a downed cell's live dir with only the
-    // batch's rows would make the next sweep reap the `.old_` prior
-    // rows as provably-stale); builds overwrite the whole store, old
-    // siblings included
-    val (bandsRest, shRest) =
-      if (append) (sweepOldCells(spark, s"$base/bands", "pc"),
-        sweepOldCells(spark, s"$base/shingles", "sc"))
-      else (Seq.empty[Int], Seq.empty[Int])
-    // EAGER checkpoint: feeds band keys AND the shingle store, and both
-    // store pipelines run concurrently below — materializing it up
-    // front (one job) keeps the two pipelines from racing to compute
-    // the same partitions into the block store
-    val sh = shC.localCheckpoint() // feeds band keys AND the shingle store
-    val keyed0 = bandKeys(sh, numPerm, numBands, rowsPerBand)
-      .withColumn("pc",
-        pmod(xxhash64(col("band"), col("bh")), lit(cells.toLong)).cast("int"))
-    val keyed = if (append) keyed0.localCheckpoint(false) else keyed0
-    val parts = IndexMaintenance.cellWriteParts(spark, cells)
-    // the two store pipelines are independent once `sh` is materialized
-    // — run them concurrently (IndexMaintenance.inParallel); each
-    // write repartitions to `parts` tasks so per-cell parquet files
-    // commit in parallel instead of one coalesced task writing every
-    // cell sequentially (see cellWriteParts)
-    val (bandsTouched, shTouched) = IndexMaintenance.inParallel(
-      {
-        keyed
-          .repartition(parts, col("pc"))
-          .write.mode(mode).partitionBy("pc").parquet(s"$base/bands")
-        if (!append) Seq.empty[Int]
-        else keyed.select(col("pc")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-      },
-      {
-        val shStore =
-          if (hashShingles)
-            sh.select(col("id"), Text.hashedShingles(col("shs")).as("shs"))
-          else sh
-        shStore.withColumn("sc",
-            pmod(xxhash64(col("id")), lit(cells.toLong)).cast("int"))
-          .repartition(parts, col("sc"))
-          .write.mode(mode).partitionBy("sc").parquet(s"$base/shingles")
-        if (!append) Seq.empty[Int]
-        // the shingle store routes by id hash alone — no shingle work
-        // needed for its touched set
-        else sh
-          .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-            .cast("int").as("sc"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-      })
-    if (!append) Map.empty
-    else Map(
-      "bands" -> (bandsTouched ++ bandsRest).distinct.sorted,
-      "shingles" -> (shTouched ++ shRest).distinct.sorted)
-  }
+    CellStore.append(base, "lsh_text", shC)
 
   /** Remove docs from an existing [[bandStoreTo]] artifact — the
     * third index-MAINTENANCE form (build / APPEND / DELETE), and the
@@ -663,11 +560,9 @@ object NearDup {
     * without re-shingling the exabyte already there. Because a doc's
     * band keys and shingle-store cell are PURE FUNCTIONS of its own
     * text (same banding, from `meta/`), the delete batch routes to
-    * exactly the cell directories that hold its rows — so only those
-    * cells are rewritten ([[deleteFromCellStore]]'s staging + two-
-    * rename swap, COMPACT's machinery applied per cell) and the cost
-    * is governed by the batch's own band keys, never by index size
-    * (the same flat-cost contract graft.BandScale measures for APPEND).
+    * exactly the cell directories that hold its rows, so only those
+    * cells are rewritten ([[CellStore.delete]]) and the cost is
+    * governed by the batch's own band keys, never by index size.
     *
     * Semantics are CONTENT-KEYED, matching the store: entries are one
     * per distinct text (keyed th = xxhash64(text)), so deleting a text
@@ -683,241 +578,7 @@ object NearDup {
     */
   def bandStoreDelete(base: String, shC: DataFrame)
       : Map[String, Seq[Int]] =
-      IndexMaintenance.withMaintLock(shC.sparkSession, base, "DELETE") {
-    val s = shC.sparkSession
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    requireKind(meta, base, "lsh_text", "INDEX … DELETE")
-    IndexMaintenance.Stats.mergeForWriter(s, base, "lsh_text") {
-    val cells = meta.getAs[Int]("cells")
-    // invalidate ONCE, serially, before the two concurrent legs — each
-    // leg's rewrite re-invalidates defensively, but those calls then
-    // see an already-absent path (trivially concurrent-safe) instead
-    // of racing a recursive delete of a live tree
-    IndexMaintenance.Stats.invalidate(
-      s.sparkContext.hadoopConfiguration, base)
-    // EAGER checkpoints: both store legs run concurrently below and
-    // both consume these — materialize up front so the legs don't race
-    // to compute the same partitions
-    val sh = shC.localCheckpoint() // feeds band routing AND the id set
-    val ids = sh.select(col("id")).distinct().localCheckpoint()
-    // the two store legs (route → rewrite) are independent given the
-    // checkpointed inputs — run them concurrently
-    // (IndexMaintenance.inParallel, the bandStoreRows pattern)
-    val ((bandCells, bRest), (shCells, sRest)) =
-      IndexMaintenance.inParallel(
-        {
-          val bc = bandKeys(sh, meta.getAs[Int]("num_perm"),
-              meta.getAs[Int]("num_bands"), meta.getAs[Int]("rows_per_band"))
-            .select(pmod(xxhash64(col("band"), col("bh")), lit(cells.toLong))
-              .cast("int").as("pc"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          (bc, deleteFromCellStore(s, s"$base/bands", "pc", bc, "id", ids))
-        },
-        {
-          val sc = ids
-            .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-              .cast("int").as("sc"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          (sc, deleteFromCellStore(s, s"$base/shingles", "sc", sc, "id",
-            ids))
-        })
-    // the statement's own routing PLUS any crash-swept restored cells
-    // — the incremental stats merge recomputes exactly these
-    Map("bands" -> (bandCells.toSeq ++ bRest).distinct,
-      "shingles" -> (shCells.toSeq ++ sRest).distinct)
-    }
-  }
-
-  /** The shared cell-rewrite step of every stored-index DELETE
-    * (band/typo stores here, the cosine store in VecKnn, the IVF index
-    * in Similarity): anti-join the batch's ids out of ONLY the routed
-    * cell directories and swap the rewritten cells in. Shape:
-    *  1. the touched cells arrive from the caller's own routing math
-    *     (band keys / variant hashes / bucket keys / frozen-centroid
-    *     assignment — each a pure function of the deleted content, so
-    *     the routed set provably covers every row the ids occupy);
-    *  2. ONE Spark job reads the existing routed cells (explicit
-    *     basePath paths, the probe's partition-pruning idiom),
-    *     anti-joins broadcast(ids), and writes survivors cell-
-    *     partitioned into a staging sibling;
-    *  3. PER-CELL swap with full-rollback bookkeeping (so a rename
-    *     failure can never leave a silently half-applied delete): each
-    *     touched cell is staged out (live → `.old_…`) and immediately
-    *     swapped in (staging → live) — a lock-free probe's window of a
-    *     cell being absent is two renames for that one cell, never the
-    *     whole touched set — and a failure at ANY cell rolls every
-    *     already-committed cell back (new rows → staging, `.old_` prior
-    *     rows → live), so the statement applies completely or not at
-    *     all; a rollback rename that itself fails is checked and named
-    *     in the error. A cell whose rows were ALL deleted has no
-    *     staging dir and is simply removed. Untouched cells are never
-    *     listed, read or rewritten (the AqlSpec delete case pins their
-    *     files byte-identical).
-    * Crash safety matches COMPACT: renames are atomic per cell on
-    * HDFS/posix; a hard crash mid-swap leaves `.old_…` intact, and the
-    * next rewrite's sweep restores any cell whose swap did not finish
-    * (then re-running the crashed statement completes it) and reaps
-    * provably-stale `.old_` dirs and staging. `dropIds` is one column
-    * named `idCol`; batches are maintenance-sized by contract (the
-    * broadcast mirrors the probe's batch side).
-    */
-  private[graft] def deleteFromCellStore(s: org.apache.spark.sql.SparkSession,
-      root: String, pcol: String, wanted: Array[Int], idCol: String,
-      dropIds: DataFrame): Seq[Int] =
-    rewriteCellsInPlace(s, root, pcol, wanted.toSeq, "INDEX … DELETE",
-      "re-running the same DELETE statement completes the rest " +
-        "(deleting already-deleted ids is a no-op)") { cells =>
-      cells.join(broadcast(dropIds.select(col(idCol))), Seq(idCol),
-        "left_anti")
-    }
-
-  /** The cell-granular in-place rewrite every index-MAINTENANCE form
-    * rides (DELETE's anti-join here, COMPACT's identity rewrite of
-    * multi-file cells): read ONLY the caller's routed cells as explicit
-    * basePath paths, apply `transform`, write survivors cell-partitioned
-    * into a staging sibling, then a PER-CELL swap with full-rollback
-    * bookkeeping: each cell is staged out (live → `.old_…`) and
-    * immediately swapped in (staging → live), keeping a probe's
-    * inconsistency window at two renames per cell; a failure at any
-    * cell rolls every committed cell back (new rows → staging, prior
-    * rows → live) so the statement applies completely or not at all,
-    * and rollback renames are themselves checked — a cell that could
-    * not be restored is NAMED in the error (its prior rows live in the
-    * `.old_` sibling) together with `recovery`. A cell whose rows all
-    * vanish under `transform` has no staging dir and is simply removed.
-    * Untouched cells are never listed, read or rewritten. Renames are
-    * atomic per cell on HDFS/posix; a hard crash mid-swap is healed by
-    * the next rewrite's sweep — an `.old_` whose live cell exists is
-    * provably stale and reaped, one whose live cell is absent is the
-    * crashed swap's only copy of the prior rows and is restored
-    * (re-running the crashed statement then completes it) — and stale
-    * staging dirs are cleared before writing.
-    */
-  /** Sweep a store root's `.old_<pcol>_*` siblings left by a prior
-    * statement's crash (between a cell's two renames, or after its
-    * swap but before cleanup; unreaped they'd accumulate forever).
-    * Stale ⇔ the live cell exists — its swap finished, reap it. An
-    * `.old_` whose live cell is ABSENT is the crashed statement's only
-    * copy of that cell's prior rows: restore it, returning the cell to
-    * its pre-statement rows. Returns the RESTORED cell ids — callers
-    * that maintain stats incrementally must union them into their
-    * touched set, because the restored rows were provably absent from
-    * any stats written while the cell was down (round-14 review
-    * finding: a merge that carried the prior forward would otherwise
-    * be present-but-stale, the one combination the stats invariant
-    * forbids). Runs under the artifact's maintenance lock in every
-    * caller: the REWRITE path ([[rewriteCellsInPlace]]) and — since
-    * the same review — the APPEND row-writers, which previously could
-    * re-create a crashed cell's live directory with only the batch's
-    * rows and thereby make the next sweep reap the `.old_` sibling
-    * (the prior rows' only copy) as provably-stale: appends now
-    * restore first, so the appended files land NEXT TO the restored
-    * prior rows exactly as they would have pre-crash.
-    */
-  private[graft] def sweepOldCells(s: org.apache.spark.sql.SparkSession,
-      root: String, pcol: String): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val restored = Seq.newBuilder[Int]
-    if (fs.exists(rootPath))
-      for (st <- fs.listStatus(rootPath)
-          if st.getPath.getName.startsWith(s".old_${pcol}_")) {
-        val id = st.getPath.getName.stripPrefix(s".old_${pcol}_")
-        val cell = new Path(rootPath, s"$pcol=$id")
-        if (fs.exists(cell)) fs.delete(st.getPath, true)
-        else if (fs.rename(st.getPath, cell)) restored += id.toInt
-      }
-    restored.result()
-  }
-
-  private[graft] def rewriteCellsInPlace(s: org.apache.spark.sql.SparkSession,
-      root: String, pcol: String, wanted: Seq[Int], what: String,
-      recovery: String)(
-      transform: org.apache.spark.sql.DataFrame
-        => org.apache.spark.sql.DataFrame): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // invalidate-before-mutate (root is `<dir>/<store>`; stats live at
-    // `<dir>/stats`): the verb statements riding this rewrite (DELETE,
-    // COMPACT) refresh stats as their own last step
-    Option(rootPath.getParent).foreach(par =>
-      IndexMaintenance.Stats.invalidate(
-        s.sparkContext.hadoopConfiguration, par.toString))
-    def live(c: Int) = new Path(rootPath, s"$pcol=$c")
-    def old(c: Int) = new Path(rootPath, s".old_${pcol}_$c")
-    // FIRST, sweep `.old_` siblings ([[sweepOldCells]]). The sweep
-    // must precede the touched-cell computation so a just-restored
-    // cell PARTICIPATES in this rewrite — swept after, this statement
-    // would silently skip the restored cell's rows and apply half a
-    // delete. Restored cells are RETURNED so the calling verb's
-    // incremental stats merge recomputes them even when they are
-    // outside the statement's own routing.
-    val restored = sweepOldCells(s, root, pcol)
-    val touched = wanted
-      .filter(c => fs.exists(new Path(rootPath, s"$pcol=$c")))
-    if (touched.isEmpty) return restored // nothing routed to an existing cell
-    val paths = touched.map(c => new Path(rootPath, s"$pcol=$c").toString)
-    val stage = new Path(rootPath.getParent,
-      s".rewrite_stage_${rootPath.getName}")
-    if (fs.exists(stage)) fs.delete(stage, true) // stale from a crash
-    transform(MetaParquet.readCells(s, root, pcol, paths))
-      // parallelism = touched cells (capped — see cellWriteParts): the
-      // staging write is per-file-latency-bound like every cell write
-      .repartition(IndexMaintenance.cellWriteParts(s, touched.size),
-        col(pcol))
-      .write.mode("overwrite").partitionBy(pcol).parquet(stage.toString)
-    // per-cell swap — stage out, then immediately swap in — so a
-    // lock-free probe's window of a cell being absent is TWO renames
-    // for that one cell, never the whole touched set. The committed
-    // list is rollback bookkeeping: a failure at any cell rolls EVERY
-    // committed cell back (new rows → staging, `.old_` prior rows →
-    // live), so the statement applies completely or not at all; any
-    // rollback rename that itself fails is checked and NAMED in the
-    // error instead of silently claiming a clean rollback.
-    var committed = List.empty[Int]
-    def rollback(): List[String] = {
-      var unrestored = List.empty[String]
-      for (r <- committed) {
-        val ok =
-          (!fs.exists(live(r)) ||
-            fs.rename(live(r), new Path(stage, s"$pcol=$r"))) &&
-          (!fs.exists(old(r)) || fs.rename(old(r), live(r)))
-        if (!ok) unrestored ::= live(r).toString
-      }
-      unrestored
-    }
-    def fail(cell: Path, unrestored: List[String]): Nothing = {
-      if (unrestored.isEmpty) {
-        fs.delete(stage, true)
-        throw new IllegalStateException(
-          s"$what: cannot swap cell $cell — the rewrite was NOT " +
-            "applied (every touched cell was rolled back to its prior " +
-            "rows; the artifact is unchanged)")
-      }
-      throw new IllegalStateException(
-        s"$what: cannot swap cell $cell, and rolling back failed for " +
-          s"[${unrestored.mkString(", ")}] — each of those cells has " +
-          s"its prior rows in a `.old_` sibling under $root; restore " +
-          s"them by renaming, then $recovery")
-    }
-    for (c <- touched) {
-      val staged = new Path(stage, s"$pcol=$c")
-      if (!fs.rename(live(c), old(c))) fail(live(c), rollback())
-      // no staging dir ⇒ every row of the cell vanished ⇒ removal IS
-      // the swap for this cell
-      if (fs.exists(staged) && !fs.rename(staged, live(c))) {
-        val self = if (fs.rename(old(c), live(c))) Nil
-                   else List(live(c).toString)
-        fail(live(c), self ++ rollback())
-      }
-      committed ::= c
-    }
-    for (c <- touched) fs.delete(old(c), true)
-    fs.delete(stage, true)
-    restored
-  }
+    CellStore.delete(base, "lsh_text", shC, "id")
 
   /** [[minhashCrossMatches]] against a [[bandStoreFrom]] artifact: the
     * per-batch probe job that touches ONLY the stored files plus the
@@ -1190,7 +851,8 @@ object NearDup {
   def typoStoreTo(base: String, reps: DataFrame,
       cells: Int = BandStoreCells, derived: Seq[String] = Nil): Unit = {
     require(cells >= 1, s"typoStoreTo: cells $cells must be >= 1")
-    typoStoreRows(base, reps, cells, org.apache.spark.sql.SaveMode.Overwrite)
+    CellStore.write(base, CellStore.typo(cells),
+      reps.select(col("id"), col("txt")).localCheckpoint(), cells)
     MetaParquet.write(reps.sparkSession, s"$base/meta", MetaParquet.record(
       "kind" -> "typo_text", "cells" -> cells,
       "derived" -> derived.mkString(",")))
@@ -1204,109 +866,20 @@ object NearDup {
     */
   def typoStoreAppend(base: String, reps: DataFrame)
       : Map[String, Seq[Int]] =
-    IndexMaintenance.withMaintLock(reps.sparkSession, base, "APPEND") {
-      val meta = MetaParquet.readRow(reps.sparkSession, s"$base/meta")
-      requireKind(meta, base, "typo_text", "INDEX … APPEND")
-      IndexMaintenance.Stats.mergeForWriter(
-        reps.sparkSession, base, "typo_text") {
-        typoStoreRows(base, reps, meta.getAs[Int]("cells"),
-          org.apache.spark.sql.SaveMode.Append)
-      }
-    }
+    CellStore.append(base, "typo_text", reps)
 
   /** Remove strings from an existing [[typoStoreTo]] artifact —
     * [[bandStoreDelete]]'s contract for the delete-1 family: a
     * string's variant hashes and string-store cell are pure functions
     * of the string itself, so the delete batch routes to exactly the
-    * cells holding its rows and only those are rewritten
-    * ([[deleteFromCellStore]]). Content-keyed like the store (id =
-    * xxhash64(string)): deleting a string removes its membership no
-    * matter how many rows or appends carried it. `reps` columns:
-    * (id, txt), the build/append frame shape.
+    * cells holding its rows and only those are rewritten. Content-keyed
+    * like the store (id = xxhash64(string)): deleting a string removes
+    * its membership no matter how many rows or appends carried it.
+    * `reps` columns: (id, txt), the build/append frame shape.
     */
   def typoStoreDelete(base: String, reps: DataFrame)
       : Map[String, Seq[Int]] =
-      IndexMaintenance.withMaintLock(reps.sparkSession, base, "DELETE") {
-    val s = reps.sparkSession
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    requireKind(meta, base, "typo_text", "INDEX … DELETE")
-    IndexMaintenance.Stats.mergeForWriter(s, base, "typo_text") {
-    val cells = meta.getAs[Int]("cells")
-    // serial pre-invalidate + eager checkpoints + concurrent store
-    // legs — the bandStoreDelete pattern
-    IndexMaintenance.Stats.invalidate(
-      s.sparkContext.hadoopConfiguration, base)
-    val r = reps.select(col("id"), col("txt")).localCheckpoint()
-    val ids = r.select(col("id")).distinct().localCheckpoint()
-    val ((vCells, vRest), (sCells, sRest)) =
-      IndexMaintenance.inParallel(
-        {
-          val vc = delete1Variants(r, "txt")
-            .select(pmod(col("vh"), lit(cells.toLong)).cast("int").as("pc"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          (vc, deleteFromCellStore(s, s"$base/variants", "pc", vc, "id",
-            ids))
-        },
-        {
-          val sc = ids
-            .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-              .cast("int").as("sc"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          (sc, deleteFromCellStore(s, s"$base/strings", "sc", sc, "id",
-            ids))
-        })
-    Map("variants" -> (vCells.toSeq ++ vRest).distinct,
-      "strings" -> (sCells.toSeq ++ sRest).distinct)
-    }
-  }
-
-  /** Shared row-writing step of [[typoStoreTo]] / [[typoStoreAppend]] —
-    * returns an APPEND's store → touched-cells routing
-    * ([[bandStoreRows]]'s contract; empty for a build).
-    */
-  private def typoStoreRows(base: String, reps: DataFrame, cells: Int,
-      mode: org.apache.spark.sql.SaveMode): Map[String, Seq[Int]] = {
-    IndexMaintenance.Stats.invalidate(
-      reps.sparkSession.sparkContext.hadoopConfiguration, base)
-    val append = mode == org.apache.spark.sql.SaveMode.Append
-    // restore crashed cells before appending — see bandStoreRows
-    val (vRest, sRest) =
-      if (append) (sweepOldCells(reps.sparkSession, s"$base/variants", "pc"),
-        sweepOldCells(reps.sparkSession, s"$base/strings", "sc"))
-      else (Seq.empty[Int], Seq.empty[Int])
-    // eager checkpoint + concurrent store pipelines + pinned write
-    // parallelism — the bandStoreRows pattern
-    val r = reps.select(col("id"), col("txt")).localCheckpoint()
-    val keyed0 = delete1Variants(r, "txt")
-      .select(col("id"), col("vh"))
-      .withColumn("pc", pmod(col("vh"), lit(cells.toLong)).cast("int"))
-    val keyed = if (append) keyed0.localCheckpoint(false) else keyed0
-    val parts = IndexMaintenance.cellWriteParts(reps.sparkSession, cells)
-    val (vTouched, sTouched) = IndexMaintenance.inParallel(
-      {
-        keyed
-          .repartition(parts, col("pc"))
-          .write.mode(mode).partitionBy("pc").parquet(s"$base/variants")
-        if (!append) Seq.empty[Int]
-        else keyed.select(col("pc")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-      },
-      {
-        r.withColumn("sc",
-            pmod(xxhash64(col("id")), lit(cells.toLong)).cast("int"))
-          .repartition(parts, col("sc"))
-          .write.mode(mode).partitionBy("sc").parquet(s"$base/strings")
-        if (!append) Seq.empty[Int]
-        else r
-          .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-            .cast("int").as("sc"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-      })
-    if (!append) Map.empty
-    else Map(
-      "variants" -> (vTouched ++ vRest).distinct.sorted,
-      "strings" -> (sTouched ++ sRest).distinct.sorted)
-  }
+    CellStore.delete(base, "typo_text", reps, "id")
 
   /** Batch-vs-corpus edit-distance-≤1 matches against a [[typoStoreTo]]
     * artifact: distinct batch ids whose string is within edit distance 1

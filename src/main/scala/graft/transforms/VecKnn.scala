@@ -313,8 +313,8 @@ object VecKnn {
       cells: Int, derived: Seq[String] = Nil): Unit = {
     require(cells >= 1, s"cosineStoreTo: cells $cells must be >= 1")
     val dims = probeDims(e, "INDEX METHOD COSINE")
-    cosineStoreRows(base, e, tables, bits, cells, dims,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    CellStore.write(base, CellStore.cosine(cells, tables, bits, dims),
+      e.select(col("id"), col("v"), col("nrm")).localCheckpoint(), cells)
     // `derived` names the IndexGeometry-derived fields ("" = all
     // pinned); a derived `bits` carries the dedup-grade threshold
     // contract that stored probes enforce with a warning
@@ -330,143 +330,28 @@ object VecKnn {
     * pure function of the vector and the (meta-pinned) hyperplanes,
     * build-then-append ≡ one full build of the union. Appending vectors
     * of a different dimension errors (the hyperplane geometry is pinned
-    * to `dims`; mixed dims would bucket nonsense).
+    * to `dims`; mixed dims would bucket nonsense); a batch with no
+    * vector appends nothing.
     */
   def cosineStoreAppend(base: String, e: DataFrame)
       : Map[String, Seq[Int]] =
-      graft.transforms.IndexMaintenance.withMaintLock(
-        e.sparkSession, base, "APPEND") {
-    val meta = MetaParquet.readRow(e.sparkSession, s"$base/meta")
-    NearDup.requireKind(meta, base, "cosine_vec", "INDEX … APPEND")
-    val dims = meta.getAs[Int]("dims")
-    val ad = probeDims(e, "INDEX … APPEND METHOD COSINE")
-    if (ad == 0) Map.empty // nothing indexable in the append batch
-    else {
-      if (ad != dims) throw graft.transforms.TransformParser.TransformError(
-        s"INDEX … APPEND: appended vectors are $ad-dimensional but the " +
-          s"stored index at $base holds $dims-dimensional vectors")
-      graft.transforms.IndexMaintenance.Stats.mergeForWriter(
-        e.sparkSession, base, "cosine_vec") {
-        cosineStoreRows(base, e, meta.getAs[Int]("tables"),
-          meta.getAs[Int]("bits"), meta.getAs[Int]("cells"), dims,
-          org.apache.spark.sql.SaveMode.Append)
-      }
-    }
-  }
-
-  /** Shared row-writing step of [[cosineStoreTo]] / [[cosineStoreAppend]]
-    * — returns an APPEND's store → touched-cells routing
-    * (NearDup.bandStoreRows's contract; empty for a build).
-    */
-  private def cosineStoreRows(base: String, e: DataFrame, tables: Int,
-      bits: Int, cells: Int, dims: Int,
-      mode: org.apache.spark.sql.SaveMode): Map[String, Seq[Int]] = {
-    // invalidate-before-mutate — see IndexMaintenance.Stats
-    graft.transforms.IndexMaintenance.Stats.invalidate(
-      e.sparkSession.sparkContext.hadoopConfiguration, base)
-    val append = mode == org.apache.spark.sql.SaveMode.Append
-    // restore crashed cells before appending — see NearDup.bandStoreRows
-    val (bRest, vRest) =
-      if (append) (
-        NearDup.sweepOldCells(e.sparkSession, s"$base/buckets", "pc"),
-        NearDup.sweepOldCells(e.sparkSession, s"$base/vectors", "sc"))
-      else (Seq.empty[Int], Seq.empty[Int])
-    // eager checkpoint + concurrent store pipelines + pinned write
-    // parallelism — NearDup.bandStoreRows's round-15 pattern
-    val ee = e.select(col("id"), col("v"), col("nrm")).localCheckpoint()
-    val keyed0 = bucketFrame(ee, tables, bits, dims)
-      .withColumn("pc",
-        pmod(xxhash64(col("t"), col("bucket")), lit(cells.toLong)).cast("int"))
-    val keyed = if (append) keyed0.localCheckpoint(false) else keyed0
-    val parts = graft.transforms.IndexMaintenance
-      .cellWriteParts(e.sparkSession, cells)
-    val (bTouched, vTouched) =
-      graft.transforms.IndexMaintenance.inParallel(
-      {
-        keyed
-          .repartition(parts, col("pc"))
-          .write.mode(mode).partitionBy("pc").parquet(s"$base/buckets")
-        if (!append) Seq.empty[Int]
-        else keyed.select(col("pc")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-      },
-      {
-        ee.withColumn("sc",
-            pmod(xxhash64(col("id")), lit(cells.toLong)).cast("int"))
-          .repartition(parts, col("sc"))
-          .write.mode(mode).partitionBy("sc").parquet(s"$base/vectors")
-        if (!append) Seq.empty[Int]
-        else ee
-          .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-            .cast("int").as("sc"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-      })
-    if (!append) Map.empty
-    else Map(
-      "buckets" -> (bTouched ++ bRest).distinct.sorted,
-      "vectors" -> (vTouched ++ vRest).distinct.sorted)
-  }
+    CellStore.append(base, "cosine_vec", e)
 
   /** Remove vectors from an existing [[cosineStoreTo]] artifact —
     * NearDup.bandStoreDelete's contract for the sign-LSH family: a
     * vector's bucket keys and vector-store cell are pure functions of
     * the vector itself (hyperplanes are seeded by (t, dims), geometry
     * from `meta/`), so the delete batch routes to exactly the cells
-    * holding its rows and only those are rewritten
-    * (NearDup.deleteFromCellStore). Content-keyed like the store
-    * (id = xxhash64(v)): deleting a vector removes its membership no
-    * matter how many rows or appends carried it. Degenerate vectors
-    * (the build's null/zero/NaN filter) were never stored, so callers
-    * apply the same filter before routing. `e` columns: (id, v, nrm),
-    * the build/append frame shape.
+    * holding its rows and only those are rewritten. Content-keyed like
+    * the store (id = xxhash64(v)): deleting a vector removes its
+    * membership no matter how many rows or appends carried it.
+    * Degenerate vectors (the build's null/zero/NaN filter) were never
+    * stored, so callers apply the same filter before routing. `e`
+    * columns: (id, v, nrm), the build/append frame shape.
     */
   def cosineStoreDelete(base: String, e: DataFrame)
       : Map[String, Seq[Int]] =
-      graft.transforms.IndexMaintenance.withMaintLock(
-        e.sparkSession, base, "DELETE") {
-    val s = e.sparkSession
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    NearDup.requireKind(meta, base, "cosine_vec", "INDEX … DELETE")
-    val dims = meta.getAs[Int]("dims")
-    val ad = probeDims(e, "INDEX … DELETE METHOD COSINE")
-    if (ad == 0) Map.empty // nothing deletable in the batch
-    else {
-      if (ad != dims) throw graft.transforms.TransformParser.TransformError(
-        s"INDEX … DELETE: batch vectors are $ad-dimensional but the " +
-          s"stored index at $base holds $dims-dimensional vectors")
-      graft.transforms.IndexMaintenance.Stats.mergeForWriter(
-        s, base, "cosine_vec") {
-      val cells = meta.getAs[Int]("cells")
-      // serial pre-invalidate + eager checkpoints + concurrent store
-      // legs — NearDup.bandStoreDelete's round-15 pattern
-      graft.transforms.IndexMaintenance.Stats.invalidate(
-        s.sparkContext.hadoopConfiguration, base)
-      val ee = e.select(col("id"), col("v"), col("nrm")).localCheckpoint()
-      val ids = ee.select(col("id")).distinct().localCheckpoint()
-      val ((bCells, bRest), (vCells, vRest)) =
-        graft.transforms.IndexMaintenance.inParallel(
-          {
-            val bc = bucketFrame(ee, meta.getAs[Int]("tables"),
-                meta.getAs[Int]("bits"), dims)
-              .select(pmod(xxhash64(col("t"), col("bucket")),
-                lit(cells.toLong)).cast("int").as("pc"))
-              .distinct().collect().map(_.getInt(0)).sorted
-            (bc, NearDup.deleteFromCellStore(s, s"$base/buckets", "pc",
-              bc, "id", ids))
-          },
-          {
-            val vc = ids
-              .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-                .cast("int").as("sc"))
-              .distinct().collect().map(_.getInt(0)).sorted
-            (vc, NearDup.deleteFromCellStore(s, s"$base/vectors", "sc",
-              vc, "id", ids))
-          })
-      Map("buckets" -> (bCells.toSeq ++ bRest).distinct,
-        "vectors" -> (vCells.toSeq ++ vRest).distinct)
-      }
-    }
-  }
+    CellStore.delete(base, "cosine_vec", e, "id")
 
   /** [[cosineCrossMatches]] against a [[cosineStoreTo]] artifact: batch
     * ids with ≥ 1 stored vector at round-6 cosine ≥ threshold, touching
@@ -689,7 +574,7 @@ object VecKnn {
     * to the shared prefix — "matches" the oracle can never reproduce.
     * One 2-cell aggregate over the frame, cheap next to the bucket job.
     */
-  private def probeDims(df: DataFrame, what: String): Int = {
+  private[graft] def probeDims(df: DataFrame, what: String): Int = {
     val r = df.agg(min(size(col("v"))), max(size(col("v")))).collect().head
     if (r.isNullAt(0)) 0
     else if (r.getInt(0) != r.getInt(1))

@@ -2322,6 +2322,74 @@ class AqlSpec extends AnyFunSuite {
     assert(kept2 == Set(0L), s"expected only doc 0 kept, got $kept2")
   }
 
+  test("INDEX REBUILD restores the cells a crashed swap left in .old_ " +
+      "siblings before reading the stores") {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_aqlspec_rbcrash")
+    graft.queries.Advanced.registerTmpDir(dir)
+    val docsPq = dir.resolve("docs.parquet").toString
+    spark.range(40)
+      .selectExpr("id", "concat('rebuild crash document ', id, " +
+        "' alpha beta gamma delta epsilon zeta') AS txt")
+      .write.parquet(docsPq)
+    val idx = dir.resolve("lsh").toString
+    def onDocs(name: String, body: String) = Aql.run(spark,
+      s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$docsPq',
+         |  FORMAT = 'parquet')
+         |TRANSFORM '$name' FROM CONNECTION D (
+         |  $body
+         |) INTO CONSOLE""".stripMargin).outputs(name).collect()
+    def maintain(verb: String) = Aql.run(spark,
+      s"""DATA 'One' ([[1]]) WITH (COLUMNS = 'X')
+         |TRANSFORM 'T' FROM BLOCK One (
+         |  INDEX $verb '$idx'
+         |) INTO CONSOLE""".stripMargin).outputs("T").collect()
+    val built = onDocs("T", s"INDEX ON txt KEY id METHOD LSH THRESHOLD " +
+      s"0.5 CELLS 8 INTO '$idx'").head.getAs[Long]("indexed_rows")
+    assert(built == 40L)
+    // a DELETE or COMPACT that crashed between a cell's two renames, in
+    // each store: the live cell is absent and `.old_` holds the only
+    // copy of its rows
+    def crash(store: String, cellCol: String): java.nio.file.Path = {
+      val root = java.nio.file.Paths.get(idx, store)
+      val cells = java.nio.file.Files.list(root)
+      val cell =
+        try cells.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(s"$cellCol=")).toSeq.min
+        finally cells.close()
+      val old = root.resolve(s".old_${cellCol}_${cell.stripPrefix(s"$cellCol=")}")
+      java.nio.file.Files.move(root.resolve(cell), old)
+      old
+    }
+    val crashedShingles = crash("shingles", "sc")
+    crash("bands", "pc")
+    // the docs whose only stored copy sits in the crashed shingle cell
+    val crashedIds = spark.read.parquet(crashedShingles.toString)
+      .select("id").as[Long].collect().toSet
+    val crashedDocs = spark.read.parquet(docsPq)
+      .where(xxhash64(col("txt")).isin(crashedIds.toSeq: _*))
+      .select("id").as[Long].collect().toSet
+    assert(crashedDocs.nonEmpty)
+    val rebuilt = maintain("REBUILD").head
+    assert(rebuilt.getAs[Long]("indexed_rows") == built, rebuilt)
+    val served = maintain("DESCRIBE").map(r =>
+      r.getAs[String]("store") -> r.getAs[Long]("entries")).toMap
+    val verify = Aql.run(spark,
+      s"""DATA 'One' ([[1]]) WITH (COLUMNS = 'X')
+         |TRANSFORM 'T' FROM BLOCK One (
+         |  INDEX DESCRIBE '$idx' VERIFY
+         |) INTO CONSOLE""".stripMargin).outputs("T").collect()
+      .map(r => r.getAs[String]("store") -> r.getAs[Long]("entries")).toMap
+    assert(verify("shingles") == built, verify)
+    assert(served == verify)
+    // every doc, the crashed cell's included, still matches its copy
+    val kept = onDocs("K", s"NEARDEDUP D AGAINST STORED '$idx' ON txt " +
+      "KEY id THRESHOLD 0.5 METHOD LSH").map(_.getLong(0)).toSet
+    assert(kept.intersect(crashedDocs).isEmpty, s"crashed docs kept: $kept")
+    assert(kept.isEmpty, s"expected no doc kept, got $kept")
+  }
+
   test("INDEX under a dot-dir ancestor: indexed_rows counts the real " +
       "entries (qualified-path hidden test)") {
     import spark.implicits._

@@ -1,9 +1,11 @@
 package graft
 
-import graft.transforms.IndexMaintenance
+import graft.transforms.CellStore
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.concurrent.{Await, Future, blocking}
@@ -15,15 +17,15 @@ class InParallelSpec extends AnyFunSuite {
 
   /** One task on each thread of the global pool, plus two more: every
     * task waits until all have started, so no thread takes two. Returns
-    * each task's thread and the job group that thread carries.
+    * each task's thread and the local property `key` that thread carries.
     */
-  private def onEveryPoolThread(): Seq[(Thread, String)] = {
+  private def onEveryPoolThread(key: String = Group): Seq[(Thread, String)] = {
     val n = Thread.getAllStackTraces.keySet.asScala
       .count(_.getName.startsWith("scala-execution-context-global")) + 2
     val started = new CountDownLatch(n)
     Await.result(Future.sequence((1 to n).map(_ => Future(blocking {
       val seen = (Thread.currentThread,
-        spark.sparkContext.getLocalProperty(Group))
+        spark.sparkContext.getLocalProperty(key))
       started.countDown()
       started.await(20, TimeUnit.SECONDS)
       seen
@@ -36,10 +38,10 @@ class InParallelSpec extends AnyFunSuite {
     // pool threads created now inherit no group from this caller
     val clean = onEveryPoolThread().map(_._1).toSet
     sc.setLocalProperty(Group, "stmt-1")
-    val (a, b) =
-      try IndexMaintenance.inParallel(
-        (Thread.currentThread, sc.getLocalProperty(Group)),
-        (Thread.currentThread, sc.getLocalProperty(Group)))
+    val Seq(a, b) =
+      try CellStore.inParallel(Seq(
+        () => (Thread.currentThread, sc.getLocalProperty(Group)),
+        () => (Thread.currentThread, sc.getLocalProperty(Group))))
       finally sc.setLocalProperty(Group, null)
     assert(a._2 == "stmt-1" && b._2 == "stmt-1")
     val legThreads = Set(a._1, b._1).intersect(clean)
@@ -51,10 +53,45 @@ class InParallelSpec extends AnyFunSuite {
 
   test("inParallel rethrows the first leg's failure with the second's suppressed") {
     spark
-    val e = intercept[IllegalStateException](IndexMaintenance.inParallel(
-      throw new IllegalStateException("leg a"),
-      throw new IllegalArgumentException("leg b")))
+    val e = intercept[IllegalStateException](CellStore.inParallel(Seq(
+      () => throw new IllegalStateException("leg a"),
+      () => throw new IllegalArgumentException("leg b"))))
     assert(e.getMessage == "leg a")
     assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("leg b"))
+  }
+
+  test("inParallel runs every leg's jobs under the caller's job tags") {
+    val sc = spark.sparkContext
+    val Tags = "spark.job.tags" // SparkContext.SPARK_JOB_TAGS
+    sc.clearJobTags()
+    // pool threads created now inherit no tag from this caller
+    val clean = onEveryPoolThread(Tags).map(_._1).toSet
+    val seen = new ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty(Tags))))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.addJobTag("stmt-2")
+    val legs =
+      try CellStore.inParallel(Seq.fill(2)(() => {
+        spark.range(100).repartition(2).count()
+        Thread.currentThread
+      }))
+      finally {
+        sc.removeJobTag("stmt-2")
+        ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    val tagged = seen.asScala.toSeq
+    assert(tagged.size >= 2, tagged)
+    assert(tagged.forall(_.exists(_.split(",").contains("stmt-2"))), tagged)
+    val legThreads = legs.toSet.intersect(clean)
+    assert(legThreads.nonEmpty)
+    val after = onEveryPoolThread(Tags).filter(r => legThreads(r._1))
+    assert(after.nonEmpty)
+    assert(after.forall(r => r._2 == null || r._2.isEmpty), after)
   }
 }

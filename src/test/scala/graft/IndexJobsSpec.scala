@@ -91,4 +91,66 @@ class IndexJobsSpec extends AnyFunSuite {
     assert(recounts.size == 1, appendJobs.mkString("; "))
     assert(maintain("DESCRIBE").forall(_.getAs[Boolean]("stats_served")))
   }
+
+  /** Jobs of a CELLS 8 build, a verb APPEND, a COMPACT of the cells that
+    * APPEND left with two files, and a verb DELETE, per index kind. The
+    * counts pin the writers' job shape: routing collects, eager
+    * checkpoints, one write job set per store, the recount.
+    */
+  private val kindJobs = Seq(
+    ("LSH", "METHOD LSH THRESHOLD 0.5 CELLS 8", Jobs(10, 14, 6, 18)),
+    ("TYPO", "METHOD TYPO CELLS 8", Jobs(10, 14, 6, 18)),
+    ("COSINE", "METHOD COSINE CELLS 8 TABLES 8 BITS 3", Jobs(15, 19, 6, 23)),
+    ("IVF+PQ", "METHOD IVF CELLS 8 PQ 2", Jobs(21, 20, 6, 15)))
+
+  private case class Jobs(build: Int, append: Int, compact: Int,
+      delete: Int)
+
+  for ((kind, geometry, want) <- kindJobs)
+    test(s"$kind: build, APPEND, COMPACT and DELETE run the pinned jobs") {
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft_kindjobs")
+      graft.queries.Advanced.registerTmpDir(dir)
+      def pq(name: String, ids: Range): String = {
+        val p = dir.resolve(name).toString
+        val text = kind == "LSH" || kind == "TYPO"
+        if (text) ids.map(i => (i.toLong, s"entry $i on topic ${i % 7} " +
+            s"with words w${i % 5} v${i % 3} and tail t$i"))
+          .toDF("id", "item").write.parquet(p)
+        else ids.map(i => (i.toLong, Array(math.sin(i.toDouble),
+            math.cos(i * 0.7), (i % 5).toDouble, (i % 3) + 0.5)))
+          .toDF("id", "item").write.parquet(p)
+        p
+      }
+      val idx = dir.resolve("idx").toString
+      val method = geometry.split(" ")(1)
+      var out: org.apache.spark.sql.DataFrame = null
+      def run(file: String, body: String): Unit = {
+        out = Aql.run(spark,
+          s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$file',
+             |  FORMAT = 'parquet')
+             |TRANSFORM 'T' FROM CONNECTION D (
+             |  $body
+             |) INTO CONSOLE""".stripMargin).outputs("T")
+      }
+      val corpus = pq("a.parquet", 1 to 40)
+      val batch = pq("b.parquet", 41 to 60)
+      val gone = pq("c.parquet", 1 to 3)
+      def rows(): Long = out.collect().head.getAs[Long]("indexed_rows")
+      val build = jobsOf(
+        run(corpus, s"INDEX ON item KEY id $geometry INTO '$idx'")).size
+      assert(rows() == 40L)
+      val append = jobsOf(run(batch,
+        s"INDEX ON item KEY id METHOD $method INTO '$idx' APPEND")).size
+      assert(rows() == 60L)
+      val compact = jobsOf(run(corpus, s"INDEX COMPACT '$idx'")).size
+      val files = out.collect().head
+      assert(files.getAs[Long]("files_after") <
+        files.getAs[Long]("files_before"), files)
+      val delete = jobsOf(run(gone,
+        s"INDEX ON item KEY id METHOD $method INTO '$idx' DELETE")).size
+      assert(rows() == 57L)
+      val got = Jobs(build, append, compact, delete)
+      assert(got == want)
+    }
 }
