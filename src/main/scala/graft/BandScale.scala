@@ -219,6 +219,16 @@ object BandScale {
       }
       val (matchedAfterDelete, reprobe2S) = timed(probe())
 
+      // the build wrote stats from its file reports and the append and
+      // delete above folded theirs in, with no recount job: what they
+      // serve must equal the full recount below, row for row
+      val im = graft.transforms.IndexMaintenance
+      val reported = im.Stats.read(spark, base)
+      // dropped, so the DESCRIBE below measures the honest FALLBACK at
+      // this k, the closed-form check against the full recompute the
+      // round-12 curve demands
+      im.Stats.invalidate(spark.sparkContext.hadoopConfiguration, base)
+
       // DESCRIBE leg (round 12): the statement recommended as the
       // skew/COMPACT monitor must carry its own price tag at the cell
       // counts the derivation actually ships — cost model is directory
@@ -232,30 +242,25 @@ object BandScale {
 
       // stats-served DESCRIBE leg (round 13): every mutating writer
       // maintains <dir>/stats, and a routine DESCRIBE then reads one
-      // small parquet instead of walking the store. The artifact here
-      // was built via the API (bandStoreFrom), which writes no stats,
-      // and a batch-sized mutation never pays the artifact-sized
-      // first recount — so the append/delete above ran with stats
-      // ABSENT and the describe above measured the honest FALLBACK at
-      // this k, the closed-form check against the full recompute the
-      // round-12 curve demands. Refresh stats once (pricing what a
-      // build statement absorbs) and measure the served path,
-      // closed-form checked against the same truth.
-      val im = graft.transforms.IndexMaintenance
+      // small parquet instead of walking the store. Refresh stats once
+      // with the full recount (pricing the absent-stats self-heal) and
+      // measure the served path, closed-form checked against the same
+      // truth.
       val stores =
         graft.transforms.CellStore.storesFor("lsh_text", "BandScale")
-      val (_, statsRefreshS) = timed(im.Stats.write(spark, base, stores))
+      val (recounted, statsRefreshS) =
+        timed(im.Stats.write(spark, base, stores))
       val (descEntries2, describeStatsS) = timed(describeBands())
 
-      // incremental stats leg (round 14): every append's stats
-      // epilogue recomputes only the batch's TOUCHED cells and merges
-      // them into the prior stats (Stats.mergeTouched — run and timed
-      // HERE in isolation, with the wrapper's internal merge
-      // suppressed via a pre-invalidate, so the figure is a cold
-      // first-touch of the appended cells' footers) and is priced
-      // against the full recompute the round-13 epilogue paid.
-      // The claim is the asymptotics fix: merge cost ∝ touched cells
-      // (bounded by the batch's band keys, flat across corpus
+      // touched-cell recount leg (round 14): recompute only the
+      // batch's TOUCHED cells and merge them into the prior stats
+      // (Stats.mergeTouched — the refresh of cells a sweep restored,
+      // whose rows no writer report holds; run and timed HERE in
+      // isolation, with the wrapper's own report merge suppressed via
+      // a pre-invalidate, so the figure is a cold first-touch of the
+      // appended cells' footers) and priced against the full
+      // recompute. The claim is the asymptotics: merge cost ∝ touched
+      // cells (bounded by the batch's band keys, flat across corpus
       // growth), full cost ∝ all cells (grows with the corpus until
       // the cap). Closed-form: the merged stats equal the full
       // recompute row-for-row — on the SAME artifact state,
@@ -306,6 +311,7 @@ object BandScale {
       val checks = Seq(
         "manifest_merge_closed_form" -> (incremental == fullSnapshot),
         "stats_merge_closed_form" -> (merged == full),
+        "stats_report_closed_form" -> reported.contains(recounted),
         // exists, not forall: a missing baseline must FAIL (reps are
         // require'd to start at 1)
         "matched_closed_form" -> (k == 1 || matched1.exists(_ == matchedK)),

@@ -1,8 +1,16 @@
 package graft.transforms
 
 import graft.functions.Text
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
+
+import scala.util.{Failure, Success, Try}
 
 import IndexMaintenance.Stats
 import TransformParser.TransformError
@@ -11,13 +19,10 @@ import TransformParser.TransformError
   * the artifact, its cell column, and the routing that turns the kind's
   * shared frame into the store's rows with the cell column added. A
   * row's cell is a pure function of its own content, so a batch routes
-  * to exactly the cells that can hold its rows. `fanOut` marks a routing
-  * that maps one row to several cells (band keys, delete-1 variants,
-  * sign-LSH buckets): an APPEND materializes such routed rows once, for
-  * the write and for the touched-cells pass.
+  * to exactly the cells that can hold its rows.
   */
 private[graft] final case class CellStore(name: String, cellCol: String,
-    rows: DataFrame => DataFrame, fanOut: Boolean = false)
+    rows: DataFrame => DataFrame)
 
 /** The one writer of the stored indexes' cell stores (LSH, TYPO, COSINE
   * and IVF): builds, REBUILD stages, APPEND, DELETE and COMPACT all
@@ -25,30 +30,49 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   *  - Every kind is an ordered list of [[CellStore]]s over one shared
   *    frame. A statement materializes that frame once (an eager local
   *    checkpoint; an IVF build's trained assignment stays a plan), then
-  *    runs one leg per store concurrently ([[inParallel]]); each leg
+  *    writes one leg per store concurrently ([[land]]); each leg
   *    repartitions its rows to [[cellWriteParts]] tasks on the cell
-  *    column before `partitionBy`, so a cell lands whole in one task —
-  *    one file per touched cell per write.
+  *    column and sorts each task by cell, so a cell lands whole in one
+  *    task — one file per touched cell per write.
+  *  - A task writes each of its cells' files through Spark's own parquet
+  *    writer under a hidden name,
+  *    `<col>=<c>/.pending-part-<task>-<attempt>-<stmt><ext>`, and reports
+  *    (cell, file, rows) to the driver ([[writePending]]). Readers skip
+  *    dot-names, so a pending file is invisible. A failed task attempt
+  *    deletes its own pending files.
+  *  - Only when every leg's write job has succeeded does the driver
+  *    publish: one rename per reported file, to
+  *    `part-<task>-<stmt>.c000<ext>` (the names, codec and footer Spark's
+  *    own committer gives), then it deletes any unreported pending file
+  *    in the cells it touched (a retried or speculative attempt's). If
+  *    any leg fails, no leg publishes: the statement's pending files are
+  *    deleted and the store is unchanged. There is no `_temporary` tree
+  *    and no `_SUCCESS` file.
+  *  - The reports are the statement's record of what it wrote
+  *    ([[Landed]]): its touched cells and the refreshed per-cell stats
+  *    ([[IndexMaintenance.Stats.merge]]) come from them, so no job
+  *    re-reads a store to learn what was written.
   *  - Mutations of an existing artifact (APPEND, DELETE, COMPACT)
   *    hold its single-writer lock ([[IndexMaintenance.withMaintLock]],
   *    re-entrant under a verb) and drop `stats/` and the manifest
   *    before touching a row ([[IndexMaintenance.Stats.invalidate]]):
   *    both can be absent, never stale. APPEND and DELETE run inside
-  *    [[IndexMaintenance.Stats.mergeForWriter]], which merges the
-  *    returned touched cells back into both. A build overwrites every
-  *    store; REBUILD builds into a fresh stage it swaps in whole.
+  *    [[IndexMaintenance.Stats.mergeForWriter]], which folds the
+  *    statement's reports back into both. A build overwrites every
+  *    store and writes `stats/` from its reports; REBUILD builds into a
+  *    fresh stage it swaps in whole.
   *  - APPEND adds files next to a cell's existing ones. DELETE and
-  *    COMPACT rewrite only the routed cells ([[rewrite]]): survivors go
-  *    to a staging sibling, then each cell swaps with two renames
-  *    (live → `.old_<col>_<cell>`, staging → live). A failed rename
-  *    rolls every committed cell back. A crash between a cell's two
-  *    renames leaves `.old_` as the only copy of its rows; [[sweep]]
-  *    restores it before the next statement reads or writes the store
-  *    (APPEND, DELETE, COMPACT and REBUILD all sweep first) and reaps
-  *    `.old_` dirs whose swap finished.
-  *  - Writers return each store's touched cells: the batch's own
-  *    routing plus the cells a sweep restored, because restored rows
-  *    were absent from any stats written while the cell was down.
+  *    COMPACT rewrite only the routed cells ([[rewrite]]): survivors
+  *    land in a staging sibling per store, then each cell swaps with two
+  *    renames (live → `.old_<col>_<cell>`, staging → live). A failed
+  *    rename rolls every committed cell of its store back. A crash
+  *    between a cell's two renames leaves `.old_` as the only copy of
+  *    its rows; [[sweep]] restores it before the next statement reads or
+  *    writes the store (APPEND, DELETE, COMPACT and REBUILD all sweep
+  *    first) and reaps `.old_` dirs whose swap finished.
+  *  - A sweep-restored cell's rows are in no report and were absent from
+  *    any stats written while the cell was down: it joins the touched
+  *    cells, and it is the one cell a mutation's stats refresh recounts.
   */
 private[graft] object CellStore {
   private def cell(hash: Column, cells: Int): Column =
@@ -65,8 +89,7 @@ private[graft] object CellStore {
   def lsh(cells: Int, bandKeys: DataFrame => DataFrame,
       hashShingles: Boolean): Seq[CellStore] = Seq(
     CellStore("bands", "pc", sh => bandKeys(sh)
-      .withColumn("pc", cell(xxhash64(col("band"), col("bh")), cells)),
-      fanOut = true),
+      .withColumn("pc", cell(xxhash64(col("band"), col("bh")), cells))),
     CellStore("shingles", "sc", sh =>
       (if (hashShingles)
         sh.select(col("id"), Text.hashedShingles(col("shs")).as("shs"))
@@ -77,8 +100,8 @@ private[graft] object CellStore {
     */
   def typo(cells: Int): Seq[CellStore] = Seq(
     CellStore("variants", "pc", r => NearDup.delete1Variants(r, "txt")
-      .select(col("id"), col("vh")).withColumn("pc", cell(col("vh"), cells)),
-      fanOut = true),
+      .select(col("id"), col("vh"))
+      .withColumn("pc", cell(col("vh"), cells))),
     CellStore("strings", "sc", _.withColumn("sc", idCell(cells))))
 
   /** cosine_vec over (id, v, nrm): sign-LSH buckets routed by
@@ -88,8 +111,7 @@ private[graft] object CellStore {
       : Seq[CellStore] = Seq(
     CellStore("buckets", "pc", ee =>
       VecKnn.bucketFrame(ee, tables, bits, dims)
-        .withColumn("pc", cell(xxhash64(col("t"), col("bucket")), cells)),
-      fanOut = true),
+        .withColumn("pc", cell(xxhash64(col("t"), col("bucket")), cells))),
     CellStore("vectors", "sc", _.withColumn("sc", idCell(cells))))
 
   /** ivf_vec over a frame that already carries its `cluster` (the
@@ -117,10 +139,28 @@ private[graft] object CellStore {
         s"$ctx: unknown artifact kind '$other'")
     }).map(st => st.name -> st.cellCol)
 
+  /** One statement's effect on one store, from its writers' reports: the
+    * files it published as (cell, file, rows); the cells it rewrote
+    * whole, whose prior files are gone (a rewritten cell with no
+    * published file is gone); and the cells a sweep restored, whose rows
+    * no report holds.
+    */
+  final case class Landed(files: Seq[(Int, String, Long)] = Nil,
+      rewritten: Seq[Int] = Nil, restored: Seq[Int] = Nil) {
+    def touched: Seq[Int] =
+      (files.map(_._1) ++ rewritten ++ restored).distinct.sorted
+  }
+
+  /** A file a write task left under its hidden name: its cell, that
+    * name, the name it is published under, and its row count.
+    */
+  private[graft] final case class Pending(cell: Int, path: String,
+      published: String, rows: Long)
+
   /** Shuffle parallelism for a cell-partitioned store write: ideally one
     * cell per task, capped at 4× the cluster's cores. Without the pin,
     * AQE coalesces a microbatch-sized exchange to one task that then
-    * commits every cell's file sequentially — the write is bound by
+    * writes every cell's file sequentially — the write is bound by
     * per-file latency, not bytes (measured 0.9–1.1 s per store per
     * streamed append at 64 cells, ~15 ms/file). The cap keeps a
     * 65 536-cell artifact's append from scheduling 65 k near-empty
@@ -153,7 +193,6 @@ private[graft] object CellStore {
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    import scala.util.{Failure, Try}
     val sc = SparkSession.active.sparkContext
     // "spark.job.tags" is SparkContext.SPARK_JOB_TAGS (package-private)
     val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
@@ -167,7 +206,11 @@ private[graft] object CellStore {
       finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
     val running = legs.map(leg => Future(blocking(withProps(leg()))))
-    val settled = running.map(f => Try(Await.result(f, Duration.Inf)))
+    rethrowFirst(running.map(f => Try(Await.result(f, Duration.Inf))))
+  }
+
+  /** The legs' results, or the first failure with the others suppressed. */
+  private def rethrowFirst[A](settled: Seq[Try[A]]): Seq[A] = {
     val failures = settled.collect { case Failure(e) => e }
     failures.headOption.foreach { first =>
       failures.tail.filter(_ ne first).foreach(first.addSuppressed)
@@ -189,7 +232,6 @@ private[graft] object CellStore {
 
   private def sweepStore(spark: SparkSession, root: String,
       cellCol: String): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val restored = Seq.newBuilder[Int]
@@ -204,17 +246,44 @@ private[graft] object CellStore {
     restored.result()
   }
 
+  /** Each cell directory of the store at `root` with its entries,
+    * walked store → cell → file with `listStatus`: cell directories are
+    * flat, and a recursive `listFiles` pays a permission probe per file
+    * on a local file system. Lazy, so a caller can stop at the first
+    * cell it needs.
+    */
+  private[graft] def listCells(fs: FileSystem, root: Path, cellCol: String)
+      : Iterator[(Int, Seq[FileStatus])] =
+    if (!fs.exists(root)) Iterator.empty
+    else fs.listStatus(root).iterator
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$cellCol="))
+      .map(st => st.getPath.getName.stripPrefix(s"$cellCol=").toInt ->
+        fs.listStatus(st.getPath).toSeq)
+
+  /** Whether an entry is a writer's leftover hidden file. */
+  private[graft] def isPending(st: FileStatus): Boolean =
+    st.getPath.getName.startsWith(".pending-")
+
   /** A build or REBUILD stage: overwrite every store of `base` with its
-    * routing of `shared`, one concurrent leg per store. `shared` must
-    * already be materialized — both legs read it.
+    * routing of `shared`, one concurrent leg per store, and write
+    * `<base>/stats` from the legs' reports. `shared` must already be
+    * materialized — every leg reads it.
     */
   def write(base: String, stores: Seq[CellStore], shared: DataFrame,
       cells: Int): Unit = {
     val spark = shared.sparkSession
-    Stats.invalidate(spark.sparkContext.hadoopConfiguration, base)
+    val conf = spark.sparkContext.hadoopConfiguration
+    Stats.invalidate(conf, base)
+    val fs = new Path(base).getFileSystem(conf)
+    val roots = stores.map(st => new Path(base, st.name))
+    roots.foreach { r => fs.delete(r, true); fs.mkdirs(r) }
     val parts = cellWriteParts(spark, cells)
-    inParallel(stores.map(st => () =>
-      put(base, st, st.rows(shared), parts, SaveMode.Overwrite)))
+    val files = land(spark, stores.lazyZip(roots).map { (st, r) =>
+      Leg(r.toString, st.cellCol, st.rows(shared), parts) })
+    Stats.merge(spark, base, stores.map(st => st.name -> st.cellCol),
+      Map.empty, stores.lazyZip(files).map((st, f) => st.name -> Landed(f))
+        .toMap)
     ()
   }
 
@@ -223,7 +292,7 @@ private[graft] object CellStore {
     * Crashed cells are restored first — an append that re-created a
     * downed cell's live directory with only the batch's rows would make
     * the next sweep reap the prior rows as stale. Returns each store's
-    * touched cells.
+    * touched cells: the cells its report names plus the restored ones.
     */
   def append(base: String, kind: String, batch: DataFrame)
       : Map[String, Seq[Int]] =
@@ -231,51 +300,40 @@ private[graft] object CellStore {
       val restored =
         sweep(spark, base, stores.map(st => st.name -> st.cellCol))
       val parts = cellWriteParts(spark, cells)
-      val routed = preRouted(shared, stores)
-      val landed = inParallel(stores.map { st => () =>
-        val rows =
-          if (st.fanOut) st.rows(shared).localCheckpoint(false)
-          else st.rows(shared)
-        put(base, st, rows, parts, SaveMode.Append)
-        if (routed) Nil else cellsOf(rows, st.cellCol)
-      })
-      val once = if (routed) cellsOf(shared, stores.head.cellCol) else Nil
-      touchedMap(stores, landed.map(_ ++ once), restored)
+      val files = land(spark, stores.map(st =>
+        Leg(s"$base/${st.name}", st.cellCol, st.rows(shared), parts)))
+      stores.lazyZip(files).lazyZip(restored).map { (st, f, r) =>
+        st.name -> Landed(f, restored = r) }.toMap
     }
 
   /** Remove a batch from an existing artifact of `kind`: each store's
-    * routed cells are rewritten without the batch's `idCol` values
-    * ([[rewrite]], a broadcast anti-join); untouched cells are never
-    * listed, read or rewritten. Returns each store's touched cells.
+    * routed cells ([[routes]]) are rewritten without the batch's `idCol`
+    * values ([[rewrite]], a broadcast anti-join); untouched cells are
+    * never listed, read or rewritten. Returns each store's touched cells.
     */
   def delete(base: String, kind: String, batch: DataFrame, idCol: String)
       : Map[String, Seq[Int]] =
     maintain(base, kind, batch, "DELETE") { (spark, shared, stores, _) =>
-      val routed = preRouted(shared, stores)
       val ids =
-        if (routed) shared.select(col(idCol))
+        if (preRouted(shared, stores)) shared.select(col(idCol))
         else shared.select(col(idCol)).distinct().localCheckpoint()
-      val once = if (routed) cellsOf(shared, stores.head.cellCol) else Nil
-      val (cells, restored) = inParallel(stores.map { st => () =>
-        val cells = if (routed) once else cellsOf(st.rows(shared), st.cellCol)
-        (cells, rewrite(spark, s"$base/${st.name}", st.cellCol, cells,
-          "INDEX … DELETE", "re-running the same DELETE statement " +
-            "completes the rest (deleting already-deleted ids is a no-op)")(
-          _.join(broadcast(ids), Seq(idCol), "left_anti")))
-      }).unzip
-      touchedMap(stores, cells, restored)
+      rewrite(spark, base, stores.zip(routes(shared, stores)).map {
+          case (st, cells) => (st.name, st.cellCol, cells) },
+        "INDEX … DELETE", "re-running the same DELETE statement " +
+          "completes the rest (deleting already-deleted ids is a no-op)")(
+        _.join(broadcast(ids), Seq(idCol), "left_anti"))
     }
 
   /** APPEND's and DELETE's shared shape: lock, meta and kind check, the
     * kind's frame prep and stores ([[batchOf]]; a batch with nothing
     * indexable returns no touched cells), then — inside the stats and
     * manifest epilogue — invalidate, materialize the batch and run
-    * `body`.
+    * `body`, whose reports the epilogue folds in.
     */
   private def maintain(base: String, kind: String, batch: DataFrame,
       verb: String)(
       body: (SparkSession, DataFrame, Seq[CellStore], Int)
-        => Map[String, Seq[Int]]): Map[String, Seq[Int]] = {
+        => Map[String, Landed]): Map[String, Seq[Int]] = {
     val spark = batch.sparkSession
     IndexMaintenance.withMaintLock(spark, base, verb) {
       val meta = MetaParquet.readRow(spark, s"$base/meta")
@@ -287,7 +345,7 @@ private[graft] object CellStore {
             Stats.invalidate(spark.sparkContext.hadoopConfiguration, base)
             body(spark, frame.localCheckpoint(), stores,
               meta.getAs[Int]("cells"))
-          }
+          }.map { case (sub, landed) => sub -> landed.touched }
       }
     }
   }
@@ -335,81 +393,110 @@ private[graft] object CellStore {
   private def preRouted(shared: DataFrame, stores: Seq[CellStore])
       : Boolean = stores.forall(st => shared.columns.contains(st.cellCol))
 
-  private def cellsOf(rows: DataFrame, cellCol: String): Seq[Int] =
-    rows.select(col(cellCol).cast("int")).distinct().collect()
-      .map(_.getInt(0)).toSeq.sorted
-
-  private def touchedMap(stores: Seq[CellStore], cells: Seq[Seq[Int]],
-      restored: Seq[Seq[Int]]): Map[String, Seq[Int]] =
-    stores.lazyZip(cells).lazyZip(restored).map { (st, c, r) =>
-      st.name -> (c ++ r).distinct.sorted
-    }.toMap
-
-  private def put(base: String, st: CellStore, rows: DataFrame, parts: Int,
-      mode: SaveMode): Unit =
-    rows.repartition(parts, col(st.cellCol))
-      .write.mode(mode).partitionBy(st.cellCol).parquet(s"$base/${st.name}")
-
-  /** COMPACT's rewrite: each (store, cell column, dirty cells) of `base`
-    * rewritten back to one file per cell ([[rewrite]] with the identity),
-    * one concurrent leg per store with dirty cells.
+  /** Each store's routed cells of `shared`, in order, from ONE distinct
+    * collect over the union of the stores' (store, cell) pairs.
     */
-  def compact(spark: SparkSession, base: String,
-      dirty: Seq[(String, String, Seq[Int])]): Unit = {
-    inParallel(dirty.collect { case (sub, cellCol, cells) if cells.nonEmpty =>
-      () => rewrite(spark, s"$base/$sub", cellCol, cells, "INDEX COMPACT",
-        "re-running COMPACT completes the rest (compacting a compacted " +
-          "cell is a no-op)")(identity)
-    })
-    ()
+  private def routes(shared: DataFrame, stores: Seq[CellStore])
+      : Seq[Seq[Int]] = {
+    val routed = preRouted(shared, stores)
+    val pairs = (if (routed) Seq(shared -> stores.head.cellCol)
+      else stores.map(st => st.rows(shared) -> st.cellCol))
+      .zipWithIndex.map { case ((rows, cellCol), i) =>
+        rows.select(lit(i).as("s"), col(cellCol).cast("int").as("c")) }
+      .reduce(_ union _).distinct().collect()
+      .map(r => r.getInt(0) -> r.getInt(1))
+    stores.indices.map { i =>
+      val s = if (routed) 0 else i
+      pairs.collect { case (`s`, c) => c }.toSeq.sorted
+    }
   }
 
-  /** Rewrite the listed cells of the store at `root` in place through
-    * `transform` (DELETE's anti-join, COMPACT's identity), with the swap
-    * and rollback of the commit protocol above. The listed cells are read
-    * as explicit paths and written cell-partitioned into a staging
-    * sibling, `cellWriteParts(cells)` tasks wide; a cell whose rows all
-    * vanish has no staging dir and is simply removed. A rollback rename
-    * that itself fails is named in the error with `recovery`. Sweeps
-    * first, so a just-restored cell takes part in this rewrite; returns
-    * the restored cells.
+  /** COMPACT's rewrite: each (store, cell column, dirty cells) of `base`
+    * rewritten back to one file per cell ([[rewrite]] with the
+    * identity). Returns what landed in each store with dirty cells.
     */
-  private def rewrite(spark: SparkSession, root: String,
-      cellCol: String, cells: Seq[Int], what: String, recovery: String)(
-      transform: DataFrame => DataFrame): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // root is `<dir>/<store>`; stats live at `<dir>/stats`
-    Option(rootPath.getParent).foreach(par =>
-      Stats.invalidate(spark.sparkContext.hadoopConfiguration, par.toString))
-    def live(c: Int) = new Path(rootPath, s"$cellCol=$c")
-    def old(c: Int) = new Path(rootPath, s".old_${cellCol}_$c")
-    val restored = sweepStore(spark, root, cellCol)
-    val touched = cells.filter(c => fs.exists(live(c)))
-    if (touched.isEmpty) return restored
-    val stage = new Path(rootPath.getParent,
-      s".rewrite_stage_${rootPath.getName}")
-    if (fs.exists(stage)) fs.delete(stage, true) // stale from a crash
-    transform(MetaParquet.readCells(spark, root, cellCol,
-        touched.map(live(_).toString)))
-      .repartition(cellWriteParts(spark, touched.size), col(cellCol))
-      .write.mode("overwrite").partitionBy(cellCol).parquet(stage.toString)
+  def compact(spark: SparkSession, base: String,
+      dirty: Seq[(String, String, Seq[Int])]): Map[String, Landed] = {
+    val targets = dirty.filter(_._3.nonEmpty)
+    if (targets.isEmpty) Map.empty
+    else rewrite(spark, base, targets, "INDEX COMPACT",
+      "re-running COMPACT completes the rest (compacting a compacted " +
+        "cell is a no-op)")(identity)
+  }
+
+  /** Rewrite the listed cells of each (store, cell column, cells) of
+    * `base` in place through `transform` (DELETE's anti-join, COMPACT's
+    * identity), with the swap and rollback of the commit protocol above.
+    * Each store is swept first, so a just-restored cell takes part in
+    * this rewrite. The listed cells that exist are read as explicit
+    * paths and landed cell-partitioned in the store's staging sibling,
+    * `cellWriteParts(cells)` tasks wide, every store's stage in one
+    * [[land]] — a failed stage write leaves every store unchanged. Then
+    * each store's cells swap; a cell whose rows all vanish has no staging
+    * dir and is simply removed. A rollback rename that itself fails is
+    * named in the error with `recovery`. Returns what landed in each
+    * store: the staged files, the rewritten cells and the restored ones.
+    */
+  private def rewrite(spark: SparkSession, base: String,
+      targets: Seq[(String, String, Seq[Int])], what: String,
+      recovery: String)(
+      transform: DataFrame => DataFrame): Map[String, Landed] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val basePath = new Path(base)
+    val fs = basePath.getFileSystem(conf)
+    Stats.invalidate(conf, base)
+    val plans = targets.map { case (sub, cellCol, cells) =>
+      val root = new Path(basePath, sub)
+      val restored = sweepStore(spark, root.toString, cellCol)
+      val touched =
+        cells.distinct.filter(c => fs.exists(new Path(root, s"$cellCol=$c")))
+      Rewrite(sub, cellCol, root, new Path(basePath, s".rewrite_stage_$sub"),
+        restored, touched)
+    }
+    val busy = plans.filter(_.touched.nonEmpty)
+    busy.foreach(p => fs.delete(p.stage, true)) // stale from a crash
+    val staged = land(spark, busy.map(p => Leg(p.stage.toString, p.cellCol,
+      transform(MetaParquet.readCells(spark, p.root.toString, p.cellCol,
+        p.touched.map(p.live(_).toString))),
+      cellWriteParts(spark, p.touched.size))))
+    busy.foreach(swap(fs, _, what, recovery))
+    val files = busy.map(_.sub).zip(staged).toMap
+    plans.map { p =>
+      // a published stage file now sits in its live cell
+      p.sub -> Landed(files.getOrElse(p.sub, Nil).map { case (c, f, n) =>
+        (c, new Path(p.live(c), new Path(f).getName).toString, n) },
+        p.touched, p.restored)
+    }.toMap
+  }
+
+  /** One store's share of a [[rewrite]]. */
+  private final case class Rewrite(sub: String, cellCol: String, root: Path,
+      stage: Path, restored: Seq[Int], touched: Seq[Int]) {
+    def live(c: Int): Path = new Path(root, s"$cellCol=$c")
+    def old(c: Int): Path = new Path(root, s".old_${cellCol}_$c")
+    def staged(c: Int): Path = new Path(stage, s"$cellCol=$c")
+  }
+
+  /** Swap a rewrite's staged cells in (live → `.old_`, stage → live),
+    * rolling every committed cell back on a failed rename, then drop the
+    * `.old_` copies and the stage.
+    */
+  private def swap(fs: FileSystem, p: Rewrite, what: String,
+      recovery: String): Unit = {
     var committed = List.empty[Int]
     def rollback(): List[String] = {
       var unrestored = List.empty[String]
       for (r <- committed) {
         val ok =
-          (!fs.exists(live(r)) ||
-            fs.rename(live(r), new Path(stage, s"$cellCol=$r"))) &&
-          (!fs.exists(old(r)) || fs.rename(old(r), live(r)))
-        if (!ok) unrestored ::= live(r).toString
+          (!fs.exists(p.live(r)) || fs.rename(p.live(r), p.staged(r))) &&
+          (!fs.exists(p.old(r)) || fs.rename(p.old(r), p.live(r)))
+        if (!ok) unrestored ::= p.live(r).toString
       }
       unrestored
     }
     def fail(cell: Path, unrestored: List[String]): Nothing = {
       if (unrestored.isEmpty) {
-        fs.delete(stage, true)
+        fs.delete(p.stage, true)
         throw new IllegalStateException(
           s"$what: cannot swap cell $cell — the rewrite was NOT " +
             "applied (every touched cell was rolled back to its prior " +
@@ -418,21 +505,176 @@ private[graft] object CellStore {
       throw new IllegalStateException(
         s"$what: cannot swap cell $cell, and rolling back failed for " +
           s"[${unrestored.mkString(", ")}] — each of those cells has " +
-          s"its prior rows in a `.old_` sibling under $root; restore " +
+          s"its prior rows in a `.old_` sibling under ${p.root}; restore " +
           s"them by renaming, then $recovery")
     }
-    for (c <- touched) {
-      val staged = new Path(stage, s"$cellCol=$c")
-      if (!fs.rename(live(c), old(c))) fail(live(c), rollback())
-      if (fs.exists(staged) && !fs.rename(staged, live(c))) {
-        val self = if (fs.rename(old(c), live(c))) Nil
-                   else List(live(c).toString)
-        fail(live(c), self ++ rollback())
+    for (c <- p.touched) {
+      if (!fs.rename(p.live(c), p.old(c))) fail(p.live(c), rollback())
+      if (fs.exists(p.staged(c)) && !fs.rename(p.staged(c), p.live(c))) {
+        val self = if (fs.rename(p.old(c), p.live(c))) Nil
+                   else List(p.live(c).toString)
+        fail(p.live(c), self ++ rollback())
       }
       committed ::= c
     }
-    for (c <- touched) fs.delete(old(c), true)
-    fs.delete(stage, true)
-    restored
+    for (c <- p.touched) fs.delete(p.old(c), true)
+    fs.delete(p.stage, true)
+    ()
+  }
+
+  /** One store's write: `rows` landed cell-partitioned on `cellCol`
+    * under `root`, `parts` tasks wide; returns the published (cell,
+    * file, rows).
+    */
+  private[graft] def writeCells(rows: DataFrame, root: String,
+      cellCol: String, parts: Int): Seq[(Int, String, Long)] =
+    land(rows.sparkSession, Seq(Leg(root, cellCol, rows, parts))).head
+
+  /** One store's rows to land under `root`, `parts` tasks wide. */
+  private final case class Leg(root: String, cellCol: String,
+      rows: DataFrame, parts: Int)
+
+  /** Write every leg's cells concurrently ([[writePending]]) and publish
+    * them only once every leg's write succeeded; returns each leg's
+    * published (cell, file, rows), in order. When a leg fails, nothing
+    * is published: the other legs' pending files are deleted, and so are
+    * the failed leg's (a write job that failed may have finished some
+    * tasks), then the failure is rethrown with the others suppressed.
+    */
+  private def land(spark: SparkSession, legs: Seq[Leg])
+      : Seq[Seq[(Int, String, Long)]] = {
+    val stmt = java.util.UUID.randomUUID().toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val written = inParallel(legs.map(l => () =>
+      Try(writePending(l.rows, l.root, l.cellCol, l.parts, stmt))))
+    if (written.exists(_.isFailure)) {
+      legs.zip(written).foreach {
+        case (l, Success(pending)) =>
+          val fs = new Path(l.root).getFileSystem(conf)
+          pending.foreach(p => fs.delete(new Path(p.path), false))
+        case (l, Failure(_)) =>
+          val root = new Path(l.root)
+          val fs = root.getFileSystem(conf)
+          for ((_, entries) <- listCells(fs, root, l.cellCol);
+              st <- entries if isPending(st) &&
+                st.getPath.getName.contains(stmt))
+            fs.delete(st.getPath, false)
+      }
+    }
+    val pending = rethrowFirst(written) // a failure rethrows, cleaned up
+    legs.zip(pending).map { case (l, p) =>
+      publish(new Path(l.root).getFileSystem(conf), p) }
+  }
+
+  /** Publish a leg's reported files (one rename each), then delete the
+    * unreported pending files left in the cells it touched — a retried
+    * or speculative task attempt's. Returns (cell, file, rows).
+    */
+  private def publish(fs: FileSystem, pending: Seq[Pending])
+      : Seq[(Int, String, Long)] = {
+    val files = pending.map { p =>
+      val from = new Path(p.path)
+      val to = new Path(from.getParent, p.published)
+      if (!fs.rename(from, to)) throw new IllegalStateException(
+        s"cell store write: cannot publish $from as $to")
+      (p.cell, to.toString, p.rows)
+    }
+    for (dir <- pending.map(p => new Path(p.path).getParent).distinct;
+        st <- fs.listStatus(dir) if isPending(st))
+      fs.delete(st.getPath, false)
+    files
+  }
+
+  /** The task side of a store write: `rows` repartitioned to `parts`
+    * tasks on `cellCol` and sorted by cell within each task, which
+    * writes one parquet file per cell it holds under
+    * `<root>/<cellCol>=<c>/.pending-part-<task>-<attempt>-<stmt><ext>`.
+    * The files come from Spark's parquet `OutputWriterFactory` prepared
+    * as `DataFrameWriter` prepares it, so codec, footer schema and
+    * extension match its files; the cell column is left out of the
+    * data, as `partitionBy` leaves it. Returns each file with its cell,
+    * its published name `part-<task>-<stmt>.c000<ext>` and its rows
+    * (≥ 1 — a task opens a file only for a row).
+    */
+  private[graft] def writePending(rows: DataFrame, root: String,
+      cellCol: String, parts: Int, stmt: String): Seq[Pending] = {
+    import org.apache.hadoop.mapreduce.Job
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val spark = rows.sparkSession
+    val dataCols = rows.columns.toSeq.filterNot(_ == cellCol).map(col)
+    val dataSchema = rows.select(dataCols: _*).schema
+    val job = Job.getInstance(
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, dataSchema)
+    val conf = new SerializableConfiguration(job.getConfiguration)
+    val ext = ".c000" + factory.getFileExtension(taskContext(conf.value, 0, 0))
+    rows.repartition(parts, col(cellCol)).sortWithinPartitions(cellCol)
+      .select(dataCols :+ col(cellCol).cast("int"): _*)
+      .queryExecution.toRdd
+      .mapPartitions(writeTask(root, cellCol, stmt, ext, dataSchema,
+        factory, conf))
+      .collect().toSeq
+  }
+
+  private def taskContext(conf: Configuration, task: Int, attempt: Int)
+      : org.apache.hadoop.mapreduce.TaskAttemptContext = {
+    import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
+    new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
+      new TaskAttemptID("cellstore", 0, TaskType.MAP, task, attempt))
+  }
+
+  /** One [[writePending]] task over rows (data columns…, cell) sorted by
+    * cell. A failed attempt closes its open file and deletes every file
+    * it wrote.
+    */
+  private def writeTask(root: String, cellCol: String, stmt: String,
+      ext: String, dataSchema: StructType, factory: OutputWriterFactory,
+      conf: SerializableConfiguration)(
+      it: Iterator[InternalRow]): Iterator[Pending] = {
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.execution.datasources.OutputWriter
+    val task = TaskContext.get()
+    val attempt = taskContext(conf.value, task.partitionId(),
+      task.attemptNumber())
+    val part = f"part-${task.partitionId()}%05d"
+    val project = UnsafeProjection.create(dataSchema)
+    val cellAt = dataSchema.length
+    val done = Vector.newBuilder[Pending]
+    val opened = scala.collection.mutable.ArrayBuffer.empty[String]
+    var writer: OutputWriter = null
+    var cell = 0
+    var n = 0L
+    task.addTaskFailureListener(new org.apache.spark.util.TaskFailureListener {
+      def onTaskFailure(ctx: TaskContext, error: Throwable): Unit = {
+        if (writer != null) Try(writer.close())
+        opened.foreach { f =>
+          val p = new Path(f)
+          Try(p.getFileSystem(conf.value).delete(p, false))
+        }
+      }
+    })
+    def close(): Unit = {
+      writer.close()
+      done += Pending(cell, writer.path(), s"$part-$stmt$ext", n)
+      writer = null
+    }
+    it.foreach { r =>
+      val c = r.getInt(cellAt)
+      if (writer == null || c != cell) {
+        if (writer != null) close()
+        cell = c
+        n = 0L
+        val f = s"$root/$cellCol=$c/.pending-$part-" +
+          s"${task.taskAttemptId()}-$stmt$ext"
+        opened += f
+        writer = factory.newInstance(f, dataSchema, attempt)
+      }
+      writer.write(project(r))
+      n += 1
+    }
+    if (writer != null) close()
+    done.result().iterator
   }
 }

@@ -117,15 +117,18 @@ private[graft] object IndexMaintenance {
     * the build's overwrite), so `INDEX DESCRIBE` answers from one
     * small read instead of re-walking the store — the round-12
     * measured cost (∝ cells, exponent 0.93–0.96, 280 s at half the
-    * cell cap) now paid once per MUTATION, which already pays a
-    * footer-order pass for its own summary row, instead of once per
-    * DESCRIBE.
+    * cell cap) replaced by a fold of each MUTATION's own writer
+    * reports, instead of a recount per DESCRIBE.
     *
     * Cost: reading and writing `<dir>/stats` is driver-side
     * ([[MetaParquet]] — no Spark job), so a served DESCRIBE runs no job
-    * at all and a mutation's stats epilogue runs exactly ONE: the
-    * [[recount]] over every store's touched (or, for a full refresh,
-    * all) cells.
+    * at all, and neither does a mutation's stats epilogue: the cell-store
+    * writer reports every file it publishes with its row count
+    * ([[CellStore.Landed]]), and [[merge]] folds those reports into the
+    * prior stats on the driver. The [[recount]] job runs only for
+    * `INDEX DESCRIBE … VERIFY`, when stats are absent (DESCRIBE's
+    * fallback, a statement's self-heal), and for the cells a sweep
+    * restored after a crash, whose rows no report holds.
     *
     * Honesty protocol: the cell-store writer ([[CellStore]] — the
     * API appends and deletes are the streaming ingestion hot path,
@@ -143,12 +146,12 @@ private[graft] object IndexMaintenance {
 
     /** (cell, files, rows) per present cell of each store in `stores`,
       * in ONE Spark job: the DESCRIBE fallback/VERIFY cost body, shared
-      * with the stats refresh so the two paths can never disagree.
+      * with the absent-stats self-heal ([[write]]) and the recount of
+      * sweep-restored cells ([[mergeTouched]]).
       * `cells` None recounts every cell (the store roots are read);
       * Some(touched) recounts only each store's listed cells, read as
       * EXPLICIT cell paths (the probes' partition-pruning idiom — never
-      * a listing of the whole store), the ∝-touched-cells body of the
-      * round-14 incremental refresh. Every store maps to its rows —
+      * a listing of the whole store). Every store maps to its rows —
       * empty when absent, without data files, or without a touched
       * cell present (a cell fully deleted by the statement contributes
       * no rows, which is exactly its post-statement truth).
@@ -235,8 +238,9 @@ private[graft] object IndexMaintenance {
 
     /** Recompute per-cell stats for every store of the artifact and
       * replace `<dir>/stats` — one recount job, then a driver-side
-      * write. Returns the computed map so the calling statement's
-      * summary row reuses it instead of re-counting.
+      * write: the self-heal of a statement that found stats absent
+      * (COMPACT, a verb APPEND or DELETE). Returns the computed map so
+      * the calling statement's summary row reuses it.
       */
     def write(spark: org.apache.spark.sql.SparkSession, dir: String,
         stores: Seq[(String, String)])
@@ -246,31 +250,15 @@ private[graft] object IndexMaintenance {
       computed
     }
 
-    /** APPEND/DELETE's INCREMENTAL refresh (round 14): recompute ONLY
-      * the cells the statement's own routing touched and merge them
-      * into the prior stats — untouched cells' rows carry over
-      * unchanged, because the mutation provably never opened their
-      * files (the routed-cells contract every maintenance writer
-      * already rests on). This restores the mutation-cost asymptotics:
-      * the statement's stats epilogue is ∝ its batch's routed cells,
-      * not ∝ artifact files (the round-13 full-recompute epilogue was
-      * measured at 64 s at 32 768 cells and paid per APPEND even when
-      * the batch routed to a handful of cells — at 10⁹-doc artifacts
-      * it would dominate the append). COMPACT merges too (its dirty
-      * set IS its touched set); REBUILD keeps the full [[write]] — it
-      * rewrites every cell by definition, into a stage whose stats
-      * are computed before the swap.
-      * Correctness rests on three invariants, the first two
-      * maintained, the third checked closed-form in AqlSpec and
-      * BandScale (merged ≡ the full recompute / DESCRIBE … VERIFY):
-      * prior stats are exact whenever present (absent-never-stale —
-      * any writer that dies before its refresh leaves them
-      * invalidated, including restored-crashed-cell sweeps, which only
-      * run inside statements that invalidated first); the caller holds
-      * the single-writer lock across prior-read → mutation → merge;
-      * and `touched` covers every cell the statement's writers opened
-      * (each writer returns its own routing — the same arrays its
-      * cell rewrites used).
+    /** Recount the `touched` cells ([[recount]], one job) and merge
+      * them into `prior`: untouched cells' rows carry over unchanged,
+      * touched cells take the recount (a cell the recount no longer
+      * finds is gone), and `<dir>/stats` is replaced. The refresh for
+      * cells whose rows no writer report holds — the cells a sweep
+      * restored ([[merge]]) — priced by BandScale against the full
+      * [[write]]. Correctness rests on prior stats being exact whenever
+      * present (absent-never-stale) and on the caller holding the
+      * single-writer lock across prior-read → mutation → merge.
       */
     def mergeTouched(spark: org.apache.spark.sql.SparkSession,
         dir: String, stores: Seq[(String, String)],
@@ -287,56 +275,86 @@ private[graft] object IndexMaintenance {
       computed
     }
 
+    /** Fold one statement's writer reports into `prior` and replace
+      * `<dir>/stats` — the refresh of every build, REBUILD stage,
+      * APPEND, DELETE and COMPACT, with no Spark job. Per store:
+      * a rewritten cell's prior row is dropped (its files are gone);
+      * each published file adds 1 file and its rows to its cell — every
+      * published file holds ≥ 1 row, the files-with-rows semantics of
+      * [[recount]]; untouched cells carry over, because the statement
+      * never opened their files. Cells a sweep restored and the
+      * statement did not rewrite are recounted ([[mergeTouched]]): no
+      * report holds their prior rows. A build passes an empty prior.
+      */
+    def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
+        stores: Seq[(String, String)],
+        prior: Map[String, Seq[(Int, Long, Long)]],
+        landed: Map[String, CellStore.Landed])
+        : Map[String, Seq[(Int, Long, Long)]] = {
+      val folded = stores.map { case (sub, _) =>
+        val l = landed.getOrElse(sub, CellStore.Landed())
+        val kept = prior.getOrElse(sub, Seq.empty)
+          .map { case (c, f, r) => c -> (f, r) }.toMap -- l.rewritten
+        val added = l.files.groupBy(_._1).map { case (c, fs) =>
+          val (f0, r0) = kept.getOrElse(c, (0L, 0L))
+          c -> (f0 + fs.size, r0 + fs.map(_._3).sum)
+        }
+        sub -> (kept ++ added).toSeq.map { case (c, (f, r)) => (c, f, r) }
+          .sortBy(_._1)
+      }.toMap
+      val restored = landed.map { case (sub, l) =>
+        sub -> l.restored.filterNot(l.rewritten.contains) }
+        .filter(_._2.nonEmpty)
+      if (restored.nonEmpty) mergeTouched(spark, dir, stores, folded, restored)
+      else { writeRows(spark, dir, folded); folded }
+    }
+
     /** The mutating writers' stats epilogue, wrapped around the
-      * mutation itself (round 14, second wave): read the prior
-      * per-cell stats BEFORE the mutation invalidates them, run the
-      * mutation, and — when a prior existed — merge the mutation's
-      * touched-cell recomputes back in ([[mergeTouched]]). Every
-      * append and delete of every kind ([[CellStore.append]] /
+      * mutation itself: read the prior per-cell stats BEFORE the
+      * mutation invalidates them, run the mutation, and — when a prior
+      * existed — fold the mutation's writer reports into it ([[merge]]).
+      * Every append and delete of every kind ([[CellStore.append]] /
       * [[CellStore.delete]]) runs through this, which keeps
-      * `<dir>/stats` SERVED
-      * under continuous DIRECT-API ingest — the streaming foreachBatch
-      * path (gate q161), previously the one writer whose batches left
-      * DESCRIBE on the full-recompute fallback for the whole streaming
-      * window. The epilogue's DATA work (per-cell recount, one Spark
-      * job) is ∝ the batch's routed cells, like the mutation itself —
-      * a batch-sized call never pays an artifact-sized reCOUNT. Two
-      * bookkeeping legs are ∝ cells PRESENT, not cells touched: the
-      * prior read and [[mergeTouched]]'s [[writeRows]] (the full
-      * stats-file rewrite), both driver-side file I/O — both bounded by
-      * the 65 536-cell cap and metadata-row-sized (a few MB at the
-      * cap), but a fixed per-statement driver cost that can dominate a
-      * 1-row streamed append on a max-cell artifact. With NO prior
-      * (stats were already absent) the
-      * mutation leaves them absent and the next corpus-shaped
-      * statement (build/REBUILD, or a verb APPEND/DELETE's self-heal)
-      * or DESCRIBE pays the one full pass. Callers hold the artifact's
-      * maintenance lock — the writer acquires it (re-entrantly under a
-      * verb) — so the prior is exact-when-present and the
-      * read → mutate → merge sequence cannot interleave with another
-      * writer. Returns the mutation's touched map unchanged.
+      * `<dir>/stats` SERVED under continuous DIRECT-API ingest — the
+      * streaming foreachBatch path (gate q161). The epilogue runs no
+      * Spark job (unless a sweep restored a crashed cell); its
+      * bookkeeping is ∝ cells PRESENT, not cells touched: the prior
+      * read and [[merge]]'s [[writeRows]] (the full stats-file rewrite),
+      * both driver-side file I/O — bounded by the 65 536-cell cap and
+      * metadata-row-sized (a few MB at the cap), but a fixed
+      * per-statement driver cost that can dominate a 1-row streamed
+      * append on a max-cell artifact. With NO prior (stats were already
+      * absent) the mutation leaves them absent and the next
+      * corpus-shaped statement (build/REBUILD, or a verb APPEND/DELETE's
+      * self-heal) or DESCRIBE pays the one full pass. Callers hold the
+      * artifact's maintenance lock — the writer acquires it
+      * (re-entrantly under a verb) — so the prior is exact-when-present
+      * and the read → mutate → merge sequence cannot interleave with
+      * another writer. Returns the mutation's reports unchanged.
       */
     def mergeForWriter(spark: org.apache.spark.sql.SparkSession,
         dir: String, kind: String)(
-        mutate: => Map[String, Seq[Int]]): Map[String, Seq[Int]] = {
+        mutate: => Map[String, CellStore.Landed])
+        : Map[String, CellStore.Landed] = {
       // both priors read BEFORE the mutation's invalidate drops them;
       // a malformed manifest throws here (external tampering stops
       // the writer loudly — the message names the re-publish remedy —
       // rather than being silently healed or silently dropped)
       val manifestPrior = IndexManifest.readVersioned(spark, dir)
       val prior = read(spark, dir)
-      val touched = mutate
+      val landed = mutate
       val stores = CellStore.storesFor(kind, s"stats refresh at '$dir'")
-      prior.foreach { p => mergeTouched(spark, dir, stores, p, touched) }
+      prior.foreach { p => merge(spark, dir, stores, p, landed) }
       // manifest maintained-when-present (round 15): re-publish from
       // the prior + this mutation's touched cells, so probes stay
       // manifest-served across API/streaming maintenance — ∝ the
       // batch's routed cells like the stats merge above; an artifact
       // never published pays nothing here (one absent-check)
       manifestPrior.foreach { case (v, pm) =>
-        IndexManifest.republishTouched(spark, dir, stores, v, pm, touched)
+        IndexManifest.republishTouched(spark, dir, stores, v, pm,
+          landed.map { case (sub, l) => sub -> l.touched })
       }
-      touched
+      landed
     }
 
     /** Stage-and-swap `computed` into `<dir>/stats`: rows are written
@@ -386,7 +404,7 @@ private[graft] object IndexMaintenance {
       * invalidated, and the surviving reads are the honest recompute /
       * live-directory resolution. The wrapping [[mergeForWriter]]
       * epilogue restores stats from the pre-read prior plus the
-      * touched-cell recomputes as the mutation's last step, and
+      * statement's writer reports as the mutation's last step, and
       * re-publishes a previously-committed manifest the same way
       * ([[IndexManifest.republishTouched]] — touched cells re-listed,
       * the rest carried over), so both snapshots are MAINTAINED when
@@ -740,8 +758,8 @@ private[graft] object IndexMaintenance {
     * recompute runs: ONE footer-only Spark job over every store
     * ([[Stats.recount]]), measured ∝ cells in SCALING.md round 12
     * (≈ 5 min at half the cell cap on local[32] — the cost the stats
-    * path exists to amortize into the mutations, which already pay a
-    * footer-order pass for their own summary rows). The per-cell
+    * path replaces with a fold of the mutations' own writer reports).
+    * The per-cell
     * collect is bounded by the 65 536-cell cap. Read-only — no
     * maintenance lock taken: stats are advisory and each concurrent
     * cell swap is atomic, so a racing DESCRIBE sees each cell before
@@ -1139,15 +1157,9 @@ private[graft] object IndexMaintenance {
           if (reCells.isDefined) derivedSeq.filterNot(_ == "cells")
           else derivedSeq
         def requireData(sub: String): Unit = {
-          val p = new Path(s"$dir/$sub")
-          var found = false
-          if (fs.exists(p)) {
-            val it = fs.listFiles(p, true)
-            while (!found && it.hasNext) {
-              val nm = it.next().getPath.getName
-              if (!nm.startsWith("_") && !nm.startsWith(".")) found = true
-            }
-          }
+          val found = CellStore.listCells(fs, new Path(s"$dir/$sub"),
+              stores.toMap.apply(sub))
+            .exists(_._2.exists(st => MetaParquet.visible(st.getPath.getName)))
           if (!found) throw TransformError(
             s"INDEX REBUILD: artifact at $dir has no entries ($sub is " +
               "empty) — APPEND entries first, or rebuild from source " +
@@ -1271,10 +1283,9 @@ private[graft] object IndexMaintenance {
             case other => throw TransformError(
               s"INDEX REBUILD: unknown artifact kind '$other' at $dir")
           }
-          // the staged artifact swaps in COMPLETE, fresh stats
-          // included — a crash before the swap leaves the live
-          // artifact (and its stats) untouched
-          Stats.write(spark, stage.toString, stores)
+          // the staged artifact swaps in COMPLETE, its stats written
+          // from the stage writes' reports — a crash before the swap
+          // leaves the live artifact (and its stats) untouched
           // two renames; between them the artifact is absent and a
           // racing probe fails loudly instead of mis-routing
           if (!fs.rename(dirPath, oldP)) throw new IllegalStateException(
@@ -1317,27 +1328,24 @@ private[graft] object IndexMaintenance {
     }
   }
 
-  /** One store's COMPACT scan: (files before, dirty cells), where a
-    * dirty cell holds ≥ 2 data files — one directory listing per cell
-    * dir (metadata ops ∝ cells, no data read). Extracted so
+  /** One store's COMPACT scan: data files per present cell, where a
+    * cell holding ≥ 2 is dirty — one `listStatus` of the store and one
+    * per cell dir ([[CellStore.listCells]]; metadata ops ∝ cells, no data
+    * read). `.pending-` files a failed writer left in a listed cell are
+    * deleted: COMPACT holds the lock, so no writer is live. Extracted so
     * [[IndexCompactVerb]] can decide up front whether ANY rewrite is
     * coming (the idempotent no-op contract: a re-COMPACT with nothing
     * dirty must leave every byte alone, stats included).
     */
   private def compactScan(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      sub: String, cellCol: String,
-      dataFiles: org.apache.hadoop.fs.Path => Long): (Long, Seq[Int]) = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$dir/$sub")
-    if (!fs.exists(live)) return (0L, Seq.empty)
-    val dirty = fs.listStatus(live).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$cellCol="))
-      .filter(st => dataFiles(st.getPath) > 1)
-      .map(_.getPath.getName.stripPrefix(s"$cellCol=").toInt)
-      .sorted
-    (dataFiles(live), dirty)
-  }
+      sub: String, cellCol: String): Map[Int, Long] =
+    CellStore.listCells(fs, new org.apache.hadoop.fs.Path(s"$dir/$sub"),
+        cellCol).map { case (c, entries) =>
+      entries.filter(CellStore.isPending).foreach(st =>
+        fs.delete(st.getPath, false))
+      c -> entries.count(st => MetaParquet.visible(st.getPath.getName))
+        .toLong
+    }.toMap
 
   /** INDEX COMPACT '<dir>' — rewrite MULTI-FILE cells of a stored
     * artifact back to one file per cell. Every `INDEX … APPEND`
@@ -1359,14 +1367,14 @@ private[graft] object IndexMaintenance {
     * build→append→probe chain; the AqlSpec case additionally pins
     * files_after < files_before after a double append). Dirty cells
     * are rewritten through [[CellStore.rewrite]]'s staging + per-cell
-    * swap (DELETE's machinery with an identity transform), every store
-    * in its own concurrent leg — atomic per cell on HDFS/posix;
-    * object-store schemes without
+    * swap (DELETE's machinery with an identity transform), every
+    * store's stage written concurrently — atomic per cell on
+    * HDFS/posix; object-store schemes without
     * atomic rename are REFUSED up front ([[requireAtomicRenameFs]]).
-    * The stats epilogue is incremental like APPEND/DELETE's (round
-    * 14): the dirty set IS the touched set, so with prior stats
-    * present only the rewritten cells are recomputed
-    * ([[Stats.mergeTouched]]) and the whole statement — listing,
+    * The stats epilogue is incremental like APPEND/DELETE's: the dirty
+    * set IS the touched set, so with prior stats present only the
+    * rewritten cells change, taken from the rewrite's own reports
+    * ([[Stats.merge]], no job), and the whole statement — listing,
     * rewrite, AND refresh — is ∝ the cells appends dirtied.
     * A crash mid-swap leaves `.old_…`
     * cells intact and re-running COMPACT completes the rest. The
@@ -1385,19 +1393,8 @@ private[graft] object IndexMaintenance {
       val (metaRow, kind, stores) = storedIndexLayout(spark, dir,
         "INDEX COMPACT")
       val _ = metaRow // COMPACT needs only the layout
-      def dataFiles(p: Path): Long = {
-        val it = fs.listFiles(p, true)
-        var n = 0L
-        while (it.hasNext) {
-          val nm = it.next().getPath.getName
-          if (!nm.startsWith("_") && !nm.startsWith(".")) n += 1
-        }
-        n
-      }
       var before = 0L
       var after = 0L
-      var rewrote = false
-      var touched = Map.empty[String, Seq[Int]]
       withMaintLock(spark, dir, "COMPACT") {
         // priors read UNDER the lock, before any rewrite invalidates
         // them — the incremental-refresh inputs (round 14: COMPACT's
@@ -1409,46 +1406,47 @@ private[graft] object IndexMaintenance {
         // phase 1, SERIAL: sweep crashed cells, then list dirty cells
         // (cheap metadata ops). Sweeping FIRST matters: a restored cell
         // takes part in this COMPACT's own dirty listing and joins the
-        // touched set, so the incremental stats merge recomputes it.
+        // touched set, so the stats refresh recounts it.
         // Serial because the sweep and listing decide whether anything
         // is rewritten at all — an idempotent re-COMPACT must stay a
         // byte-stable no-op, stats file included, so the invalidate
         // below only happens when a rewrite is actually coming.
         val restored = CellStore.sweep(spark, dir, stores)
-        val scans = stores.zip(restored).map { case ((sub, cellCol), r) =>
-          val (b, dirty) = compactScan(fs, dir, sub, cellCol, dataFiles)
-          (sub, cellCol, b, r, dirty)
-        }
-        if (scans.exists { case (_, _, _, r, dirty) =>
-            r.nonEmpty || dirty.nonEmpty })
+        val scans = stores.map { case (sub, cellCol) =>
+          (sub, cellCol, compactScan(fs, dir, sub, cellCol)) }
+        val dirty = scans.map { case (sub, cellCol, files) =>
+          (sub, cellCol, files.collect { case (c, n) if n > 1 => c }
+            .toSeq.sorted) }
+        val rewrote = restored.exists(_.nonEmpty) ||
+          dirty.exists(_._3.nonEmpty)
+        if (rewrote)
           Stats.invalidate(spark.sparkContext.hadoopConfiguration, dir)
-        // phase 2: the dirty cells' rewrites, one concurrent leg per store
-        CellStore.compact(spark, dir, scans.map {
-          case (sub, cellCol, _, _, dirty) => (sub, cellCol, dirty) })
-        for ((sub, _, b, r, dirty) <- scans) {
-          before += b
-          val live = new Path(s"$dir/$sub")
-          if (fs.exists(live)) after += dataFiles(live)
-          if (r.nonEmpty || dirty.nonEmpty) rewrote = true
-          val t = (dirty ++ r).distinct.sorted
-          if (t.nonEmpty) touched += sub -> t
-        }
+        // phase 2: the dirty cells' rewrites, every store's stage in one
+        // concurrent write; a dirty cell's files become its report's
+        val compacted = CellStore.compact(spark, dir, dirty)
+        val landed = stores.lazyZip(scans).lazyZip(restored).map {
+          case ((sub, _), (_, _, files), r) =>
+            val l = compacted.getOrElse(sub, CellStore.Landed())
+            before += files.values.sum
+            after += files.values.sum -
+              l.rewritten.map(files.getOrElse(_, 0L)).sum + l.files.size
+            sub -> l.copy(restored = r)
+        }.toMap
         // refresh stats LAST (still under the lock): the compacted
         // per-cell file counts are exactly what the next DESCRIBE
-        // asks. With prior stats present the refresh merges recomputed
-        // rows for the DIRTY cells only (rows never change under
-        // COMPACT's identity rewrite, but file counts do — and only
-        // there), keeping the epilogue ∝ dirtied cells like the
-        // rewrite itself. Skipped when nothing was rewritten AND
-        // stats are already present — an idempotent re-COMPACT must
-        // stay a byte-stable no-op (the q158 contract); when no cell
-        // was dirty but stats are ABSENT (a prior API mutation
-        // invalidated them), the statement still self-heals the fast
-        // path
+        // asks. With prior stats present the refresh folds the
+        // rewrite's reports into them for the DIRTY cells only (rows
+        // never change under COMPACT's identity rewrite, but file
+        // counts do — and only there), keeping the epilogue ∝ dirtied
+        // cells like the rewrite itself, with no job. Skipped when
+        // nothing was rewritten AND stats are already present — an
+        // idempotent re-COMPACT must stay a byte-stable no-op (the q158
+        // contract); when no cell was dirty but stats are ABSENT (a
+        // prior API mutation invalidated them), the statement still
+        // self-heals the fast path with the full recount
         val statsPresent = fs.exists(new Path(s"$dir/stats"))
         if (rewrote || !statsPresent) prior match {
-          case Some(p) if rewrote =>
-            Stats.mergeTouched(spark, dir, stores, p, touched)
+          case Some(p) if rewrote => Stats.merge(spark, dir, stores, p, landed)
           case _ => Stats.write(spark, dir, stores)
         }
         // manifest maintained-when-present (round 15): the rewrite
@@ -1457,7 +1455,8 @@ private[graft] object IndexMaintenance {
         // committed manifest untouched and exact — no new version
         if (rewrote) manifestPrior.foreach { case (v, pm) =>
           IndexManifest.republishTouched(spark, dir, stores, v, pm,
-            touched)
+            landed.map { case (sub, l) => sub -> l.touched }
+              .filter(_._2.nonEmpty))
         }
       }
       import spark.implicits._
@@ -1725,12 +1724,12 @@ private[graft] object IndexMaintenance {
       def derivedFields(moreDerived: (String, Boolean)*): Seq[String] =
         (Seq("cells" -> cells.isEmpty) ++ moreDerived)
           .collect { case (f, true) => f }
-      // the entry-count scan after each build reads parquet footers only.
       // Returns (kind, entries store path, cell count, touched cells):
       // APPEND/DELETE writers hand back their own routing — and have
-      // already merged it into the stats via their own
+      // already merged their reports into the stats via their own
       // Stats.mergeForWriter epilogue (under this statement's
-      // re-entrant lock); builds return empty and take the full refresh
+      // re-entrant lock); builds return empty, their stores having
+      // written stats from the write reports
       def writeStores(): (String, String, Int, Map[String, Seq[Int]]) =
         method match {
         case "LSH" =>
@@ -1871,26 +1870,22 @@ private[graft] object IndexMaintenance {
       // stats refresh is the statement's LAST step (under the same
       // lock for maintenance): the summary row's entry count is read
       // from the refreshed per-cell stats instead of a separate full
-      // count. A build pays ONE full footer recount job (it rewrote
-      // every cell); APPEND/DELETE ride the API writers' own
-      // Stats.mergeForWriter epilogue (prior read under this
-      // statement's re-entrant lock, one recount job ∝ the batch's
-      // routed cells, merge — one stats body for verb and direct-API
-      // callers), so here the refreshed stats are simply READ BACK,
-      // falling back to the full pass when they are absent (stats
-      // were already absent before the mutation — this statement
-      // self-heals the fast path). The read-back is a driver-side
-      // file read (MetaParquet, no Spark job) bounded by the
-      // 65 536-cell cap — it spares widening every wrapper's public
-      // return type to carry the merged map out.
+      // count. Every writer refreshes them itself from its own file
+      // reports — a build's stores write them whole, APPEND/DELETE
+      // fold into the prior in the API writers' Stats.mergeForWriter
+      // epilogue (under this statement's re-entrant lock; one stats
+      // body for verb and direct-API callers) — with no Spark job, so
+      // here they are simply READ BACK, falling back to the full
+      // recount when they are absent (stats were already absent before
+      // the mutation — this statement self-heals the fast path). The
+      // read-back is a driver-side file read (MetaParquet, no Spark
+      // job) bounded by the 65 536-cell cap — it spares widening every
+      // wrapper's public return type to carry the merged map out.
       def writeAndCount(): (String, Int, Long) = {
         val (kind, entriesPath, cellCount, _) = writeStores()
         val stores = CellStore.storesFor(kind, s"INDEX INTO '$dir'")
-        val st =
-          if (append || delete)
-            Stats.read(spark, dir)
-              .getOrElse(Stats.write(spark, dir, stores))
-          else Stats.write(spark, dir, stores)
+        val st = Stats.read(spark, dir)
+          .getOrElse(Stats.write(spark, dir, stores))
         val entriesSub =
           new org.apache.hadoop.fs.Path(entriesPath).getName
         val n = st.getOrElse(entriesSub, Seq.empty).map(_._3).sum

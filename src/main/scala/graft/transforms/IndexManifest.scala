@@ -290,7 +290,7 @@ object IndexManifest {
     * manifest-served across maintenance instead of falling back to the
     * live layout until an operator re-runs `INDEX MANIFEST`. The same
     * cost discipline as the incremental stats merge
-    * ([[IndexMaintenance.Stats.mergeTouched]]): only the mutation's
+    * ([[IndexMaintenance.Stats.merge]]): only the mutation's
     * own TOUCHED cells are re-listed from the live layout (∝ the
     * batch's routed cells); every untouched cell's file list carries
     * over from the prior manifest with no IO. The new version file

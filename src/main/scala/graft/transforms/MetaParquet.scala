@@ -48,7 +48,7 @@ private[graft] object MetaParquet {
       .filter(st => st.isFile && visible(st.getPath.getName))
       .map(_.getPath).sortBy(_.getName)
 
-  private def visible(name: String): Boolean =
+  private[graft] def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
   /** The Spark schema of one parquet file, from its footer: the schema
