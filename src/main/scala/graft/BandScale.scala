@@ -219,15 +219,18 @@ object BandScale {
       }
       val (matchedAfterDelete, reprobe2S) = timed(probe())
 
-      // the build wrote stats from its file reports and the append and
-      // delete above folded theirs in, with no recount job: what they
-      // serve must equal the full recount below, row for row
-      val im = graft.transforms.IndexMaintenance
-      val reported = im.Stats.read(spark, base)
+      // the build committed the layout record from its file reports and
+      // the append and delete above folded theirs in, with no recount
+      // job: it must equal a full recount snapshot, file for file
+      val mf = graft.transforms.IndexManifest
+      val conf = spark.sparkContext.hadoopConfiguration
+      val stores =
+        graft.transforms.CellStore.storesFor("lsh_text", "BandScale")
+      val reported = mf.read(spark, base).map(_.layout)
       // dropped, so the DESCRIBE below measures the honest FALLBACK at
-      // this k, the closed-form check against the full recompute the
+      // this k, the closed-form check against the full recount the
       // round-12 curve demands
-      im.Stats.invalidate(spark.sparkContext.hadoopConfiguration, base)
+      mf.invalidate(conf, base)
 
       // DESCRIBE leg (round 12): the statement recommended as the
       // skew/COMPACT monitor must carry its own price tag at the cell
@@ -240,78 +243,38 @@ object BandScale {
       // original row count.
       val (descEntries, describeS) = timed(describeBands())
 
-      // stats-served DESCRIBE leg (round 13): every mutating writer
-      // maintains <dir>/stats, and a routine DESCRIBE then reads one
-      // small parquet instead of walking the store. Refresh stats once
-      // with the full recount (pricing the absent-stats self-heal) and
-      // measure the served path, closed-form checked against the same
-      // truth.
-      val stores =
-        graft.transforms.CellStore.storesFor("lsh_text", "BandScale")
-      val (recounted, statsRefreshS) =
-        timed(im.Stats.write(spark, base, stores))
-      val (descEntries2, describeStatsS) = timed(describeBands())
+      // record-served DESCRIBE leg: snapshot the record with the full
+      // recount (what INDEX MANIFEST pays on an absent record) and
+      // measure the served DESCRIBE, a fold of one small read,
+      // closed-form checked against the same truth.
+      val (snapshot, snapshotS) = timed(mf.snapshot(spark, base, stores))
+      val (descEntries2, describeServedS) = timed(describeBands())
 
-      // touched-cell recount leg (round 14): recompute only the
-      // batch's TOUCHED cells and merge them into the prior stats
-      // (Stats.mergeTouched — the refresh of cells a sweep restored,
-      // whose rows no writer report holds; run and timed HERE in
-      // isolation, with the wrapper's own report merge suppressed via
-      // a pre-invalidate, so the figure is a cold first-touch of the
-      // appended cells' footers) and priced against the full
-      // recompute. The claim is the asymptotics: merge cost ∝ touched
-      // cells (bounded by the batch's band keys, flat across corpus
-      // growth), full cost ∝ all cells (grows with the corpus until
-      // the cap). Closed-form: the merged stats equal the full
-      // recompute row-for-row — on the SAME artifact state,
-      // immediately after the merge.
-      val prior = im.Stats.read(spark, base).get
-      // invalidate BEFORE the append so the wrapper's own internal
-      // merge is skipped (no prior present): the timed merge below is
-      // then a COLD first-touch of the appended cells' footers — the
-      // production op itself, not a page-cache-warm replay of a merge
-      // the append already ran
-      im.Stats.invalidate(spark.sparkContext.hadoopConfiguration, base)
+      // restored-cell refresh leg: a mutation recounts only the cells a
+      // sweep restored, whose rows no writer report holds — priced here
+      // against the full recount. The record is dropped BEFORE the
+      // append so the writer commits nothing, then the appended cells
+      // are refreshed COLD as if restored. The claim is the
+      // asymptotics: refresh cost ∝ refreshed cells (bounded by the
+      // batch's band keys, flat across corpus growth), full cost ∝ all
+      // cells. Closed-form: the refreshed record equals the full
+      // recount file for file, on the SAME artifact state.
+      mf.invalidate(conf, base)
       val touched = NearDup.bandStoreAppend(base, appendSh)
       val touchedCells = touched.values.map(_.size).sum
-      val (merged, statsMergeS) = timed {
-        im.Stats.mergeTouched(spark, base, stores, prior, touched)
+      val (refreshed, refreshS) = timed {
+        mf.merge(spark, base, stores, snapshot.layout, touched.map {
+          case (sub, cs) => sub -> graft.transforms.CellStore.Landed(
+            restored = cs) })
       }
-      val (full, statsFullS) = timed {
-        im.Stats.write(spark, base, stores)
+      val (full, recountS) = timed {
+        graft.transforms.IndexMaintenance.Stats.recount(spark, base, stores)
       }
       NearDup.bandStoreDelete(base, appendSh) // restore the artifact
-
-      // manifest leg (round 15): the writer re-publication of a
-      // committed file manifest must price like the stats merge —
-      // ∝ the batch's touched cells (carry the rest over from the
-      // prior, re-list only touched cell dirs) — against the full
-      // publish, which lists every cell of every store (∝ artifact
-      // files). Same isolation trick as the stats leg: commit + read
-      // the prior, drop the manifest so the append's wrapper skips its
-      // own internal re-publication, then time republishTouched COLD
-      // on the appended artifact. Closed-form: the incrementally
-      // re-published file list equals a fresh full snapshot of the
-      // same live layout, store-for-store, cell-for-cell.
-      val mf = graft.transforms.IndexManifest
-      val (_, publishS) = timed { mf.publish(spark, base, stores) }
-      val (mfPriorV, mfPrior) = mf.readVersioned(spark, base).get
-      mf.invalidate(spark.sparkContext.hadoopConfiguration, base)
-      val touchedMf = NearDup.bandStoreAppend(base, appendSh)
-      val (_, republishS) = timed {
-        mf.republishTouched(spark, base, stores, mfPriorV, mfPrior,
-          touchedMf)
-      }
-      val incremental = mf.readVersioned(spark, base).get._2
-      val (_, publish2S) = timed { mf.publish(spark, base, stores) }
-      val fullSnapshot = mf.readVersioned(spark, base).get._2
-      NearDup.bandStoreDelete(base, appendSh) // restore the artifact
-      mf.invalidate(spark.sparkContext.hadoopConfiguration, base)
 
       val checks = Seq(
-        "manifest_merge_closed_form" -> (incremental == fullSnapshot),
-        "stats_merge_closed_form" -> (merged == full),
-        "stats_report_closed_form" -> reported.contains(recounted),
+        "record_report_closed_form" -> reported.contains(snapshot.layout),
+        "record_restored_closed_form" -> (refreshed == full),
         // exists, not forall: a missing baseline must FAIL (reps are
         // require'd to start at 1)
         "matched_closed_form" -> (k == 1 || matched1.exists(_ == matchedK)),
@@ -321,7 +284,7 @@ object BandScale {
         "append_closed_form" -> (matchedAfter == allBatchIds),
         "delete_closed_form" -> (matchedAfterDelete == matchedK),
         "describe_entries" -> (descEntries == idxRows),
-        "describe_stats_entries" -> (descEntries2 == idxRows))
+        "describe_served_entries" -> (descEntries2 == idxRows))
       report("band_scale", Seq("k" -> k, "corpus" -> n,
         "index_rows" -> idxRows, "cells" -> cells,
         "cells_rule" -> "IndexGeometry.storeCells",
@@ -331,12 +294,8 @@ object BandScale {
         "sec" -> secs("build" -> buildS, "probe" -> probeS,
           "append" -> appendS, "reprobe" -> reprobeS, "delete" -> deleteS,
           "reprobe2" -> reprobe2S, "describe" -> describeS,
-          "stats_refresh" -> statsRefreshS,
-          "describe_stats" -> describeStatsS,
-          "stats_merge" -> statsMergeS, "stats_full" -> statsFullS,
-          "manifest_publish" -> publishS,
-          "manifest_republish" -> republishS,
-          "manifest_publish2" -> publish2S),
+          "snapshot" -> snapshotS, "describe_served" -> describeServedS,
+          "restored_refresh" -> refreshS, "recount_full" -> recountS),
         "touched_cells" -> touchedCells,
         "artifact_bytes" -> Map("bands" -> bandsBytes,
           "shingles_hashed" -> shHashedBytes,

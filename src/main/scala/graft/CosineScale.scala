@@ -156,7 +156,7 @@ object CosineScale {
           .cast("int").as("pc"))
         .distinct().collect().map(_.getInt(0)).sorted
       val probeCells = routed.length.toLong
-      val bPaths = graft.transforms.NearDup.existingCellPaths(
+      val bPaths = graft.transforms.IndexManifest.cellPaths(
         spark, s"$base/buckets", "pc", routed)
       // rows held by the given cell paths of one store
       def rowsIn(store: String, paths: Seq[String]): Long =
@@ -174,7 +174,7 @@ object CosineScale {
         .select(pmod(xxhash64(col("id")), lit(cells.toLong))
           .cast("int").as("sc"))
         .distinct().collect().map(_.getInt(0)).sorted
-      val vPaths = graft.transforms.NearDup.existingCellPaths(
+      val vPaths = graft.transforms.IndexManifest.cellPaths(
         spark, s"$base/vectors", "sc", vRouted)
       val vectorRowsScanned = rowsIn("vectors", vPaths)
       if (k == 1) matched1 = Some(matchedK)

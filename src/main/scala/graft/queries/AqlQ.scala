@@ -1896,24 +1896,23 @@ object AqlQ {
            |) INTO CONNECTION Out""".stripMargin).outputs("FINAL")
     },
 
-    // INDEX MANIFEST → writer re-publication → manifest-served probe
-    // (round 15): q156's build→append shape with a manifest COMMIT
-    // between build and append, sharing q151's brute-force oracle. The
-    // half-corpus build commits v1; the verb APPEND of the other half
-    // then re-publishes the manifest ITSELF (the maintained-when-
-    // present contract — IndexManifest.republishTouched carries the
-    // untouched cells over and re-lists only the append's routed
-    // cells), so the final probe run resolves its routed cells from a
-    // WRITER-committed manifest's explicit file list (ONE small read —
-    // no per-cell existence RPCs, no footer-discovery listing, no
-    // mixed-cells window). A re-publication that dropped a carried
-    // file, missed an appended one, or mis-parsed a cell id changes
-    // the candidate set and fails hash-exactly against the live-layout
-    // truth. This is the object-store maintenance design's commit
-    // primitive working end to end on the rename path (SCALING.md
-    // round 15); AqlSpec pins the mechanics (version bumping, writer
-    // re-publication incl. COMPACT/REBUILD, the opt-in discipline,
-    // malformed-manifest error, lock exclusion).
+    // INDEX MANIFEST → writer commit → record-served probe: q156's
+    // build→append shape with an INDEX MANIFEST between build and
+    // append (a no-op on the build's readable v1), sharing q151's
+    // brute-force oracle. The verb APPEND of the other half then
+    // commits the layout record's next version ITSELF
+    // (IndexManifest.maintained folds the append's file reports into
+    // the prior record and carries the untouched cells over), so the
+    // final probe run resolves its routed cells from a WRITER-committed
+    // record's explicit file list (ONE small read — no per-cell
+    // existence RPCs, no footer-discovery listing, no mixed-cells
+    // window). A commit that dropped a carried file, missed an appended
+    // one, or mis-parsed a cell id changes the candidate set and fails
+    // hash-exactly against the live-layout truth. This is the
+    // object-store maintenance design's commit primitive working end to
+    // end on the rename path (SCALING.md round 15); AqlSpec pins the
+    // mechanics (versions, writer commits incl. COMPACT/REBUILD, the
+    // malformed-record error, lock exclusion).
     QueryDef(
       "q174_aql_index_manifest_probe",
       Dedup.againstKeptOracleSql) { (s, dir) =>
@@ -1941,7 +1940,7 @@ object AqlQ {
            |  INDEX MANIFEST '$idx'
            |) INTO CONSOLE""".stripMargin)
       // the other half arrives as maintenance: the verb APPEND
-      // re-publishes the committed manifest as its own last step
+      // commits the record's next version as its own last step
       Aql.run(s, corpusScript(3, " APPEND"))
       Aql.run(s,
         s"""CONNECTION 'Docs' (

@@ -612,7 +612,7 @@ object Similarity {
     // applied to both stores (codes for ADC, index for the rerank);
     // shared resolver, so a committed manifest serves both stores too
     def cellRead(store: String): DataFrame = {
-      val paths = graft.transforms.NearDup.existingCellPaths(
+      val paths = graft.transforms.IndexManifest.cellPaths(
         s, s"$base/$store", "cluster", cells)
       if (paths.isEmpty) s.read.parquet(s"$base/$store").where(lit(false))
       else MetaParquet.readCells(s, s"$base/$store", "cluster", paths)
@@ -913,11 +913,11 @@ object Similarity {
     // this family's cell counts (∝ √corpus) the listing is small, but
     // the probe is THE serving hot path and the catalog-scale form
     // costs nothing here. Resolution is the shared
-    // NearDup.existingCellPaths: a committed manifest (round 15) serves
+    // IndexManifest.cellPaths: a committed layout record serves
     // explicit file paths from one small read; otherwise per-cell
     // existence goes through the path's Hadoop FileSystem so hdfs/s3a
     // artifacts don't read as absent.
-    val cellPaths = graft.transforms.NearDup.existingCellPaths(
+    val cellPaths = graft.transforms.IndexManifest.cellPaths(
       s, s"$base/index", "cluster", cells)
     val idx = (if (cellPaths.isEmpty)
         s.read.parquet(s"$base/index").where(lit(false))

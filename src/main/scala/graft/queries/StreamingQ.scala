@@ -945,8 +945,8 @@ object StreamingQ {
            |) INTO CONSOLE""".stripMargin)
       // the %4==3 slice arrives as a stream: 4 files ⇒ 4 microbatches
       // (streamMutate's shared scaffold). Each append maintains the
-      // artifact's per-cell stats itself (mergeForWriter, ∝ this
-      // batch's routed cells), so INDEX DESCRIBE stays stats-served
+      // artifact's layout record itself (IndexManifest.maintained, ∝
+      // this batch's reports), so INDEX DESCRIBE stays record-served
       // across the whole streaming window.
       streamMutate(s, "q161_index_append",
         Tables.load(s, dir, "documents")
@@ -1001,8 +1001,8 @@ object StreamingQ {
     // deleting already-deleted ids is a no-op (the delete's own
     // recovery contract), so at-least-once redelivery cannot change
     // the artifact. Each microbatch takes the artifact's maintenance
-    // lock and maintains the per-cell stats (mergeForWriter) — the
-    // production forget-stream leaves DESCRIBE stats-served too.
+    // lock and maintains the layout record (IndexManifest.maintained)
+    // — the production forget-stream leaves DESCRIBE record-served too.
     QueryDef(
       "q172_stream_index_delete",
       Dedup.deleteKeptOracleSql) { (s, dir) =>
@@ -1112,19 +1112,18 @@ object StreamingQ {
       }
     },
 
-    // Streaming ingest against a MANIFEST-COMMITTED artifact — the two
-    // round-15 stories composed: q161's exact streamed-append protocol
-    // with an INDEX MANIFEST commit between the build and the stream.
-    // Each of the 4 real microbatches then re-publishes the manifest
-    // as its own last step (bandStoreAppend → Stats.mergeForWriter →
-    // IndexManifest.republishTouched: this batch's routed cells
-    // re-listed, every other cell's file list carried over — the
-    // measured-flat epilogue, SCALING.md round 15), so the artifact
-    // stays manifest-served across the whole streaming window, and
-    // the final probe run resolves its routed cells from a manifest
-    // the STREAM's last microbatch committed. A microbatch
-    // re-publication that dropped a carried file, missed its own
-    // appended files, or mis-parsed a cell id changes the probe's
+    // Streaming ingest against a record-served artifact: q161's exact
+    // streamed-append protocol with an INDEX MANIFEST between the build
+    // and the stream (a no-op on the build's readable v1). Each of the
+    // 4 real microbatches then commits the next version of the layout
+    // record as its own last step (bandStoreAppend →
+    // IndexManifest.maintained: this batch's file reports folded into
+    // the prior record, every other cell carried over), so the artifact
+    // stays record-served across the whole streaming window, and the
+    // final probe run resolves its routed cells from a record the
+    // STREAM's last microbatch committed. A microbatch commit that
+    // dropped a carried file, missed its own appended files, or
+    // mis-parsed a cell id changes the probe's
     // candidate set and fails hash-exactly against q156/q161/q174's
     // shared brute-force oracle. With q174 (engine-run append) and
     // this gate (streamed append), both writer cadences of the
@@ -1138,8 +1137,8 @@ object StreamingQ {
       Advanced.registerTmpDir(qBase)
       val idx = s"$qBase/band_index"
       val out = s"$qBase/kept"
-      // run A: build the base artifact (q156's geometry), then COMMIT
-      // the manifest — the one-time opt-in the writers maintain
+      // run A: build the base artifact (q156's geometry, record v1),
+      // then INDEX MANIFEST, which returns the readable v1 unchanged
       Aql.run(s,
         s"""CONNECTION 'Docs' (
            |  DRIVER = 'file', FILE = '$dir/documents.parquet',
@@ -1158,7 +1157,7 @@ object StreamingQ {
            |  INDEX MANIFEST '$idx'
            |) INTO CONSOLE""".stripMargin)
       // the %4==3 slice arrives as a stream: 4 files ⇒ 4 microbatches,
-      // each re-publishing the manifest it ingests under
+      // each committing the next version of the record
       streamMutate(s, "q175_manifest_append",
         Tables.load(s, dir, "documents")
           .where(col("doc_id") % 4 === 3)
@@ -1169,14 +1168,13 @@ object StreamingQ {
         NearDup.bandStoreAppend(idx, NearDup.shingled(reps, "th", "txt"))
         ()
       }
-      // run B: the probe resolves from the stream-committed manifest
-      // (version 1 + 4 microbatch re-publications = v5; asserted here
-      // so the gate cannot silently degrade to live-layout resolution)
-      val v = graft.transforms.IndexManifest.version(s, idx)
+      // run B: the probe resolves from the stream-committed record
+      // (build v1 + 4 microbatch commits = v5; asserted here so the
+      // gate cannot silently degrade to live-layout resolution)
+      val v = graft.transforms.IndexManifest.read(s, idx).map(_.version)
       require(v.contains(5L),
-        s"q175: expected manifest v5 after commit + 4 microbatch " +
-          s"re-publications, got $v — the stream did not maintain the " +
-          "manifest")
+        s"q175: expected manifest v5 after the build + 4 microbatch " +
+          s"commits, got $v — the stream did not maintain the record")
       Aql.run(s,
         s"""CONNECTION 'Docs' (
            |  DRIVER = 'file', FILE = '$dir/documents.parquet',

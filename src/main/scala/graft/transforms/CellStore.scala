@@ -12,7 +12,6 @@ import org.apache.spark.util.SerializableConfiguration
 
 import scala.util.{Failure, Success, Try}
 
-import IndexMaintenance.Stats
 import TransformParser.TransformError
 
 /** One cell-partitioned store of a stored index: its sub-directory under
@@ -48,19 +47,18 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   *    any leg fails, no leg publishes: the statement's pending files are
   *    deleted and the store is unchanged. There is no `_temporary` tree
   *    and no `_SUCCESS` file.
-  *  - The reports are the statement's record of what it wrote
-  *    ([[Landed]]): its touched cells and the refreshed per-cell stats
-  *    ([[IndexMaintenance.Stats.merge]]) come from them, so no job
-  *    re-reads a store to learn what was written.
+  *  - The reports are the statement's account of what it wrote
+  *    ([[Landed]]): its touched cells and the artifact's layout record
+  *    ([[IndexManifest]], every file with its rows) come from them, so
+  *    no job re-reads a store to learn what was written.
   *  - Mutations of an existing artifact (APPEND, DELETE, COMPACT)
   *    hold its single-writer lock ([[IndexMaintenance.withMaintLock]],
-  *    re-entrant under a verb) and drop `stats/` and the manifest
-  *    before touching a row ([[IndexMaintenance.Stats.invalidate]]):
-  *    both can be absent, never stale. APPEND and DELETE run inside
-  *    [[IndexMaintenance.Stats.mergeForWriter]], which folds the
-  *    statement's reports back into both. A build overwrites every
-  *    store and writes `stats/` from its reports; REBUILD builds into a
-  *    fresh stage it swaps in whole.
+  *    re-entrant under a verb) and run inside
+  *    [[IndexManifest.maintained]]: it reads the prior record, drops it
+  *    before a row is touched (absent, never stale), and commits the
+  *    prior folded with the statement's reports as the next version. A
+  *    build overwrites every store and commits the record's `v1` from
+  *    its reports; REBUILD builds into a fresh stage it swaps in whole.
   *  - APPEND adds files next to a cell's existing ones. DELETE and
   *    COMPACT rewrite only the routed cells ([[rewrite]]): survivors
   *    land in a staging sibling per store, then each cell swaps with two
@@ -71,8 +69,9 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   *    writes the store (APPEND, DELETE, COMPACT and REBUILD all sweep
   *    first) and reaps `.old_` dirs whose swap finished.
   *  - A sweep-restored cell's rows are in no report and were absent from
-  *    any stats written while the cell was down: it joins the touched
-  *    cells, and it is the one cell a mutation's stats refresh recounts.
+  *    any record committed while the cell was down: it joins the touched
+  *    cells, and it is the one cell a mutation's record refresh
+  *    recounts.
   */
 private[graft] object CellStore {
   private def cell(hash: Column, cells: Int): Column =
@@ -124,8 +123,8 @@ private[graft] object CellStore {
       codes.map(CellStore("codes", "cluster", _)).toSeq
 
   /** The (store, cell column) pairs of an artifact kind — its store list
-    * at any geometry. One mapping for DESCRIBE, COMPACT, REBUILD, the
-    * stats refresh and the manifest, so they cannot disagree on what a
+    * at any geometry. One mapping for DESCRIBE, COMPACT, REBUILD and the
+    * layout record, so they cannot disagree on what a
     * kind's stores are. IVF lists `codes` whether or not PQ is on; an
     * absent store has no cells.
     */
@@ -266,24 +265,25 @@ private[graft] object CellStore {
     st.getPath.getName.startsWith(".pending-")
 
   /** A build or REBUILD stage: overwrite every store of `base` with its
-    * routing of `shared`, one concurrent leg per store, and write
-    * `<base>/stats` from the legs' reports. `shared` must already be
-    * materialized — every leg reads it.
+    * routing of `shared`, one concurrent leg per store, and commit the
+    * layout record's `v1` from the legs' reports. `shared` must already
+    * be materialized — every leg reads it.
     */
   def write(base: String, stores: Seq[CellStore], shared: DataFrame,
       cells: Int): Unit = {
     val spark = shared.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    Stats.invalidate(conf, base)
+    IndexManifest.invalidate(conf, base)
     val fs = new Path(base).getFileSystem(conf)
     val roots = stores.map(st => new Path(base, st.name))
     roots.foreach { r => fs.delete(r, true); fs.mkdirs(r) }
     val parts = cellWriteParts(spark, cells)
     val files = land(spark, stores.lazyZip(roots).map { (st, r) =>
       Leg(r.toString, st.cellCol, st.rows(shared), parts) })
-    Stats.merge(spark, base, stores.map(st => st.name -> st.cellCol),
-      Map.empty, stores.lazyZip(files).map((st, f) => st.name -> Landed(f))
-        .toMap)
+    IndexManifest.commit(spark, base, 1,
+      IndexManifest.merge(spark, base, stores.map(st => st.name -> st.cellCol),
+        Map.empty, stores.lazyZip(files).map((st, f) => st.name -> Landed(f))
+          .toMap))
     ()
   }
 
@@ -326,9 +326,9 @@ private[graft] object CellStore {
 
   /** APPEND's and DELETE's shared shape: lock, meta and kind check, the
     * kind's frame prep and stores ([[batchOf]]; a batch with nothing
-    * indexable returns no touched cells), then — inside the stats and
-    * manifest epilogue — invalidate, materialize the batch and run
-    * `body`, whose reports the epilogue folds in.
+    * indexable returns no touched cells), then — inside the layout
+    * record's maintenance ([[IndexManifest.maintained]]) — materialize
+    * the batch and run `body`, whose reports the record folds in.
     */
   private def maintain(base: String, kind: String, batch: DataFrame,
       verb: String)(
@@ -341,8 +341,8 @@ private[graft] object CellStore {
       batchOf(base, kind, meta, batch, s"INDEX … $verb") match {
         case None => Map.empty
         case Some((frame, stores)) =>
-          Stats.mergeForWriter(spark, base, kind) {
-            Stats.invalidate(spark.sparkContext.hadoopConfiguration, base)
+          IndexManifest.maintained(spark, base,
+              storesFor(kind, s"INDEX … $verb at '$base'")) {
             body(spark, frame.localCheckpoint(), stores,
               meta.getAs[Int]("cells"))
           }.map { case (sub, landed) => sub -> landed.touched }
@@ -436,15 +436,15 @@ private[graft] object CellStore {
     * dir and is simply removed. A rollback rename that itself fails is
     * named in the error with `recovery`. Returns what landed in each
     * store: the staged files, the rewritten cells and the restored ones.
+    * Callers run it inside [[IndexManifest.maintained]], which has
+    * dropped the layout record.
     */
   private def rewrite(spark: SparkSession, base: String,
       targets: Seq[(String, String, Seq[Int])], what: String,
       recovery: String)(
       transform: DataFrame => DataFrame): Map[String, Landed] = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val basePath = new Path(base)
-    val fs = basePath.getFileSystem(conf)
-    Stats.invalidate(conf, base)
+    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val plans = targets.map { case (sub, cellCol, cells) =>
       val root = new Path(basePath, sub)
       val restored = sweepStore(spark, root.toString, cellCol)

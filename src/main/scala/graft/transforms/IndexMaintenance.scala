@@ -110,75 +110,46 @@ private[graft] object IndexMaintenance {
     }
   }
 
-  /** Incremental DESCRIBE counters — `<dir>/stats`, a tiny parquet of
-    * per-cell (store, cell, files, rows) refreshed as the LAST step of
-    * every language-level mutating statement (INDEX build / APPEND /
-    * DELETE / COMPACT / REBUILD, all under the single-writer lock or
-    * the build's overwrite), so `INDEX DESCRIBE` answers from one
-    * small read instead of re-walking the store — the round-12
-    * measured cost (∝ cells, exponent 0.93–0.96, 280 s at half the
-    * cell cap) replaced by a fold of each MUTATION's own writer
-    * reports, instead of a recount per DESCRIBE.
-    *
-    * Cost: reading and writing `<dir>/stats` is driver-side
-    * ([[MetaParquet]] — no Spark job), so a served DESCRIBE runs no job
-    * at all, and neither does a mutation's stats epilogue: the cell-store
-    * writer reports every file it publishes with its row count
-    * ([[CellStore.Landed]]), and [[merge]] folds those reports into the
-    * prior stats on the driver. The [[recount]] job runs only for
-    * `INDEX DESCRIBE … VERIFY`, when stats are absent (DESCRIBE's
-    * fallback, a statement's self-heal), and for the cells a sweep
-    * restored after a crash, whose rows no report holds.
-    *
-    * Honesty protocol: the cell-store writer ([[CellStore]] — the
-    * API appends and deletes are the streaming ingestion hot path,
-    * where a per-batch full recount would break the cost-∝-batch
-    * contract — and its cell rewrite) INVALIDATE stats as their first
-    * step instead of maintaining them: a statement that dies mid-write
-    * or an API append outside the verb leaves stats ABSENT, never
-    * stale, and `INDEX DESCRIBE` falls back to the full recompute
-    * (also reachable on demand as `INDEX DESCRIBE '<dir>' VERIFY` —
-    * the ground-truth path specs and BandScale cross-check against).
-    * The next verb statement self-heals the fast path by rewriting
-    * stats.
+  /** DESCRIBE's per-cell counters: the live layout recounted, and the
+    * fold of a layout — the artifact's record ([[IndexManifest]]) or a
+    * recount — into per-cell (files, rows). A routine DESCRIBE folds the
+    * record on the driver and runs no job; the [[recount]] job runs only
+    * for `INDEX DESCRIBE … VERIFY`, when the record is absent (DESCRIBE's
+    * fallback, `INDEX MANIFEST`'s snapshot), and for the cells a sweep
+    * restored after a crash, whose rows no writer report holds.
     */
   private[graft] object Stats {
 
-    /** (cell, files, rows) per present cell of each store in `stores`,
-      * in ONE Spark job: the DESCRIBE fallback/VERIFY cost body, shared
-      * with the absent-stats self-heal ([[write]]) and the recount of
-      * sweep-restored cells ([[mergeTouched]]).
-      * `cells` None recounts every cell (the store roots are read);
-      * Some(touched) recounts only each store's listed cells, read as
-      * EXPLICIT cell paths (the probes' partition-pruning idiom — never
-      * a listing of the whole store). Every store maps to its rows —
-      * empty when absent, without data files, or without a touched
-      * cell present (a cell fully deleted by the statement contributes
-      * no rows, which is exactly its post-statement truth).
+    /** Every data file of each store in `stores`, with its rows, in ONE
+      * Spark job: the live layout, never the record — the truth that
+      * VERIFY, an absent record and a restored cell all need.
+      * `cells` None reads every cell (the store roots); Some(touched)
+      * reads only each store's listed cells, as EXPLICIT cell paths (the
+      * probes' partition-pruning idiom — never a listing of the whole
+      * store). A store without data files, or without a listed cell
+      * present, has no entry.
       *
       * The scan reads ONLY the cell column, with that schema given (no
       * schema-inference job): row counts come from parquet row-group
       * metadata, never data pages. The union of the stores' scans is
       * one narrow job whose partitions each emit (store, cell, file,
-      * rows) from the scan's own input_file_name; the driver folds
-      * files as DISTINCT files and rows as a sum. This is the round-12
-      * negative result applied once more: the distributed footer pass
-      * beat driver-side parallel footer reads (617 vs 280 s at the
-      * 32 768-cell point), and round 13 removes the remaining
-      * driver-side RECURSIVE LISTING the same way (on a local fs that
+      * rows) from the scan's own input_file_name; the driver sums a
+      * file's runs. This is the round-12 negative result applied once
+      * more: the distributed footer pass beat driver-side parallel
+      * footer reads (617 vs 280 s at the 32 768-cell point), and it
+      * needs no driver-side RECURSIVE LISTING (on a local fs that
       * listing shell-execs a permission probe per file; on an object
       * store it is a round-trip storm). Hidden/staged paths are skipped
-      * by the reader. File counts are FILES WITH ≥ 1 ROW
-      * (input_file_name only surfaces for files that yield rows) — a
-      * zero-row data file is invisible here. That is the semantics
-      * DESCRIBE documents: such files carry no entries and no probe
-      * cost; only COMPACT's own dirty-cell listing, which must see
-      * every physical file, still lists directories.
+      * by the reader. Files are FILES WITH ≥ 1 ROW (input_file_name
+      * only surfaces for files that yield rows) — a zero-row data file
+      * carries no entries and no probe cost, and is left out; only
+      * COMPACT's own dirty-cell listing, which must see every physical
+      * file, still lists directories.
       */
     def recount(spark: org.apache.spark.sql.SparkSession, dir: String,
         stores: Seq[(String, String)],
         cells: Option[Map[String, Seq[Int]]] = None)
-        : Map[String, Seq[(Int, Long, Long)]] = {
+        : IndexManifest.Layout = {
       import org.apache.hadoop.fs.Path
       val fs = new Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -187,10 +158,8 @@ private[graft] object IndexMaintenance {
         val paths = cells match {
           case None =>
             if (fs.exists(new Path(root))) Seq(root) else Seq.empty
-          case Some(t) =>
-            val want = t.getOrElse(sub, Seq.empty).distinct.sorted
-            if (want.isEmpty) Seq.empty
-            else NearDup.existingCellPaths(spark, root, cellCol, want.toArray)
+          case Some(t) => IndexManifest.liveCellPaths(spark, root, cellCol,
+            t.getOrElse(sub, Seq.empty).distinct.sorted)
         }
         if (paths.isEmpty) None
         else Some(spark.read
@@ -203,17 +172,21 @@ private[graft] object IndexMaintenance {
         if (scans.isEmpty) Array.empty[(Int, Int, String, Long)]
         else scans.reduce(_ union _).queryExecution.toRdd
           .mapPartitions(fileRuns).collect()
-      stores.zipWithIndex.map { case ((sub, _), i) =>
-        sub -> perFile.toSeq.filter(_._1 == i).groupBy(_._2).toSeq
-          .map { case (cell, runs) => (cell,
-            runs.map(_._3).distinct.size.toLong, runs.map(_._4).sum) }
-          .sortBy(_._1)
-      }.toMap
+      perFile.toSeq.groupBy(_._1).map { case (i, runs) =>
+        val (sub, cellCol) = stores(i)
+        sub -> runs.groupBy(_._2).map { case (cell, rs) =>
+          cell -> rs.groupBy(_._3).map { case (f, n) =>
+            IndexManifest.relPath(sub, cellCol, cell,
+              org.apache.spark.paths.SparkPath.fromUrlString(f).toPath) ->
+              n.map(_._4).sum }
+        }
+      }
     }
 
     /** One recount partition's (store, cell, file, rows): rows of one
       * file arrive as a run, so only a run's first row copies its file
-      * name (the scan reuses its row buffers).
+      * name (the scan reuses its row buffers). A file split across
+      * partitions yields one run per split.
       */
     private def fileRuns(
         it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
@@ -236,233 +209,15 @@ private[graft] object IndexMaintenance {
       out.result().iterator
     }
 
-    /** Recompute per-cell stats for every store of the artifact and
-      * replace `<dir>/stats` — one recount job, then a driver-side
-      * write: the self-heal of a statement that found stats absent
-      * (COMPACT, a verb APPEND or DELETE). Returns the computed map so
-      * the calling statement's summary row reuses it.
+    /** (cell, files, rows) per present cell of each store, in cell
+      * order — the record's or a recount's layout, folded.
       */
-    def write(spark: org.apache.spark.sql.SparkSession, dir: String,
-        stores: Seq[(String, String)])
-        : Map[String, Seq[(Int, Long, Long)]] = {
-      val computed = recount(spark, dir, stores)
-      writeRows(spark, dir, computed)
-      computed
-    }
-
-    /** Recount the `touched` cells ([[recount]], one job) and merge
-      * them into `prior`: untouched cells' rows carry over unchanged,
-      * touched cells take the recount (a cell the recount no longer
-      * finds is gone), and `<dir>/stats` is replaced. The refresh for
-      * cells whose rows no writer report holds — the cells a sweep
-      * restored ([[merge]]) — priced by BandScale against the full
-      * [[write]]. Correctness rests on prior stats being exact whenever
-      * present (absent-never-stale) and on the caller holding the
-      * single-writer lock across prior-read → mutation → merge.
-      */
-    def mergeTouched(spark: org.apache.spark.sql.SparkSession,
-        dir: String, stores: Seq[(String, String)],
-        prior: Map[String, Seq[(Int, Long, Long)]],
-        touched: Map[String, Seq[Int]])
-        : Map[String, Seq[(Int, Long, Long)]] = {
-      val recomputed = recount(spark, dir, stores, Some(touched))
-      val computed = stores.map { case (sub, _) =>
-        val tSet = touched.getOrElse(sub, Seq.empty).toSet
-        val kept = prior.getOrElse(sub, Seq.empty).filterNot(r => tSet(r._1))
-        sub -> (kept ++ recomputed(sub)).sortBy(_._1)
-      }.toMap
-      writeRows(spark, dir, computed)
-      computed
-    }
-
-    /** Fold one statement's writer reports into `prior` and replace
-      * `<dir>/stats` — the refresh of every build, REBUILD stage,
-      * APPEND, DELETE and COMPACT, with no Spark job. Per store:
-      * a rewritten cell's prior row is dropped (its files are gone);
-      * each published file adds 1 file and its rows to its cell — every
-      * published file holds ≥ 1 row, the files-with-rows semantics of
-      * [[recount]]; untouched cells carry over, because the statement
-      * never opened their files. Cells a sweep restored and the
-      * statement did not rewrite are recounted ([[mergeTouched]]): no
-      * report holds their prior rows. A build passes an empty prior.
-      */
-    def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
-        stores: Seq[(String, String)],
-        prior: Map[String, Seq[(Int, Long, Long)]],
-        landed: Map[String, CellStore.Landed])
-        : Map[String, Seq[(Int, Long, Long)]] = {
-      val folded = stores.map { case (sub, _) =>
-        val l = landed.getOrElse(sub, CellStore.Landed())
-        val kept = prior.getOrElse(sub, Seq.empty)
-          .map { case (c, f, r) => c -> (f, r) }.toMap -- l.rewritten
-        val added = l.files.groupBy(_._1).map { case (c, fs) =>
-          val (f0, r0) = kept.getOrElse(c, (0L, 0L))
-          c -> (f0 + fs.size, r0 + fs.map(_._3).sum)
-        }
-        sub -> (kept ++ added).toSeq.map { case (c, (f, r)) => (c, f, r) }
-          .sortBy(_._1)
-      }.toMap
-      val restored = landed.map { case (sub, l) =>
-        sub -> l.restored.filterNot(l.rewritten.contains) }
-        .filter(_._2.nonEmpty)
-      if (restored.nonEmpty) mergeTouched(spark, dir, stores, folded, restored)
-      else { writeRows(spark, dir, folded); folded }
-    }
-
-    /** The mutating writers' stats epilogue, wrapped around the
-      * mutation itself: read the prior per-cell stats BEFORE the
-      * mutation invalidates them, run the mutation, and — when a prior
-      * existed — fold the mutation's writer reports into it ([[merge]]).
-      * Every append and delete of every kind ([[CellStore.append]] /
-      * [[CellStore.delete]]) runs through this, which keeps
-      * `<dir>/stats` SERVED under continuous DIRECT-API ingest — the
-      * streaming foreachBatch path (gate q161). The epilogue runs no
-      * Spark job (unless a sweep restored a crashed cell); its
-      * bookkeeping is ∝ cells PRESENT, not cells touched: the prior
-      * read and [[merge]]'s [[writeRows]] (the full stats-file rewrite),
-      * both driver-side file I/O — bounded by the 65 536-cell cap and
-      * metadata-row-sized (a few MB at the cap), but a fixed
-      * per-statement driver cost that can dominate a 1-row streamed
-      * append on a max-cell artifact. With NO prior (stats were already
-      * absent) the mutation leaves them absent and the next
-      * corpus-shaped statement (build/REBUILD, or a verb APPEND/DELETE's
-      * self-heal) or DESCRIBE pays the one full pass. Callers hold the
-      * artifact's maintenance lock — the writer acquires it
-      * (re-entrantly under a verb) — so the prior is exact-when-present
-      * and the read → mutate → merge sequence cannot interleave with
-      * another writer. Returns the mutation's reports unchanged.
-      */
-    def mergeForWriter(spark: org.apache.spark.sql.SparkSession,
-        dir: String, kind: String)(
-        mutate: => Map[String, CellStore.Landed])
-        : Map[String, CellStore.Landed] = {
-      // both priors read BEFORE the mutation's invalidate drops them;
-      // a malformed manifest throws here (external tampering stops
-      // the writer loudly — the message names the re-publish remedy —
-      // rather than being silently healed or silently dropped)
-      val manifestPrior = IndexManifest.readVersioned(spark, dir)
-      val prior = read(spark, dir)
-      val landed = mutate
-      val stores = CellStore.storesFor(kind, s"stats refresh at '$dir'")
-      prior.foreach { p => merge(spark, dir, stores, p, landed) }
-      // manifest maintained-when-present (round 15): re-publish from
-      // the prior + this mutation's touched cells, so probes stay
-      // manifest-served across API/streaming maintenance — ∝ the
-      // batch's routed cells like the stats merge above; an artifact
-      // never published pays nothing here (one absent-check)
-      manifestPrior.foreach { case (v, pm) =>
-        IndexManifest.republishTouched(spark, dir, stores, v, pm,
-          landed.map { case (sub, l) => sub -> l.touched })
+    def fold(layout: IndexManifest.Layout)
+        : Map[String, Seq[(Int, Long, Long)]] =
+      layout.map { case (sub, cells) =>
+        sub -> cells.toSeq.map { case (c, files) =>
+          (c, files.size.toLong, files.values.sum) }.sortBy(_._1)
       }
-      landed
-    }
-
-    /** Stage-and-swap `computed` into `<dir>/stats`: rows are written
-      * COMPLETE to `<dir>/.stats_stage`, then the old stats dir is
-      * deleted and the stage renamed in. NOT one atomic swap — the
-      * delete + rename pair leaves an absent window of two metadata
-      * ops (vs. the full write duration a plain mode("overwrite")
-      * would leave, which deletes the target first and then writes
-      * into it) — and a lock-free DESCRIBE racing the refresh sees old
-      * stats, no stats (→ the honest recompute), or new stats;
-      * [[Stats.read]]'s catch-all → None is the load-bearing backstop
-      * for a reader landing mid-swap. A crash leaves either the old
-      * stats intact or stats absent, never a half-truth; a stale
-      * `.stats_stage` from a crash is overwritten on the next refresh.
-      */
-    private def writeRows(spark: org.apache.spark.sql.SparkSession,
-        dir: String, computed: Map[String, Seq[(Int, Long, Long)]])
-        : Unit = {
-      val stage = new org.apache.hadoop.fs.Path(s"$dir/.stats_stage")
-      val live = new org.apache.hadoop.fs.Path(s"$dir/stats")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      MetaParquet.write(spark, stage.toString, StatsSchema,
-        computed.toSeq.flatMap { case (sub, cs) =>
-          cs.map { case (cell, files, rows) => Row(sub, cell, files, rows) }
-        })
-      fs.delete(live, true)
-      if (!fs.rename(stage, live)) throw new IllegalStateException(
-        s"stats refresh: cannot swap $stage into $live — stats are " +
-          "absent (DESCRIBE will take the honest full recompute until " +
-          "the next mutating statement rewrites them)")
-      ()
-    }
-
-    /** `<dir>/stats`'s columns, typed as the former
-      * `Seq[(String, Int, Long, Long)].toDF` typed them.
-      */
-    private val StatsSchema = new StructType()
-      .add("store", StringType)
-      .add("cell", IntegerType, nullable = false)
-      .add("files", LongType, nullable = false)
-      .add("rows", LongType, nullable = false)
-
-    /** Drop `<dir>/stats` AND the committed file manifest — the first
-      * step of every row-writing mutation step (append row writes,
-      * cell rewrites), so both derived layout snapshots can be absent
-      * but never stale: a writer that dies mid-mutation leaves them
-      * invalidated, and the surviving reads are the honest recompute /
-      * live-directory resolution. The wrapping [[mergeForWriter]]
-      * epilogue restores stats from the pre-read prior plus the
-      * statement's writer reports as the mutation's last step, and
-      * re-publishes a previously-committed manifest the same way
-      * ([[IndexManifest.republishTouched]] — touched cells re-listed,
-      * the rest carried over), so both snapshots are MAINTAINED when
-      * present and the absent window spans one statement, not operator
-      * reaction time. One choke point on purpose: every writer
-      * already runs this, so the two snapshots cannot drift apart in
-      * which mutations invalidate them. Deliberately NOT swallowed:
-      * failing to invalidate before mutating would leave a lying
-      * stats store or a stale file list, which is worse than failing
-      * the mutation.
-      */
-    def invalidate(conf: org.apache.hadoop.conf.Configuration,
-        dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/stats")
-      val fs = p.getFileSystem(conf)
-      fs.delete(p, true)
-      IndexManifest.invalidate(conf, dir)
-      ()
-    }
-
-    /** The persisted per-cell stats, or None when absent/unreadable
-      * (→ the caller takes the full-recompute path). A read racing an
-      * invalidation resolves to None, never an error — but the two
-      * None causes are DISTINGUISHED (round 15): absent is silent (the
-      * expected invalidated state), present-but-unreadable logs a
-      * warning to stderr, because on the mutation path
-      * ([[mergeForWriter]]) an unreadable prior silently drops the
-      * served DESCRIBE path until the next corpus-shaped refresh, and
-      * that degradation should be visible, not indistinguishable from
-      * "absent". Catches [[scala.util.control.NonFatal]] only — the
-      * former catch-all also swallowed OOM/interrupts, converting a
-      * dying JVM's symptom into a silent full recompute.
-      */
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String)
-        : Option[Map[String, Seq[(Int, Long, Long)]]] = try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/stats")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return None
-      Some(MetaParquet.readRows(spark, s"$dir/stats")
-        .map(r => (r.getAs[String]("store"), r.getAs[Int]("cell"),
-          r.getAs[Long]("files"), r.getAs[Long]("rows")))
-        .groupBy(_._1)
-        .map { case (sub, rows) =>
-          sub -> rows.map(t => (t._2, t._3, t._4)).toSeq.sortBy(_._1) })
-    } catch { case scala.util.control.NonFatal(e) =>
-      // a reader racing the invalidate → stage → swap window lands
-      // here (expected, harmless: stats vanish between the exists check
-      // and the parquet read); so does a genuinely corrupt/unreadable
-      // stats file (not expected) — log so the degraded served path is
-      // visible either way, and let the caller recompute honestly
-      System.err.println(
-        s"[graft] stats at '$dir/stats' present but unreadable " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — treating " +
-          "as absent; DESCRIBE falls back to the full recompute until " +
-          "the next maintenance statement (e.g. INDEX COMPACT) " +
-          "rewrites them")
-      None
-    }
   }
   // ----------------------------------------------------------------- INDEX
 
@@ -735,12 +490,12 @@ private[graft] object IndexMaintenance {
     * exceeds the balanced share; for ivf_vec index stores a skew ≥ 8
     * additionally WARNS naming `INDEX REBUILD` as the remedy, the
     * DriftScale-measured drift signature made operational), "did this
-    * answer come cheap?" (stats_served — true when the row was read
-    * from `<dir>/stats`, false when this DESCRIBE paid the ∝-cells
-    * full recompute; absent stats additionally WARN naming
-    * `INDEX COMPACT` as the statement that restores the served path),
-    * "are probes manifest-served?" (manifest_version — the committed
-    * [[IndexManifest]] version probes resolve cells from, 0 when none),
+    * answer come cheap?" (stats_served — true when the row was folded
+    * from the artifact's layout record, false when this DESCRIBE paid
+    * the ∝-cells full recount; an absent record additionally WARNS
+    * naming `INDEX MANIFEST` as the statement that restores it),
+    * "are probes record-served?" (manifest_version — the version of the
+    * [[IndexManifest]] record probes resolve cells from, 0 when none),
     * "is maintenance
     * running?" (lock_holder — the `.maint_lock` holder line, "" when
     * free; a crashed job's leftover lock shows up here before the
@@ -748,22 +503,19 @@ private[graft] object IndexMaintenance {
     * below its contract?" (probe_warnings count + last_warning — the
     * [[Warnings.persist]] events, e.g. a below-derived-bits cosine
     * probe; the ring a spec asserts dies with the probing process, so
-    * the artifact carries its own telemetry). Cost (round 13): a
-    * routine DESCRIBE reads `meta/` and the per-cell counters in
-    * `<dir>/stats` on the driver ([[MetaParquet]]; [[Stats]] —
-    * refreshed by every mutating statement as its last step,
-    * invalidated by non-verb mutations) — two small file reads
-    * regardless of cell count, and no Spark job. When stats are
-    * absent, or under `INDEX DESCRIBE '<dir>' VERIFY`, the full
-    * recompute runs: ONE footer-only Spark job over every store
-    * ([[Stats.recount]]), measured ∝ cells in SCALING.md round 12
-    * (≈ 5 min at half the cell cap on local[32] — the cost the stats
-    * path replaces with a fold of the mutations' own writer reports).
-    * The per-cell
-    * collect is bounded by the 65 536-cell cap. Read-only — no
-    * maintenance lock taken: stats are advisory and each concurrent
-    * cell swap is atomic, so a racing DESCRIBE sees each cell before
-    * or after its rewrite, never half-written.
+    * the artifact carries its own telemetry). Cost: a routine DESCRIBE
+    * reads `meta/` and the layout record on the driver and folds the
+    * record's per-file rows into per-cell counters ([[Stats.fold]]) —
+    * two small file reads regardless of cell count, and no Spark job.
+    * When the record is absent, or under `INDEX DESCRIBE '<dir>'
+    * VERIFY`, the full recount runs: ONE footer-only Spark job over
+    * every store ([[Stats.recount]]), measured ∝ cells in SCALING.md
+    * round 12 (≈ 5 min at half the cell cap on local[32] — the cost the
+    * record replaces with a fold of the mutations' own writer reports).
+    * The per-cell collect is bounded by the 65 536-cell cap. Read-only —
+    * no maintenance lock taken: each concurrent cell swap is atomic, so
+    * a racing DESCRIBE sees each cell before or after its rewrite, never
+    * half-written, and a record it reads is a whole version.
     */
   final case class IndexDescribeVerb(dir: String,
       verify: Boolean = false) extends Verb {
@@ -782,26 +534,11 @@ private[graft] object IndexMaintenance {
       // location still read so a pre-upgrade crash stays visible
       val lockHolder = maintLockHolder(
         spark.sparkContext.hadoopConfiguration, dir)
-      // "are probes manifest-served?" — the committed IndexManifest
-      // version (0 when none: probes resolve cells from the live
-      // directory layout, today's default). An artifact that OPTED IN
-      // (the surviving `.committed` marker) but has no current version
-      // is the crashed-writer degradation — a writer died between
-      // invalidation and re-publication — and WARNs naming the restore
-      // statement; writers deliberately do NOT self-heal this (a full
-      // re-publication is an artifact-sized listing, which would break
-      // the batch-shaped mutation contract), so the advisory is the
-      // operator's only signal. An artifact never published, or opted
-      // out by removing manifest/ wholesale, stays silent.
-      val manifestVersion =
-        IndexManifest.version(spark, dir).getOrElse(0L)
-      if (manifestVersion == 0L && IndexManifest.wasCommitted(spark, dir))
-        Warnings.emit(
-          s"INDEX DESCRIBE '$dir': this artifact's committed manifest " +
-            "is absent (a writer crashed between invalidation and " +
-            "re-publication) — probes are falling back to " +
-            "live-directory resolution; run " +
-            s"INDEX MANIFEST '$dir' to restore manifest-served probes")
+      // the layout record: its version is "are probes record-served?"
+      // (0 when absent — probes resolve cells from the live layout),
+      // and its fold is the per-cell counters below
+      val record = IndexManifest.read(spark, dir)
+      val manifestVersion = record.map(_.version).getOrElse(0L)
       // "has anything probed this artifact below its contract?" — the
       // persisted Warnings.persist events (count + most recent), read
       // from the artifact's SIBLING warnings dir (probes never write
@@ -843,36 +580,24 @@ private[graft] object IndexMaintenance {
         .map(f => s"$f=${metaRow.getAs[Any](f)}")
         .mkString(" ")
       // Round-12 DESCRIBE cost lesson (SCALING.md): the footer-only
-      // recount is measured ∝ cells (exponent 0.93–0.96) — that body
-      // now lives in Stats.recount (one job over every store) and runs
-      // here only as the FALLBACK/VERIFY path. The default serves from
-      // `<dir>/stats`, the per-cell counters every mutating statement
-      // refreshes as its last step (and every non-verb mutation
-      // invalidates — absent means recompute, never lie), so a routine
-      // DESCRIBE is one small driver-side read regardless of cell
-      // count, and runs no Spark job.
-      val statsOpt: Option[Map[String, Seq[(Int, Long, Long)]]] =
-        if (verify) None else Stats.read(spark, dir)
-      // "did this DESCRIBE answer from <dir>/stats, or pay the full
-      // footer recompute?" (round 15) — until now only wall-clock told
-      // an operator apart the ~0.3 s served read from the ∝-cells full
-      // pass (64 s at half the cell cap). Surfaced as a column, and
-      // WARNed with the healing statement when stats are absent —
-      // completing the advisory discipline (every warning names a real
-      // remedy): INDEX COMPACT self-heals absent stats even when no
-      // cell is dirty (the `!statsPresent` branch of its epilogue), so
-      // it is the cheapest statement that restores the served path.
-      // Under VERIFY the column is false and no warning fires — the
-      // recompute was the explicit ask, not a degradation.
-      val statsServed = statsOpt.isDefined
-      if (!verify && statsOpt.isEmpty)
+      // recount is measured ∝ cells (exponent 0.93–0.96), so it runs
+      // here only as the FALLBACK/VERIFY path; the default folds the
+      // record every mutating statement commits (and every mutation
+      // drops first — absent means recount, never lie). An absent record
+      // WARNs naming the statement that restores it: a writer crashed
+      // between invalidation and commit, a mutation found no record, or
+      // the record was removed. Under VERIFY stats_served is false and
+      // no warning fires — the recount was the explicit ask.
+      val served = if (verify) None else record
+      if (!verify && record.isEmpty)
         Warnings.emit(
-          s"INDEX DESCRIBE '$dir': per-cell stats are absent — this " +
-            "DESCRIBE paid the full footer recompute (one footer " +
-            "recount job over every store, ∝ cells); run " +
-            s"INDEX COMPACT '$dir' to rewrite <dir>/stats and restore " +
-            "the served path (a no-op rewrite when no cell is dirty)")
-      val perStore = statsOpt.getOrElse(Stats.recount(spark, dir, stores))
+          s"INDEX DESCRIBE '$dir': the layout record is absent — this " +
+            "DESCRIBE paid the full footer recount (one job over every " +
+            "store, ∝ cells) and probes resolve cells from the live " +
+            s"layout; run INDEX MANIFEST '$dir' to restore it")
+      val statsServed = served.isDefined
+      val perStore = Stats.fold(served.map(_.layout)
+        .getOrElse(Stats.recount(spark, dir, stores)))
       val rows = stores.flatMap { case (sub, _) =>
         val live = new Path(s"$dir/$sub")
         if (!fs.exists(live)) None
@@ -944,28 +669,17 @@ private[graft] object IndexMaintenance {
     }
   }
 
-  /** INDEX MANIFEST '<dir>' — commit a versioned file manifest of the
-    * artifact's current live layout ([[IndexManifest]]): after this,
-    * every stored probe resolves its routed cells from ONE small
-    * manifest read (explicit data-file paths — no per-cell existence
-    * RPCs, no footer-discovery directory listing, no mixed-cells window
-    * while maintenance runs elsewhere), falling back to the live layout
-    * automatically once any mutation invalidates the manifest
-    * (absent-never-stale, the stats discipline — see
-    * [[Stats.invalidate]]). Runs under the single-writer maintenance
-    * lock so the snapshot cannot interleave with a writer's cell swap;
-    * answers are pinned unchanged (q174 gates manifest-served probe ≡
-    * live-layout probe hash-exact, across a writer re-publication).
-    * Once committed, the WRITERS maintain it: API/streaming
-    * append+delete and COMPACT re-publish incrementally
-    * ([[IndexManifest.republishTouched]]), REBUILD re-snapshots after
-    * its swap — so this statement is the one-time opt-in (and the
-    * recovery statement after a crash left the manifest absent). This
-    * is the foundation of the object-store maintenance design
-    * (SCALING.md round 15): on S3-style stores — where the per-cell
-    * rename swap cannot hold — a one-object manifest commit is the
-    * scale-safe write primitive; round 16 swaps the rename commit for
-    * a conditional put.
+  /** INDEX MANIFEST '<dir>' — the recovery statement of the layout
+    * record ([[IndexManifest]]). Every writer commits the record itself
+    * (a build `v1`, each mutation the next version), so on a readable
+    * record this statement returns it unchanged: no listing, no job, no
+    * new version. When the record is absent — a writer crashed between
+    * invalidation and commit, a mutation found no record, or it was
+    * removed — or malformed, it snapshots the live layout (one recount
+    * job, [[Stats.recount]]) as the next version, after which probes
+    * resolve cells from it again and DESCRIBE is served. Runs under the
+    * single-writer maintenance lock so the snapshot cannot interleave
+    * with a writer's cell swap. Output: (path, kind, version, files).
     */
   final case class IndexManifestVerb(dir: String) extends Verb {
     def build(sources: Map[String, DataFrame], primary: DataFrame)
@@ -973,11 +687,14 @@ private[graft] object IndexMaintenance {
       val spark = primary.sparkSession
       val (_, kind, stores) = storedIndexLayout(spark, dir,
         "INDEX MANIFEST")
-      val (version, files) = withMaintLock(spark, dir, "MANIFEST") {
-        IndexManifest.publish(spark, dir, stores)
+      val record = withMaintLock(spark, dir, "MANIFEST") {
+        val current =
+          try IndexManifest.read(spark, dir)
+          catch { case _: IndexManifest.Malformed => None }
+        current.getOrElse(IndexManifest.snapshot(spark, dir, stores))
       }
       import spark.implicits._
-      Seq((dir, kind, version, files))
+      Seq((dir, kind, record.version, record.files))
         .toDF("path", "kind", "version", "files")
     }
   }
@@ -1109,19 +826,6 @@ private[graft] object IndexMaintenance {
               s"$oldP to $dir — restore it manually, then re-run")
         } else if (fs.exists(oldP)) fs.delete(oldP, true)
         if (fs.exists(stage)) fs.delete(stage, true)
-        // manifest maintained-when-present (round 15): the swap carries
-        // the old manifest away with the old directory, so a committed
-        // artifact re-publishes FRESH after the swap (full snapshot —
-        // REBUILD is artifact-sized by construction, so the listing
-        // adds nothing asymptotic). Presence checked by version-file
-        // name OR the opt-in marker — so a REBUILD issued on the
-        // crashed-writer state (marker present, versions absent) heals
-        // the manifest along with everything else, instead of silently
-        // dropping the opt-in; and by name only, never content:
-        // REBUILD replaces every store, so even a tampered manifest's
-        // artifact leaves rebuilt-and-republished
-        val hadManifest = IndexManifest.version(spark, dir).isDefined ||
-          IndexManifest.wasCommitted(spark, dir)
         val (metaRow, kind, stores) = storedIndexLayout(spark, dir,
           "INDEX REBUILD")
         if (!metaRow.schema.fieldNames.contains("cells")) throw TransformError(
@@ -1169,9 +873,10 @@ private[graft] object IndexMaintenance {
         // `.old_` siblings before reading the stores: the reader skips
         // dot-paths, so those rows would be missing from the rebuilt
         // artifact, and the old one is deleted after the swap. Restored
-        // rows were absent from any stats written since the crash.
+        // rows are absent from any record committed since the crash.
         if (CellStore.sweep(spark, dir, stores).exists(_.nonEmpty))
-          Stats.invalidate(spark.sparkContext.hadoopConfiguration, dir)
+          IndexManifest.invalidate(spark.sparkContext.hadoopConfiguration,
+            dir)
         val (cellsAfter, entries) = {
           val res: (Int, Long) = kind match {
             case "lsh_text" =>
@@ -1283,9 +988,10 @@ private[graft] object IndexMaintenance {
             case other => throw TransformError(
               s"INDEX REBUILD: unknown artifact kind '$other' at $dir")
           }
-          // the staged artifact swaps in COMPLETE, its stats written
-          // from the stage writes' reports — a crash before the swap
-          // leaves the live artifact (and its stats) untouched
+          // the staged artifact swaps in COMPLETE, its layout record
+          // `v1` committed from the stage writes' reports — a crash
+          // before the swap leaves the live artifact (and its record)
+          // untouched
           // two renames; between them the artifact is absent and a
           // racing probe fails loudly instead of mis-routing
           if (!fs.rename(dirPath, oldP)) throw new IllegalStateException(
@@ -1316,10 +1022,6 @@ private[graft] object IndexMaintenance {
           fs.delete(oldP, true)
           res
         }
-        // the rebuilt artifact starts manifest-absent (fresh stage);
-        // restore the serving contract the operator had committed to
-        if (hadManifest)
-          IndexManifest.publish(spark, dir, stores)
         import spark.implicits._
         Seq((dir, kind, cellsBefore, cellsAfter, entries))
           .toDF("path", "kind", "cells_before", "cells_after",
@@ -1335,7 +1037,7 @@ private[graft] object IndexMaintenance {
     * deleted: COMPACT holds the lock, so no writer is live. Extracted so
     * [[IndexCompactVerb]] can decide up front whether ANY rewrite is
     * coming (the idempotent no-op contract: a re-COMPACT with nothing
-    * dirty must leave every byte alone, stats included).
+    * dirty must leave every byte alone, the layout record included).
     */
   private def compactScan(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       sub: String, cellCol: String): Map[Int, Long] =
@@ -1371,11 +1073,13 @@ private[graft] object IndexMaintenance {
     * store's stage written concurrently — atomic per cell on
     * HDFS/posix; object-store schemes without
     * atomic rename are REFUSED up front ([[requireAtomicRenameFs]]).
-    * The stats epilogue is incremental like APPEND/DELETE's: the dirty
-    * set IS the touched set, so with prior stats present only the
-    * rewritten cells change, taken from the rewrite's own reports
-    * ([[Stats.merge]], no job), and the whole statement — listing,
-    * rewrite, AND refresh — is ∝ the cells appends dirtied.
+    * The layout record is maintained like APPEND/DELETE's: the dirty
+    * set IS the touched set, so only the rewritten cells change in the
+    * record, taken from the rewrite's own reports
+    * ([[IndexManifest.merge]], no job), and the whole statement —
+    * listing, rewrite, AND record commit — is ∝ the cells appends
+    * dirtied. An absent record stays absent (`INDEX MANIFEST` restores
+    * it).
     * A crash mid-swap leaves `.old_…`
     * cells intact and re-running COMPACT completes the rest. The
     * block's input frame is ignored (the artifact is the operand);
@@ -1393,71 +1097,38 @@ private[graft] object IndexMaintenance {
       val (metaRow, kind, stores) = storedIndexLayout(spark, dir,
         "INDEX COMPACT")
       val _ = metaRow // COMPACT needs only the layout
-      var before = 0L
-      var after = 0L
-      withMaintLock(spark, dir, "COMPACT") {
-        // priors read UNDER the lock, before any rewrite invalidates
-        // them — the incremental-refresh inputs (round 14: COMPACT's
-        // cost contract is ∝ the cells appends dirtied, and its stats
-        // epilogue matches — the dirty set IS the touched set; round
-        // 15: a committed manifest rides the same discipline)
-        val manifestPrior = IndexManifest.readVersioned(spark, dir)
-        val prior = Stats.read(spark, dir)
+      val (before, after) = withMaintLock(spark, dir, "COMPACT") {
         // phase 1, SERIAL: sweep crashed cells, then list dirty cells
         // (cheap metadata ops). Sweeping FIRST matters: a restored cell
-        // takes part in this COMPACT's own dirty listing and joins the
-        // touched set, so the stats refresh recounts it.
-        // Serial because the sweep and listing decide whether anything
-        // is rewritten at all — an idempotent re-COMPACT must stay a
-        // byte-stable no-op, stats file included, so the invalidate
-        // below only happens when a rewrite is actually coming.
+        // takes part in this COMPACT's own dirty listing, and the record
+        // refresh recounts it. Serial because the sweep and listing
+        // decide whether anything is rewritten at all — an idempotent
+        // re-COMPACT must stay a byte-stable no-op, layout record
+        // included, so the record is dropped and recommitted only when
+        // a rewrite is coming.
         val restored = CellStore.sweep(spark, dir, stores)
         val scans = stores.map { case (sub, cellCol) =>
           (sub, cellCol, compactScan(fs, dir, sub, cellCol)) }
         val dirty = scans.map { case (sub, cellCol, files) =>
           (sub, cellCol, files.collect { case (c, n) if n > 1 => c }
             .toSeq.sorted) }
-        val rewrote = restored.exists(_.nonEmpty) ||
-          dirty.exists(_._3.nonEmpty)
-        if (rewrote)
-          Stats.invalidate(spark.sparkContext.hadoopConfiguration, dir)
         // phase 2: the dirty cells' rewrites, every store's stage in one
-        // concurrent write; a dirty cell's files become its report's
-        val compacted = CellStore.compact(spark, dir, dirty)
-        val landed = stores.lazyZip(scans).lazyZip(restored).map {
-          case ((sub, _), (_, _, files), r) =>
-            val l = compacted.getOrElse(sub, CellStore.Landed())
-            before += files.values.sum
-            after += files.values.sum -
-              l.rewritten.map(files.getOrElse(_, 0L)).sum + l.files.size
-            sub -> l.copy(restored = r)
-        }.toMap
-        // refresh stats LAST (still under the lock): the compacted
-        // per-cell file counts are exactly what the next DESCRIBE
-        // asks. With prior stats present the refresh folds the
-        // rewrite's reports into them for the DIRTY cells only (rows
-        // never change under COMPACT's identity rewrite, but file
-        // counts do — and only there), keeping the epilogue ∝ dirtied
-        // cells like the rewrite itself, with no job. Skipped when
-        // nothing was rewritten AND stats are already present — an
-        // idempotent re-COMPACT must stay a byte-stable no-op (the q158
-        // contract); when no cell was dirty but stats are ABSENT (a
-        // prior API mutation invalidated them), the statement still
-        // self-heals the fast path with the full recount
-        val statsPresent = fs.exists(new Path(s"$dir/stats"))
-        if (rewrote || !statsPresent) prior match {
-          case Some(p) if rewrote => Stats.merge(spark, dir, stores, p, landed)
-          case _ => Stats.write(spark, dir, stores)
-        }
-        // manifest maintained-when-present (round 15): the rewrite
-        // invalidated it; re-publish incrementally with the dirty set.
-        // An idempotent re-COMPACT (nothing rewritten) left the
-        // committed manifest untouched and exact — no new version
-        if (rewrote) manifestPrior.foreach { case (v, pm) =>
-          IndexManifest.republishTouched(spark, dir, stores, v, pm,
-            landed.map { case (sub, l) => sub -> l.touched }
-              .filter(_._2.nonEmpty))
-        }
+        // concurrent write; a dirty cell's files become its report's,
+        // folded into the prior record ∝ the dirtied cells, with no job
+        val landed =
+          if (restored.forall(_.isEmpty) && dirty.forall(_._3.isEmpty))
+            Map.empty[String, CellStore.Landed]
+          else IndexManifest.maintained(spark, dir, stores) {
+            val compacted = CellStore.compact(spark, dir, dirty)
+            stores.lazyZip(restored).map { case ((sub, _), r) =>
+              sub -> compacted.getOrElse(sub, CellStore.Landed())
+                .copy(restored = r) }.toMap
+          }
+        scans.map { case (sub, _, files) =>
+          val l = landed.getOrElse(sub, CellStore.Landed())
+          val n = files.values.sum
+          (n, n - l.rewritten.map(files.getOrElse(_, 0L)).sum + l.files.size)
+        }.foldLeft((0L, 0L)) { case ((b, a), (nb, na)) => (b + nb, a + na) }
       }
       import spark.implicits._
       Seq((dir, kind, before, after))
@@ -1726,10 +1397,10 @@ private[graft] object IndexMaintenance {
           .collect { case (f, true) => f }
       // Returns (kind, entries store path, cell count, touched cells):
       // APPEND/DELETE writers hand back their own routing — and have
-      // already merged their reports into the stats via their own
-      // Stats.mergeForWriter epilogue (under this statement's
-      // re-entrant lock); builds return empty, their stores having
-      // written stats from the write reports
+      // already folded their reports into the layout record
+      // (IndexManifest.maintained, under this statement's re-entrant
+      // lock); builds return empty, their stores having committed the
+      // record's v1 from the write reports
       def writeStores(): (String, String, Int, Map[String, Seq[Int]]) =
         method match {
         case "LSH" =>
@@ -1867,28 +1538,21 @@ private[graft] object IndexMaintenance {
       // don't lock (overwrite is the statement's whole point, and two
       // concurrent builds into one dir is the same user error as two
       // concurrent non-index writes to one path)
-      // stats refresh is the statement's LAST step (under the same
-      // lock for maintenance): the summary row's entry count is read
-      // from the refreshed per-cell stats instead of a separate full
-      // count. Every writer refreshes them itself from its own file
-      // reports — a build's stores write them whole, APPEND/DELETE
-      // fold into the prior in the API writers' Stats.mergeForWriter
-      // epilogue (under this statement's re-entrant lock; one stats
-      // body for verb and direct-API callers) — with no Spark job, so
-      // here they are simply READ BACK, falling back to the full
-      // recount when they are absent (stats were already absent before
-      // the mutation — this statement self-heals the fast path). The
-      // read-back is a driver-side file read (MetaParquet, no Spark
-      // job) bounded by the 65 536-cell cap — it spares widening every
-      // wrapper's public return type to carry the merged map out.
+      // the summary row's entry count is folded from the layout record
+      // every writer commits from its own file reports (a build's v1,
+      // a mutation's next version) — a driver-side read, no Spark job.
+      // A mutation that found no record left none, and this statement
+      // snapshots it (one recount job, under the same lock), so a verb
+      // APPEND or DELETE restores the record-served path.
       def writeAndCount(): (String, Int, Long) = {
         val (kind, entriesPath, cellCount, _) = writeStores()
         val stores = CellStore.storesFor(kind, s"INDEX INTO '$dir'")
-        val st = Stats.read(spark, dir)
-          .getOrElse(Stats.write(spark, dir, stores))
+        val record = IndexManifest.read(spark, dir)
+          .getOrElse(IndexManifest.snapshot(spark, dir, stores))
         val entriesSub =
           new org.apache.hadoop.fs.Path(entriesPath).getName
-        val n = st.getOrElse(entriesSub, Seq.empty).map(_._3).sum
+        val n = record.layout.getOrElse(entriesSub, Map.empty)
+          .valuesIterator.flatMap(_.valuesIterator).sum
         (kind, cellCount, n)
       }
       val (kind, cellCount, entryCount) =

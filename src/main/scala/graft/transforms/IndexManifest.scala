@@ -1,150 +1,127 @@
 package graft.transforms
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Versioned file manifest for stored-index artifacts — the
-  * metadata-pointer commit pattern (Delta/Iceberg's log, reduced to this
-  * engine's needs) that takes probe-side cell resolution off directory
-  * listing, and the round-15 foundation of the object-store maintenance
-  * path SCALING.md §"Round 15" designs.
+import CellStore.Landed
+
+/** The layout record of a stored index: which data files each cell of
+  * each store holds, with each file's row count. It is the artifact's
+  * one derived copy of its own layout. Probes resolve their routed cells
+  * from it, DESCRIBE folds its per-cell (files, rows) from it
+  * ([[IndexMaintenance.Stats.fold]]), and every writer commits it from
+  * the cell-store writer's file reports ([[CellStore.Landed]]), so no
+  * job re-reads a store to learn what it holds.
   *
   * Layout: `<dir>/manifest/v<0-padded version>.txt`, one UTF-8 text
   * object per committed version. Line 1 is the format header
-  * (`graft-index-manifest 1`); every further line is one live data
-  * file's path RELATIVE to the artifact root, e.g.
-  * `bands/pc=3/part-00007-….parquet`. The cell id is recoverable from
-  * the second path segment (`<pcol>=<cell>`), so one flat file list
-  * serves every store of the artifact. Readers resolve the CURRENT
-  * manifest by listing `<dir>/manifest/` and taking the
-  * lexicographically-last `v*` name (zero-padded ⇒ lexical = numeric) —
-  * one small-object read regardless of cell count.
+  * (`graft-index-manifest 2`); every further line is one live data
+  * file's path RELATIVE to the artifact root, a tab, and its row count,
+  * e.g. `bands/pc=3/part-00007-….parquet\t412`. The cell id is the
+  * second path segment (`<pcol>=<cell>`), so one flat list serves every
+  * store. Readers take the highest `v*` name (zero-padded ⇒ lexical =
+  * numeric): one listing and one small read regardless of cell count.
+  * A file headed `graft-index-manifest 1` (paths without rows) reads as
+  * absent; any other header is an error.
   *
-  * Consistency contract (round 15):
-  *  - A manifest PRESENT is exact: every mutation invalidates it before
-  *    touching rows ([[IndexMaintenance.Stats.invalidate]] drops stats
-  *    AND manifest at one choke point every writer already runs), the
-  *    same absent-never-stale discipline stats follow. A crashed writer
-  *    leaves the manifest absent, and probes fall back to the live
-  *    directory layout — the honest path, never a stale file list.
-  *  - MAINTAINED when present (the stats discipline again): a mutation
-  *    whose artifact carried a committed manifest re-publishes it as
-  *    its last step under the same lock — incrementally for the
-  *    batch-shaped writers ([[republishTouched]]: touched cells
-  *    re-listed, the rest carried over; API append/delete via
-  *    [[IndexMaintenance.Stats.mergeForWriter]], COMPACT with its
-  *    dirty set) and as a fresh full snapshot after REBUILD's swap. So
-  *    probes stay manifest-served across maintenance — including
-  *    streaming ingest — and the absent window spans one statement,
-  *    not operator reaction time. An artifact never published stays
-  *    manifest-free (writers maintain, they don't opt the operator
-  *    in).
-  *  - Publication (`INDEX MANIFEST '<dir>'`, [[IndexManifest.publish]])
-  *    runs under the single-writer maintenance lock, snapshots the live
-  *    layout, stages the version file COMPLETE, and commits it with one
-  *    rename — a racing reader sees the previous version or the new
-  *    one, never a truncated list (a half-read manifest would silently
-  *    drop candidate files, which is worse than failing).
-  *  - REBUILD needs no special case: the manifest lives INSIDE the
-  *    artifact, so the two-rename swap carries it into the reaped
-  *    `.rebuild_old_` and the rebuilt artifact starts manifest-absent.
+  * Consistency contract:
+  *  - ABSENT, NEVER STALE. Every mutation drops the record
+  *    ([[invalidate]]) before it touches a row. A writer that dies
+  *    mid-statement leaves it absent; probes then resolve cells from the
+  *    live directory layout and DESCRIBE recounts, both honest.
+  *  - MAINTAINED. A build and a REBUILD stage commit `v1` from their
+  *    reports. APPEND, DELETE and COMPACT read the prior record under
+  *    the artifact's single-writer lock, drop it, mutate, and commit the
+  *    prior folded with their reports as the next version ([[merge]]):
+  *    rewritten cells take their new files, published files join their
+  *    cells, untouched cells carry over. Only cells a sweep restored
+  *    after a crash are recounted ([[IndexMaintenance.Stats.recount]]),
+  *    as no report holds their rows. A mutation that found no record
+  *    leaves none.
+  *  - RECOVERED by `INDEX MANIFEST '<dir>'`: on an absent or malformed
+  *    record it snapshots the live layout (one recount job) as the next
+  *    version; on a readable record it is a no-op.
+  *  - WHOLE. A version is written complete to a temporary name and
+  *    committed with one rename, so a racing reader sees the previous
+  *    version or the new one, never a truncated list (a half-read
+  *    record would silently drop candidate files).
+  *  - REBUILD needs no special case: the record lives inside the
+  *    artifact, so the swap carries the stage's `v1` in.
   *
-  * Why this matters at 100 TB: probes on a manifest-committed artifact
-  * read ONE small object and then open exactly the listed parquet files
-  * — no per-cell existence RPCs, no directory listing (the BandScale-
-  * measured metadata pass that grew with the index), and no mixed-cells
-  * window during maintenance (a manifest version is a consistent
-  * snapshot by construction, where the lock-free probe contract on the
-  * live layout only promises per-cell atomicity). On object stores the
-  * same shape is the WHOLE plan: S3-style stores have no atomic rename
-  * for data directories, but a one-object manifest commits with a
-  * conditional put — the writers already maintain the manifest on
-  * rename-capable filesystems (see the contract below); round 16 swaps
-  * [[republishTouched]]'s rename commit for a conditional put and
-  * relaxes the object-store maintenance refusal. The read side is
-  * already scheme-agnostic.
+  * On object stores the record is the whole plan: S3-style stores have
+  * no atomic rename for data directories, but a one-object record
+  * commits with a conditional put. The read side is already
+  * scheme-agnostic; the write side still commits by rename.
   */
 object IndexManifest {
 
-  private val Header = "graft-index-manifest 1"
+  private val Header = "graft-index-manifest 2"
+  /** The format before lines carried rows: read as absent. */
+  private val RowlessHeader = "graft-index-manifest 1"
 
-  /** Parsed-manifest cache, keyed by the version file's (qualified
-    * path, modification time, length) — the identity the directory
-    * listing already paid for. Version files are immutable once
-    * committed (staged complete, renamed in, never rewritten — a
-    * re-publication is a NEW version), but the version NUMBER alone is
-    * not an identity: REBUILD's swap and an out-of-band manifest
-    * removal restart the numbering at v1, so two incarnations of an
-    * artifact can both carry a v1 with different contents — the
-    * modtime+length in the key makes the restarted file a cache miss
-    * (and an in-place tamper of a committed file, which changes both,
-    * re-parse and fail loudly rather than serve the stale parse).
-    * Invalidation needs no hooks: an invalidated artifact has no
-    * current version to look up. This is what keeps the probe-side
-    * manifest read ∝ ONE listing per probe instead of ∝ manifest
-    * bytes — the serving hot path re-parses only when the current
-    * version file actually changed. Bounded LRU of 8 (a JVM serves a
-    * handful of artifacts, and one entry can reach
-    * manifest-at-the-cell-cap size, so the bound stays small),
-    * synchronized — touched once per probe, not per row.
+  /** store → cell → (file path relative to the artifact → rows). */
+  type Layout = Map[String, Map[Int, Map[String, Long]]]
+
+  /** A committed version of the layout record. */
+  final case class Record(version: Long, layout: Layout) {
+    def files: Long =
+      layout.valuesIterator.flatMap(_.valuesIterator).map(_.size.toLong).sum
+  }
+
+  /** A present record that does not parse: external interference with a
+    * committed snapshot. Probing the live layout instead could silently
+    * disagree with what the operator believes is pinned, so readers
+    * fail; `INDEX MANIFEST` replaces it.
+    */
+  final class Malformed(msg: String) extends IllegalStateException(msg)
+
+  /** Parsed-record cache, keyed by the version file's (qualified path,
+    * modification time, length) — the identity the directory listing
+    * already paid for. Version files are immutable once committed (a
+    * new layout is a NEW version), but the version NUMBER alone is not
+    * an identity: a build, REBUILD's swap and a snapshot after an
+    * invalidation restart the numbering at v1, so two incarnations can
+    * both carry a v1 — the modtime+length make the restarted file a
+    * miss (and an in-place tamper re-parses and fails loudly). The
+    * serving hot path re-parses only when the current version changed.
+    * Bounded LRU of 8 (a JVM serves a handful of artifacts, and one
+    * entry can reach record-at-the-cell-cap size), synchronized —
+    * touched once per probe, not per row. A rowless file caches as None.
     */
   private val parseCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-        Map[String, Map[Int, Seq[String]]]](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, Long, Long), Option[Layout]](
+        16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long),
-            Map[String, Map[Int, Seq[String]]]]): Boolean = size() > 8
+          e: java.util.Map.Entry[(String, Long, Long), Option[Layout]])
+          : Boolean = size() > 8
     }
 
   private[graft] def manifestDir(base: String): Path =
     new Path(base, "manifest")
 
-  /** Drop every committed version — called (via
-    * [[IndexMaintenance.Stats.invalidate]]) as the first step of every
-    * row-writing mutation, so a manifest can be absent but never stale.
-    * Version files are deleted NEWEST-first, so a lock-free reader
-    * racing the sweep can only land on an older committed version
-    * (still a consistent snapshot of a pre-mutation layout), never a
-    * half-deleted newest one. The `.committed` marker SURVIVES: it
-    * records that an operator opted this artifact into the manifest
-    * contract, which is what lets DESCRIBE tell a crashed writer's
-    * absent-manifest degradation (marker present, no versions — WARN
-    * naming `INDEX MANIFEST` as the restore) apart from an artifact
-    * never published or deliberately opted out by removing the whole
-    * `manifest/` dir (no marker — silent, the opt-in discipline).
+  private def fsOf(spark: SparkSession, base: String): FileSystem =
+    new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Drop every committed version — the first step of every
+    * row-writing mutation, so the record can be absent but never stale.
+    * Versions are deleted NEWEST-first, so a lock-free reader racing the
+    * sweep can only land on an older committed version (still a
+    * consistent snapshot of a pre-mutation layout). Deliberately not
+    * swallowed: mutating after a failed invalidation would leave a
+    * stale record, which is worse than failing the mutation.
     */
-  def invalidate(conf: org.apache.hadoop.conf.Configuration,
-      base: String): Unit = {
+  def invalidate(conf: Configuration, base: String): Unit = {
     val d = manifestDir(base)
     val fs = d.getFileSystem(conf)
-    if (fs.exists(d))
-      fs.listStatus(d).toSeq
-        .filter(st => st.getPath.getName.startsWith("v") &&
-          st.getPath.getName.endsWith(".txt"))
-        .sortBy(_.getPath.getName).reverse
-        .foreach(st => fs.delete(st.getPath, false))
-    ()
+    versions(fs, base).reverse.foreach(v => fs.delete(v._2.getPath, false))
   }
 
-  /** Has this artifact ever committed a manifest (and not deliberately
-    * opted out by removing `manifest/` wholesale)? DESCRIBE's
-    * degradation signal: true + no current version = a writer crashed
-    * between invalidate and re-publication.
-    */
-  def wasCommitted(spark: SparkSession, base: String): Boolean = {
-    val p = new Path(manifestDir(base), ".committed")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The current (highest-version) manifest file's status, or None —
-    * the listing's FileStatus carries the modtime+length the parse
-    * cache keys on, so cache identity costs no extra RPC.
-    */
-  private def currentVersion(
-      fs: org.apache.hadoop.fs.FileSystem, base: String)
-      : Option[(Long, org.apache.hadoop.fs.FileStatus)] = {
+  /** The committed version files, lowest first. */
+  private def versions(fs: FileSystem, base: String)
+      : Seq[(Long, FileStatus)] = {
     val d = manifestDir(base)
-    if (!fs.exists(d)) None
+    if (!fs.exists(d)) Nil
     else fs.listStatus(d).toSeq
       .filter(st => st.getPath.getName.startsWith("v") &&
         st.getPath.getName.endsWith(".txt"))
@@ -153,202 +130,190 @@ object IndexManifest {
           st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toLong)
           .toOption.map(_ -> st)
       }
-      .sortBy(_._1).lastOption
+      .sortBy(_._1)
   }
 
-  /** The committed manifest version serving probes right now, or None —
-    * DESCRIBE's "are probes manifest-served?" answer.
-    */
-  def version(spark: SparkSession, base: String): Option[Long] = {
-    val fs = new Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentVersion(fs, base).map(_._1)
-  }
-
-  /** Read the current manifest: store → cell → relative file paths.
-    * None when no manifest is committed (probes fall back to the live
-    * directory layout). A malformed manifest is an ERROR, not a silent
-    * fallback — it means external interference with a committed
-    * snapshot, and probing the live layout could silently disagree
-    * with what the operator believes is pinned.
-    */
-  def read(spark: SparkSession, base: String)
-      : Option[Map[String, Map[Int, Seq[String]]]] =
-    readVersioned(spark, base).map(_._2)
-
-  /** [[read]] plus the committed version it came from — the writers'
-    * entry point ([[republishTouched]] commits version + 1).
-    *
+  /** The current record, or None when none is committed (or the current
+    * version is rowless) — probes then fall back to the live layout.
     * A read racing an invalidation (the version file vanishing between
-    * the listing and the open) resolves to None — the mutation won and
-    * probes take the live-layout fallback, exactly as a lock-free
-    * DESCRIBE racing a stats refresh does. Only a manifest that is
-    * PRESENT and well-formed serves; a present-but-malformed one still
-    * errors loudly (external tampering, [[read]]'s contract).
+    * the listing and the open) resolves to None: the mutation won. A
+    * present but malformed record throws [[Malformed]].
     */
-  def readVersioned(spark: SparkSession, base: String)
-      : Option[(Long, Map[String, Map[Int, Seq[String]]])] = try {
-    val fs = new Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentVersion(fs, base).map { case (v, st) =>
+  def read(spark: SparkSession, base: String): Option[Record] = try {
+    val fs = fsOf(spark, base)
+    versions(fs, base).lastOption.flatMap { case (v, st) =>
       val key = (fs.makeQualified(st.getPath).toString,
         st.getModificationTime, st.getLen)
-      val cached = parseCache.synchronized {
-        Option(parseCache.get(key))
-      }
-      v -> cached.getOrElse {
-        val parsed = parseVersionFile(fs, base, v, st.getPath)
-        parseCache.synchronized {
-          parseCache.put(key, parsed)
-        }
+      val cached = parseCache.synchronized(Option(parseCache.get(key)))
+      cached.getOrElse {
+        val parsed = parse(fs, base, v, st.getPath)
+        parseCache.synchronized(parseCache.put(key, parsed))
         parsed
-      }
+      }.map(Record(v, _))
     }
   } catch { case _: java.io.FileNotFoundException => None }
 
-  private def parseVersionFile(fs: org.apache.hadoop.fs.FileSystem,
-      base: String, v: Long, p: Path)
-      : Map[String, Map[Int, Seq[String]]] = {
-      val lines = {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8)
-          .getLines().toVector
-        finally in.close()
+  private def parse(fs: FileSystem, base: String, v: Long, p: Path)
+      : Option[Layout] = {
+    val lines = {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8)
+        .getLines().toVector
+      finally in.close()
+    }
+    def malformed(why: String): Nothing = throw new Malformed(
+      s"stored-index manifest $p (version $v) is malformed ($why) — run " +
+        s"INDEX MANIFEST '$base' to snapshot the live layout as a new " +
+        "version")
+    lines.headOption match {
+      case Some(RowlessHeader) => None
+      case Some(Header) =>
+        Some(lines.tail.filter(_.nonEmpty).map { line =>
+          val tab = line.lastIndexOf('\t')
+          val rel = if (tab < 0) "" else line.substring(0, tab)
+          val segs = rel.split('/')
+          val eq = if (segs.length < 3) -1 else segs(1).indexOf('=')
+          val cell = scala.util.Try(segs(1).substring(eq + 1).toInt)
+          val rows = scala.util.Try(line.substring(tab + 1).toLong)
+          if (eq < 0 || cell.isFailure || rows.isFailure)
+            malformed(s"line '$line' is not <store>/<pcol>=<cell>/<file>" +
+              "<tab><rows>")
+          (segs(0), cell.get, rel, rows.get)
+        }.groupBy(_._1).map { case (store, ls) =>
+          store -> ls.groupBy(_._2).map { case (c, fs) =>
+            c -> fs.map(f => f._3 -> f._4).toMap }
+        })
+      case other => malformed(s"bad header '${other.getOrElse("")}'")
+    }
+  }
+
+  /** Resolve the subset of `wanted` cells of the store at `root` to
+    * explicit paths — the plain-parquet analogue of metastore partition
+    * pruning, shared by every stored-artifact probe. A committed record
+    * gives the cells' data FILES from one small read: no per-cell
+    * existence RPC, no footer-discovery listing, and a consistent
+    * snapshot while maintenance runs elsewhere. Without one, the live
+    * layout ([[liveCellPaths]]). Cells with no files are skipped — an
+    * empty cell cannot hold candidates. Both forms feed the same
+    * `read.option("basePath", root).parquet(paths…)` call: Spark
+    * recovers the cell column from directory or file paths.
+    */
+  def cellPaths(spark: SparkSession, root: String, pcol: String,
+      wanted: Array[Int]): Seq[String] = {
+    val rootPath = new Path(root)
+    Option(rootPath.getParent).flatMap(p => read(spark, p.toString)) match {
+      case Some(r) =>
+        val cells = r.layout.getOrElse(rootPath.getName, Map.empty)
+        wanted.toSeq
+          .flatMap(c => cells.getOrElse(c, Map.empty).keys.toSeq.sorted)
+          .map(rel => new Path(rootPath.getParent, rel).toString)
+      case None => liveCellPaths(spark, root, pcol, wanted.toSeq)
+    }
+  }
+
+  /** The `wanted` cell directories of the store at `root` that exist,
+    * one existence probe each, through the path's OWN Hadoop
+    * FileSystem — java.io.File would report every hdfs://… or s3a://…
+    * cell absent, and a probe would match nothing on exactly the
+    * distributed deployments the artifacts exist for.
+    */
+  private[graft] def liveCellPaths(spark: SparkSession, root: String,
+      pcol: String, wanted: Seq[Int]): Seq[String] = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    wanted.map(c => new Path(rootPath, s"$pcol=$c"))
+      .filter(fs.exists).map(_.toString)
+  }
+
+  /** A data file's key in a record line: its path relative to the
+    * artifact.
+    */
+  private[transforms] def relPath(store: String, pcol: String, cell: Int,
+      file: Path): String =
+    s"$store/$pcol=$cell/${file.getName}"
+
+  /** `prior` with one statement's reports folded in, per (store, cell
+    * column) of `stores`: a rewritten cell's prior files are gone, each
+    * published file joins its cell, untouched cells carry over because
+    * the statement never opened their files. Cells a sweep restored and
+    * the statement did not rewrite are recounted from the live layout:
+    * no report holds their rows. A build folds into an empty prior.
+    */
+  def merge(spark: SparkSession, base: String, stores: Seq[(String, String)],
+      prior: Layout, landed: Map[String, Landed]): Layout = {
+    val restored = landed.map { case (sub, l) =>
+      sub -> l.restored.filterNot(l.rewritten.contains) }.filter(_._2.nonEmpty)
+    val recounted =
+      if (restored.isEmpty) Map.empty[String, Map[Int, Map[String, Long]]]
+      else IndexMaintenance.Stats.recount(spark, base, stores, Some(restored))
+    stores.map { case (sub, pcol) =>
+      val l = landed.getOrElse(sub, Landed())
+      val kept = prior.getOrElse(sub, Map.empty) -- l.rewritten
+      val added = l.files.groupBy(_._1).map { case (c, fs) =>
+        c -> (kept.getOrElse(c, Map.empty) ++ fs.map { case (_, f, n) =>
+          relPath(sub, pcol, c, new Path(f)) -> n })
       }
-      if (lines.isEmpty || lines.head != Header)
-        throw new IllegalStateException(
-          s"stored-index manifest $p (version $v) is malformed " +
-            s"(bad header '${lines.headOption.getOrElse("")}') — " +
-            "remove <dir>/manifest to fall back to the live layout, " +
-            s"or re-publish with INDEX MANIFEST '$base'")
-      lines.tail.filter(_.nonEmpty).groupBy(rel => rel.split('/').head)
-        .map { case (store, rels) =>
-          store -> rels.groupBy { rel =>
-            val seg = rel.split('/')(1)
-            val eq = seg.indexOf('=')
-            if (eq < 0) throw new IllegalStateException(
-              s"stored-index manifest $p: line '$rel' has no " +
-                "<pcol>=<cell> segment — the manifest was edited or " +
-                s"corrupted; re-publish with INDEX MANIFEST '$base'")
-            seg.substring(eq + 1).toInt
-          }.map { case (c, rs) => c -> rs.toSeq.sorted }
-        }
+      sub -> ((kept ++ added) -- restored.getOrElse(sub, Nil) ++
+        recounted.getOrElse(sub, Map.empty))
+    }.filter(_._2.nonEmpty).toMap
   }
 
-  /** Probe-side resolution: the wanted cells of `<base>/<store>` as
-    * explicit live-data-file paths from the current manifest, or None
-    * when no manifest is committed. Cells absent from the manifest had
-    * no rows at publish time and are skipped (same contract as a
-    * missing cell directory). This is what replaces the per-cell
-    * existence RPCs AND the parquet footer discovery listing on a
-    * manifest-committed artifact.
+  /** A mutation wrapped in the record's maintenance: read the prior
+    * record, drop it, run `mutate`, and — when a prior existed — commit
+    * the prior folded with the mutation's reports as the next version.
+    * Callers hold the artifact's maintenance lock, so the prior is exact
+    * and the read → mutate → commit sequence cannot interleave with
+    * another writer. A malformed prior stops the writer before it
+    * touches a row. Returns the mutation's reports.
     */
-  def cellFiles(spark: SparkSession, storeRoot: Path,
-      wanted: Seq[Int]): Option[Seq[String]] = {
-    val base = Option(storeRoot.getParent).map(_.toString)
-      .getOrElse(return None)
-    val store = storeRoot.getName
-    read(spark, base).map { m =>
-      val cells = m.getOrElse(store, Map.empty)
-      wanted.flatMap(c => cells.getOrElse(c, Seq.empty))
-        .map(rel => new Path(base, rel).toString)
-    }
+  def maintained(spark: SparkSession, base: String,
+      stores: Seq[(String, String)])(
+      mutate: => Map[String, Landed]): Map[String, Landed] = {
+    val prior = read(spark, base)
+    invalidate(spark.sparkContext.hadoopConfiguration, base)
+    val landed = mutate
+    prior.foreach(p =>
+      commit(spark, base, p.version + 1,
+        merge(spark, base, stores, p.layout, landed)))
+    landed
   }
 
-  /** Snapshot the artifact's CURRENT live layout as the next manifest
-    * version. Caller holds the maintenance lock (the verb acquires it),
-    * so the listing cannot interleave with a writer's cell swap. Stage
-    * + one rename keeps racing readers on whole versions. Returns
-    * (version, files listed).
+  /** Snapshot the live layout of `stores` ([[IndexMaintenance.Stats.recount]],
+    * one job) as the next version: `INDEX MANIFEST`'s recovery of an
+    * absent or malformed record, and a verb APPEND's or DELETE's when it
+    * found none. Caller holds the maintenance lock.
     */
-  def publish(spark: SparkSession, base: String,
-      stores: Seq[(String, String)]): (Long, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val basePath = new Path(base)
-    val fs = basePath.getFileSystem(conf)
-    val relFiles = Seq.newBuilder[String]
-    for ((store, pcol) <- stores) {
-      val root = new Path(basePath, store)
-      if (fs.exists(root))
-        for (cellSt <- fs.listStatus(root)
-            if cellSt.isDirectory &&
-              cellSt.getPath.getName.startsWith(s"$pcol=");
-            f <- fs.listStatus(cellSt.getPath)
-            if f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-          relFiles += s"$store/${cellSt.getPath.getName}/${f.getPath.getName}"
-    }
-    val files = relFiles.result().sorted
-    val version = currentVersion(fs, base).map(_._1 + 1).getOrElse(1L)
-    commitVersion(fs, base, version, files)
-    (version, files.size.toLong)
+  def snapshot(spark: SparkSession, base: String,
+      stores: Seq[(String, String)]): Record = {
+    val next = versions(fsOf(spark, base), base).lastOption
+      .map(_._1 + 1).getOrElse(1L)
+    commit(spark, base, next,
+      IndexMaintenance.Stats.recount(spark, base, stores))
   }
 
-  /** Incremental re-publication — the writer-side half of the manifest
-    * story (round 15): a mutation whose artifact carried a COMMITTED
-    * manifest re-publishes it as its last step, so probes stay
-    * manifest-served across maintenance instead of falling back to the
-    * live layout until an operator re-runs `INDEX MANIFEST`. The same
-    * cost discipline as the incremental stats merge
-    * ([[IndexMaintenance.Stats.merge]]): only the mutation's
-    * own TOUCHED cells are re-listed from the live layout (∝ the
-    * batch's routed cells); every untouched cell's file list carries
-    * over from the prior manifest with no IO. The new version file
-    * itself is ∝ total files — bounded metadata, the same class as the
-    * stats-file rewrite, and the honest fixed per-statement cost noted
-    * on [[IndexMaintenance.Stats.mergeForWriter]]. Caller holds the
-    * artifact's maintenance lock and passes the prior read BEFORE the
-    * mutation invalidated it.
+  /** Write `layout` COMPLETE under a temporary name, then commit it as
+    * `version` with one rename.
     */
-  def republishTouched(spark: SparkSession, base: String,
-      stores: Seq[(String, String)], priorVersion: Long,
-      prior: Map[String, Map[Int, Seq[String]]],
-      touched: Map[String, Seq[Int]]): Long = {
-    val basePath = new Path(base)
-    val fs = basePath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val relFiles = Seq.newBuilder[String]
-    for ((store, pcol) <- stores) {
-      val touchedCells = touched.getOrElse(store, Seq.empty).toSet
-      for ((cell, rels) <- prior.getOrElse(store, Map.empty)
-          if !touchedCells(cell))
-        relFiles ++= rels
-      for (cell <- touchedCells.toSeq.sorted) {
-        val cellDir = new Path(basePath, s"$store/$pcol=$cell")
-        if (fs.exists(cellDir))
-          for (f <- fs.listStatus(cellDir)
-              if f.isFile && !f.getPath.getName.startsWith("_") &&
-                !f.getPath.getName.startsWith("."))
-            relFiles += s"$store/$pcol=$cell/${f.getPath.getName}"
-      }
-    }
-    val version = priorVersion + 1
-    commitVersion(fs, base, version, relFiles.result().sorted)
-    version
-  }
-
-  /** Stage the version file COMPLETE, commit with one rename — racing
-    * readers see whole versions only (see [[publish]]'s contract).
-    */
-  private def commitVersion(fs: org.apache.hadoop.fs.FileSystem,
-      base: String, version: Long, files: Seq[String]): Unit = {
+  private[graft] def commit(spark: SparkSession, base: String,
+      version: Long, layout: Layout): Record = {
+    val fs = fsOf(spark, base)
     val d = manifestDir(base)
     fs.mkdirs(d)
-    // the opt-in record [[wasCommitted]] reads; survives invalidation
-    val marker = new Path(d, ".committed")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
+    val lines = (for ((_, cells) <- layout.iterator; (_, files) <- cells;
+        (rel, rows) <- files) yield s"$rel\t$rows").toSeq.sorted
     val tmp = new Path(d, s".tmp_${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(
-      (Header +: files).mkString("", "\n", "\n").getBytes("UTF-8"))
+      (Header +: lines).mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     val target = new Path(d, f"v$version%016d.txt")
     if (!fs.rename(tmp, target)) {
       fs.delete(tmp, false)
       throw new IllegalStateException(
         s"INDEX MANIFEST: cannot commit version $version at $target — " +
-          "the artifact keeps its previous manifest (or none); re-run " +
+          "the artifact keeps its previous record (or none); re-run " +
           "the statement")
     }
+    Record(version, layout)
   }
 }

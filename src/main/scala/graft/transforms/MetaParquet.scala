@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** Driver-side access to a stored artifact's one-file metadata parquets
-  * (`meta/`, `stats/`) and to its stores' footers — parquet-hadoop's
+/** Driver-side access to a stored artifact's one-file metadata parquet
+  * (`meta/`) and to its stores' footers — parquet-hadoop's
   * example Group API, no Spark job. A metadata parquet holds a handful
   * of rows, yet `spark.read.parquet(dir).head()` pays two jobs for it (a
   * schema-inference job, then the scan), and every INDEX statement reads
@@ -32,8 +32,8 @@ import org.apache.spark.sql.types._
   * and types, and [[readRows]] of a Spark-written dir returns the rows
   * `spark.read.parquet(dir)` returns, schema included (every field
   * nullable, as Spark's file sources report it). Flat schemas of
-  * string/int/long/double/float/boolean columns only — what meta and
-  * stats hold.
+  * string/int/long/double/float/boolean columns only — what meta
+  * holds.
   */
 private[graft] object MetaParquet {
 

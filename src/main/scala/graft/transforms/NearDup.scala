@@ -546,7 +546,7 @@ object NearDup {
     *
     * This is the path a streaming ingest job calls per microbatch; it
     * commits through [[CellStore.append]] (single-writer lock, crashed
-    * cells restored first, stats and manifest maintained). Returns the
+    * cells restored first, layout record maintained). Returns the
     * store → touched-cells routing.
     */
   def bandStoreAppend(base: String, shC: DataFrame)
@@ -764,7 +764,7 @@ object NearDup {
     // the distributed deployments the artifact exists for.
     def emptyMatches = shB.select(col("id").as("doc_a"),
       col("id").as("doc_b"), lit(0.0).as("jaccard")).limit(0)
-    val bandPaths = existingCellPaths(s, s"$base/bands", "pc", probeCells)
+    val bandPaths = IndexManifest.cellPaths(s, s"$base/bands", "pc", probeCells)
     if (bandPaths.isEmpty) return emptyMatches
     val stored = MetaParquet.readCells(s, s"$base/bands", "pc", bandPaths)
       .select(col("id").as("doc_b"), col("band"), col("bh"))
@@ -776,45 +776,11 @@ object NearDup {
       .select(pmod(xxhash64(col("doc_b")), lit(cells.toLong))
         .cast("int").as("sc"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val shPaths = existingCellPaths(s, s"$base/shingles", "sc", shCells)
+    val shPaths = IndexManifest.cellPaths(s, s"$base/shingles", "sc", shCells)
     if (shPaths.isEmpty) return emptyMatches
     val shStored = MetaParquet.readCells(s, s"$base/shingles", "sc", shPaths)
       .select(col("id"), col("shs"))
     verifyPairsAcross(cand, shBVerify, shStored, threshold)
-  }
-
-  /** Resolve the subset of `wanted` partition cells that exist under
-    * `root` as explicit paths — the plain-parquet analogue of metastore
-    * partition pruning, shared by every stored-artifact probe (band/typo
-    * stores here, the cosine store in VecKnn, the IVF cluster stores in
-    * Similarity). Two forms (round 15):
-    *  - a COMMITTED MANIFEST present ([[IndexManifest]]) resolves the
-    *    wanted cells to explicit live-data-FILE paths from one small
-    *    manifest read — no per-cell existence RPCs, no footer-discovery
-    *    directory listing, and a consistent snapshot (no mixed-cells
-    *    window while maintenance runs elsewhere);
-    *  - otherwise, the live layout: one existence probe per wanted cell
-    *    directory, through the path's OWN Hadoop FileSystem —
-    *    java.io.File would silently report every hdfs://… or s3a://…
-    *    cell absent and a probe would return zero matches on exactly
-    *    the distributed deployments the artifacts exist for.
-    * Cells never occupied by any key have no directory (or no manifest
-    * entry) and are skipped driver-side — an empty cell cannot hold
-    * candidates. Both forms feed the same
-    * `read.option("basePath", root).parquet(paths…)` call: Spark
-    * recovers the partition column from either directory or file paths.
-    */
-  private[graft] def existingCellPaths(s: org.apache.spark.sql.SparkSession,
-      root: String, pcol: String, wanted: Array[Int]): Seq[String] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    IndexManifest.cellFiles(s, rootPath, wanted.toSeq) match {
-      case Some(files) => files
-      case None =>
-        val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        wanted.toSeq
-          .map(c => new org.apache.hadoop.fs.Path(rootPath, s"$pcol=$c"))
-          .filter(fs.exists).map(_.toString)
-    }
   }
 
   /** Validate a stored artifact's `kind` against what the probe expects —
@@ -909,7 +875,7 @@ object NearDup {
       .select(pmod(col("vh"), lit(cells.toLong)).cast("int").as("pc"))
       .distinct().collect().map(_.getInt(0)).sorted
     def emptyMatches = br.select(col("id").as("b_id")).limit(0)
-    val vPaths = existingCellPaths(s, s"$base/variants", "pc", probeCells)
+    val vPaths = IndexManifest.cellPaths(s, s"$base/variants", "pc", probeCells)
     if (vPaths.isEmpty) return emptyMatches
     val stored = MetaParquet.readCells(s, s"$base/variants", "pc", vPaths)
       .select(col("id").as("c_id"), col("vh"))
@@ -921,7 +887,7 @@ object NearDup {
       .select(pmod(xxhash64(col("c_id")), lit(cells.toLong))
         .cast("int").as("sc"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val sPaths = existingCellPaths(s, s"$base/strings", "sc", sCells)
+    val sPaths = IndexManifest.cellPaths(s, s"$base/strings", "sc", sCells)
     if (sPaths.isEmpty) return emptyMatches
     val cStr = MetaParquet.readCells(s, s"$base/strings", "sc", sPaths)
       .select(col("id").as("c_id"), col("txt").as("tc"))

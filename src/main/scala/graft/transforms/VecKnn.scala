@@ -428,7 +428,7 @@ object VecKnn {
         .cast("int").as("pc"))
       .distinct().collect().map(_.getInt(0)).sorted
     def emptyMatches = batch.select(col("id").as("b_id")).limit(0)
-    val bPaths = NearDup.existingCellPaths(s, s"$base/buckets", "pc",
+    val bPaths = IndexManifest.cellPaths(s, s"$base/buckets", "pc",
       probeCells)
     if (bPaths.isEmpty) return emptyMatches
     val stored = MetaParquet.readCells(s, s"$base/buckets", "pc", bPaths)
@@ -441,7 +441,7 @@ object VecKnn {
       .select(pmod(xxhash64(col("c_id")), lit(cells.toLong))
         .cast("int").as("sc"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val vPaths = NearDup.existingCellPaths(s, s"$base/vectors", "sc", vCells)
+    val vPaths = IndexManifest.cellPaths(s, s"$base/vectors", "sc", vCells)
     if (vPaths.isEmpty) return emptyMatches
     val cVec = MetaParquet.readCells(s, s"$base/vectors", "sc", vPaths)
       .select(col("id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
@@ -533,7 +533,7 @@ object VecKnn {
       .select(pmod(xxhash64(col("t"), col("bucket")), lit(cells.toLong))
         .cast("int").as("pc"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val bPaths = NearDup.existingCellPaths(s, s"$base/buckets", "pc",
+    val bPaths = IndexManifest.cellPaths(s, s"$base/buckets", "pc",
       probeCells)
     if (bPaths.isEmpty) return empty
     val stored = MetaParquet.readCells(s, s"$base/buckets", "pc", bPaths)
@@ -551,7 +551,7 @@ object VecKnn {
       .select(pmod(xxhash64(col("c_id")), lit(cells.toLong))
         .cast("int").as("sc"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val vPaths = NearDup.existingCellPaths(s, s"$base/vectors", "sc", vCells)
+    val vPaths = IndexManifest.cellPaths(s, s"$base/vectors", "sc", vCells)
     if (vPaths.isEmpty) return empty
     val cVec = MetaParquet.readCells(s, s"$base/vectors", "sc", vPaths)
       .select(col("id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))

@@ -2149,11 +2149,11 @@ class AqlSpec extends AnyFunSuite {
     // so pin served == VERIFY (and the appended entry visible in the
     // SERVED figures) after each family's API append
     import org.apache.spark.sql.functions.{col, xxhash64}
-    def statsAt(ix: String) =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(ix, "stats"))
+    def recordAt(ix: String) =
+      graft.transforms.IndexManifest.read(spark, ix).isDefined
     def servedVsVerify(ix: String,
         runner: String => org.apache.spark.sql.DataFrame): Unit = {
-      assert(statsAt(ix), s"$ix: stats absent after API mutation")
+      assert(recordAt(ix), s"$ix: layout record absent after API mutation")
       // compare modulo stats_served — the one column DOCUMENTED to
       // differ (true on the served read, false under VERIFY by
       // construction); everything else must be row-identical
@@ -2957,7 +2957,8 @@ class AqlSpec extends AnyFunSuite {
         (4L, "the final corpus text for appending here"))
       .toDF("id", "txt").write.parquet(bPq)
     val idx = dir.resolve("lsh").toString
-    val statsPath = java.nio.file.Paths.get(idx, "stats")
+    val mf = graft.transforms.IndexManifest
+    def recordAt(): Boolean = mf.read(spark, idx).isDefined
     def run(pq: String, body: String) = Aql.run(spark,
       s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$pq',
          |  FORMAT = 'parquet')
@@ -2972,58 +2973,55 @@ class AqlSpec extends AnyFunSuite {
     def entries(sub: String): Long =
       run(aPq, s"INDEX DESCRIBE '$idx'").collect()
         .find(_.getAs[String]("store") == sub).get.getAs[Long]("entries")
-    // build writes stats; the served DESCRIBE equals the ground truth
+    // the build commits the layout record; the served DESCRIBE equals
+    // the ground truth
     run(aPq, s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 " +
       s"INTO '$idx'")
-    assert(java.nio.file.Files.exists(statsPath))
+    assert(recordAt())
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 2L)
-    // verb APPEND refreshes stats (same lock, last step)
+    // verb APPEND commits the next version (same lock, last step)
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' APPEND")
-    assert(java.nio.file.Files.exists(statsPath))
+    assert(recordAt())
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 4L)
-    // a DIRECT API append (the streaming ingestion path) maintains
-    // stats itself (Stats.mergeForWriter: prior read → mutate → merge
-    // the batch's routed cells), so DESCRIBE stays SERVED under
-    // continuous direct-API ingest — and the served rows must equal
-    // the VERIFY ground truth, which proves the merged carry-over
-    // rows are not stale
+    // a DIRECT API append (the streaming ingestion path) maintains the
+    // record itself (IndexManifest.maintained: prior read → drop →
+    // mutate → fold the batch's file reports), so DESCRIBE stays
+    // SERVED under continuous direct-API ingest — and the served rows
+    // must equal the VERIFY ground truth, which proves the carried-over
+    // cells are not stale
     val sh = graft.transforms.NearDup.shingled(
       Seq((99L, "totally novel words for the api append path"))
         .toDF("id", "txt"), "id", "txt")
     graft.transforms.NearDup.bandStoreAppend(idx, sh)
-    assert(java.nio.file.Files.exists(statsPath))
+    assert(recordAt())
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 5L)
-    // with stats ABSENT, a batch-sized API mutation must NOT pay the
-    // artifact-sized recount: it leaves them absent (DESCRIBE takes
-    // the honest fallback, which sees the deletion) and the next
-    // corpus-shaped statement self-heals
-    graft.transforms.IndexMaintenance.Stats.invalidate(
-      spark.sparkContext.hadoopConfiguration, idx)
+    // with the record ABSENT, a batch-sized API mutation must NOT pay
+    // the artifact-sized recount: it leaves it absent (DESCRIBE takes
+    // the honest fallback, which sees the deletion)
+    mf.invalidate(spark.sparkContext.hadoopConfiguration, idx)
     graft.transforms.NearDup.bandStoreDelete(idx, sh)
-    assert(!java.nio.file.Files.exists(statsPath))
+    assert(!recordAt())
     assert(entries("shingles") == 4L)
-    // the next verb statement self-heals the fast path
+    // the next verb APPEND or DELETE snapshots it again
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' DELETE")
-    assert(java.nio.file.Files.exists(statsPath))
+    assert(recordAt())
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 2L) // bPq's 2 texts deleted
-    // COMPACT's rewrite also lands in stats (multi-file cells → 1)
+    // COMPACT's rewrite also lands in the record (multi-file cells → 1)
     run(aPq, s"INDEX COMPACT '$idx'")
-    assert(java.nio.file.Files.exists(statsPath))
+    assert(recordAt())
     assert(describe(false) == describe(true))
     val desc = run(aPq, s"INDEX DESCRIBE '$idx'").collect()
     assert(desc.forall(_.getAs[Long]("multi_file_cells") == 0L),
       desc.mkString("; "))
-    // round-14 incremental refresh, closed-form: with stats PRESENT,
-    // verb APPEND and verb DELETE take the merge path (recompute only
-    // their own routed cells, carry the rest over) — after a full
-    // append-then-delete cycle the served stats must equal the
-    // DESCRIBE … VERIFY ground truth row-for-row, and a cell emptied
-    // by the delete must leave the stats entirely (merge drops it,
-    // not just zeroes it)
+    // incremental refresh, closed-form: with the record PRESENT, verb
+    // APPEND and verb DELETE fold only their own reports and carry the
+    // rest over — after a full append-then-delete cycle the record
+    // must equal a full recount of the live layout FILE FOR FILE, and
+    // a cell emptied by the delete must leave the record entirely
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' APPEND")
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 4L)
@@ -3032,16 +3030,11 @@ class AqlSpec extends AnyFunSuite {
     assert(entries("shingles") == 2L)
     val stats = graft.transforms.IndexMaintenance.Stats
     val stores = Seq("bands" -> "pc", "shingles" -> "sc")
-    val statRows = spark.read.parquet(statsPath.toString)
-    val verifyRows = stats.recount(spark, idx, stores).toSeq
-      .flatMap { case (sub, cs) =>
-        cs.map { case (c, f, r) => (sub, c, f, r) } }.toSet
-    assert(statRows.collect().map(r => (r.getAs[String]("store"),
-      r.getAs[Int]("cell"), r.getAs[Long]("files"),
-      r.getAs[Long]("rows"))).toSet == verifyRows)
+    assert(mf.read(spark, idx).map(_.layout).contains(
+      stats.recount(spark, idx, stores)))
     // recount edge case 1: a zero-row parquet file in every cell (so in
-    // every touched one) — it holds no entries, so neither the merged
-    // recount nor VERIFY counts it as a file
+    // every touched one) — it holds no entries, so neither the record
+    // nor VERIFY counts it as a file
     val beforeEmpty = describe(true)
     val cellDirs = stores.flatMap { case (sub, pcol) =>
       java.nio.file.Files.list(java.nio.file.Paths.get(idx, sub))
@@ -3065,13 +3058,13 @@ class AqlSpec extends AnyFunSuite {
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 2L)
     // recount edge case 2: a cell whose swap crashed between its two
-    // renames (live cell moved to `.old_`), with stats exact for the
+    // renames (live cell moved to `.old_`), with a record exact for the
     // crashed state — the next writer's sweep restores the cell, and
-    // the merge must recount it although the batch never routed there.
-    // The shingle store routes an entry by pmod(xxhash64(id), 8) with
-    // id = xxhash64(text), so the crashed cell is one bPq's texts miss
-    // (the band store is not used: 2 texts x 32 bands route to every
-    // one of its 8 cells)
+    // the record refresh must recount it although the batch never
+    // routed there. The shingle store routes an entry by
+    // pmod(xxhash64(id), 8) with id = xxhash64(text), so the crashed
+    // cell is one bPq's texts miss (the band store is not used: 2 texts
+    // x 32 bands route to every one of its 8 cells)
     val routed = spark.read.parquet(bPq)
       .select(org.apache.spark.sql.functions.expr(
         "cast(pmod(xxhash64(xxhash64(txt)), 8) as int)"))
@@ -3096,7 +3089,9 @@ class AqlSpec extends AnyFunSuite {
         .headOption.getOrElse(fail(s"every shingle cell is routed: $routed"))
       java.nio.file.Files.move(root.resolve(s"sc=$cell"),
         root.resolve(s".old_sc_$cell"))
-      stats.write(spark, idx, stores)
+      // the record of the crashed state: dropped, then snapshotted
+      mf.invalidate(spark.sparkContext.hadoopConfiguration, idx)
+      run(aPq, s"INDEX MANIFEST '$idx'").collect()
       assert(describe(false) == describe(true))
     }
     crashOneCellPerStore()
@@ -3107,6 +3102,8 @@ class AqlSpec extends AnyFunSuite {
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' DELETE")
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 3L)
+    assert(mf.read(spark, idx).map(_.layout).contains(
+      stats.recount(spark, idx, stores)))
   }
 
   test("INDEX DESCRIBE drift advisory: max_cell_skew reports the " +
@@ -3209,8 +3206,9 @@ class AqlSpec extends AnyFunSuite {
     assert(compactWarns() == w1)
   }
 
-  test("INDEX DESCRIBE stats_served: true off <dir>/stats, false after " +
-      "an invalidation-without-prior, warning names INDEX COMPACT") {
+  test("INDEX DESCRIBE stats_served: true off the layout record, false " +
+      "after an invalidation-without-prior, one warning naming INDEX " +
+      "MANIFEST") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_aqlspec_ssv")
     graft.queries.Advanced.registerTmpDir(dir)
@@ -3228,50 +3226,51 @@ class AqlSpec extends AnyFunSuite {
     def served(verify: String = "") = run(s"INDEX DESCRIBE '$idx'$verify")
       .collect().map(_.getAs[Boolean]("stats_served")).distinct.toSeq
     def absentWarns() = graft.transforms.IndexMaintenance.Warnings.recent
-      .count(_.contains("per-cell stats are absent"))
+      .count(_.contains("is absent"))
     run(s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 2 INTO '$idx'")
-    // a fresh build writes stats: served, silent
+    // a fresh build commits the record: served, silent
     val w0 = absentWarns()
     assert(served() == Seq(true))
     assert(absentWarns() == w0)
-    // an API append WITH a prior runs the incremental merge — still
-    // served (the round-14 contract the column now makes visible)
+    // an API append WITH a prior folds its reports in — still served
     val sh = graft.transforms.NearDup.shingled(
       Seq((9L, "a third document about incremental merge epilogues"))
         .toDF("id", "txt"), "id", "txt")
     graft.transforms.NearDup.bandStoreAppend(idx, sh)
     assert(served() == Seq(true))
-    // invalidation WITHOUT a prior: stats removed out-of-band, then an
-    // API mutation (no prior to merge into ⇒ leaves them absent) — the
-    // DESCRIBE pays the recompute, says so, and WARNs with the remedy
+    // invalidation WITHOUT a prior: the record removed out-of-band, then
+    // an API mutation (no prior to fold into ⇒ leaves it absent) — the
+    // DESCRIBE pays the recount, says so, and WARNs ONCE with the remedy
     new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"$idx/stats"), true)
+      .delete(new org.apache.hadoop.fs.Path(s"$idx/manifest"), true)
     graft.transforms.NearDup.bandStoreAppend(idx,
       graft.transforms.NearDup.shingled(
         Seq((10L, "a fourth document appended while stats were absent"))
           .toDF("id", "txt"), "id", "txt"))
     assert(served() == Seq(false))
     val fired = graft.transforms.IndexMaintenance.Warnings.recent
-      .filter(_.contains("per-cell stats are absent"))
-    assert(fired.size > w0, fired.toString)
-    assert(fired.last.contains(s"INDEX COMPACT '$idx'"), fired.last)
-    // the named remedy self-heals the served path (no cell dirty —
-    // COMPACT's absent-stats branch writes them anyway) and the
-    // advisory stops
+      .filter(_.contains("is absent"))
+    assert(fired.size == w0 + 1, fired.toString)
+    assert(fired.last.contains(s"INDEX MANIFEST '$idx'"), fired.last)
+    // COMPACT maintains a present record but does not restore an absent
+    // one: still unserved
     run(s"INDEX COMPACT '$idx'")
+    assert(served() == Seq(false))
+    // the named remedy snapshots the record and the advisory stops
+    run(s"INDEX MANIFEST '$idx'")
     val w1 = absentWarns()
     assert(served() == Seq(true))
     assert(absentWarns() == w1)
-    // VERIFY honestly reports false — the recompute was the explicit
+    // VERIFY honestly reports false — the recount was the explicit
     // ask, so no degradation warning fires
     assert(served(" VERIFY") == Seq(false))
     assert(absentWarns() == w1)
   }
 
-  test("INDEX MANIFEST: versioned commit serves probes; writers " +
-      "re-publish (API append, COMPACT, REBUILD); opt-in discipline; " +
-      "malformed manifest errors; lock excludes") {
+  test("INDEX MANIFEST: every writer commits the layout record (build v1, " +
+      "API append, COMPACT, REBUILD); a readable record is returned " +
+      "unchanged; absent or malformed, it is snapshotted; lock excludes") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_aqlspec_mfst")
     graft.queries.Advanced.registerTmpDir(dir)
@@ -3282,6 +3281,7 @@ class AqlSpec extends AnyFunSuite {
       (3L, "manifest committed probes read explicit file paths"))
       .toDF("id", "txt").write.parquet(pq)
     val idx = dir.resolve("lsh").toString
+    val mf = graft.transforms.IndexManifest
     def run(body: String) = Aql.run(spark,
       s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$pq',
          |  FORMAT = 'parquet')
@@ -3301,61 +3301,67 @@ class AqlSpec extends AnyFunSuite {
       .map(_.getAs[Long]("manifest_version")).distinct match {
         case Array(v) => v
       }
+    def manifest(): (Long, Long) = {
+      val r = run(s"INDEX MANIFEST '$idx'").collect().head
+      (r.getAs[Long]("version"), r.getAs[Long]("files"))
+    }
+    def bandFiles(): Int = {
+      val s2 = java.nio.file.Files.walk(java.nio.file.Paths.get(idx, "bands"))
+      try s2.iterator().asScala
+        .count(p => java.nio.file.Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet") &&
+          !p.getFileName.toString.startsWith("."))
+      finally s2.close()
+    }
+    def resolved(): Seq[String] =
+      mf.cellPaths(spark, s"$idx/bands", "pc", Array(0, 1, 2, 3))
     run(s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 4 INTO '$idx'")
-    val liveAnswer = probe() // resolved from the live directory layout
-    assert(liveAnswer == Seq(11L), liveAnswer.toString)
-    assert(descVersion() == 0L)
-    // commit: version 1, files counted, DESCRIBE reports it
-    val c1 = run(s"INDEX MANIFEST '$idx'").collect().head
-    assert(c1.getAs[Long]("version") == 1L && c1.getAs[Long]("files") > 0,
-      c1.toString)
+    // the build commits v1: DESCRIBE reports it, and the resolver
+    // answers from it with FILE paths (…/part-….parquet), not cell
+    // directories, covering every live band file
     assert(descVersion() == 1L)
-    // manifest-served probe ≡ live-layout probe (the q174 contract,
-    // pinned here at spec scale where both paths run in one JVM)
-    assert(probe() == liveAnswer)
-    // the resolver really answers from the manifest: it returns FILE
-    // paths (…/part-….parquet), not cell directories
-    val mPaths = graft.transforms.NearDup.existingCellPaths(
-      spark, s"$idx/bands", "pc", Array(0, 1, 2, 3))
-    assert(mPaths.nonEmpty && mPaths.forall(_.endsWith(".parquet")),
-      mPaths.toString)
-    // re-publish bumps the version
-    assert(run(s"INDEX MANIFEST '$idx'").collect()
-      .head.getAs[Long]("version") == 2L)
-    // MAINTAINED when present: an API mutation re-publishes as its
-    // last step (invalidate → mutate → incremental re-publish from the
-    // prior + its own touched cells), so the probe stays
-    // manifest-served AND sees the appended row
+    assert(resolved().nonEmpty && resolved().forall(_.endsWith(".parquet")),
+      resolved().toString)
+    assert(resolved().size == bandFiles())
+    val served = probe()
+    assert(served == Seq(11L), served.toString)
+    // a readable record is returned unchanged: same version, every file
+    val (v1, files1) = manifest()
+    assert(v1 == 1L && files1 == mf.read(spark, idx).get.files && files1 > 0)
+    assert(descVersion() == 1L)
+    // record-served probe ≡ live-layout probe (the q174 contract, pinned
+    // here at spec scale where both paths run in one JVM)
+    mf.invalidate(spark.sparkContext.hadoopConfiguration, idx)
+    assert(descVersion() == 0L)
+    assert(probe() == served)
+    // an absent record is snapshotted from the live layout: the same
+    // files as the build committed
+    assert(manifest() == (1L, files1))
+    assert(probe() == served)
+    // MAINTAINED: an API mutation commits the next version as its last
+    // step (prior read → drop → mutate → fold its reports), so the
+    // probe stays record-served AND sees the appended row
     graft.transforms.NearDup.bandStoreAppend(idx,
       graft.transforms.NearDup.shingled(
         Seq((20L, "a sentence no corpus document resembles at all"))
           .toDF("id", "txt"), "id", "txt"))
-    assert(descVersion() == 3L)
+    assert(descVersion() == 2L)
     assert(probe() == Seq.empty, "appended doc 20 must now match doc 11")
-    // ...and the manifest-served file list really carries the appended
-    // files: the resolver's paths cover every live band file
-    val allBand = {
-      val s2 = java.nio.file.Files.walk(java.nio.file.Paths.get(idx, "bands"))
-      try s2.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet")).size
-      finally s2.close()
-    }
-    assert(graft.transforms.NearDup.existingCellPaths(
-      spark, s"$idx/bands", "pc", Array(0, 1, 2, 3)).size == allBand)
-    // COMPACT re-publishes with its dirty set (the append left
-    // multi-file cells)
+    // ...and the record really carries the appended files
+    assert(resolved().size == bandFiles())
+    // COMPACT commits with its dirty set (the append left multi-file
+    // cells)
     run(s"INDEX COMPACT '$idx'")
-    assert(descVersion() == 4L)
+    assert(descVersion() == 3L)
+    assert(resolved().size == bandFiles())
     assert(probe() == Seq.empty)
-    // REBUILD's swap carries the old manifest away; a committed
-    // artifact re-snapshots FRESH (v1 of the rebuilt incarnation)
+    // REBUILD's swap carries the stage's fresh v1 in
     run(s"INDEX REBUILD '$idx'")
     assert(descVersion() == 1L)
+    assert(resolved().size == bandFiles())
     assert(probe() == Seq.empty)
-    // writers MAINTAIN, they don't opt in: manifest removed
-    // out-of-band ⇒ a mutation leaves it absent (live-layout fallback,
-    // absent-never-stale) until INDEX MANIFEST re-publishes
+    // the record removed out-of-band ⇒ a mutation leaves it absent
+    // (live-layout fallback, absent-never-stale) until INDEX MANIFEST
     new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$idx/manifest"), true)
@@ -3365,10 +3371,11 @@ class AqlSpec extends AnyFunSuite {
           .toDF("id", "txt"), "id", "txt"))
     assert(descVersion() == 0L)
     assert(probe() == Seq.empty)
-    // a malformed committed manifest is an ERROR naming the re-publish
-    // statement, never a silent fallback (probing the live layout could
-    // silently disagree with what the operator believes is pinned)
-    run(s"INDEX MANIFEST '$idx'")
+    // a malformed record is an ERROR naming the recovery statement,
+    // never a silent fallback (probing the live layout could silently
+    // disagree with what the operator believes is pinned) — for probes
+    // and writers alike
+    assert(manifest()._1 == 1L)
     val mdir = java.nio.file.Paths.get(idx, "manifest")
     val v = {
       val s = java.nio.file.Files.list(mdir)
@@ -3384,9 +3391,17 @@ class AqlSpec extends AnyFunSuite {
       v.resolveSibling("." + v.getFileName.toString + ".crc"))
     val em = intercept[Exception](probe()).getMessage
     assert(em.contains("malformed") && em.contains("INDEX MANIFEST"), em)
-    java.nio.file.Files.delete(v) // back to live-layout resolution
+    val wm = intercept[Exception](graft.transforms.NearDup.bandStoreAppend(
+      idx, graft.transforms.NearDup.shingled(
+        Seq((22L, "an append refused while the record is malformed"))
+          .toDF("id", "txt"), "id", "txt"))).getMessage
+    assert(wm.contains("malformed") && wm.contains("INDEX MANIFEST"), wm)
+    // the recovery statement snapshots over it as the next version
+    assert(manifest()._1 == 2L)
+    assert(descVersion() == 2L)
     assert(probe() == Seq.empty)
-    // publication is a writer: a held maintenance lock excludes it
+    // the MANIFEST statement is a writer: a held maintenance lock
+    // excludes it
     val sibling = java.nio.file.Paths.get(
       graft.transforms.IndexMaintenance.maintLockPath(idx).toUri.getPath)
     java.nio.file.Files.writeString(sibling, "APPEND @ mfst-holder\n")
@@ -3394,30 +3409,6 @@ class AqlSpec extends AnyFunSuite {
       run(s"INDEX MANIFEST '$idx'")).getMessage
     assert(lm.contains("single-writer") && lm.contains("mfst-holder"), lm)
     java.nio.file.Files.delete(sibling)
-    // crashed-writer degradation advisory: the tampered-version
-    // cleanup above left exactly the state a crash between
-    // invalidation and re-publication leaves — the `.committed`
-    // opt-in marker present, no committed version — and DESCRIBE
-    // WARNs naming the restore statement (writers deliberately do
-    // NOT self-heal: a full re-publication is an artifact-sized
-    // listing, which would break the batch-shaped mutation
-    // contract). The restore statement clears the advisory; the
-    // deliberate opt-out earlier in this test (manifest/ removed
-    // wholesale, marker included) stayed silent — that is the
-    // distinction the marker exists to draw.
-    def mfstWarns() = graft.transforms.IndexMaintenance.Warnings.recent
-      .count(_.contains("committed manifest is absent"))
-    assert(graft.transforms.IndexManifest.wasCommitted(spark, idx))
-    val mw0 = mfstWarns()
-    assert(descVersion() == 0L)
-    assert(mfstWarns() == mw0 + 1, "advisory must fire on the crash state")
-    assert(graft.transforms.IndexMaintenance.Warnings.recent
-      .filter(_.contains("committed manifest is absent"))
-      .last.contains(s"INDEX MANIFEST '$idx'"), "warning names the restore")
-    run(s"INDEX MANIFEST '$idx'")
-    val mw1 = mfstWarns()
-    assert(descVersion() == 1L)
-    assert(mfstWarns() == mw1, "advisory must stop once restored")
   }
 
   test("KNN METHOD JACCARD STORED: top-k text retrieval from the band " +

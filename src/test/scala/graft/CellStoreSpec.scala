@@ -1,7 +1,8 @@
 package graft
 
 import graft.engine.Aql
-import graft.transforms.{CellStore, IndexMaintenance, MetaParquet}
+import graft.transforms.{CellStore, IndexMaintenance, IndexManifest,
+  MetaParquet}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -31,8 +32,8 @@ object FaultOnce {
 }
 
 /** The cell-store writer: task-side files under hidden names, published
-  * by rename, reported with their row counts — and the stats, touched
-  * cells and artifacts built from those reports.
+  * by rename, reported with their row counts — and the layout record,
+  * touched cells and artifacts built from those reports.
   */
 class CellStoreSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -70,20 +71,18 @@ class CellStoreSpec extends AnyFunSuite {
     try r.getRecordCount finally r.close()
   }
 
-  /** (cell, files, rows) per cell of each store, from the files on disk:
-    * what the artifact's stats must say.
+  /** Every visible data file of each store with its footer row count,
+    * from the files on disk: what the artifact's layout record must list.
     */
-  private def onDisk(idx: String, kind: String)
-      : Map[String, Seq[(Int, Long, Long)]] = {
+  private def onDisk(idx: String, kind: String): IndexManifest.Layout = {
     val fs = new Path(idx).getFileSystem(conf)
     CellStore.storesFor(kind, "spec").map { case (sub, cellCol) =>
       sub -> CellStore.listCells(fs, new Path(idx, sub), cellCol).map {
         case (c, files) =>
-          val data =
-            files.filter(st => MetaParquet.visible(st.getPath.getName))
-          (c, data.size.toLong,
-            data.map(st => footerRows(st.getPath.toString)).sum)
-      }.filter(_._2 > 0).toSeq.sortBy(_._1)
+          c -> files.filter(st => MetaParquet.visible(st.getPath.getName))
+            .map(st => s"$sub/$cellCol=$c/${st.getPath.getName}" ->
+              footerRows(st.getPath.toString)).toMap
+      }.filter(_._2.nonEmpty).toMap
     }.filter(_._2.nonEmpty).toMap
   }
 
@@ -181,7 +180,7 @@ class CellStoreSpec extends AnyFunSuite {
       def check(step: String): Unit = {
         assert(leftovers(idx, Some(kind)).isEmpty,
           s"$step: ${leftovers(idx, Some(kind))}")
-        assert(IndexMaintenance.Stats.read(spark, idx).contains(
+        assert(IndexManifest.read(spark, idx).map(_.layout).contains(
           onDisk(idx, kind)), step)
         assert(describe(idx, verify = false) == describe(idx, verify = true),
           step)
@@ -199,7 +198,8 @@ class CellStoreSpec extends AnyFunSuite {
       assert(compacted.getAs[Long]("files_after") <
         compacted.getAs[Long]("files_before"), compacted)
       assert(compacted.getAs[Long]("files_after") ==
-        onDisk(idx, kind).values.flatten.map(_._2).sum, compacted)
+        onDisk(idx, kind).values.flatMap(_.values).map(_.size.toLong).sum,
+        compacted)
       check("COMPACT")
     }
 
@@ -212,7 +212,13 @@ class CellStoreSpec extends AnyFunSuite {
     val idx = dir.resolve("idx").toString
     statement(s"INDEX ON item KEY id METHOD IVF CELLS 8 PQ 2 INTO '$idx'",
       Some(corpus)).collect()
-    val verified = describe(idx, verify = true)
+    // the VERIFY rows apart from manifest_version: a failed statement
+    // drops the layout record (absent, never stale)
+    def verifiedRows(): Seq[String] =
+      statement(s"INDEX DESCRIBE '$idx' VERIFY")
+        .drop("stats_served", "manifest_version").collect()
+        .map(_.toString).sorted.toSeq
+    val verified = verifiedRows()
     val stored = entries(idx).filter(e =>
       e.startsWith("index") || e.startsWith("codes"))
 
@@ -230,7 +236,8 @@ class CellStoreSpec extends AnyFunSuite {
 
     assert(entries(idx).filter(e =>
       e.startsWith("index") || e.startsWith("codes")) == stored)
-    assert(describe(idx, verify = true) == verified)
+    assert(verifiedRows() == verified)
+    assert(IndexManifest.read(spark, idx).isEmpty)
     assert(IndexMaintenance.maintLockHolder(conf, idx) == "")
 
     // the lock is free and the artifact whole: the same batch appends
@@ -264,7 +271,9 @@ class CellStoreSpec extends AnyFunSuite {
         .partitionBy(cellCol).parquet(s"$legacy/$sub")
       assert(entries(legacy).contains(s"$sub/_SUCCESS"))
     }
-    IndexMaintenance.Stats.write(spark, legacy, stores)
+    IndexManifest.invalidate(conf, legacy)
+    assert(IndexManifest.snapshot(spark, legacy, stores).layout ==
+      onDisk(legacy, "lsh_text"))
 
     def answers(idx: String): Seq[Long] =
       statement(s"NEARDEDUP D AGAINST STORED '$idx' ON item KEY id " +

@@ -32,19 +32,32 @@ class InParallelSpec extends AnyFunSuite {
     }))), 60.seconds)
   }
 
+  /** The leg threads of the first `attempt` (of at most 10) that ran a
+    * leg on a pool thread sampled with no `key` just before. A pool
+    * thread created while the legs are submitted inherits the caller's
+    * properties, so a leg landing on one shows nothing about the
+    * restore; which thread takes a leg depends on the pool's history.
+    */
+  private def legsOnCleanThreads(key: String)(attempt: () => Seq[Thread])
+      : Set[Thread] =
+    Iterator.range(0, 10).map { _ =>
+      val clean = onEveryPoolThread(key)
+        .collect { case (t, v) if v == null || v.isEmpty => t }.toSet
+      attempt().toSet.intersect(clean)
+    }.find(_.nonEmpty).getOrElse(Set.empty)
+
   test("inParallel restores the pooled threads' own job group after the legs") {
     val sc = spark.sparkContext
     sc.setLocalProperty(Group, null)
-    // pool threads created now inherit no group from this caller
-    val clean = onEveryPoolThread().map(_._1).toSet
-    sc.setLocalProperty(Group, "stmt-1")
-    val Seq(a, b) =
-      try CellStore.inParallel(Seq(
-        () => (Thread.currentThread, sc.getLocalProperty(Group)),
-        () => (Thread.currentThread, sc.getLocalProperty(Group))))
-      finally sc.setLocalProperty(Group, null)
-    assert(a._2 == "stmt-1" && b._2 == "stmt-1")
-    val legThreads = Set(a._1, b._1).intersect(clean)
+    val legThreads = legsOnCleanThreads(Group) { () =>
+      sc.setLocalProperty(Group, "stmt-1")
+      val legs =
+        try CellStore.inParallel(Seq.fill(2)(() =>
+          (Thread.currentThread, sc.getLocalProperty(Group))))
+        finally sc.setLocalProperty(Group, null)
+      assert(legs.forall(_._2 == "stmt-1"), legs)
+      legs.map(_._1)
+    }
     assert(legThreads.nonEmpty)
     val after = onEveryPoolThread().filter(r => legThreads(r._1))
     assert(after.nonEmpty)
@@ -64,8 +77,6 @@ class InParallelSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val Tags = "spark.job.tags" // SparkContext.SPARK_JOB_TAGS
     sc.clearJobTags()
-    // pool threads created now inherit no tag from this caller
-    val clean = onEveryPoolThread(Tags).map(_._1).toSet
     val seen = new ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -74,21 +85,22 @@ class InParallelSpec extends AnyFunSuite {
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
-    sc.addJobTag("stmt-2")
-    val legs =
-      try CellStore.inParallel(Seq.fill(2)(() => {
-        spark.range(100).repartition(2).count()
-        Thread.currentThread
-      }))
+    val legThreads =
+      try legsOnCleanThreads(Tags) { () =>
+        sc.addJobTag("stmt-2")
+        try CellStore.inParallel(Seq.fill(2)(() => {
+          spark.range(100).repartition(2).count()
+          Thread.currentThread
+        }))
+        finally sc.removeJobTag("stmt-2")
+      }
       finally {
-        sc.removeJobTag("stmt-2")
         ListenerBusDrain(sc)
         sc.removeSparkListener(listener)
       }
     val tagged = seen.asScala.toSeq
     assert(tagged.size >= 2, tagged)
     assert(tagged.forall(_.exists(_.split(",").contains("stmt-2"))), tagged)
-    val legThreads = legs.toSet.intersect(clean)
     assert(legThreads.nonEmpty)
     val after = onEveryPoolThread(Tags).filter(r => legThreads(r._1))
     assert(after.nonEmpty)

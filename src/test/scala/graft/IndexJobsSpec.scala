@@ -1,6 +1,8 @@
 package graft
 
 import graft.engine.Aql
+import graft.transforms.IndexMaintenance
+import org.apache.spark.sql.Row
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,10 +10,32 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-/** Spark jobs per INDEX statement: metadata (`meta/`, `stats/`) is read
-  * and written on the driver, so the statements that only touch metadata
-  * launch no job, and a mutation's stats epilogue folds its writers' file
-  * reports without one.
+/** Replaces a stored index's `manifest/` directory with a plain file the
+  * first time an armed batch row is evaluated — inside a mutation, after
+  * it dropped the layout record and before it commits the next version.
+  */
+object RecordCommitFault {
+  @volatile private var target: String = null
+
+  def arm(idx: String): Unit = target = idx
+
+  def pass(id: Long): Long = {
+    synchronized {
+      if (target != null) {
+        val d = java.nio.file.Paths.get(target, "manifest")
+        org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+        java.nio.file.Files.writeString(d, "not a directory\n")
+        target = null
+      }
+    }
+    id
+  }
+}
+
+/** Spark jobs per INDEX statement: metadata (`meta/` and the layout
+  * record) is read and written on the driver, so the statements that only
+  * touch metadata launch no job, and a mutation folds its writers' file
+  * reports into the record without one.
   */
 class IndexJobsSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -90,6 +114,77 @@ class IndexJobsSpec extends AnyFunSuite {
     val recounts = appendJobs.filter(_.contains("IndexMaintenance.scala"))
     assert(recounts.isEmpty, appendJobs.mkString("; "))
     assert(maintain("DESCRIBE").forall(_.getAs[Boolean]("stats_served")))
+  }
+
+  test("an API APPEND whose record commit fails leaves the record absent, " +
+      "not stale; INDEX MANIFEST restores it with one job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf, xxhash64}
+    val dir = java.nio.file.Files.createTempDirectory("graft_recordfault")
+    graft.queries.Advanced.registerTmpDir(dir)
+    val aPq = dir.resolve("a.parquet").toString
+    (1 to 40).map(i => (i.toLong, s"document $i about topic ${i % 7} " +
+        s"with words w${i % 5} v${i % 3} and tail t$i"))
+      .toDF("id", "txt").write.parquet(aPq)
+    val idx = dir.resolve("lsh").toString
+    def run(body: String, source: String =
+        "DATA 'D' ([[1, \"x\"]]) WITH (COLUMNS = 'Id, Txt')"): Seq[Row] =
+      Aql.run(spark, s"""$source
+           |TRANSFORM 'T' FROM ${if (source.startsWith("DATA")) "BLOCK"
+             else "CONNECTION"} D (
+           |  $body
+           |) INTO CONSOLE""".stripMargin).outputs("T").collect().toSeq
+    def entries(verify: String): Long = run(s"INDEX DESCRIBE '$idx'$verify")
+      .find(_.getAs[String]("store") == "shingles").get
+      .getAs[Long]("entries")
+    run(s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 INTO '$idx'",
+      s"CONNECTION 'D' (DRIVER = 'file', FILE = '$aPq', FORMAT = 'parquet')")
+    assert(graft.transforms.IndexManifest.read(spark, idx).isDefined)
+
+    val texts = (41 to 44).map(i => s"appended text $i on subject " +
+      s"${i % 4} carrying u${i % 6} and marker m$i")
+    val fault = udf((id: Long) => RecordCommitFault.pass(id))
+      .asNondeterministic()
+    val batch = graft.transforms.NearDup.shingled(
+        texts.toDF("txt").select(xxhash64(col("txt")).as("th"), col("txt")),
+        "th", "txt")
+      .withColumn("id", fault(col("id")))
+    RecordCommitFault.arm(idx)
+    intercept[Exception](graft.transforms.NearDup.bandStoreAppend(idx, batch))
+    // the commit failed after the rows landed: the record is absent, not
+    // stale, and the lock is released
+    assert(graft.transforms.IndexManifest.read(spark, idx).isEmpty)
+    assert(IndexMaintenance.maintLockHolder(
+      spark.sparkContext.hadoopConfiguration, idx) == "")
+    // the live layout holds the appended rows: VERIFY counts them, and
+    // the served DESCRIBE recounts and warns once
+    assert(entries(" VERIFY") == 44L)
+    val warned = IndexMaintenance.Warnings.recent
+      .count(_.contains("layout record is absent"))
+    assert(entries("") == 44L)
+    assert(IndexMaintenance.Warnings.recent
+      .count(_.contains("layout record is absent")) == warned + 1)
+    // a probe resolves cells from the live layout and sees them: the
+    // appended texts match their stored copies, the new one is kept
+    val probeRows = (texts.zipWithIndex.map { case (t, i) =>
+        s"[${100 + i}, \"$t\"]" } :+
+      "[200, \"a sentence no stored document resembles in any way\"]")
+      .mkString("[", ", ", "]")
+    val kept = run("NEARDEDUP D AGAINST STORED '" + idx + "' ON Txt KEY Id " +
+        "THRESHOLD 0.5 METHOD LSH",
+      s"DATA 'D' ($probeRows) WITH (COLUMNS = 'Id, Txt')")
+      .map(_.getLong(0))
+    assert(kept == Seq(200L), kept)
+    // with the junk removed, INDEX MANIFEST snapshots the record in one
+    // job, and DESCRIBE is served from it again
+    java.nio.file.Files.delete(java.nio.file.Paths.get(idx, "manifest"))
+    var restored = Seq.empty[Row]
+    val manifestJobs = jobsOf { restored = run(s"INDEX MANIFEST '$idx'") }
+    assert(manifestJobs.size == 1, manifestJobs.mkString("; "))
+    assert(restored.head.getAs[Long]("version") == 1L)
+    assert(run(s"INDEX DESCRIBE '$idx'")
+      .forall(_.getAs[Boolean]("stats_served")))
+    assert(entries("") == 44L)
   }
 
   /** Jobs of a CELLS 8 build, a verb APPEND, a COMPACT of the cells that

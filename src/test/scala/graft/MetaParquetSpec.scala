@@ -1,10 +1,12 @@
 package graft
 
 import graft.engine.Aql
-import graft.transforms.MetaParquet
+import graft.transforms.{IndexManifest, MetaParquet}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The driver-side metadata reader and writer against Spark's parquet
   * source: same rows, same schema, both directions.
@@ -68,53 +70,85 @@ class MetaParquetSpec extends AnyFunSuite {
     assertSameAsSpark(legacy)
     assert(!MetaParquet.readRow(spark, legacy).schema.fieldNames
       .exists(Set("kind", "shingle_scheme", "derived")))
+    // and the driver writer round-trips Spark-typed rows exactly
+    val rows = Seq(("bands", 0, 1L, 7L), ("bands", 3, 2L, 9L),
+      ("shingles", 1, 1L, 4L)).toDF("store", "cell", "files", "rows")
+    val copy = dir.resolve("copy").toString
+    MetaParquet.write(spark, copy, rows.schema, rows.collect().toSeq)
+    assert(spark.read.parquet(copy).collect().toSet == rows.collect().toSet)
   }
 
-  test("a driver-written stats/ reads back through spark.read.parquet " +
-      "with the columns, types, footer schema and rows Spark writes") {
+  test("the layout record round-trips: each line's rows equal its file's " +
+      "footer rows, a rowless v1-format file reads as absent, a garbage " +
+      "header errors naming INDEX MANIFEST") {
     import spark.implicits._
-    val dir = tmp("graft_metaparquet_stats")
-    val rows = Seq(("bands", 0, 1L, 7L), ("bands", 3, 2L, 9L),
-      ("shingles", 1, 1L, 4L))
-    val bySpark = dir.resolve("spark_stats").toString
-    rows.toDF("store", "cell", "files", "rows").coalesce(1)
-      .write.parquet(bySpark)
-    // the stats writer's own path: a verb build on a two-store artifact
-    val idx = dir.resolve("lsh").toString
+    val dir = tmp("graft_metaparquet_record")
     val txtPq = dir.resolve("txt.parquet").toString
+    val morePq = dir.resolve("more.parquet").toString
     (1 to 12).map(i => (i.toLong, s"short text $i about item ${i % 4} " +
         s"with word q$i")).toDF("id", "txt").write.parquet(txtPq)
-    Aql.run(spark,
-      s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$txtPq',
-         |  FORMAT = 'parquet')
-         |TRANSFORM 'T' FROM CONNECTION D (
-         |  INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 4 INTO '$idx'
-         |) INTO CONSOLE""".stripMargin)
-    val byDriver = s"$idx/stats"
-    val a = spark.read.parquet(byDriver)
-    val b = spark.read.parquet(bySpark)
-    assert(a.schema == b.schema)
-    assert(a.schema.fieldNames.toSeq == Seq("store", "cell", "files", "rows"))
-    def footer(d: String): org.apache.spark.sql.types.StructType = {
-      val p = new Path(d)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(p).map(_.getPath)
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      assert(files.length == 1, files.mkString(", "))
-      MetaParquet.fileSchema(spark.sparkContext.hadoopConfiguration, files.head)
+    (13 to 18).map(i => (i.toLong, s"later text $i about thing ${i % 3} " +
+        s"with word z$i")).toDF("id", "txt").write.parquet(morePq)
+    val idx = dir.resolve("lsh").toString
+    def run(pq: String, body: String): Seq[Row] =
+      Aql.run(spark,
+        s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$pq',
+           |  FORMAT = 'parquet')
+           |TRANSFORM 'T' FROM CONNECTION D (
+           |  $body
+           |) INTO CONSOLE""".stripMargin).outputs("T").collect().toSeq
+    run(txtPq, s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 4 " +
+      s"INTO '$idx'")
+    run(morePq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' APPEND")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(idx).getFileSystem(conf)
+    def footerRows(p: Path): Long = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try r.getRecordCount finally r.close()
     }
-    assert(footer(byDriver) == footer(bySpark))
-    // the rows the driver wrote are the recount's, read back unchanged
-    val truth = graft.transforms.IndexMaintenance.Stats.recount(spark, idx,
-      Seq("bands" -> "pc", "shingles" -> "sc"))
-      .toSeq.flatMap { case (s, cs) => cs.map { case (c, f, r) =>
-        Row(s, c, f, r) } }
-    assert(a.collect().toSet == truth.toSet)
-    assert(MetaParquet.readRows(spark, byDriver).toSet == truth.toSet)
-    // and the driver writer round-trips Spark-typed rows exactly
-    val copy = dir.resolve("copy").toString
-    MetaParquet.write(spark, copy, b.schema, b.collect().toSeq)
-    assert(spark.read.parquet(copy).collect().toSet ==
-      b.collect().toSet)
+    def versionFile(v: Long): java.nio.file.Path =
+      java.nio.file.Paths.get(idx, "manifest", f"v$v%016d.txt")
+    // the build's v1 and the append's v2: the current file on disk
+    val text = java.nio.file.Files.readAllLines(versionFile(2)).asScala.toSeq
+    assert(text.head == "graft-index-manifest 2", text.head)
+    val lines = text.tail.map { l =>
+      val Array(rel, rows) = l.split('\t')
+      rel -> rows.toLong
+    }
+    // every visible data file of both stores, each once, with its rows
+    val onDisk = for ((sub, pcol) <- Seq("bands" -> "pc", "shingles" -> "sc");
+        cell <- fs.listStatus(new Path(idx, sub)).toSeq
+          if cell.getPath.getName.startsWith(s"$pcol=");
+        f <- fs.listStatus(cell.getPath).toSeq
+          if MetaParquet.visible(f.getPath.getName))
+      yield s"$sub/${cell.getPath.getName}/${f.getPath.getName}" ->
+        footerRows(f.getPath)
+    assert(lines.sorted == onDisk.sorted)
+    assert(lines.map(_._1) == lines.map(_._1).sorted)
+    assert(lines.exists(_._2 > 1))
+    // the reader's layout is the same lines, grouped by store and cell
+    val rec = IndexManifest.read(spark, idx).get
+    assert(rec.version == 2L && rec.files == lines.size)
+    assert(rec.layout.toSeq.flatMap(_._2.toSeq.flatMap(_._2)).sorted ==
+      lines.sorted)
+    // a file in the rowless format reads as absent: probes use the live
+    // layout and DESCRIBE recounts
+    java.nio.file.Files.writeString(versionFile(3),
+      ("graft-index-manifest 1" +: lines.map(_._1)).mkString("", "\n", "\n"))
+    assert(IndexManifest.read(spark, idx).isEmpty)
+    val described = run(txtPq, s"INDEX DESCRIBE '$idx'")
+    assert(described.forall(r => !r.getAs[Boolean]("stats_served") &&
+      r.getAs[Long]("manifest_version") == 0L), described)
+    // any other header is an error naming the recovery statement
+    java.nio.file.Files.writeString(versionFile(4), "graft-index-manifest 9\n")
+    val e = intercept[IndexManifest.Malformed](IndexManifest.read(spark, idx))
+    assert(e.getMessage.contains("malformed") &&
+      e.getMessage.contains(s"INDEX MANIFEST '$idx'"), e.getMessage)
+    // which snapshots the live layout as the next version: the same lines
+    val snap = run(txtPq, s"INDEX MANIFEST '$idx'").head
+    assert(snap.getAs[Long]("version") == 5L)
+    assert(java.nio.file.Files.readAllLines(versionFile(5)).asScala.toSeq ==
+      text)
   }
 }
