@@ -2,6 +2,7 @@ package graft
 
 import graft.ScaleHarness.{report, secs, timed}
 import graft.queries.Similarity
+import graft.transforms.MetaParquet
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the stored-IVF ANN serving path
@@ -104,7 +105,7 @@ object AnnScale {
       // assignment totality: every corpus vector must land in some cell
       // (the hierarchical path once dropped vectors routed to childless
       // supers — an index hole is silent unservability, so gate it)
-      val idxRows = spark.read.parquet(s"$idxBase/index").count()
+      val idxRows = MetaParquet.scan(spark, s"$idxBase/index").count()
 
       // fixed panel: replica 0 of the 8 smallest original ids — the same
       // 8 query VECTORS at every k
@@ -127,7 +128,7 @@ object AnnScale {
       val selfDom = rows.filter(_._4 <= math.min(k - 1, TopK))
         .forall(_._3 == 1.0)
       val answeredCells = res.select(col("neighbor_id"))
-        .join(spark.read.parquet(s"$idxBase/index")
+        .join(MetaParquet.scan(spark, s"$idxBase/index")
           .select(col("vec_id").as("neighbor_id"), col("cluster")),
           "neighbor_id")
         .select("cluster").distinct().count()

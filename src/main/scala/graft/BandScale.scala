@@ -2,7 +2,7 @@ package graft
 
 import graft.ScaleHarness.{report, secs, timed}
 import graft.functions.Text
-import graft.transforms.NearDup
+import graft.transforms.{MetaParquet, NearDup}
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the STORED banded text index
@@ -139,7 +139,7 @@ object BandScale {
       val (base, buildS) = timed {
         NearDup.bandStoreFrom(shC, NumPerm, NumBands, RowsPerBand, cells)
       }
-      val idxRows = spark.read.parquet(s"$base/bands").count()
+      val idxRows = MetaParquet.scan(spark, s"$base/bands").count()
       // Artifact-size audit (the round-8 "hash the stored shingle sets"
       // change): bytes of the band postings and of the verification
       // store under BOTH schemes — the hashed store is what

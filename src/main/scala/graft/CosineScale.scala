@@ -1,7 +1,7 @@
 package graft
 
 import graft.ScaleHarness.{report, secs, timed}
-import graft.transforms.VecKnn
+import graft.transforms.{MetaParquet, VecKnn}
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the STORED sign-LSH bucket index
@@ -108,7 +108,7 @@ object CosineScale {
       val (_, buildS) = timed {
         VecKnn.cosineStoreTo(base, corpus, Tables, bits, cells)
       }
-      val idxRows = spark.read.parquet(s"$base/buckets").count()
+      val idxRows = MetaParquet.scan(spark, s"$base/buckets").count()
 
       val (matchedK, probeS) = timed {
         VecKnn.cosineCrossMatchesStored(spark, base, batch,
@@ -159,14 +159,13 @@ object CosineScale {
       val bPaths = graft.transforms.IndexManifest.cellPaths(
         spark, s"$base/buckets", "pc", routed)
       // rows held by the given cell paths of one store
-      def rowsIn(store: String, paths: Seq[String]): Long =
+      def rowsIn(store: String, cellCol: String, paths: Seq[String]): Long =
         if (paths.isEmpty) 0L
-        else spark.read.option("basePath", s"$base/$store")
-          .parquet(paths: _*).count()
-      val bucketRowsScanned = rowsIn("buckets", bPaths)
+        else MetaParquet.readCells(spark, s"$base/$store", cellCol, paths)
+          .count()
+      val bucketRowsScanned = rowsIn("buckets", "pc", bPaths)
       // vector-store side: candidate ids route into vectors/ cells
-      val cand = spark.read.option("basePath", s"$base/buckets")
-        .parquet(bPaths: _*)
+      val cand = MetaParquet.readCells(spark, s"$base/buckets", "pc", bPaths)
         .join(broadcast(bucketFanout.toDF("b_id", "t", "bucket")),
           Seq("t", "bucket"))
         .select(col("id")).distinct()
@@ -176,7 +175,7 @@ object CosineScale {
         .distinct().collect().map(_.getInt(0)).sorted
       val vPaths = graft.transforms.IndexManifest.cellPaths(
         spark, s"$base/vectors", "sc", vRouted)
-      val vectorRowsScanned = rowsIn("vectors", vPaths)
+      val vectorRowsScanned = rowsIn("vectors", "sc", vPaths)
       if (k == 1) matched1 = Some(matchedK)
 
       val checks = Seq(

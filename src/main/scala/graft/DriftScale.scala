@@ -2,7 +2,7 @@ package graft
 
 import graft.ScaleHarness.{report, timed}
 import graft.queries.Similarity
-import graft.transforms.IndexGeometry
+import graft.transforms.{IndexGeometry, MetaParquet}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -141,7 +141,7 @@ object DriftScale {
       // count (per-cluster counts come from footers; routing reuses the
       // serving path's own hierarchy-consistent argmax)
       def scannedOf(dir: String, queries: DataFrame): Long = {
-        val cellRows = spark.read.parquet(s"$dir/index")
+        val cellRows = MetaParquet.scan(spark, s"$dir/index")
           .groupBy(col("cluster")).count()
         Similarity.ivfProbeCells(spark, dir, queries, NProbe)
           .select(col("qid"), col("cluster")).distinct()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.transforms.MetaParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
@@ -24,10 +25,10 @@ object Tables {
       // instant reinterpretation preserves the wall-clock values the DuckDB
       // oracle sees. Oracle side uses CAST(ts AS TIMESTAMP) either way.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = MetaParquet.scan(spark, s"$sfDir/$name.parquet")
       raw.withColumn("ts", tsColumn(raw.schema("ts").dataType))
         .select(raw.columns.map(col): _*)
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else MetaParquet.scan(spark, s"$sfDir/$name.parquet")
   }
 
   /** Normalize the events `ts` physical encoding to microsecond

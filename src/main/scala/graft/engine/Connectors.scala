@@ -3,6 +3,7 @@ package graft.engine
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.aql.Ast
 import graft.aql.Ast.{OptVal, Options}
+import graft.transforms.MetaParquet
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -133,7 +134,7 @@ object Connectors {
       .getOrElse(throw new IllegalArgumentException(
         s"connection ${conn.name}: FILE option required"))
     format(conn, path) match {
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => MetaParquet.scan(spark, path)
       case "json" => spark.read.json(path)
       case "csv" => spark.read
         .option("header", "true").option("inferSchema", "true").csv(path)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.transforms.MetaParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -683,7 +684,7 @@ object Advanced {
         .repartitionByRange(16, col("l_shipdate"))
         .sortWithinPartitions(col("l_shipdate"))
         .write.mode("overwrite").parquet(base)
-      s.read.parquet(base)
+      MetaParquet.scan(s, base)
         .where(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1995-07-01").cast("timestamp"))
         .groupBy(date_trunc("month", col("l_shipdate")).as("month"))
@@ -730,7 +731,7 @@ object Advanced {
         .sortWithinPartitions(col("__z"))
         .drop("__z")
         .write.mode("overwrite").parquet(layoutDir.toString)
-      s.read.parquet(layoutDir.toString)
+      MetaParquet.scan(s, layoutDir.toString)
         .where(col("l_partkey") >= 16 && col("l_partkey") < 112 &&
           col("l_suppkey") >= 2 && col("l_suppkey") < 7)
         .groupBy(col("l_returnflag"))

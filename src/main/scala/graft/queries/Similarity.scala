@@ -445,7 +445,7 @@ object Similarity {
     val codes =
       if (!meta.schema.fieldNames.contains("pq_m")) None
       else Some { (ids: DataFrame) =>
-        val cb = e.sparkSession.read.parquet(s"$base/codebook")
+        val cb = MetaParquet.scan(e.sparkSession, s"$base/codebook")
         pqEncodeFrom(pqSubsOf(e.select(col("vec_id"), col("v")),
             meta.getAs[Int]("pq_m"), meta.getAs[Int]("pq_subdim")), cb)
           .join(ids.hint("merge"), "vec_id")
@@ -467,13 +467,13 @@ object Similarity {
     */
   private def assignToStored(base: String, e: DataFrame): DataFrame = {
     val s = e.sparkSession
-    val cents = s.read.parquet(s"$base/centroids").localCheckpoint(false)
+    val cents = MetaParquet.scan(s, s"$base/centroids").localCheckpoint(false)
     def argmaxInto(scored: DataFrame, cellCol: String): DataFrame = scored
       .groupBy(col("vec_id"))
       .agg(max(struct(col("score"), (-col(cellCol)).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as(cellCol))
     if (cents.columns.contains("super")) {
-      val supers = s.read.parquet(s"$base/supers")
+      val supers = MetaParquet.scan(s, s"$base/supers")
       // only OCCUPIED supers, as in the build: hop-2's inner join on
       // `super` would silently drop a vector routed to a childless one
       val occupied = supers
@@ -614,10 +614,11 @@ object Similarity {
     def cellRead(store: String): DataFrame = {
       val paths = graft.transforms.IndexManifest.cellPaths(
         s, s"$base/$store", "cluster", cells)
-      if (paths.isEmpty) s.read.parquet(s"$base/$store").where(lit(false))
+      if (paths.isEmpty)
+        MetaParquet.scan(s, s"$base/$store").where(lit(false))
       else MetaParquet.readCells(s, s"$base/$store", "cluster", paths)
     }
-    val cb = s.read.parquet(s"$base/codebook")
+    val cb = MetaParquet.scan(s, s"$base/codebook")
     val qsubs = queries.select(col("qid"), posexplode(expr(
       s"transform(sequence(0, ${pm - 1}), " +
         s"mm -> slice(qv, mm * $subDim + 1, $subDim))"))
@@ -823,7 +824,7 @@ object Similarity {
     */
   private[graft] def ivfProbeCells(s: SparkSession, base: String,
       queries: DataFrame, nprobe: Int): DataFrame = {
-    val dcents = s.read.parquet(s"$base/centroids")
+    val dcents = MetaParquet.scan(s, s"$base/centroids")
     // A flat-built artifact ranks cells by plain centroid score. A
     // hierarchically-built one (marked by the `super` column +
     // `<base>/supers`) must rank them through the SAME two argmax hops
@@ -835,7 +836,7 @@ object Similarity {
     // always served" contract AnnScale's self-copy-dominance invariant
     // pins.
     val ranked = if (dcents.columns.contains("super")) {
-      val dsupers = s.read.parquet(s"$base/supers")
+      val dsupers = MetaParquet.scan(s, s"$base/supers")
       val sw = Window.partitionBy("qid")
         .orderBy(col("sscore").desc, col("super"))
       val qsup = queries.crossJoin(broadcast(dsupers))
@@ -920,7 +921,7 @@ object Similarity {
     val cellPaths = graft.transforms.IndexManifest.cellPaths(
       s, s"$base/index", "cluster", cells)
     val idx = (if (cellPaths.isEmpty)
-        s.read.parquet(s"$base/index").where(lit(false))
+        MetaParquet.scan(s, s"$base/index").where(lit(false))
       else MetaParquet.readCells(s, s"$base/index", "cluster", cellPaths))
       .select(col("vec_id").as("cid"), col("v").as("cv"),
         col("nrm").as("cnrm"), col("cluster"))

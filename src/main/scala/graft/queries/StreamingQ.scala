@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.engine.Aql
+import graft.transforms.MetaParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,7 +32,8 @@ object StreamingQ {
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType =
+      MetaParquet.scan(s, s"$dir/events.parquet").schema("ts").dataType
     val raw = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),
@@ -154,7 +156,7 @@ object StreamingQ {
     val inDir = s"$qBase/in"
     val resDir = s"$qBase/out"
     panel.repartition(4).write.mode("overwrite").parquet(inDir)
-    val schema = s.read.parquet(inDir).schema
+    val schema = MetaParquet.scan(s, inDir).schema
     drainAvailableNow(s, label, noDataBatch = false) { ckpt =>
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -168,7 +170,7 @@ object StreamingQ {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
     }
-    s.read.parquet(resDir).select(outCols.map(col): _*)
+    MetaParquet.scan(s, resDir).select(outCols.map(col): _*)
   }
 
   /** The mutation-sink variant of [[streamServe]] (round 15): the SAME
@@ -190,7 +192,7 @@ object StreamingQ {
     Advanced.registerTmpDir(inBase)
     val inDir = s"$inBase/in"
     feed.repartition(4).write.mode("overwrite").parquet(inDir)
-    val schema = s.read.parquet(inDir).schema
+    val schema = MetaParquet.scan(s, inDir).schema
     drainAvailableNow(s, label, noDataBatch = false) { ckpt =>
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -564,7 +566,7 @@ object StreamingQ {
         .where(col("doc_id") % 2 === 0)
         .repartition(4)
         .write.mode("overwrite").parquet(streamDir.toString)
-      val schema = s.read.parquet(streamDir.toString).schema
+      val schema = MetaParquet.scan(s, streamDir.toString).schema
       val stream = NearDup.shingled(
           s.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").parquet(streamDir.toString),
@@ -626,7 +628,7 @@ object StreamingQ {
         .select(col("ts"), col("event_type"), col("value"))
         .repartition(4)
         .write.mode("overwrite").parquet(inDir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = MetaParquet.scan(s, inDir).schema
       val agg = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
         .groupBy(col("event_type"),
@@ -641,7 +643,7 @@ object StreamingQ {
             val upd = batch.localCheckpoint(true)
             val merged =
               if (!new java.io.File(store).exists) upd
-              else sp.read.parquet(store)
+              else MetaParquet.scan(sp, store)
                 .join(upd.select("event_type", "day"),
                   Seq("event_type", "day"), "left_anti")
                 .unionByName(upd)
@@ -652,7 +654,7 @@ object StreamingQ {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
       }
-      s.read.parquet(store)
+      MetaParquet.scan(s, store)
         .select(col("event_type"), col("day"), col("n"), col("total"))
     },
 
@@ -744,7 +746,7 @@ object StreamingQ {
       cust.where(col("c_custkey") % 2 === 0)
         .repartition(4)
         .write.mode("overwrite").parquet(inDir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = MetaParquet.scan(s, inDir).schema
       drainAvailableNow(s, "q169_stored_typo", noDataBatch = false) {
         ckpt =>
         s.readStream.schema(schema)
@@ -767,7 +769,7 @@ object StreamingQ {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
       }
-      s.read.parquet(resDir).select(col("c_custkey"))
+      MetaParquet.scan(s, resDir).select(col("c_custkey"))
     },
 
     // Streaming incremental dedup from the STORED band index — the
@@ -808,7 +810,7 @@ object StreamingQ {
           col("n_chars"))
         .repartition(4)
         .write.mode("overwrite").parquet(inDir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = MetaParquet.scan(s, inDir).schema
       drainAvailableNow(s, "q149_stored_dedup", noDataBatch = false) { ckpt =>
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -835,7 +837,7 @@ object StreamingQ {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
       }
-      s.read.parquet(resDir)
+      MetaParquet.scan(s, resDir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     },
 
@@ -872,7 +874,7 @@ object StreamingQ {
         .where(col("vec_id") % 2 === 0)
         .repartition(4)
         .write.mode("overwrite").parquet(inDir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = MetaParquet.scan(s, inDir).schema
       drainAvailableNow(s, "q157_stored_cosine", noDataBatch = false) {
         ckpt =>
         s.readStream.schema(schema)
@@ -896,7 +898,7 @@ object StreamingQ {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
       }
-      s.read.parquet(resDir).select(col("vec_id"))
+      MetaParquet.scan(s, resDir).select(col("vec_id"))
     },
 
     // Streaming INDEX APPEND — the WRITE side of the streaming triangle

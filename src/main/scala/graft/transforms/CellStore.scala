@@ -8,9 +8,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
 import TransformParser.TransformError
 
@@ -57,8 +59,10 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   *    [[IndexManifest.maintained]]: it reads the prior record, drops it
   *    before a row is touched (absent, never stale), and commits the
   *    prior folded with the statement's reports as the next version. A
-  *    build overwrites every store and commits the record's `v1` from
-  *    its reports; REBUILD builds into a fresh stage it swaps in whole.
+  *    statement whose write fails before anything is published
+  *    ([[Unpublished]]) recommits the prior unchanged. A build
+  *    overwrites every store and commits the record's `v1` from its
+  *    reports; REBUILD builds into a fresh stage it swaps in whole.
   *  - APPEND adds files next to a cell's existing ones. DELETE and
   *    COMPACT rewrite only the routed cells ([[rewrite]]): survivors
   *    land in a staging sibling per store, then each cell swaps with two
@@ -278,8 +282,9 @@ private[graft] object CellStore {
     val roots = stores.map(st => new Path(base, st.name))
     roots.foreach { r => fs.delete(r, true); fs.mkdirs(r) }
     val parts = cellWriteParts(spark, cells)
-    val files = land(spark, stores.lazyZip(roots).map { (st, r) =>
-      Leg(r.toString, st.cellCol, st.rows(shared), parts) })
+    val files = surfaced(keep = false)(land(spark,
+      stores.lazyZip(roots).map { (st, r) =>
+        Leg(r.toString, st.cellCol, st.rows(shared), parts) }))
     IndexManifest.commit(spark, base, 1,
       IndexManifest.merge(spark, base, stores.map(st => st.name -> st.cellCol),
         Map.empty, stores.lazyZip(files).map((st, f) => st.name -> Landed(f))
@@ -300,8 +305,9 @@ private[graft] object CellStore {
       val restored =
         sweep(spark, base, stores.map(st => st.name -> st.cellCol))
       val parts = cellWriteParts(spark, cells)
-      val files = land(spark, stores.map(st =>
-        Leg(s"$base/${st.name}", st.cellCol, st.rows(shared), parts)))
+      val files = surfaced(keep = restored.forall(_.isEmpty))(
+        land(spark, stores.map(st =>
+          Leg(s"$base/${st.name}", st.cellCol, st.rows(shared), parts))))
       stores.lazyZip(files).lazyZip(restored).map { (st, f, r) =>
         st.name -> Landed(f, restored = r) }.toMap
     }
@@ -455,10 +461,11 @@ private[graft] object CellStore {
     }
     val busy = plans.filter(_.touched.nonEmpty)
     busy.foreach(p => fs.delete(p.stage, true)) // stale from a crash
-    val staged = land(spark, busy.map(p => Leg(p.stage.toString, p.cellCol,
-      transform(MetaParquet.readCells(spark, p.root.toString, p.cellCol,
-        p.touched.map(p.live(_).toString))),
-      cellWriteParts(spark, p.touched.size))))
+    val staged = surfaced(keep = plans.forall(_.restored.isEmpty))(
+      land(spark, busy.map(p => Leg(p.stage.toString, p.cellCol,
+        transform(MetaParquet.readCells(spark, p.root.toString, p.cellCol,
+          p.touched.map(p.live(_).toString))),
+        cellWriteParts(spark, p.touched.size)))))
     busy.foreach(swap(fs, _, what, recovery))
     val files = busy.map(_.sub).zip(staged).toMap
     plans.map { p =>
@@ -528,25 +535,48 @@ private[graft] object CellStore {
     */
   private[graft] def writeCells(rows: DataFrame, root: String,
       cellCol: String, parts: Int): Seq[(Int, String, Long)] =
-    land(rows.sparkSession, Seq(Leg(root, cellCol, rows, parts))).head
+    surfaced(keep = false)(
+      land(rows.sparkSession, Seq(Leg(root, cellCol, rows, parts)))).head
 
   /** One store's rows to land under `root`, `parts` tasks wide. */
   private final case class Leg(root: String, cellCol: String,
       rows: DataFrame, parts: Int)
+
+  /** A statement's write failed before it published a file, so the
+    * stores are as they were: [[land]] raises it around the failure.
+    * [[IndexManifest.maintained]] recommits the prior layout record for
+    * it and rethrows the cause; every other caller sees the cause
+    * ([[surfaced]]).
+    */
+  private[transforms] final class Unpublished(cause: Throwable)
+      extends RuntimeException(cause)
+
+  /** `body`, with an [[Unpublished]] failure rethrown as its cause
+    * unless `keep`: a build has no prior record to keep, and a
+    * statement whose sweep restored cells before its write has changed
+    * the stores.
+    */
+  private[transforms] def surfaced[A](keep: Boolean)(body: => A): A =
+    try body catch { case u: Unpublished if !keep => throw u.getCause }
 
   /** Write every leg's cells concurrently ([[writePending]]) and publish
     * them only once every leg's write succeeded; returns each leg's
     * published (cell, file, rows), in order. When a leg fails, nothing
     * is published: the other legs' pending files are deleted, and so are
     * the failed leg's (a write job that failed may have finished some
-    * tasks), then the failure is rethrown with the others suppressed.
+    * tasks), then the failure is rethrown as [[Unpublished]], the other
+    * legs' failures suppressed. The legs' tasks share one broadcast of
+    * the session's Hadoop conf ([[writeConf]]).
     */
   private def land(spark: SparkSession, legs: Seq[Leg])
       : Seq[Seq[(Int, String, Long)]] = {
     val stmt = java.util.UUID.randomUUID().toString
     val conf = spark.sparkContext.hadoopConfiguration
-    val written = inParallel(legs.map(l => () =>
-      Try(writePending(l.rows, l.root, l.cellCol, l.parts, stmt))))
+    val shipped = writeConf(spark)
+    val written =
+      try inParallel(legs.map(l => () => Try(
+        writePending(l.rows, l.root, l.cellCol, l.parts, stmt, shipped))))
+      finally shipped.destroy()
     if (written.exists(_.isFailure)) {
       legs.zip(written).foreach {
         case (l, Success(pending)) =>
@@ -561,7 +591,9 @@ private[graft] object CellStore {
             fs.delete(st.getPath, false)
       }
     }
-    val pending = rethrowFirst(written) // a failure rethrows, cleaned up
+    // a failure rethrows, cleaned up
+    val pending = try rethrowFirst(written)
+      catch { case NonFatal(e) => throw new Unpublished(e) }
     legs.zip(pending).map { case (l, p) =>
       publish(new Path(l.root).getFileSystem(conf), p) }
   }
@@ -585,6 +617,15 @@ private[graft] object CellStore {
     files
   }
 
+  /** The session's Hadoop conf, broadcast for one statement's write
+    * tasks: a conf captured in each task's closure is deserialized by
+    * every task.
+    */
+  private[graft] def writeConf(spark: SparkSession)
+      : Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+
   /** The task side of a store write: `rows` repartitioned to `parts`
     * tasks on `cellCol` and sorted by cell within each task, which
     * writes one parquet file per cell it holds under
@@ -592,28 +633,35 @@ private[graft] object CellStore {
     * The files come from Spark's parquet `OutputWriterFactory` prepared
     * as `DataFrameWriter` prepares it, so codec, footer schema and
     * extension match its files; the cell column is left out of the
-    * data, as `partitionBy` leaves it. Returns each file with its cell,
-    * its published name `part-<task>-<stmt>.c000<ext>` and its rows
-    * (≥ 1 — a task opens a file only for a row).
+    * data, as `partitionBy` leaves it. The tasks open their files with
+    * `shipped` ([[writeConf]]) plus the few keys that preparation set,
+    * which travel in the closure. Returns each file with its cell, its
+    * published name `part-<task>-<stmt>.c000<ext>` and its rows (≥ 1 —
+    * a task opens a file only for a row).
     */
   private[graft] def writePending(rows: DataFrame, root: String,
-      cellCol: String, parts: Int, stmt: String): Seq[Pending] = {
+      cellCol: String, parts: Int, stmt: String,
+      shipped: Broadcast[SerializableConfiguration]): Seq[Pending] = {
     import org.apache.hadoop.mapreduce.Job
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import scala.jdk.CollectionConverters._
     val spark = rows.sparkSession
     val dataCols = rows.columns.toSeq.filterNot(_ == cellCol).map(col)
     val dataSchema = rows.select(dataCols: _*).schema
-    val job = Job.getInstance(
-      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val base = shipped.value.value
+    val job = Job.getInstance(new Configuration(base))
     val factory = new ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, dataSchema)
-    val conf = new SerializableConfiguration(job.getConfiguration)
-    val ext = ".c000" + factory.getFileExtension(taskContext(conf.value, 0, 0))
+    val prepared = job.getConfiguration.iterator.asScala
+      .filter(e => base.getRaw(e.getKey) != e.getValue)
+      .map(e => e.getKey -> e.getValue).toMap
+    val ext = ".c000" +
+      factory.getFileExtension(taskContext(job.getConfiguration, 0, 0))
     rows.repartition(parts, col(cellCol)).sortWithinPartitions(cellCol)
       .select(dataCols :+ col(cellCol).cast("int"): _*)
       .queryExecution.toRdd
       .mapPartitions(writeTask(root, cellCol, stmt, ext, dataSchema,
-        factory, conf))
+        factory, shipped, prepared))
       .collect().toSeq
   }
 
@@ -630,13 +678,16 @@ private[graft] object CellStore {
     */
   private def writeTask(root: String, cellCol: String, stmt: String,
       ext: String, dataSchema: StructType, factory: OutputWriterFactory,
-      conf: SerializableConfiguration)(
+      shipped: Broadcast[SerializableConfiguration],
+      prepared: Map[String, String])(
       it: Iterator[InternalRow]): Iterator[Pending] = {
     import org.apache.spark.TaskContext
     import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
     import org.apache.spark.sql.execution.datasources.OutputWriter
     val task = TaskContext.get()
-    val attempt = taskContext(conf.value, task.partitionId(),
+    val conf = new Configuration(shipped.value.value)
+    prepared.foreach { case (k, v) => conf.set(k, v) }
+    val attempt = taskContext(conf, task.partitionId(),
       task.attemptNumber())
     val part = f"part-${task.partitionId()}%05d"
     val project = UnsafeProjection.create(dataSchema)
@@ -651,7 +702,7 @@ private[graft] object CellStore {
         if (writer != null) Try(writer.close())
         opened.foreach { f =>
           val p = new Path(f)
-          Try(p.getFileSystem(conf.value).delete(p, false))
+          Try(p.getFileSystem(conf).delete(p, false))
         }
       }
     })

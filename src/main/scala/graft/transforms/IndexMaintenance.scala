@@ -881,7 +881,7 @@ private[graft] object IndexMaintenance {
           val res: (Int, Long) = kind match {
             case "lsh_text" =>
               requireData("shingles")
-              val sh = spark.read.parquet(s"$dir/shingles")
+              val sh = MetaParquet.scan(spark, s"$dir/shingles")
                 .select(col("id"), col("shs")).localCheckpoint(false)
               val n = sh.count()
               val c = resolveCells(IndexGeometry.storeCells, n)
@@ -916,7 +916,7 @@ private[graft] object IndexMaintenance {
                       "num_bands" -> b, "rows_per_band" -> r,
                       "derived" -> derivedAfter))
                 case None =>
-                  val stored = spark.read.parquet(s"$dir/bands")
+                  val stored = MetaParquet.scan(spark, s"$dir/bands")
                     .select(col("id"), col("band"), col("bh"))
                   val metaBase = MetaParquet.updated(metaRow, "cells" -> c)
                   // a pinned CELLS leaves the derived list; legacy
@@ -934,7 +934,7 @@ private[graft] object IndexMaintenance {
               (c, n)
             case "typo_text" =>
               requireData("strings")
-              val strs = spark.read.parquet(s"$dir/strings")
+              val strs = MetaParquet.scan(spark, s"$dir/strings")
                 .select(col("id"), col("txt")).localCheckpoint(false)
               val n = strs.count()
               val c = resolveCells(IndexGeometry.storeCells, n)
@@ -943,7 +943,7 @@ private[graft] object IndexMaintenance {
               (c, n)
             case "cosine_vec" =>
               requireData("vectors")
-              val vecs = spark.read.parquet(s"$dir/vectors")
+              val vecs = MetaParquet.scan(spark, s"$dir/vectors")
                 .select(col("id"), col("v"), col("nrm"))
                 .localCheckpoint(false)
               val n = vecs.count()
@@ -967,7 +967,7 @@ private[graft] object IndexMaintenance {
               (c, n)
             case "ivf_vec" =>
               requireData("index")
-              val e = spark.read.parquet(s"$dir/index")
+              val e = MetaParquet.scan(spark, s"$dir/index")
                 .select(col("vec_id"), col("v"), col("nrm"))
                 .localCheckpoint(false)
               val n = e.count()
@@ -1119,7 +1119,9 @@ private[graft] object IndexMaintenance {
           if (restored.forall(_.isEmpty) && dirty.forall(_._3.isEmpty))
             Map.empty[String, CellStore.Landed]
           else IndexManifest.maintained(spark, dir, stores) {
-            val compacted = CellStore.compact(spark, dir, dirty)
+            val compacted = CellStore.surfaced(
+              keep = restored.forall(_.isEmpty))(
+              CellStore.compact(spark, dir, dirty))
             stores.lazyZip(restored).map { case ((sub, _), r) =>
               sub -> compacted.getOrElse(sub, CellStore.Landed())
                 .copy(restored = r) }.toMap

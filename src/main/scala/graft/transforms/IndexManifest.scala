@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 import CellStore.Landed
 
 /** The layout record of a stored index: which data files each cell of
@@ -264,14 +266,26 @@ object IndexManifest {
     * Callers hold the artifact's maintenance lock, so the prior is exact
     * and the read → mutate → commit sequence cannot interleave with
     * another writer. A malformed prior stops the writer before it
-    * touches a row. Returns the mutation's reports.
+    * touches a row. A mutation that fails before it published a file
+    * ([[CellStore.Unpublished]]) left the stores as the prior describes
+    * them: the prior is recommitted as the next version and the cause
+    * rethrown (a failed recommit is suppressed on it, and the record
+    * stays absent). Returns the mutation's reports.
     */
   def maintained(spark: SparkSession, base: String,
       stores: Seq[(String, String)])(
       mutate: => Map[String, Landed]): Map[String, Landed] = {
     val prior = read(spark, base)
     invalidate(spark.sparkContext.hadoopConfiguration, base)
-    val landed = mutate
+    val landed = try mutate catch {
+      case u: CellStore.Unpublished =>
+        val cause = u.getCause
+        prior.foreach { p =>
+          try commit(spark, base, p.version + 1, p.layout)
+          catch { case NonFatal(e) => cause.addSuppressed(e) }
+        }
+        throw cause
+    }
     prior.foreach(p =>
       commit(spark, base, p.version + 1,
         merge(spark, base, stores, p.layout, landed)))

@@ -1,17 +1,20 @@
 package graft.transforms
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader,
+  ParquetFileWriter, ParquetReader}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCatalystBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetReadSupport, ParquetToSparkSchemaConverter,
+  ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter,
   SparkToParquetSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -41,30 +44,120 @@ private[graft] object MetaParquet {
     spark.sparkContext.hadoopConfiguration
 
   /** Data files of a parquet directory in name order, skipping the
-    * `_`/`.` names Spark's file listing skips (markers, checksums).
+    * names Spark's file listing skips (markers, checksums).
     */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
     fs.listStatus(dir).toSeq
       .filter(st => st.isFile && visible(st.getPath.getName))
       .map(_.getPath).sortBy(_.getName)
 
+  /** Whether Spark's file listing (`InMemoryFileIndex`) keeps `name` as
+    * a data file or a directory to descend: no `_` name but a partition
+    * directory's (`_k=v`), no `.` name, no file still being copied.
+    */
   private[graft] def visible(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".")
+    !(name.startsWith("_") && !name.contains("=")) &&
+      !name.startsWith(".") && !name.endsWith("._COPYING_")
 
   /** The Spark schema of one parquet file, from its footer: the schema
-    * Spark wrote there, else the converted parquet schema (files from
-    * other writers) — Spark's own inference order.
+    * Spark wrote there, else the parquet schema converted under
+    * `sqlConf` (files from other writers; `sqlConf` carries settings such
+    * as `spark.sql.legacy.parquet.nanosAsLong`) — Spark's own rule
+    * (`ParquetFileFormat.readSchemaFromFooter`).
     */
-  def fileSchema(conf: Configuration, file: Path): StructType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val fm = r.getFooter.getFileMetaData
-      Option(fm.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get)
-          .convert(fm.getSchema))
-    } finally r.close()
+  def fileSchema(conf: Configuration, file: Path,
+      sqlConf: SQLConf = SQLConf.get): StructType =
+    footerSchemaOf(HadoopInputFile.fromPath(file, conf), sqlConf)
+
+  /** [[fileSchema]] of an opened input file. The footer is read without
+    * its row groups' metadata, as Spark's inference reads it: a schema
+    * needs none of it, and a wide many-row-group file's costs most.
+    */
+  private def footerSchemaOf(in: HadoopInputFile, sqlConf: SQLConf)
+      : StructType = {
+    val r = ParquetFileReader.open(in, HadoopReadOptions
+      .builder(in.getConfiguration)
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(in.getPath, r.getFooter),
+      new ParquetToSparkSchemaConverter(sqlConf))
+    finally r.close()
   }
+
+  /** The data schema Spark's parquet source infers for `paths` with
+    * schema merging off (`ParquetUtils.inferSchema`), from one footer
+    * read on the driver, so a reader given it runs no schema-inference
+    * job. The footer is a directory's `_common_metadata`, else its
+    * `_metadata`, else the first data file in path order, partition
+    * directories (`k=v`) descended; its schema is [[fileSchema]]'s under
+    * the session's conf. Partition columns are left to Spark, which
+    * infers them from the paths. None leaves the whole inference to
+    * Spark: with `spark.sql.parquet.mergeSchema` on (one footer cannot
+    * answer a merged schema), for glob paths, when no path holds a data
+    * file (Spark's own error stands), and when a footer column names a
+    * descended partition directory (Spark orders that column by the
+    * data, a given schema puts it last).
+    */
+  def footerSchema(spark: SparkSession, paths: Seq[String])
+      : Option[StructType] = {
+    val sqlConf = GraftCatalystBridge.sqlConf(spark)
+    if (sqlConf.isParquetSchemaMergingEnabled ||
+        paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else {
+      val conf = hadoopConf(spark)
+      schemaSource(conf, paths).flatMap { case (file, partCols) =>
+        val schema =
+          footerSchemaOf(HadoopInputFile.fromStatus(file, conf), sqlConf)
+        if (schema.fieldNames.exists(partCols.contains)) None
+        else Some(schema)
+      }
+    }
+  }
+
+  /** `spark.read.parquet(paths…)` with its data schema from
+    * [[footerSchema]]: the read runs no Spark job.
+    */
+  def scan(spark: SparkSession, paths: String*): DataFrame = {
+    val reader = spark.read
+    footerSchema(spark, paths).fold(reader)(reader.schema)
+      .parquet(paths: _*)
+  }
+
+  /** The file [[footerSchema]] reads for `paths`, as listed, with the
+    * partition columns of the directories descended to reach it.
+    */
+  private def schemaSource(conf: Configuration, paths: Seq[String])
+      : Option[(FileStatus, Seq[String])] =
+    paths.iterator.map(new Path(_)).flatMap { p =>
+      val fs = p.getFileSystem(conf)
+      try {
+        val st = fs.getFileStatus(p)
+        if (st.isFile) Iterator(st -> Nil)
+        else {
+          val entries = fs.listStatus(p)
+          Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+              ParquetFileWriter.PARQUET_METADATA_FILE).iterator
+            .flatMap(n => entries.find(e =>
+              e.isFile && e.getPath.getName == n))
+            .map(_ -> Nil) ++ firstDataFile(fs, entries, Nil)
+        }
+      } catch { case _: java.io.FileNotFoundException => Iterator.empty }
+    }.nextOption()
+
+  /** The first data file among `entries` and the directories under
+    * them, each level in name order, with the partition columns of the
+    * directories descended — lazily, so the walk stops at that file.
+    */
+  private def firstDataFile(fs: FileSystem, entries: Array[FileStatus],
+      partCols: List[String]): Iterator[(FileStatus, Seq[String])] =
+    entries.filter(st => visible(st.getPath.getName))
+      .sortBy(_.getPath.getName).iterator.flatMap { st =>
+        val name = st.getPath.getName
+        if (st.isFile) Iterator(st -> partCols)
+        else firstDataFile(fs, fs.listStatus(st.getPath),
+          if (name.contains("=")) name.takeWhile(_ != '=') :: partCols
+          else partCols)
+      }
 
   /** Every row of the metadata parquet at `dir`, file by file in name
     * order — what `spark.read.parquet(dir).collect()` returns for the
@@ -182,26 +275,17 @@ private[graft] object MetaParquet {
 
   /** The stored-index probe idiom — `spark.read.option("basePath",
     * root).parquet(paths…)` over routed cell directories or
-    * manifest-served data files — with the store's schema taken from
-    * the first data file's footer, so Spark runs no schema-inference
-    * job: the data columns of the footer, then the int cell column
-    * Spark recovers from the paths. With no readable data file among
-    * `paths`, Spark infers as before.
+    * manifest-served data files — with the store's schema from
+    * [[footerSchema]], so Spark runs no schema-inference job: the data
+    * columns of the footer, then the int cell column Spark recovers from
+    * the paths.
     */
   def readCells(spark: SparkSession, root: String, pcol: String,
       paths: Seq[String]): DataFrame = {
-    val conf = hadoopConf(spark)
     val reader = spark.read.option("basePath", root)
-    val file = paths.iterator.map(new Path(_)).flatMap { p =>
-      val fs = p.getFileSystem(conf)
-      try {
-        if (fs.getFileStatus(p).isFile) Iterator(p)
-        else dataFiles(fs, p).iterator
-      } catch { case _: java.io.FileNotFoundException => Iterator.empty }
-    }.nextOption()
-    file.fold(reader) { f =>
-      val data = fileSchema(conf, f).fields.filterNot(_.name == pcol)
-      reader.schema(StructType(data :+ StructField(pcol, IntegerType)))
+    footerSchema(spark, paths).fold(reader) { s =>
+      reader.schema(StructType(s.fields.filterNot(_.name == pcol) :+
+        StructField(pcol, IntegerType)))
     }.parquet(paths: _*)
   }
 }

@@ -25,4 +25,11 @@ object GraftCatalystBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** A session's own SQL conf (`sessionState` is `private[sql]`): the
+    * settings its parquet schema inference reads, which `SQLConf.get`
+    * returns only while that session is the thread's active one.
+    */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.sessionState.conf
 }

@@ -129,7 +129,10 @@ class CellStoreSpec extends AnyFunSuite {
     val rows = spark.range(0, 200).select(col("id"),
       (col("id") * 3).as("x"), pmod(col("id"), lit(7)).cast("int").as("c"))
 
-    val pending = CellStore.writePending(rows, s"$dir/p", "c", 4, "stmt")
+    val shipped = CellStore.writeConf(spark)
+    val pending =
+      try CellStore.writePending(rows, s"$dir/p", "c", 4, "stmt", shipped)
+      finally shipped.destroy()
     assert(pending.map(_.cell).sorted == (0 until 7))
     assert(pending.map(_.rows).sum == 200L)
     val hidden = entries(s"$dir/p").filter(_.contains(".parquet"))
@@ -212,8 +215,8 @@ class CellStoreSpec extends AnyFunSuite {
     val idx = dir.resolve("idx").toString
     statement(s"INDEX ON item KEY id METHOD IVF CELLS 8 PQ 2 INTO '$idx'",
       Some(corpus)).collect()
-    // the VERIFY rows apart from manifest_version: a failed statement
-    // drops the layout record (absent, never stale)
+    // the VERIFY rows apart from manifest_version: a statement that
+    // failed before publishing recommits the prior layout record
     def verifiedRows(): Seq[String] =
       statement(s"INDEX DESCRIBE '$idx' VERIFY")
         .drop("stats_served", "manifest_version").collect()
@@ -221,6 +224,7 @@ class CellStoreSpec extends AnyFunSuite {
     val verified = verifiedRows()
     val stored = entries(idx).filter(e =>
       e.startsWith("index") || e.startsWith("codes"))
+    val prior = IndexManifest.read(spark, idx).get
 
     FaultOnce.arm(45L)
     val boom = udf((id: Long, x: Double) => FaultOnce.pass(id, x))
@@ -237,7 +241,13 @@ class CellStoreSpec extends AnyFunSuite {
     assert(entries(idx).filter(e =>
       e.startsWith("index") || e.startsWith("codes")) == stored)
     assert(verifiedRows() == verified)
-    assert(IndexManifest.read(spark, idx).isEmpty)
+    // nothing was published, so the prior layout is still exact: it is
+    // recommitted as the next version, and DESCRIBE is served from it
+    val kept = IndexManifest.read(spark, idx)
+    assert(kept.map(_.layout).contains(prior.layout), kept)
+    assert(kept.map(_.version).contains(prior.version + 1), kept)
+    assert(statement(s"INDEX DESCRIBE '$idx'").collect()
+      .forall(_.getAs[Boolean]("stats_served")))
     assert(IndexMaintenance.maintLockHolder(conf, idx) == "")
 
     // the lock is free and the artifact whole: the same batch appends

@@ -3,12 +3,7 @@ package graft
 import graft.engine.Aql
 import graft.transforms.IndexMaintenance
 import org.apache.spark.sql.Row
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** Replaces a stored index's `manifest/` directory with a plain file the
   * first time an armed batch row is evaluated — inside a mutation, after
@@ -41,20 +36,7 @@ class IndexJobsSpec extends AnyFunSuite {
   import SparkTestSession._
 
   /** Names (call sites) of the jobs `body` launches. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(e.stageInfos.sortBy(_.stageId).lastOption
-          .map(_.name).getOrElse(""))
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
+  private def jobsOf(body: => Unit): Seq[String] = SparkJobs.of(spark)(body)
 
   test("INDEX DESCRIBE, MANIFEST and a no-op COMPACT run no Spark job; " +
       "nor does a verb APPEND's stats epilogue") {
@@ -194,10 +176,10 @@ class IndexJobsSpec extends AnyFunSuite {
     * the writers report what they wrote.
     */
   private val kindJobs = Seq(
-    ("LSH", "METHOD LSH THRESHOLD 0.5 CELLS 8", Jobs(9, 9, 5, 15)),
-    ("TYPO", "METHOD TYPO CELLS 8", Jobs(9, 9, 5, 15)),
-    ("COSINE", "METHOD COSINE CELLS 8 TABLES 8 BITS 3", Jobs(14, 14, 5, 20)),
-    ("IVF+PQ", "METHOD IVF CELLS 8 PQ 2", Jobs(20, 17, 5, 14)))
+    ("LSH", "METHOD LSH THRESHOLD 0.5 CELLS 8", Jobs(8, 8, 4, 14)),
+    ("TYPO", "METHOD TYPO CELLS 8", Jobs(8, 8, 4, 14)),
+    ("COSINE", "METHOD COSINE CELLS 8 TABLES 8 BITS 3", Jobs(13, 13, 4, 19)),
+    ("IVF+PQ", "METHOD IVF CELLS 8 PQ 2", Jobs(19, 14, 4, 12)))
 
   private case class Jobs(build: Int, append: Int, compact: Int,
       delete: Int)
