@@ -2,7 +2,7 @@ package graft
 
 import graft.ScaleHarness.{report, secs, timed}
 import graft.functions.Text
-import graft.transforms.{MetaParquet, NearDup}
+import graft.transforms.{CellStore, MetaParquet, NearDup}
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the STORED banded text index
@@ -173,10 +173,8 @@ object BandScale {
       // the routing the probe just used, recomputed for the report
       // (outside the timed section — it is a diagnostic, not probe
       // work): distinct band-store cells of the batch's keys
-      val probeCells = NearDup.bandKeys(shB, NumPerm, NumBands, RowsPerBand)
-        .select(pmod(xxhash64(col("band"), col("bh")), lit(cells.toLong))
-          .cast("int"))
-        .distinct().count()
+      val probeCells = CellStore.snapshot(spark, base, "lsh_text",
+        "band_scale").route(shB).fold(0L)(_.cells.length.toLong)
       if (k == 1) matched1 = Some(matchedK)
 
       // APPEND leg (round 9): add the batch's 8 UNMATCHED docs to the

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ScaleHarness.{report, secs, timed}
-import graft.transforms.{MetaParquet, VecKnn}
+import graft.transforms.{CellStore, MetaParquet, VecKnn}
 import org.apache.spark.sql.functions._
 
 /** Scale-replication harness for the STORED sign-LSH bucket index
@@ -146,36 +146,15 @@ object CosineScale {
       // this toy scale carries a per-FILE constant (footer read + task)
       // for every routed cell dir, so the scale claim is pinned on rows
       // scanned, with the file count reported alongside
-      val bucketFanout = batch
-        .select(col("id"),
-          posexplode(graft.functions.Vectors.lshBuckets(col("v"),
-            Tables, bits, Dims)).as(Seq("t", "bucket")))
-        .localCheckpoint()
-      val routed = bucketFanout
-        .select(pmod(xxhash64(col("t"), col("bucket")), lit(cells.toLong))
-          .cast("int").as("pc"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      val probeCells = routed.length.toLong
-      val bPaths = graft.transforms.IndexManifest.cellPaths(
-        spark, s"$base/buckets", "pc", routed)
-      // rows held by the given cell paths of one store
-      def rowsIn(store: String, cellCol: String, paths: Seq[String]): Long =
-        if (paths.isEmpty) 0L
-        else MetaParquet.readCells(spark, s"$base/$store", cellCol, paths)
-          .count()
-      val bucketRowsScanned = rowsIn("buckets", "pc", bPaths)
+      val snap = CellStore.snapshot(spark, base, "cosine_vec", "cosine_scale")
+      val probed = snap.candidates(batch)
+      val probeCells = probed.fold(0L)(_.routed.length.toLong)
+      val bucketRowsScanned = probed.flatMap(p =>
+        snap.read("buckets", p.routed)).fold(0L)(_.count())
       // vector-store side: candidate ids route into vectors/ cells
-      val cand = MetaParquet.readCells(spark, s"$base/buckets", "pc", bPaths)
-        .join(broadcast(bucketFanout.toDF("b_id", "t", "bucket")),
-          Seq("t", "bucket"))
-        .select(col("id")).distinct()
-      val vRouted = cand
-        .select(pmod(xxhash64(col("id")), lit(cells.toLong))
-          .cast("int").as("sc"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      val vPaths = graft.transforms.IndexManifest.cellPaths(
-        spark, s"$base/vectors", "sc", vRouted)
-      val vectorRowsScanned = rowsIn("vectors", "sc", vPaths)
+      val vectorCells =
+        probed.fold(0)(p => snap.paths("vectors", p.ids).length)
+      val vectorRowsScanned = probed.fold(0L)(_.stored.count())
       if (k == 1) matched1 = Some(matchedK)
 
       val checks = Seq(
@@ -187,7 +166,7 @@ object CosineScale {
       report("cosine_scale", Seq("k" -> k, "corpus" -> n, "bits" -> bits,
         "index_rows" -> idxRows, "cells" -> cells,
         "geometry_rule" -> "IndexGeometry.cosineBits+storeCells",
-        "probe_cells" -> probeCells, "vector_cells" -> vPaths.length,
+        "probe_cells" -> probeCells, "vector_cells" -> vectorCells,
         "rows_scanned" -> Map("buckets" -> bucketRowsScanned,
           "vectors" -> vectorRowsScanned),
         "matched" -> matchedK.size,

@@ -597,27 +597,14 @@ object Similarity {
   private[graft] def ivfProbeStoredAdc(s: SparkSession, base: String,
       queries: DataFrame, nprobe: Int = StoredProbes,
       shortlist: Int = StoredPqShortlist, topK: Int = K): DataFrame = {
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    graft.transforms.NearDup.requireKind(meta, base, "ivf_vec",
-      "KNN … STORED ADC")
+    val snap = CellStore.snapshot(s, base, "ivf_vec", "KNN … STORED ADC")
+    val meta = snap.meta
     require(meta.schema.fieldNames.contains("pq_m"),
       s"stored index at $base carries no PQ codes — build it with " +
         "INDEX … PQ <m>, or probe without ADC")
     val pm = meta.getAs[Int]("pq_m")
     val subDim = meta.getAs[Int]("pq_subdim")
-    val probes = ivfProbeCells(s, base, queries, nprobe)
-    val cells = probes.select("cluster").distinct().collect()
-      .map(_.getInt(0)).sorted
-    // routed cells as EXPLICIT paths — the ivfProbeStored rationale
-    // applied to both stores (codes for ADC, index for the rerank);
-    // shared resolver, so a committed manifest serves both stores too
-    def cellRead(store: String): DataFrame = {
-      val paths = graft.transforms.IndexManifest.cellPaths(
-        s, s"$base/$store", "cluster", cells)
-      if (paths.isEmpty)
-        MetaParquet.scan(s, s"$base/$store").where(lit(false))
-      else MetaParquet.readCells(s, s"$base/$store", "cluster", paths)
-    }
+    val (probes, cellRead) = ivfRouted(s, snap, queries, nprobe)
     val cb = MetaParquet.scan(s, s"$base/codebook")
     val qsubs = queries.select(col("qid"), posexplode(expr(
       s"transform(sequence(0, ${pm - 1}), " +
@@ -800,21 +787,6 @@ object Similarity {
   private val storedIvf =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** The per-query-batch IVF serving step against a stored index at
-    * `base`: centroids re-read from disk pick each query's top-
-    * [[StoredProbes]] cells, probe ROUTING is driver-side (the probe
-    * frame is |queries|×nprobe rows by contract — a query batch, not a
-    * corpus — so collecting its distinct cells is bounded, and reading
-    * them as EXPLICIT cell-directory paths makes the candidate scan
-    * read — and even LIST — only the probed cells' files; see q136 for
-    * why this beats dynamic partition pruning here), then exact
-    * top-[[K]] rerank over the
-    * probed cells. `queries` columns: (qid, qv: array<double>, qnrm).
-    * ONE implementation serves q136 (the whole panel in one batch) and
-    * q139 (the same panel sliced into microbatches) — batch-boundary
-    * invariance of the union of outputs is exactly what q139's shared
-    * oracle checks.
-    */
   /** The cell-routing step of [[ivfProbeStored]], exposed separately so
     * harnesses (graft.DriftScale) can measure the SCAN MASS a panel's
     * routing implies without duplicating the hierarchy-consistent
@@ -867,62 +839,28 @@ object Similarity {
       .localCheckpoint(false)
   }
 
-  /** Artifact dirs whose kind this JVM already validated — the kind of
-    * a directory is immutable (REBUILD preserves it), so the probe hot
-    * path pays the meta existence-check + read ONCE per artifact, not
-    * once per query batch / streaming microbatch. A validation that
-    * THROWS is not cached (getOrElseUpdate aborts), so a mis-kinded
-    * path keeps erroring. Known tradeoff, error QUALITY only: if an
-    * artifact is deleted and a different-kind one is built at the SAME
-    * path within one JVM, the skipped re-check degrades the clear
-    * "not interchangeable" message to the engine's own missing-store
-    * path error — the probe still fails loudly, never silently
-    * mis-serves. Cleared at 4096 entries (harness runs mint temp-dir
-    * artifacts; the memo must not grow with them).
+  /** The per-query-batch IVF serving step against a stored index at
+    * `base`: centroids re-read from disk pick each query's top-
+    * [[StoredProbes]] cells, probe ROUTING is driver-side (the probe
+    * frame is |queries|×nprobe rows by contract — a query batch, not a
+    * corpus — so collecting its distinct cells is bounded), the probed
+    * cells are read through the statement's snapshot
+    * ([[CellStore.snapshot]]), then exact top-[[K]] rerank over them.
+    * `queries` columns: (qid, qv: array<double>, qnrm).
+    * ONE implementation serves q136 (the whole panel in one batch) and
+    * q139 (the same panel sliced into microbatches) — batch-boundary
+    * invariance of the union of outputs is exactly what q139's shared
+    * oracle checks.
     */
-  private val kindValidated =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
   private[graft] def ivfProbeStored(s: SparkSession, base: String,
       queries: DataFrame, nprobe: Int = StoredProbes,
       topK: Int = K): DataFrame = {
     // kind check BEFORE touching the stores: probing (say) a cosine
     // bucket artifact here would otherwise fail with an opaque
-    // missing-centroids path error instead of naming both kinds.
-    // Pre-meta artifacts (no meta/ at all) stay probe-able, matching
-    // requireKind's own back-compat contract — the check is skipped,
-    // not failed.
-    if (kindValidated.size > 4096) kindValidated.clear()
-    kindValidated.getOrElseUpdate(base, {
-      val mp = new org.apache.hadoop.fs.Path(s"$base/meta")
-      val mfs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (mfs.exists(mp))
-        graft.transforms.NearDup.requireKind(
-          MetaParquet.readRow(s, s"$base/meta"), base, "ivf_vec",
-          "KNN … STORED")
-      true
-    })
-    val probes = ivfProbeCells(s, base, queries, nprobe)
-    val cells = probes.select("cluster").distinct().collect()
-      .map(_.getInt(0)).sorted
-    // Routed cells are read as EXPLICIT directory paths (basePath keeps
-    // the partition column), not an isin partition filter: the filter
-    // prunes rows but partition DISCOVERY still lists every cell
-    // directory, a metadata pass ∝ index size — the exact failure
-    // graft.BandScale measured on the band store (probe ×4.6 across a
-    // 16× index under listing, flat after the explicit-path form). At
-    // this family's cell counts (∝ √corpus) the listing is small, but
-    // the probe is THE serving hot path and the catalog-scale form
-    // costs nothing here. Resolution is the shared
-    // IndexManifest.cellPaths: a committed layout record serves
-    // explicit file paths from one small read; otherwise per-cell
-    // existence goes through the path's Hadoop FileSystem so hdfs/s3a
-    // artifacts don't read as absent.
-    val cellPaths = graft.transforms.IndexManifest.cellPaths(
-      s, s"$base/index", "cluster", cells)
-    val idx = (if (cellPaths.isEmpty)
-        MetaParquet.scan(s, s"$base/index").where(lit(false))
-      else MetaParquet.readCells(s, s"$base/index", "cluster", cellPaths))
+    // missing-centroids path error instead of naming both kinds
+    val snap = CellStore.snapshot(s, base, "ivf_vec", "KNN … STORED")
+    val (probes, cellRead) = ivfRouted(s, snap, queries, nprobe)
+    val idx = cellRead("index")
       .select(col("vec_id").as("cid"), col("v").as("cv"),
         col("nrm").as("cnrm"), col("cluster"))
     val w2 = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
@@ -934,6 +872,20 @@ object Similarity {
       .where(col("rank") <= topK)
       .select(col("qid"), col("cid").as("neighbor_id"), col("cosine"),
         col("rank"))
+  }
+
+  /** A stored IVF probe's routing: the queries' probed cells
+    * ([[ivfProbeCells]]), and a read of those cells of a store from the
+    * statement's snapshot — an empty frame of the store's schema when no
+    * file holds them.
+    */
+  private def ivfRouted(s: SparkSession, snap: CellStore.Snapshot,
+      queries: DataFrame, nprobe: Int): (DataFrame, String => DataFrame) = {
+    val probes = ivfProbeCells(s, snap.base, queries, nprobe)
+    val cells = probes.select("cluster").distinct().collect()
+      .map(_.getInt(0)).toSeq.sorted
+    (probes, store => snap.read(store, cells).getOrElse(
+      MetaParquet.scan(s, s"${snap.base}/$store").where(lit(false))))
   }
 
   /** q132 portable-PQ shape, mirroring q82: 8 subspaces × 8 dims, 16-code

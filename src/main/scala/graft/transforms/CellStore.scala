@@ -5,6 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -76,12 +77,15 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   *    any record committed while the cell was down: it joins the touched
   *    cells, and it is the one cell a mutation's record refresh
   *    recounts.
+  * Every stored probe reads the stores through [[snapshot]], whose
+  * scaladoc states the probe protocol.
   */
 private[graft] object CellStore {
   private def cell(hash: Column, cells: Int): Column =
     pmod(hash, lit(cells.toLong)).cast("int")
 
-  private def idCell(cells: Int): Column = cell(xxhash64(col("id")), cells)
+  private def idCell(id: Column, cells: Int): Column =
+    cell(xxhash64(id), cells)
 
   /** lsh_text over (id, shs): band keys routed by (band, bh) into
     * `bands`, shingle sets by id into `shingles`. `bandKeys` maps the
@@ -96,7 +100,7 @@ private[graft] object CellStore {
     CellStore("shingles", "sc", sh =>
       (if (hashShingles)
         sh.select(col("id"), Text.hashedShingles(col("shs")).as("shs"))
-      else sh).withColumn("sc", idCell(cells))))
+      else sh).withColumn("sc", idCell(col("id"), cells))))
 
   /** typo_text over (id, txt): delete-1 variant hashes routed by hash
     * into `variants`, strings by id into `strings`.
@@ -105,7 +109,7 @@ private[graft] object CellStore {
     CellStore("variants", "pc", r => NearDup.delete1Variants(r, "txt")
       .select(col("id"), col("vh"))
       .withColumn("pc", cell(col("vh"), cells))),
-    CellStore("strings", "sc", _.withColumn("sc", idCell(cells))))
+    CellStore("strings", "sc", _.withColumn("sc", idCell(col("id"), cells))))
 
   /** cosine_vec over (id, v, nrm): sign-LSH buckets routed by
     * (t, bucket) into `buckets`, vectors by id into `vectors`.
@@ -115,7 +119,7 @@ private[graft] object CellStore {
     CellStore("buckets", "pc", ee =>
       VecKnn.bucketFrame(ee, tables, bits, dims)
         .withColumn("pc", cell(xxhash64(col("t"), col("bucket")), cells))),
-    CellStore("vectors", "sc", _.withColumn("sc", idCell(cells))))
+    CellStore("vectors", "sc", _.withColumn("sc", idCell(col("id"), cells))))
 
   /** ivf_vec over a frame that already carries its `cluster` (the
     * trained or frozen-centroid assignment): vectors into `index`, PQ
@@ -366,18 +370,25 @@ private[graft] object CellStore {
     val cells = meta.getAs[Int]("cells")
     kind match {
       case "lsh_text" =>
-        val scheme =
-          if (meta.schema.fieldNames.contains("shingle_scheme"))
-            meta.getAs[String]("shingle_scheme")
-          else "raw"
+        // a batch must speak the stored sets' scheme, or every
+        // intersection with them would be empty
+        val hashed =
+          if (!meta.schema.fieldNames.contains("shingle_scheme")) false
+          else meta.getAs[String]("shingle_scheme") match {
+            case "xxhash64" => true
+            case "raw" => false
+            case other => throw new IllegalArgumentException(
+              s"stored band index at $base uses unknown shingle scheme " +
+                s"'$other'")
+          }
         Some((batch, lsh(cells, NearDup.bandKeys(_,
           meta.getAs[Int]("num_perm"), meta.getAs[Int]("num_bands"),
-          meta.getAs[Int]("rows_per_band")), scheme == "xxhash64")))
+          meta.getAs[Int]("rows_per_band")), hashed)))
       case "typo_text" =>
         Some((batch.select(col("id"), col("txt")), typo(cells)))
       case "cosine_vec" =>
         val dims = meta.getAs[Int]("dims")
-        val bd = VecKnn.probeDims(batch, s"$what METHOD COSINE")
+        val bd = VecKnn.probeDims(batch, s"$what batch")
         if (bd == 0) None
         else if (bd != dims) throw TransformError(
           s"$what: batch vectors are $bd-dimensional but the stored " +
@@ -391,6 +402,131 @@ private[graft] object CellStore {
         s"$what: unknown artifact kind '$other'")
     }
   }
+
+  /** One probe statement's read of a stored index: `meta/` and the
+    * layout record ([[IndexManifest.read]]), read once when the statement
+    * is built. It is the read-side counterpart of the writer above, and
+    * every stored probe (AGAINST STORED, KNN … STORED) and the scale
+    * harnesses' probe diagnostics read a store through it. The probe
+    * protocol, stated once:
+    *  - One snapshot per statement. The kind is checked on its `meta/`
+    *    row, and every stage of the statement resolves its cells from
+    *    its one record, so two stages cannot see two versions. An IVF
+    *    artifact written before `meta/` existed is probed without the
+    *    check. Without a record, cells resolve from the live layout.
+    *  - Routed cells are read as explicit paths: the record's data
+    *    files, else the existing cell directories (one existence check
+    *    each, through the path's own Hadoop FileSystem, so hdfs:// and
+    *    s3a:// cells do not read as absent). Spark recovers the cell
+    *    column from the paths under the store's `basePath`. Not a
+    *    `.where(cell isin …)` filter over the store: that prunes rows
+    *    but still lists every cell directory to discover partitions, a
+    *    metadata pass that grows with the index (graft.BandScale
+    *    measured a fixed batch's probe ×4.6 slower as cells grew 512 →
+    *    8192 under listing, flat with explicit paths). A cell without a
+    *    file holds no candidate and is skipped.
+    *  - Stage 1 ([[Snapshot.route]]) routes the batch through the
+    *    kind's own store list ([[batchOf]]: scheme, geometry from meta,
+    *    the cosine dims check), so it reads exactly the cells an APPEND
+    *    of the same batch would write. The batch's routing-store rows
+    *    are checkpointed: they feed the cell collect and the candidate
+    *    join.
+    *  - [[Snapshot.candidates]] joins the routed cells' stored rows to
+    *    the broadcast batch rows on the store's keys (every column but
+    *    `id` and the cell column), keeps the distinct (b_id, c_id)
+    *    pairs that pass the kind's optional filter, and checkpoints them:
+    *    they feed the id routing and the kind's verify.
+    *  - Stage 2 routes the candidates' stored ids into the id-keyed
+    *    store's cells and reads them from the same snapshot.
+    *  - The kind supplies only its verify or rank step. IVF routes by
+    *    centroid itself and reads `index`, or `codes` then `index`,
+    *    through [[Snapshot.read]].
+    *  - The window: the files a snapshot names are listed and opened
+    *    later — stage 1's while the statement is built, stage 2's when
+    *    it runs. A DELETE or COMPACT that swaps a resolved cell out in
+    *    between leaves a named file missing, and the probe then fails on
+    *    it rather than answer from two versions. There is no retry; a
+    *    commit that never renames a cell closes the window.
+    */
+  private[graft] def snapshot(spark: SparkSession, base: String,
+      kind: String, what: String): Snapshot = {
+    val meta = try MetaParquet.readRow(spark, s"$base/meta") catch {
+      case _: java.io.FileNotFoundException if kind == "ivf_vec" =>
+        new GenericRowWithSchema(Array.empty, new StructType())
+    }
+    NearDup.requireKind(meta, base, kind, what)
+    new Snapshot(spark, base, kind, what, meta, IndexManifest.read(spark, base))
+  }
+
+  /** A probe statement's [[snapshot]] of the index at `base`. */
+  private[graft] final class Snapshot private[CellStore] (
+      spark: SparkSession, val base: String, kind: String, what: String,
+      val meta: Row, record: Option[IndexManifest.Record]) {
+    private val cellCols = storesFor(kind, what).toMap
+
+    /** The data files, or without a record the cell directories, that
+      * hold the `wanted` cells of `store`.
+      */
+    def paths(store: String, wanted: Seq[Int]): Seq[String] =
+      IndexManifest.cellPaths(spark, record, s"$base/$store",
+        cellCols(store), wanted)
+
+    /** The `wanted` cells of `store`, cell column included; None when no
+      * file holds them.
+      */
+    def read(store: String, wanted: Seq[Int]): Option[DataFrame] = {
+      val ps = paths(store, wanted)
+      if (ps.isEmpty) None
+      else Some(MetaParquet.readCells(spark, s"$base/$store",
+        cellCols(store), ps))
+    }
+
+    /** Stage 1's routing of `batch`; None when it holds nothing
+      * indexable.
+      */
+    def route(batch: DataFrame): Option[Routed] =
+      batchOf(base, kind, meta, batch, what).map { case (frame, stores) =>
+        val rows = stores.head.rows(frame).localCheckpoint(false)
+        Routed(frame, stores, rows, rows.select(col(stores.head.cellCol))
+          .distinct().collect().map(_.getInt(0)).toSeq.sorted)
+      }
+
+    /** Both stages over `batch`, the candidate pairs filtered by `keep`;
+      * None when a stage resolves no file.
+      */
+    def candidates(batch: DataFrame,
+        keep: DataFrame => DataFrame = identity): Option[Candidates] =
+      route(batch).flatMap { r =>
+        val Seq(byKey, byId) = r.stores
+        read(byKey.name, r.cells).flatMap { stored =>
+          val keys = r.rows.columns.toSeq.filterNot(Set("id", byKey.cellCol))
+          def keyed(df: DataFrame, id: String): DataFrame =
+            df.select(col("id").as(id) +: keys.map(col): _*)
+          val pairs = keep(keyed(stored, "c_id")
+              .join(broadcast(keyed(r.rows, "b_id")), keys))
+            .select(col("b_id"), col("c_id")).distinct()
+            .localCheckpoint(false)
+          val ids = pairs
+            .select(idCell(col("c_id"), meta.getAs[Int]("cells"))).distinct()
+            .collect().map(_.getInt(0)).toSeq.sorted
+          read(byId.name, ids).map(Candidates(r.cells, pairs, ids, _,
+            byId.rows(r.frame).drop(byId.cellCol)))
+        }
+      }
+  }
+
+  /** Stage 1 of a probe: the kind's frame of the batch and its stores,
+    * the batch's rows in the first (routing) store, and their cells.
+    */
+  private[graft] final case class Routed(frame: DataFrame,
+      stores: Seq[CellStore], rows: DataFrame, cells: Seq[Int])
+
+  /** Both stages of a probe: the routed cells, the distinct (b_id, c_id)
+    * candidate pairs, the candidates' id cells, those cells' rows of the
+    * id-keyed store, and the batch's rows as that store holds them.
+    */
+  private[graft] final case class Candidates(routed: Seq[Int],
+      pairs: DataFrame, ids: Seq[Int], stored: DataFrame, batch: DataFrame)
 
   /** A shared frame that already carries the stores' cell column (IVF's
     * frozen-centroid assignment, one row per vec_id) is routed once for

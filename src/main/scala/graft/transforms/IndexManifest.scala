@@ -11,7 +11,8 @@ import CellStore.Landed
 /** The layout record of a stored index: which data files each cell of
   * each store holds, with each file's row count. It is the artifact's
   * one derived copy of its own layout. Probes resolve their routed cells
-  * from it, DESCRIBE folds its per-cell (files, rows) from it
+  * from it, one read per statement ([[CellStore.snapshot]]), DESCRIBE
+  * folds its per-cell (files, rows) from it
   * ([[IndexMaintenance.Stats.fold]]), and every writer commits it from
   * the cell-store writer's file reports ([[CellStore.Landed]]), so no
   * job re-reads a store to learn what it holds.
@@ -189,28 +190,21 @@ object IndexManifest {
     }
   }
 
-  /** Resolve the subset of `wanted` cells of the store at `root` to
-    * explicit paths — the plain-parquet analogue of metastore partition
-    * pruning, shared by every stored-artifact probe. A committed record
-    * gives the cells' data FILES from one small read: no per-cell
-    * existence RPC, no footer-discovery listing, and a consistent
-    * snapshot while maintenance runs elsewhere. Without one, the live
-    * layout ([[liveCellPaths]]). Cells with no files are skipped — an
-    * empty cell cannot hold candidates. Both forms feed the same
-    * `read.option("basePath", root).parquet(paths…)` call: Spark
-    * recovers the cell column from directory or file paths.
+  /** The `wanted` cells of the store at `root` as explicit paths, from
+    * one probe statement's record ([[CellStore.snapshot]]): the cells'
+    * data FILES, with no per-cell existence check and no footer-discovery
+    * listing. Without a record, the live layout ([[liveCellPaths]]).
+    * Cells with no files are skipped.
     */
-  def cellPaths(spark: SparkSession, root: String, pcol: String,
-      wanted: Array[Int]): Seq[String] = {
-    val rootPath = new Path(root)
-    Option(rootPath.getParent).flatMap(p => read(spark, p.toString)) match {
-      case Some(r) =>
-        val cells = r.layout.getOrElse(rootPath.getName, Map.empty)
-        wanted.toSeq
-          .flatMap(c => cells.getOrElse(c, Map.empty).keys.toSeq.sorted)
-          .map(rel => new Path(rootPath.getParent, rel).toString)
-      case None => liveCellPaths(spark, root, pcol, wanted.toSeq)
-    }
+  private[transforms] def cellPaths(spark: SparkSession,
+      record: Option[Record], root: String, pcol: String,
+      wanted: Seq[Int]): Seq[String] = record match {
+    case Some(r) =>
+      val rootPath = new Path(root)
+      val cells = r.layout.getOrElse(rootPath.getName, Map.empty)
+      wanted.flatMap(c => cells.getOrElse(c, Map.empty).keys.toSeq.sorted)
+        .map(rel => new Path(rootPath.getParent, rel).toString)
+    case None => liveCellPaths(spark, root, pcol, wanted)
   }
 
   /** The `wanted` cell directories of the store at `root` that exist,
@@ -219,7 +213,7 @@ object IndexManifest {
     * cell absent, and a probe would match nothing on exactly the
     * distributed deployments the artifacts exist for.
     */
-  private[graft] def liveCellPaths(spark: SparkSession, root: String,
+  private[transforms] def liveCellPaths(spark: SparkSession, root: String,
       pcol: String, wanted: Seq[Int]): Seq[String] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

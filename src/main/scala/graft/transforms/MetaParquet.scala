@@ -273,15 +273,15 @@ private[graft] object MetaParquet {
       s"metadata value for $name: unsupported ${other.getClass.getName}")
   }
 
-  /** The stored-index probe idiom — `spark.read.option("basePath",
-    * root).parquet(paths…)` over routed cell directories or
-    * manifest-served data files — with the store's schema from
-    * [[footerSchema]], so Spark runs no schema-inference job: the data
-    * columns of the footer, then the int cell column Spark recovers from
-    * the paths.
+  /** `spark.read.option("basePath", root).parquet(paths…)` over cell
+    * directories or data files of one store — the stored-probe reader's
+    * read ([[CellStore.snapshot]]) and a rewrite's — with the store's
+    * schema from [[footerSchema]], so Spark runs no schema-inference
+    * job: the data columns of the footer, then the int cell column Spark
+    * recovers from the paths.
     */
-  def readCells(spark: SparkSession, root: String, pcol: String,
-      paths: Seq[String]): DataFrame = {
+  private[transforms] def readCells(spark: SparkSession, root: String,
+      pcol: String, paths: Seq[String]): DataFrame = {
     val reader = spark.read.option("basePath", root)
     footerSchema(spark, paths).fold(reader) { s =>
       reader.schema(StructType(s.fields.filterNot(_.name == pcol) :+

@@ -582,21 +582,12 @@ object NearDup {
 
   /** [[minhashCrossMatches]] against a [[bandStoreFrom]] artifact: the
     * per-batch probe job that touches ONLY the stored files plus the
-    * batch. Shape:
-    *  1. batch band keys (the batch's own signatures — the only
-    *     signature work per batch);
-    *  2. driver-side cell routing (distinct pc of the batch keys —
-    *     bounded by min(|batch|×numBands, cells) ints, the q136
-    *     contract-bounded collect) pushed as a STATIC partition filter,
-    *     so the candidate scan reads only the batch's cells;
-    *  3. candidates = pruned stored bands ⋈ broadcast(batch bands) on
-    *     (band, bh) — the batch side broadcasts, the corpus side never
-    *     shuffles (probe batches are microbatch-/panel-sized by
-    *     contract; a corpus-sized "batch" belongs in the in-plan
-    *     [[minhashCrossMatches]] instead);
-    *  4. exact verify: candidate doc ids route the SAME way into the
-    *     shingle store's cells (second bounded collect ∝ candidate
-    *     mass), then the shared [[verifyPairsAcross]] algebra.
+    * batch, through the stored-probe reader ([[CellStore.snapshot]]):
+    * the batch's band keys route to the band cells, candidates are the
+    * stored bands that share a (band, bh) key with the broadcast batch
+    * (the corpus side never shuffles — a corpus-sized "batch" belongs in
+    * the in-plan [[minhashCrossMatches]]), and their ids route to the
+    * shingle cells for the shared [[verifyPairsAcross]] algebra.
     * Returns distinct batch ids with ≥ 1 corpus match at `threshold`.
     * The banding arguments must equal the stored index's (validated
     * against `meta/` — a mismatch would silently miss every true pair).
@@ -699,18 +690,19 @@ object NearDup {
   }
 
   /** The shared probe body of [[minhashCrossMatchesStored]] and
-    * [[jaccardKnnStored]]: batch band keys → driver-side cell routing →
-    * candidates from the batch's own band cells → exact Jaccard over
-    * the routed shingle cells. Returns verified (doc_a, doc_b, jaccard)
-    * pairs at ≥ `threshold` (doc_a = batch id, doc_b = stored id).
+    * [[jaccardKnnStored]]: both stages of the stored-probe reader
+    * ([[CellStore.snapshot]]) — the batch's band keys route to the band
+    * cells, the candidates' ids to the shingle cells — then exact
+    * Jaccard against the batch's sets in the artifact's shingle scheme.
+    * Returns verified (doc_a, doc_b, jaccard) pairs at ≥ `threshold`
+    * (doc_a = batch id, doc_b = stored id).
     */
   private def storedVerifiedPairs(s: org.apache.spark.sql.SparkSession,
       base: String, shB: DataFrame, threshold: Double,
       numPerm: Int, numBands: Int, rowsPerBand: Int,
       what: String): DataFrame = {
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    requireKind(meta, base, "lsh_text", what)
-    val cells = meta.getAs[Int]("cells")
+    val snap = CellStore.snapshot(s, base, "lsh_text", what)
+    val meta = snap.meta
     for ((want, got, what) <- Seq(
         (numPerm, meta.getAs[Int]("num_perm"), "numPerm"),
         (numBands, meta.getAs[Int]("num_bands"), "numBands"),
@@ -719,68 +711,17 @@ object NearDup {
         s"stored band index at $base was built with $what=$got but the " +
           s"probe asked for $want — probing with mismatched banding " +
           "would silently miss every true pair")
-    // the stored verification sets may be hashed (the default artifact
-    // form) — the batch side must speak the SAME scheme or every
-    // intersection would be empty and the probe would silently match
-    // nothing. Scheme comes from meta, so mixing is impossible.
-    val scheme =
-      if (meta.schema.fieldNames.contains("shingle_scheme"))
-        meta.getAs[String]("shingle_scheme")
-      else "raw"
     // checkpoint the batch's shingle frame ONCE: it feeds the band-key
-    // chain below AND the exact-verify join at the end — without this
-    // the verify side re-runs the batch's tokenize+shingle pipeline
-    // from the source scan (round-15 measurement: ~0.3 s per probe at
-    // panel scale, paid by every AGAINST STORED / KNN STORED statement)
-    val shBC = shB.localCheckpoint(false)
-    val shBVerify = scheme match {
-      case "xxhash64" =>
-        shBC.select(col("id"), Text.hashedShingles(col("shs")).as("shs"))
-      case "raw" => shBC
-      case other => throw new IllegalArgumentException(
-        s"stored band index at $base uses unknown shingle scheme '$other'")
+    // chain AND the exact-verify join at the end — without this the
+    // verify side re-runs the batch's tokenize+shingle pipeline from the
+    // source scan (round-15 measurement: ~0.3 s per probe at panel
+    // scale, paid by every AGAINST STORED / KNN STORED statement)
+    snap.candidates(shB.localCheckpoint(false)).fold(
+      shB.select(col("id").as("doc_a"), col("id").as("doc_b"),
+        lit(0.0).as("jaccard")).limit(0)) { c =>
+      verifyPairsAcross(c.pairs.toDF("doc_a", "doc_b"), c.batch,
+        c.stored.select(col("id"), col("shs")), threshold)
     }
-    // checkpoint: feeds the routing collect AND the candidate join
-    val bb = bandKeys(shBC, numPerm, numBands, rowsPerBand)
-      .toDF("doc_a", "band", "bh")
-      .localCheckpoint(false)
-    val probeCells = bb
-      .select(pmod(xxhash64(col("band"), col("bh")), lit(cells.toLong))
-        .cast("int").as("pc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    // Routed cells are read as EXPLICIT directory paths, not a filter
-    // over the whole store: a `.where(pc isin …)` prunes rows but still
-    // LISTS every cell directory to discover partitions, and that
-    // metadata pass grows with the index (measured in graft.BandScale:
-    // probe wall-clock ×4.6 for a fixed batch when cells grew 512 →
-    // 8192 under listing; flat after this change). Explicit paths are
-    // the plain-parquet analogue of metastore partition pruning — at
-    // 100 TB the catalog serves this lookup. Cells a batch routes to
-    // but no corpus key ever occupied have no directory; they are
-    // skipped driver-side (an empty cell cannot hold candidates). The
-    // existence probe goes through the path's own Hadoop FileSystem —
-    // java.io.File would silently report every hdfs://… or s3a://…
-    // cell absent and the probe would return zero matches on exactly
-    // the distributed deployments the artifact exists for.
-    def emptyMatches = shB.select(col("id").as("doc_a"),
-      col("id").as("doc_b"), lit(0.0).as("jaccard")).limit(0)
-    val bandPaths = IndexManifest.cellPaths(s, s"$base/bands", "pc", probeCells)
-    if (bandPaths.isEmpty) return emptyMatches
-    val stored = MetaParquet.readCells(s, s"$base/bands", "pc", bandPaths)
-      .select(col("id").as("doc_b"), col("band"), col("bh"))
-    // checkpoint: feeds the shingle-cell routing AND the verify join
-    val cand = stored.join(broadcast(bb), Seq("band", "bh"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-      .localCheckpoint(false)
-    val shCells = cand
-      .select(pmod(xxhash64(col("doc_b")), lit(cells.toLong))
-        .cast("int").as("sc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val shPaths = IndexManifest.cellPaths(s, s"$base/shingles", "sc", shCells)
-    if (shPaths.isEmpty) return emptyMatches
-    val shStored = MetaParquet.readCells(s, s"$base/shingles", "sc", shPaths)
-      .select(col("id"), col("shs"))
-    verifyPairsAcross(cand, shBVerify, shStored, threshold)
   }
 
   /** Validate a stored artifact's `kind` against what the probe expects —
@@ -849,53 +790,27 @@ object NearDup {
 
   /** Batch-vs-corpus edit-distance-≤1 matches against a [[typoStoreTo]]
     * artifact: distinct batch ids whose string is within edit distance 1
-    * of ≥ 1 stored string, touching ONLY the batch's routed cell files.
-    * Shape mirrors [[minhashCrossMatchesStored]]:
-    *  1. batch delete-1 variants (the only fan-out work per batch);
-    *  2. driver-side cell routing (distinct pc of the batch's variant
-    *     hashes — bounded by min(Σ(len+1), cells) ints) read as explicit
-    *     paths, so the candidate scan reads only the batch's cells;
-    *  3. candidates = pruned stored variants ⋈ broadcast(batch
-    *     variants) on vh — the corpus side never shuffles;
-    *  4. exact verify: candidate ids route into `strings/` cells, then
-    *     the banded 3-arg levenshtein over candidate pairs only.
-    * `bReps` columns: (id, txt), one row per distinct batch string.
+    * of ≥ 1 stored string, through the stored-probe reader
+    * ([[CellStore.snapshot]]): the batch's delete-1 variant hashes (the
+    * only fan-out work per batch) route to the variant cells, candidates
+    * share a `vh` with the broadcast batch, and their ids route to the
+    * `strings/` cells for the banded 3-arg levenshtein over candidate
+    * pairs only. `bReps` columns: (id, txt), one row per distinct batch
+    * string.
     */
   def typoCrossMatchesStored(s: org.apache.spark.sql.SparkSession,
       base: String, bReps: DataFrame): DataFrame = {
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    requireKind(meta, base, "typo_text", "NEARDEDUP METHOD TYPO AGAINST STORED")
-    val cells = meta.getAs[Int]("cells")
+    val snap = CellStore.snapshot(s, base, "typo_text",
+      "NEARDEDUP METHOD TYPO AGAINST STORED")
     val br = bReps.select(col("id"), col("txt")).localCheckpoint(false)
-    // checkpoint: feeds the routing collect AND the candidate join
-    val bv = delete1Variants(br, "txt")
-      .select(col("id").as("b_id"), col("vh"))
-      .localCheckpoint(false)
-    val probeCells = bv
-      .select(pmod(col("vh"), lit(cells.toLong)).cast("int").as("pc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    def emptyMatches = br.select(col("id").as("b_id")).limit(0)
-    val vPaths = IndexManifest.cellPaths(s, s"$base/variants", "pc", probeCells)
-    if (vPaths.isEmpty) return emptyMatches
-    val stored = MetaParquet.readCells(s, s"$base/variants", "pc", vPaths)
-      .select(col("id").as("c_id"), col("vh"))
-    // checkpoint: feeds the string-cell routing AND the verify join
-    val cand = stored.join(broadcast(bv), Seq("vh"))
-      .select(col("b_id"), col("c_id")).distinct()
-      .localCheckpoint(false)
-    val sCells = cand
-      .select(pmod(xxhash64(col("c_id")), lit(cells.toLong))
-        .cast("int").as("sc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val sPaths = IndexManifest.cellPaths(s, s"$base/strings", "sc", sCells)
-    if (sPaths.isEmpty) return emptyMatches
-    val cStr = MetaParquet.readCells(s, s"$base/strings", "sc", sPaths)
-      .select(col("id").as("c_id"), col("txt").as("tc"))
-    cand
-      .join(br.select(col("id").as("b_id"), col("txt").as("tb")), "b_id")
-      .join(cStr, "c_id")
-      .where(levenshtein(col("tb"), col("tc"), 1) >= 0)
-      .select(col("b_id")).distinct()
+    snap.candidates(br).fold(br.select(col("id").as("b_id")).limit(0)) { c =>
+      c.pairs
+        .join(br.select(col("id").as("b_id"), col("txt").as("tb")), "b_id")
+        .join(c.stored.select(col("id").as("c_id"), col("txt").as("tc")),
+          "c_id")
+        .where(levenshtein(col("tb"), col("tc"), 1) >= 0)
+        .select(col("b_id")).distinct()
+    }
   }
 
   /** Min-label connected components over an undirected pair graph:

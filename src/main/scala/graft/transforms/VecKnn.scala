@@ -355,33 +355,26 @@ object VecKnn {
 
   /** [[cosineCrossMatches]] against a [[cosineStoreTo]] artifact: batch
     * ids with ≥ 1 stored vector at round-6 cosine ≥ threshold, touching
-    * ONLY the stored files plus the batch. Shape mirrors
-    * NearDup.minhashCrossMatchesStored:
-    *  1. batch bucket fan-out (the only hash work per batch);
-    *  2. driver-side cell routing (distinct pc of the batch's buckets —
-    *     bounded by min(|batch|×tables, cells) ints) read as EXPLICIT
-    *     cell paths, so the candidate scan reads only the batch's cells;
-    *  3. candidates = pruned stored buckets ⋈ broadcast(batch buckets)
-    *     on (t, bucket) — the corpus side never shuffles;
-    *  4. exact verify: candidate ids route into `vectors/` cells, then
-    *     the shared round-6 cosine predicate.
-    * The batch's dimension must equal the artifact's, and geometry
-    * comes FROM the artifact: absent (tables, bits) adopt `meta/`'s
-    * values (the stored index is the source of truth — required now
-    * that the INDEX verb derives bits from the corpus, so a probe
-    * cannot guess them), while explicitly passed values are validated
-    * against meta (a mismatch would silently miss every true pair).
+    * ONLY the stored files plus the batch, through the stored-probe
+    * reader ([[CellStore.snapshot]]): the batch's buckets route to the
+    * bucket cells, candidates share a (t, bucket) key with the broadcast
+    * batch, and their ids route to the `vectors/` cells for the shared
+    * round-6 cosine predicate. The batch's dimension must equal the
+    * artifact's, and geometry comes FROM the artifact: absent (tables,
+    * bits) adopt `meta/`'s values (the stored index is the source of
+    * truth — required now that the INDEX verb derives bits from the
+    * corpus, so a probe cannot guess them), while explicitly passed
+    * values are validated against meta (a mismatch would silently miss
+    * every true pair).
     * `batch` columns: (id, v, nrm).
     */
   def cosineCrossMatchesStored(s: org.apache.spark.sql.SparkSession,
       base: String, batch: DataFrame, threshold: Double,
       tablesOpt: Option[Int] = None, bitsOpt: Option[Int] = None)
       : DataFrame = {
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    NearDup.requireKind(meta, base, "cosine_vec",
+    val snap = CellStore.snapshot(s, base, "cosine_vec",
       "NEARDEDUP METHOD COSINE AGAINST STORED")
-    val cells = meta.getAs[Int]("cells")
-    val dims = meta.getAs[Int]("dims")
+    val meta = snap.meta
     for ((wantOpt, got, what) <- Seq((tablesOpt, meta.getAs[Int]("tables"),
         "TABLES"), (bitsOpt, meta.getAs[Int]("bits"), "BITS"));
         want <- wantOpt)
@@ -389,7 +382,6 @@ object VecKnn {
         s"stored cosine index at $base was built with $what=$got but the " +
           s"probe asked for $want — mismatched bucketing would silently " +
           "miss every true pair")
-    val tables = meta.getAs[Int]("tables")
     val bits = meta.getAs[Int]("bits")
     // derived-bits contract (IndexGeometry.cosineBits): the derivation
     // assumes dedup-grade thresholds, so probing a derived-bits
@@ -414,42 +406,15 @@ object VecKnn {
       graft.transforms.IndexMaintenance.Warnings.persist(
         s.sparkContext.hadoopConfiguration, base, msg)
     }
-    val bd = probeDims(batch, "NEARDEDUP METHOD COSINE batch")
-    if (bd == 0) return batch.select(col("id")).limit(0)
-    if (bd != dims) throw graft.transforms.TransformParser.TransformError(
-      s"NEARDEDUP METHOD COSINE: batch vectors are $bd-dimensional but " +
-        s"the stored index at $base holds $dims-dimensional vectors")
-    // checkpoint: feeds the routing collect AND the candidate join
-    val bb = bucketFrame(batch, tables, bits, dims)
-      .toDF("b_id", "t", "bucket")
-      .localCheckpoint(false)
-    val probeCells = bb
-      .select(pmod(xxhash64(col("t"), col("bucket")), lit(cells.toLong))
-        .cast("int").as("pc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    def emptyMatches = batch.select(col("id").as("b_id")).limit(0)
-    val bPaths = IndexManifest.cellPaths(s, s"$base/buckets", "pc",
-      probeCells)
-    if (bPaths.isEmpty) return emptyMatches
-    val stored = MetaParquet.readCells(s, s"$base/buckets", "pc", bPaths)
-      .select(col("id").as("c_id"), col("t"), col("bucket"))
-    // checkpoint: feeds the vector-cell routing AND the verify join
-    val cand = stored.join(broadcast(bb), Seq("t", "bucket"))
-      .select(col("b_id"), col("c_id")).distinct()
-      .localCheckpoint(false)
-    val vCells = cand
-      .select(pmod(xxhash64(col("c_id")), lit(cells.toLong))
-        .cast("int").as("sc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val vPaths = IndexManifest.cellPaths(s, s"$base/vectors", "sc", vCells)
-    if (vPaths.isEmpty) return emptyMatches
-    val cVec = MetaParquet.readCells(s, s"$base/vectors", "sc", vPaths)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    verifiedCosine(cand
-      .join(batch.toDF("b_id", "bv", "bnrm"), "b_id")
-      .join(cVec, "c_id"),
-      col("bv"), col("cv"), col("bnrm"), col("cnrm"), threshold)
-      .select(col("b_id")).distinct()
+    snap.candidates(batch).fold(batch.select(col("id").as("b_id")).limit(0)) {
+      c =>
+        verifiedCosine(c.pairs
+          .join(batch.toDF("b_id", "bv", "bnrm"), "b_id")
+          .join(c.stored.select(col("id").as("c_id"), col("v").as("cv"),
+            col("nrm").as("cnrm")), "c_id"),
+          col("bv"), col("cv"), col("bnrm"), col("cnrm"), threshold)
+          .select(col("b_id")).distinct()
+    }
   }
 
   /** Top-k cosine serving from a [[cosineStoreTo]] artifact — the KNN
@@ -457,12 +422,10 @@ object VecKnn {
     * stored-artifact asymmetry (all four families probe via NEARDEDUP
     * AGAINST STORED, but before this only IVF served KNN): a user who
     * built `INDEX … METHOD COSINE INTO` can now ask top-k from the same
-    * files. Shape mirrors [[cosineCrossMatchesStored]] steps 1–3 —
-    * query bucket fan-out, driver-side cell routing read as EXPLICIT
-    * cell paths, candidates = stored buckets ⋈ broadcast(query buckets)
-    * on (t, bucket) — then diverges at the consumer: instead of a
-    * threshold keep/drop, candidates are exact-reranked to the top-k
-    * (cosine DESC, neighbor id) per query. Candidates can only be
+    * files. Candidates come from the stored-probe reader as for
+    * [[cosineCrossMatchesStored]]; instead of a threshold keep/drop,
+    * they are exact-reranked to the top-k (cosine DESC, neighbor id)
+    * per query. Candidates can only be
     * MISSED, never mis-ranked (the rerank reads true vectors), so
     * LSH serving inherits q35's contract: recall is governed by
     * tables × bits, precision is exact.
@@ -479,11 +442,9 @@ object VecKnn {
     */
   def cosineKnnStored(s: org.apache.spark.sql.SparkSession, base: String,
       queries: DataFrame, k: Int): DataFrame = {
-    val meta = MetaParquet.readRow(s, s"$base/meta")
-    NearDup.requireKind(meta, base, "cosine_vec", "KNN … METHOD LSH STORED")
-    val cells = meta.getAs[Int]("cells")
-    val dims = meta.getAs[Int]("dims")
-    val tables = meta.getAs[Int]("tables")
+    val snap = CellStore.snapshot(s, base, "cosine_vec",
+      "KNN … METHOD LSH STORED")
+    val meta = snap.meta
     val bits = meta.getAs[Int]("bits")
     // the derived-bits contract, stated for SERVING: the derivation
     // sizes buckets for dedup-grade similarity (~8 entries/bucket), so
@@ -516,55 +477,27 @@ object VecKnn {
     val qs = queries.localCheckpoint(false)
     val q = qs.select(col("qid").as("id"), col("qv").as("v"),
       col("qnrm").as("nrm"))
-    val qd = probeDims(q, "KNN … METHOD LSH STORED queries")
-    def empty = qs.select(col("qid"),
-        xxhash64(col("qv")).as("neighbor_id"),
-        col("qnrm").cast("double").as("cosine"), lit(0).as("rank"))
-      .limit(0)
-    if (qd == 0) return empty
-    if (qd != dims) throw graft.transforms.TransformParser.TransformError(
-      s"KNN … METHOD LSH STORED: query vectors are $qd-dimensional but " +
-        s"the stored index at $base holds $dims-dimensional vectors")
-    // checkpoint: feeds the routing collect AND the candidate join
-    val qb = bucketFrame(q, tables, bits, dims)
-      .toDF("qid", "t", "bucket")
-      .localCheckpoint(false)
-    val probeCells = qb
-      .select(pmod(xxhash64(col("t"), col("bucket")), lit(cells.toLong))
-        .cast("int").as("pc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val bPaths = IndexManifest.cellPaths(s, s"$base/buckets", "pc",
-      probeCells)
-    if (bPaths.isEmpty) return empty
-    val stored = MetaParquet.readCells(s, s"$base/buckets", "pc", bPaths)
-      .select(col("id").as("c_id"), col("t"), col("bucket"))
     // self-exclusion is by CONTENT, matching the store's key: the
     // query's own indexed vector must not be its nearest neighbor
-    val qh = qs.select(col("qid"), xxhash64(col("qv")).as("qvh"))
-    // checkpoint: feeds the vector-cell routing AND the rerank join
-    val cand = stored.join(broadcast(qb), Seq("t", "bucket"))
-      .join(broadcast(qh), "qid")
-      .where(col("c_id") =!= col("qvh"))
-      .select(col("qid"), col("c_id")).distinct()
-      .localCheckpoint(false)
-    val vCells = cand
-      .select(pmod(xxhash64(col("c_id")), lit(cells.toLong))
-        .cast("int").as("sc"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val vPaths = IndexManifest.cellPaths(s, s"$base/vectors", "sc", vCells)
-    if (vPaths.isEmpty) return empty
-    val cVec = MetaParquet.readCells(s, s"$base/vectors", "sc", vPaths)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cosine").desc, col("c_id"))
-    cVec.join(broadcast(cand), "c_id")
-      .join(broadcast(qs), "qid")
-      .withColumn("cosine",
-        round(dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("c_id").as("neighbor_id"), col("cosine"),
-        col("rank"))
+    val qh = qs.select(col("qid").as("b_id"), xxhash64(col("qv")).as("qvh"))
+    snap.candidates(q,
+        _.join(broadcast(qh), "b_id").where(col("c_id") =!= col("qvh")))
+      .fold(qs.select(col("qid"), xxhash64(col("qv")).as("neighbor_id"),
+        col("qnrm").cast("double").as("cosine"), lit(0).as("rank"))
+        .limit(0)) { c =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("qid").orderBy(col("cosine").desc, col("c_id"))
+        c.stored.select(col("id").as("c_id"), col("v").as("cv"),
+            col("nrm").as("cnrm"))
+          .join(broadcast(c.pairs.toDF("qid", "c_id")), "c_id")
+          .join(broadcast(qs), "qid")
+          .withColumn("cosine", round(dot(col("qv"), col("cv")) /
+            (col("qnrm") * col("cnrm")), 6))
+          .withColumn("rank", row_number().over(w))
+          .where(col("rank") <= k)
+          .select(col("qid"), col("c_id").as("neighbor_id"), col("cosine"),
+            col("rank"))
+      }
   }
 
   /** Vector dimension of an (id, v, nrm) frame — 0 when empty, a

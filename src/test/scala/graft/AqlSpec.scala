@@ -3313,8 +3313,8 @@ class AqlSpec extends AnyFunSuite {
           !p.getFileName.toString.startsWith("."))
       finally s2.close()
     }
-    def resolved(): Seq[String] =
-      mf.cellPaths(spark, s"$idx/bands", "pc", Array(0, 1, 2, 3))
+    def resolved(): Seq[String] = graft.transforms.CellStore
+      .snapshot(spark, idx, "lsh_text", "resolve").paths("bands", 0 to 3)
     run(s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 4 INTO '$idx'")
     // the build commits v1: DESCRIBE reports it, and the resolver
     // answers from it with FILE paths (…/part-….parquet), not cell

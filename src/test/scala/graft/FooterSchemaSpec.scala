@@ -150,7 +150,8 @@ class FooterSchemaSpec extends AnyFunSuite {
     val offenders = files.flatMap(f =>
       schemaless(Files.readString(f)).map(n => s"$f:$n"))
     assert(offenders.isEmpty,
-      "read through MetaParquet.scan or readCells: " +
+      "read through MetaParquet.scan or the stored-probe reader " +
+        "(CellStore.snapshot): " +
         offenders.mkString(", "))
   }
 }

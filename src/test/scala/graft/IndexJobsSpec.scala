@@ -170,21 +170,30 @@ class IndexJobsSpec extends AnyFunSuite {
   }
 
   /** Jobs of a CELLS 8 build, a verb APPEND, a COMPACT of the cells that
-    * APPEND left with two files, and a verb DELETE, per index kind. The
-    * counts pin the writers' job shape: eager checkpoints, DELETE's one
-    * routing collect, one write job set per store; no stats recount, as
-    * the writers report what they wrote.
+    * APPEND left with two files, a verb DELETE, and a stored probe of the
+    * appended batch (built and collected), per index kind. The counts pin
+    * the writers' job shape: eager checkpoints, DELETE's one routing
+    * collect, one write job set per store; no stats recount, as the
+    * writers report what they wrote. The probe's pin holds its routing
+    * collects and candidate checkpoints.
     */
   private val kindJobs = Seq(
-    ("LSH", "METHOD LSH THRESHOLD 0.5 CELLS 8", Jobs(8, 8, 4, 14)),
-    ("TYPO", "METHOD TYPO CELLS 8", Jobs(8, 8, 4, 14)),
-    ("COSINE", "METHOD COSINE CELLS 8 TABLES 8 BITS 3", Jobs(13, 13, 4, 19)),
-    ("IVF+PQ", "METHOD IVF CELLS 8 PQ 2", Jobs(19, 14, 4, 12)))
+    ("LSH", "METHOD LSH THRESHOLD 0.5 CELLS 8", Jobs(8, 8, 4, 14, 18),
+      "NEARDEDUP D AGAINST STORED '%s' ON item KEY id THRESHOLD 0.5 " +
+        "METHOD LSH"),
+    ("TYPO", "METHOD TYPO CELLS 8", Jobs(8, 8, 4, 14, 18),
+      "NEARDEDUP D AGAINST STORED '%s' ON item KEY id METHOD TYPO"),
+    ("COSINE", "METHOD COSINE CELLS 8 TABLES 8 BITS 3",
+      Jobs(13, 13, 4, 19, 20),
+      "NEARDEDUP D AGAINST STORED '%s' ON item KEY id THRESHOLD 0.9 " +
+        "METHOD COSINE"),
+    ("IVF+PQ", "METHOD IVF CELLS 8 PQ 2", Jobs(19, 14, 4, 12, 17),
+      "KNN ON item KEY id TOP 3 METHOD IVF PROBE 2 STORED '%s' ADC"))
 
   private case class Jobs(build: Int, append: Int, compact: Int,
-      delete: Int)
+      delete: Int, probe: Int)
 
-  for ((kind, geometry, want) <- kindJobs)
+  for ((kind, geometry, want, probe) <- kindJobs)
     test(s"$kind: build, APPEND, COMPACT and DELETE run the pinned jobs") {
       import spark.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft_kindjobs")
@@ -228,7 +237,16 @@ class IndexJobsSpec extends AnyFunSuite {
       val delete = jobsOf(run(gone,
         s"INDEX ON item KEY id METHOD $method INTO '$idx' DELETE")).size
       assert(rows() == 57L)
-      val got = Jobs(build, append, compact, delete)
+      // every row of the appended batch is stored: the NEARDEDUP probes
+      // keep none of them, and KNN serves each query its neighbours
+      var probed = Seq.empty[Row]
+      val probeJobs = jobsOf {
+        run(batch, probe.format(idx))
+        probed = out.collect().toSeq
+      }.size
+      if (kind == "IVF+PQ") assert(probed.nonEmpty)
+      else assert(probed.isEmpty, probed)
+      val got = Jobs(build, append, compact, delete, probeJobs)
       assert(got == want, s"$kind jobs")
     }
 }
