@@ -248,31 +248,8 @@ object BandScale {
       val (snapshot, snapshotS) = timed(mf.snapshot(spark, base, stores))
       val (descEntries2, describeServedS) = timed(describeBands())
 
-      // restored-cell refresh leg: a mutation recounts only the cells a
-      // sweep restored, whose rows no writer report holds — priced here
-      // against the full recount. The record is dropped BEFORE the
-      // append so the writer commits nothing, then the appended cells
-      // are refreshed COLD as if restored. The claim is the
-      // asymptotics: refresh cost ∝ refreshed cells (bounded by the
-      // batch's band keys, flat across corpus growth), full cost ∝ all
-      // cells. Closed-form: the refreshed record equals the full
-      // recount file for file, on the SAME artifact state.
-      mf.invalidate(conf, base)
-      val touched = NearDup.bandStoreAppend(base, appendSh)
-      val touchedCells = touched.values.map(_.size).sum
-      val (refreshed, refreshS) = timed {
-        mf.merge(spark, base, stores, snapshot.layout, touched.map {
-          case (sub, cs) => sub -> graft.transforms.CellStore.Landed(
-            restored = cs) })
-      }
-      val (full, recountS) = timed {
-        graft.transforms.IndexMaintenance.Stats.recount(spark, base, stores)
-      }
-      NearDup.bandStoreDelete(base, appendSh) // restore the artifact
-
       val checks = Seq(
         "record_report_closed_form" -> reported.contains(snapshot.layout),
-        "record_restored_closed_form" -> (refreshed == full),
         // exists, not forall: a missing baseline must FAIL (reps are
         // require'd to start at 1)
         "matched_closed_form" -> (k == 1 || matched1.exists(_ == matchedK)),
@@ -292,9 +269,7 @@ object BandScale {
         "sec" -> secs("build" -> buildS, "probe" -> probeS,
           "append" -> appendS, "reprobe" -> reprobeS, "delete" -> deleteS,
           "reprobe2" -> reprobe2S, "describe" -> describeS,
-          "snapshot" -> snapshotS, "describe_served" -> describeServedS,
-          "restored_refresh" -> refreshS, "recount_full" -> recountS),
-        "touched_cells" -> touchedCells,
+          "snapshot" -> snapshotS, "describe_served" -> describeServedS),
         "artifact_bytes" -> Map("bands" -> bandsBytes,
           "shingles_hashed" -> shHashedBytes,
           "shingles_raw" -> shRawBytes)),

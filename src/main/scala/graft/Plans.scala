@@ -100,7 +100,7 @@ object Plans {
     "q169_stream_stored_typo_dedup" -> "streaming TYPO dedup from the stored variant index: 4 microbatches each answered via q154's probe step (explain cannot render the in-flight streaming plan; the per-batch plan is the routed variant-cell broadcast left-anti shape)",
     "q170_aql_knn_jaccard_inplan" -> "KNN METHOD JACCARD in-plan (no artifact): banded candidates between the two frames' own MinHash band keys (never all-pairs), exact-Jaccard rerank over the in-plan shingle frames, bounded per-qid window — shared bodies with the q168 stored serve",
     "q171_aql_index_rebuild_cells" -> "build -> APPEND -> REBUILD CELLS 32 -> probe: explicit re-cell pinned in meta (cells leaves the derived list); probe plan is q148's routed-cell left-anti shape over the 32-cell artifact",
-    "q172_stream_index_delete" -> "streaming INDEX DELETE: 4 microbatches of forget requests removed from the stored band index via the verb's delete step (explain cannot render the in-flight streaming plan; per-batch cell rewrites are q159's routed staged-swap shape, the probe run q148's routed-cell left-anti shape)",
+    "q172_stream_index_delete" -> "streaming INDEX DELETE: 4 microbatches of forget requests removed from the stored band index via the verb's delete step (explain cannot render the in-flight streaming plan; per-batch cell rewrites are q159's routed rewrite shape, the probe run q148's routed-cell left-anti shape)",
     "q173_stream_knn_jaccard" -> "streaming JACCARD retrieval: 4 microbatches of query docs each answered from the stored band artifact by the KNN verb's own parsed statement (explain cannot render the in-flight streaming plan; the per-batch plan is q168's routed-band exact-rerank shape)",
   )
 

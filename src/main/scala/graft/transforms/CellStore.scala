@@ -13,7 +13,6 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 
 import scala.util.{Failure, Success, Try}
-import scala.util.control.NonFatal
 
 import TransformParser.TransformError
 
@@ -37,46 +36,36 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   *    column and sorts each task by cell, so a cell lands whole in one
   *    task — one file per touched cell per write.
   *  - A task writes each of its cells' files through Spark's own parquet
-  *    writer under a hidden name,
-  *    `<col>=<c>/.pending-part-<task>-<attempt>-<stmt><ext>`, and reports
-  *    (cell, file, rows) to the driver ([[writePending]]). Readers skip
-  *    dot-names, so a pending file is invisible. A failed task attempt
-  *    deletes its own pending files.
-  *  - Only when every leg's write job has succeeded does the driver
-  *    publish: one rename per reported file, to
-  *    `part-<task>-<stmt>.c000<ext>` (the names, codec and footer Spark's
-  *    own committer gives), then it deletes any unreported pending file
-  *    in the cells it touched (a retried or speculative attempt's). If
-  *    any leg fails, no leg publishes: the statement's pending files are
-  *    deleted and the store is unchanged. There is no `_temporary` tree
-  *    and no `_SUCCESS` file.
-  *  - The reports are the statement's account of what it wrote
-  *    ([[Landed]]): its touched cells and the artifact's layout record
-  *    ([[IndexManifest]], every file with its rows) come from them, so
-  *    no job re-reads a store to learn what was written.
-  *  - Mutations of an existing artifact (APPEND, DELETE, COMPACT)
-  *    hold its single-writer lock ([[IndexMaintenance.withMaintLock]],
+  *    writer under its final, statement-scoped name,
+  *    `<col>=<c>/part-<task>-<attempt>-<stmt>.c000<ext>`, beside the
+  *    files already there, and reports (cell, file, rows) to the driver
+  *    ([[writeFiles]]). No data file is ever renamed. A failed task
+  *    attempt deletes its own files; if any leg fails, the statement's
+  *    files are deleted by their statement id. There is no `_temporary`
+  *    tree and no `_SUCCESS` file.
+  *  - The commit is the layout record ([[IndexManifest]]): the reports
+  *    are the statement's account of what it wrote ([[Landed]]), and a
+  *    file is part of the index once a committed version lists it, so
+  *    no job re-reads a store to learn what was written, and a file no
+  *    version lists (a failed statement's, a losing speculative
+  *    attempt's) is invisible to every reader.
+  *  - A build overwrites every store and commits the record's `v1` from
+  *    its reports; REBUILD builds into a fresh stage it swaps in whole.
+  *  - Mutations of an existing artifact (APPEND, DELETE, COMPACT) hold
+  *    its single-writer lock ([[IndexMaintenance.withMaintLock]],
   *    re-entrant under a verb) and run inside
-  *    [[IndexManifest.maintained]]: it reads the prior record, drops it
-  *    before a row is touched (absent, never stale), and commits the
-  *    prior folded with the statement's reports as the next version. A
-  *    statement whose write fails before anything is published
-  *    ([[Unpublished]]) recommits the prior unchanged. A build
-  *    overwrites every store and commits the record's `v1` from its
-  *    reports; REBUILD builds into a fresh stage it swaps in whole.
-  *  - APPEND adds files next to a cell's existing ones. DELETE and
-  *    COMPACT rewrite only the routed cells ([[rewrite]]): survivors
-  *    land in a staging sibling per store, then each cell swaps with two
-  *    renames (live → `.old_<col>_<cell>`, staging → live). A failed
-  *    rename rolls every committed cell of its store back. A crash
-  *    between a cell's two renames leaves `.old_` as the only copy of
-  *    its rows; [[sweep]] restores it before the next statement reads or
-  *    writes the store (APPEND, DELETE, COMPACT and REBUILD all sweep
-  *    first) and reaps `.old_` dirs whose swap finished.
-  *  - A sweep-restored cell's rows are in no report and were absent from
-  *    any record committed while the cell was down: it joins the touched
-  *    cells, and it is the one cell a mutation's record refresh
-  *    recounts.
+  *    [[IndexManifest.maintained]]: the prior record (snapshotted first
+  *    when the artifact has none) is never dropped; the statement writes
+  *    beside it and commits the prior folded with its reports as the
+  *    next version with one rename, and only then deletes what that
+  *    version superseded. APPEND adds files to its cells. DELETE and
+  *    COMPACT rewrite the routed cells ([[rewrite]]): the cells' files
+  *    are read from the prior record, the survivors land in the same
+  *    cell directories under the statement's names, and the next
+  *    version lists only those for the rewritten cells.
+  *  - A failure before the commit leaves the prior version current. A
+  *    crash between the commit and the deletes leaves superseded files
+  *    that no version lists; COMPACT reclaims every unlisted file.
   * Every stored probe reads the stores through [[snapshot]], whose
   * scaladoc states the probe protocol.
   */
@@ -147,22 +136,14 @@ private[graft] object CellStore {
     }).map(st => st.name -> st.cellCol)
 
   /** One statement's effect on one store, from its writers' reports: the
-    * files it published as (cell, file, rows); the cells it rewrote
-    * whole, whose prior files are gone (a rewritten cell with no
-    * published file is gone); and the cells a sweep restored, whose rows
-    * no report holds.
+    * files it wrote as (cell, file, rows), and the cells it rewrote
+    * whole, whose prior files it superseded (a rewritten cell with no
+    * written file is gone).
     */
   final case class Landed(files: Seq[(Int, String, Long)] = Nil,
-      rewritten: Seq[Int] = Nil, restored: Seq[Int] = Nil) {
-    def touched: Seq[Int] =
-      (files.map(_._1) ++ rewritten ++ restored).distinct.sorted
+      rewritten: Seq[Int] = Nil) {
+    def touched: Seq[Int] = (files.map(_._1) ++ rewritten).distinct.sorted
   }
-
-  /** A file a write task left under its hidden name: its cell, that
-    * name, the name it is published under, and its row count.
-    */
-  private[graft] final case class Pending(cell: Int, path: String,
-      published: String, rows: Long)
 
   /** Shuffle parallelism for a cell-partitioned store write: ideally one
     * cell per task, capped at 4× the cluster's cores. Without the pin,
@@ -225,34 +206,6 @@ private[graft] object CellStore {
     settled.map(_.get)
   }
 
-  /** Sweep each (store, cell column) of `base` for `.old_<col>_*`
-    * siblings left by a crashed cell swap. Stale ⇔ the live cell exists
-    * (its swap finished): reaped. An `.old_` whose live cell is absent
-    * is the crashed statement's only copy of that cell's prior rows:
-    * restored. Returns each store's restored cells, in order. Runs under
-    * the artifact's maintenance lock.
-    */
-  def sweep(spark: SparkSession, base: String,
-      stores: Seq[(String, String)]): Seq[Seq[Int]] =
-    stores.map { case (sub, cellCol) =>
-      sweepStore(spark, s"$base/$sub", cellCol) }
-
-  private def sweepStore(spark: SparkSession, root: String,
-      cellCol: String): Seq[Int] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val restored = Seq.newBuilder[Int]
-    if (fs.exists(rootPath))
-      for (st <- fs.listStatus(rootPath)
-          if st.getPath.getName.startsWith(s".old_${cellCol}_")) {
-        val id = st.getPath.getName.stripPrefix(s".old_${cellCol}_")
-        val live = new Path(rootPath, s"$cellCol=$id")
-        if (fs.exists(live)) fs.delete(st.getPath, true)
-        else if (fs.rename(st.getPath, live)) restored += id.toInt
-      }
-    restored.result()
-  }
-
   /** Each cell directory of the store at `root` with its entries,
     * walked store → cell → file with `listStatus`: cell directories are
     * flat, and a recursive `listFiles` pays a permission probe per file
@@ -268,10 +221,6 @@ private[graft] object CellStore {
       .map(st => st.getPath.getName.stripPrefix(s"$cellCol=").toInt ->
         fs.listStatus(st.getPath).toSeq)
 
-  /** Whether an entry is a writer's leftover hidden file. */
-  private[graft] def isPending(st: FileStatus): Boolean =
-    st.getPath.getName.startsWith(".pending-")
-
   /** A build or REBUILD stage: overwrite every store of `base` with its
     * routing of `shared`, one concurrent leg per store, and commit the
     * layout record's `v1` from the legs' reports. `shared` must already
@@ -286,11 +235,10 @@ private[graft] object CellStore {
     val roots = stores.map(st => new Path(base, st.name))
     roots.foreach { r => fs.delete(r, true); fs.mkdirs(r) }
     val parts = cellWriteParts(spark, cells)
-    val files = surfaced(keep = false)(land(spark,
-      stores.lazyZip(roots).map { (st, r) =>
-        Leg(r.toString, st.cellCol, st.rows(shared), parts) }))
+    val files = land(spark, stores.lazyZip(roots).map { (st, r) =>
+      Leg(r.toString, st.cellCol, st.rows(shared), parts) })
     IndexManifest.commit(spark, base, 1,
-      IndexManifest.merge(spark, base, stores.map(st => st.name -> st.cellCol),
+      IndexManifest.merge(stores.map(st => st.name -> st.cellCol),
         Map.empty, stores.lazyZip(files).map((st, f) => st.name -> Landed(f))
           .toMap))
     ()
@@ -298,22 +246,16 @@ private[graft] object CellStore {
 
   /** Add a batch to an existing artifact of `kind`: geometry comes from
     * its `meta/`, never from the caller, and `meta/` is untouched.
-    * Crashed cells are restored first — an append that re-created a
-    * downed cell's live directory with only the batch's rows would make
-    * the next sweep reap the prior rows as stale. Returns each store's
-    * touched cells: the cells its report names plus the restored ones.
+    * Returns each store's touched cells.
     */
   def append(base: String, kind: String, batch: DataFrame)
       : Map[String, Seq[Int]] =
-    maintain(base, kind, batch, "APPEND") { (spark, shared, stores, cells) =>
-      val restored =
-        sweep(spark, base, stores.map(st => st.name -> st.cellCol))
+    maintain(base, kind, batch, "APPEND") {
+        (spark, shared, stores, cells, _) =>
       val parts = cellWriteParts(spark, cells)
-      val files = surfaced(keep = restored.forall(_.isEmpty))(
-        land(spark, stores.map(st =>
-          Leg(s"$base/${st.name}", st.cellCol, st.rows(shared), parts))))
-      stores.lazyZip(files).lazyZip(restored).map { (st, f, r) =>
-        st.name -> Landed(f, restored = r) }.toMap
+      val files = land(spark, stores.map(st =>
+        Leg(s"$base/${st.name}", st.cellCol, st.rows(shared), parts)))
+      stores.lazyZip(files).map((st, f) => st.name -> Landed(f)).toMap
     }
 
   /** Remove a batch from an existing artifact of `kind`: each store's
@@ -323,14 +265,13 @@ private[graft] object CellStore {
     */
   def delete(base: String, kind: String, batch: DataFrame, idCol: String)
       : Map[String, Seq[Int]] =
-    maintain(base, kind, batch, "DELETE") { (spark, shared, stores, _) =>
+    maintain(base, kind, batch, "DELETE") {
+        (spark, shared, stores, _, prior) =>
       val ids =
         if (preRouted(shared, stores)) shared.select(col(idCol))
         else shared.select(col(idCol)).distinct().localCheckpoint()
-      rewrite(spark, base, stores.zip(routes(shared, stores)).map {
-          case (st, cells) => (st.name, st.cellCol, cells) },
-        "INDEX … DELETE", "re-running the same DELETE statement " +
-          "completes the rest (deleting already-deleted ids is a no-op)")(
+      rewrite(spark, base, prior, stores.zip(routes(shared, stores)).map {
+          case (st, cells) => (st.name, st.cellCol, cells) })(
         _.join(broadcast(ids), Seq(idCol), "left_anti"))
     }
 
@@ -338,12 +279,14 @@ private[graft] object CellStore {
     * kind's frame prep and stores ([[batchOf]]; a batch with nothing
     * indexable returns no touched cells), then — inside the layout
     * record's maintenance ([[IndexManifest.maintained]]) — materialize
-    * the batch and run `body`, whose reports the record folds in.
+    * the batch and run `body` against the prior record; the next version
+    * folds in its reports.
     */
   private def maintain(base: String, kind: String, batch: DataFrame,
       verb: String)(
-      body: (SparkSession, DataFrame, Seq[CellStore], Int)
-        => Map[String, Landed]): Map[String, Seq[Int]] = {
+      body: (SparkSession, DataFrame, Seq[CellStore], Int,
+        IndexManifest.Record) => Map[String, Landed])
+      : Map[String, Seq[Int]] = {
     val spark = batch.sparkSession
     IndexMaintenance.withMaintLock(spark, base, verb) {
       val meta = MetaParquet.readRow(spark, s"$base/meta")
@@ -352,9 +295,9 @@ private[graft] object CellStore {
         case None => Map.empty
         case Some((frame, stores)) =>
           IndexManifest.maintained(spark, base,
-              storesFor(kind, s"INDEX … $verb at '$base'")) {
+              storesFor(kind, s"INDEX … $verb at '$base'")) { prior =>
             body(spark, frame.localCheckpoint(), stores,
-              meta.getAs[Int]("cells"))
+              meta.getAs[Int]("cells"), prior)
           }.map { case (sub, landed) => sub -> landed.touched }
       }
     }
@@ -443,10 +386,10 @@ private[graft] object CellStore {
     *    through [[Snapshot.read]].
     *  - The window: the files a snapshot names are listed and opened
     *    later — stage 1's while the statement is built, stage 2's when
-    *    it runs. A DELETE or COMPACT that swaps a resolved cell out in
-    *    between leaves a named file missing, and the probe then fails on
-    *    it rather than answer from two versions. There is no retry; a
-    *    commit that never renames a cell closes the window.
+    *    it runs. A DELETE or COMPACT that commits in between deletes the
+    *    files its new version superseded, and a probe that named one
+    *    then fails on it rather than answer from two versions. There is
+    *    no retry; deferring those deletes would close the window.
     */
   private[graft] def snapshot(spark: SparkSession, base: String,
       kind: String, what: String): Snapshot = {
@@ -464,12 +407,20 @@ private[graft] object CellStore {
       val meta: Row, record: Option[IndexManifest.Record]) {
     private val cellCols = storesFor(kind, what).toMap
 
-    /** The data files, or without a record the cell directories, that
-      * hold the `wanted` cells of `store`.
+    /** The data files, or without a record the existing cell
+      * directories, that hold the `wanted` cells of `store`. A cell
+      * directory's existence is probed through the path's own Hadoop
+      * FileSystem, so hdfs:// and s3a:// cells do not read as absent.
       */
     def paths(store: String, wanted: Seq[Int]): Seq[String] =
-      IndexManifest.cellPaths(spark, record, s"$base/$store",
-        cellCols(store), wanted)
+      record match {
+        case Some(r) => r.paths(base, store, wanted)
+        case None =>
+          val root = new Path(base, store)
+          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          wanted.map(c => new Path(root, s"${cellCols(store)}=$c"))
+            .filter(fs.exists).map(_.toString)
+      }
 
     /** The `wanted` cells of `store`, cell column included; None when no
       * file holds them.
@@ -555,154 +506,58 @@ private[graft] object CellStore {
 
   /** COMPACT's rewrite: each (store, cell column, dirty cells) of `base`
     * rewritten back to one file per cell ([[rewrite]] with the
-    * identity). Returns what landed in each store with dirty cells.
+    * identity), the cells' files read from `prior`. Returns what landed
+    * in each store with dirty cells.
     */
-  def compact(spark: SparkSession, base: String,
-      dirty: Seq[(String, String, Seq[Int])]): Map[String, Landed] = {
-    val targets = dirty.filter(_._3.nonEmpty)
-    if (targets.isEmpty) Map.empty
-    else rewrite(spark, base, targets, "INDEX COMPACT",
-      "re-running COMPACT completes the rest (compacting a compacted " +
-        "cell is a no-op)")(identity)
-  }
+  def compact(spark: SparkSession, base: String, prior: IndexManifest.Record,
+      dirty: Seq[(String, String, Seq[Int])]): Map[String, Landed] =
+    rewrite(spark, base, prior, dirty)(identity)
 
   /** Rewrite the listed cells of each (store, cell column, cells) of
-    * `base` in place through `transform` (DELETE's anti-join, COMPACT's
-    * identity), with the swap and rollback of the commit protocol above.
-    * Each store is swept first, so a just-restored cell takes part in
-    * this rewrite. The listed cells that exist are read as explicit
-    * paths and landed cell-partitioned in the store's staging sibling,
-    * `cellWriteParts(cells)` tasks wide, every store's stage in one
-    * [[land]] — a failed stage write leaves every store unchanged. Then
-    * each store's cells swap; a cell whose rows all vanish has no staging
-    * dir and is simply removed. A rollback rename that itself fails is
-    * named in the error with `recovery`. Returns what landed in each
-    * store: the staged files, the rewritten cells and the restored ones.
-    * Callers run it inside [[IndexManifest.maintained]], which has
-    * dropped the layout record.
+    * `base` through `transform` (DELETE's anti-join, COMPACT's
+    * identity). The cells `prior` lists files for are read as those
+    * explicit files and landed cell-partitioned back into the store,
+    * beside them, `cellWriteParts(cells)` tasks wide, every store in one
+    * [[land]]. Returns what landed in each store: the written files and
+    * the rewritten cells, whose prior files the next version drops
+    * ([[IndexManifest.maintained]] deletes them after its commit).
     */
   private def rewrite(spark: SparkSession, base: String,
-      targets: Seq[(String, String, Seq[Int])], what: String,
-      recovery: String)(
+      prior: IndexManifest.Record, targets: Seq[(String, String, Seq[Int])])(
       transform: DataFrame => DataFrame): Map[String, Landed] = {
-    val basePath = new Path(base)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val plans = targets.map { case (sub, cellCol, cells) =>
-      val root = new Path(basePath, sub)
-      val restored = sweepStore(spark, root.toString, cellCol)
-      val touched =
-        cells.distinct.filter(c => fs.exists(new Path(root, s"$cellCol=$c")))
-      Rewrite(sub, cellCol, root, new Path(basePath, s".rewrite_stage_$sub"),
-        restored, touched)
-    }
-    val busy = plans.filter(_.touched.nonEmpty)
-    busy.foreach(p => fs.delete(p.stage, true)) // stale from a crash
-    val staged = surfaced(keep = plans.forall(_.restored.isEmpty))(
-      land(spark, busy.map(p => Leg(p.stage.toString, p.cellCol,
-        transform(MetaParquet.readCells(spark, p.root.toString, p.cellCol,
-          p.touched.map(p.live(_).toString))),
-        cellWriteParts(spark, p.touched.size)))))
-    busy.foreach(swap(fs, _, what, recovery))
-    val files = busy.map(_.sub).zip(staged).toMap
-    plans.map { p =>
-      // a published stage file now sits in its live cell
-      p.sub -> Landed(files.getOrElse(p.sub, Nil).map { case (c, f, n) =>
-        (c, new Path(p.live(c), new Path(f).getName).toString, n) },
-        p.touched, p.restored)
-    }.toMap
-  }
-
-  /** One store's share of a [[rewrite]]. */
-  private final case class Rewrite(sub: String, cellCol: String, root: Path,
-      stage: Path, restored: Seq[Int], touched: Seq[Int]) {
-    def live(c: Int): Path = new Path(root, s"$cellCol=$c")
-    def old(c: Int): Path = new Path(root, s".old_${cellCol}_$c")
-    def staged(c: Int): Path = new Path(stage, s"$cellCol=$c")
-  }
-
-  /** Swap a rewrite's staged cells in (live → `.old_`, stage → live),
-    * rolling every committed cell back on a failed rename, then drop the
-    * `.old_` copies and the stage.
-    */
-  private def swap(fs: FileSystem, p: Rewrite, what: String,
-      recovery: String): Unit = {
-    var committed = List.empty[Int]
-    def rollback(): List[String] = {
-      var unrestored = List.empty[String]
-      for (r <- committed) {
-        val ok =
-          (!fs.exists(p.live(r)) || fs.rename(p.live(r), p.staged(r))) &&
-          (!fs.exists(p.old(r)) || fs.rename(p.old(r), p.live(r)))
-        if (!ok) unrestored ::= p.live(r).toString
-      }
-      unrestored
-    }
-    def fail(cell: Path, unrestored: List[String]): Nothing = {
-      if (unrestored.isEmpty) {
-        fs.delete(p.stage, true)
-        throw new IllegalStateException(
-          s"$what: cannot swap cell $cell — the rewrite was NOT " +
-            "applied (every touched cell was rolled back to its prior " +
-            "rows; the artifact is unchanged)")
-      }
-      throw new IllegalStateException(
-        s"$what: cannot swap cell $cell, and rolling back failed for " +
-          s"[${unrestored.mkString(", ")}] — each of those cells has " +
-          s"its prior rows in a `.old_` sibling under ${p.root}; restore " +
-          s"them by renaming, then $recovery")
-    }
-    for (c <- p.touched) {
-      if (!fs.rename(p.live(c), p.old(c))) fail(p.live(c), rollback())
-      if (fs.exists(p.staged(c)) && !fs.rename(p.staged(c), p.live(c))) {
-        val self = if (fs.rename(p.old(c), p.live(c))) Nil
-                   else List(p.live(c).toString)
-        fail(p.live(c), self ++ rollback())
-      }
-      committed ::= c
-    }
-    for (c <- p.touched) fs.delete(p.old(c), true)
-    fs.delete(p.stage, true)
-    ()
+    val busy = targets.map { case (sub, cellCol, cells) =>
+      (sub, cellCol, cells.distinct.sorted
+        .filter(c => prior.layout.get(sub).exists(_.contains(c))))
+    }.filter(_._3.nonEmpty)
+    val files = land(spark, busy.map { case (sub, cellCol, cells) =>
+      Leg(s"$base/$sub", cellCol,
+        transform(MetaParquet.readCells(spark, s"$base/$sub", cellCol,
+          prior.paths(base, sub, cells))),
+        cellWriteParts(spark, cells.size)) })
+    busy.lazyZip(files).map { case ((sub, _, cells), f) =>
+      sub -> Landed(f, cells) }.toMap
   }
 
   /** One store's write: `rows` landed cell-partitioned on `cellCol`
-    * under `root`, `parts` tasks wide; returns the published (cell,
-    * file, rows).
+    * under `root`, `parts` tasks wide; returns the written (cell, file,
+    * rows).
     */
   private[graft] def writeCells(rows: DataFrame, root: String,
       cellCol: String, parts: Int): Seq[(Int, String, Long)] =
-    surfaced(keep = false)(
-      land(rows.sparkSession, Seq(Leg(root, cellCol, rows, parts)))).head
+    land(rows.sparkSession, Seq(Leg(root, cellCol, rows, parts))).head
 
   /** One store's rows to land under `root`, `parts` tasks wide. */
   private final case class Leg(root: String, cellCol: String,
       rows: DataFrame, parts: Int)
 
-  /** A statement's write failed before it published a file, so the
-    * stores are as they were: [[land]] raises it around the failure.
-    * [[IndexManifest.maintained]] recommits the prior layout record for
-    * it and rethrows the cause; every other caller sees the cause
-    * ([[surfaced]]).
-    */
-  private[transforms] final class Unpublished(cause: Throwable)
-      extends RuntimeException(cause)
-
-  /** `body`, with an [[Unpublished]] failure rethrown as its cause
-    * unless `keep`: a build has no prior record to keep, and a
-    * statement whose sweep restored cells before its write has changed
-    * the stores.
-    */
-  private[transforms] def surfaced[A](keep: Boolean)(body: => A): A =
-    try body catch { case u: Unpublished if !keep => throw u.getCause }
-
-  /** Write every leg's cells concurrently ([[writePending]]) and publish
-    * them only once every leg's write succeeded; returns each leg's
-    * published (cell, file, rows), in order. When a leg fails, nothing
-    * is published: the other legs' pending files are deleted, and so are
-    * the failed leg's (a write job that failed may have finished some
-    * tasks), then the failure is rethrown as [[Unpublished]], the other
-    * legs' failures suppressed. The legs' tasks share one broadcast of
-    * the session's Hadoop conf ([[writeConf]]).
+  /** Write every leg's cells concurrently ([[writeFiles]], one statement
+    * id for all); returns each leg's written (cell, file, rows), in
+    * order. When a leg fails, the statement's files are deleted — the
+    * other legs' by their reports, the failed leg's by the statement id
+    * in their names (a write job that failed may have finished some
+    * tasks) — and the first failure is rethrown, the other legs'
+    * suppressed. The legs' tasks share one broadcast of the session's
+    * Hadoop conf ([[writeConf]]).
     */
   private def land(spark: SparkSession, legs: Seq[Leg])
       : Seq[Seq[(Int, String, Long)]] = {
@@ -711,46 +566,22 @@ private[graft] object CellStore {
     val shipped = writeConf(spark)
     val written =
       try inParallel(legs.map(l => () => Try(
-        writePending(l.rows, l.root, l.cellCol, l.parts, stmt, shipped))))
+        writeFiles(l.rows, l.root, l.cellCol, l.parts, stmt, shipped))))
       finally shipped.destroy()
     if (written.exists(_.isFailure)) {
       legs.zip(written).foreach {
-        case (l, Success(pending)) =>
+        case (l, Success(files)) =>
           val fs = new Path(l.root).getFileSystem(conf)
-          pending.foreach(p => fs.delete(new Path(p.path), false))
+          files.foreach(f => fs.delete(new Path(f._2), false))
         case (l, Failure(_)) =>
           val root = new Path(l.root)
           val fs = root.getFileSystem(conf)
           for ((_, entries) <- listCells(fs, root, l.cellCol);
-              st <- entries if isPending(st) &&
-                st.getPath.getName.contains(stmt))
+              st <- entries if st.getPath.getName.contains(stmt))
             fs.delete(st.getPath, false)
       }
     }
-    // a failure rethrows, cleaned up
-    val pending = try rethrowFirst(written)
-      catch { case NonFatal(e) => throw new Unpublished(e) }
-    legs.zip(pending).map { case (l, p) =>
-      publish(new Path(l.root).getFileSystem(conf), p) }
-  }
-
-  /** Publish a leg's reported files (one rename each), then delete the
-    * unreported pending files left in the cells it touched — a retried
-    * or speculative task attempt's. Returns (cell, file, rows).
-    */
-  private def publish(fs: FileSystem, pending: Seq[Pending])
-      : Seq[(Int, String, Long)] = {
-    val files = pending.map { p =>
-      val from = new Path(p.path)
-      val to = new Path(from.getParent, p.published)
-      if (!fs.rename(from, to)) throw new IllegalStateException(
-        s"cell store write: cannot publish $from as $to")
-      (p.cell, to.toString, p.rows)
-    }
-    for (dir <- pending.map(p => new Path(p.path).getParent).distinct;
-        st <- fs.listStatus(dir) if isPending(st))
-      fs.delete(st.getPath, false)
-    files
+    rethrowFirst(written)
   }
 
   /** The session's Hadoop conf, broadcast for one statement's write
@@ -765,19 +596,21 @@ private[graft] object CellStore {
   /** The task side of a store write: `rows` repartitioned to `parts`
     * tasks on `cellCol` and sorted by cell within each task, which
     * writes one parquet file per cell it holds under
-    * `<root>/<cellCol>=<c>/.pending-part-<task>-<attempt>-<stmt><ext>`.
+    * `<root>/<cellCol>=<c>/part-<task>-<attempt>-<stmt>.c000<ext>`.
     * The files come from Spark's parquet `OutputWriterFactory` prepared
     * as `DataFrameWriter` prepares it, so codec, footer schema and
     * extension match its files; the cell column is left out of the
     * data, as `partitionBy` leaves it. The tasks open their files with
     * `shipped` ([[writeConf]]) plus the few keys that preparation set,
-    * which travel in the closure. Returns each file with its cell, its
-    * published name `part-<task>-<stmt>.c000<ext>` and its rows (≥ 1 —
-    * a task opens a file only for a row).
+    * which travel in the closure. The task's attempt id in the name
+    * keeps a retried or speculative attempt's file apart from the one
+    * reported. Returns each file with its cell and its rows (≥ 1 — a
+    * task opens a file only for a row).
     */
-  private[graft] def writePending(rows: DataFrame, root: String,
+  private[graft] def writeFiles(rows: DataFrame, root: String,
       cellCol: String, parts: Int, stmt: String,
-      shipped: Broadcast[SerializableConfiguration]): Seq[Pending] = {
+      shipped: Broadcast[SerializableConfiguration])
+      : Seq[(Int, String, Long)] = {
     import org.apache.hadoop.mapreduce.Job
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import scala.jdk.CollectionConverters._
@@ -808,7 +641,7 @@ private[graft] object CellStore {
       new TaskAttemptID("cellstore", 0, TaskType.MAP, task, attempt))
   }
 
-  /** One [[writePending]] task over rows (data columns…, cell) sorted by
+  /** One [[writeFiles]] task over rows (data columns…, cell) sorted by
     * cell. A failed attempt closes its open file and deletes every file
     * it wrote.
     */
@@ -816,7 +649,7 @@ private[graft] object CellStore {
       ext: String, dataSchema: StructType, factory: OutputWriterFactory,
       shipped: Broadcast[SerializableConfiguration],
       prepared: Map[String, String])(
-      it: Iterator[InternalRow]): Iterator[Pending] = {
+      it: Iterator[InternalRow]): Iterator[(Int, String, Long)] = {
     import org.apache.spark.TaskContext
     import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
     import org.apache.spark.sql.execution.datasources.OutputWriter
@@ -828,7 +661,7 @@ private[graft] object CellStore {
     val part = f"part-${task.partitionId()}%05d"
     val project = UnsafeProjection.create(dataSchema)
     val cellAt = dataSchema.length
-    val done = Vector.newBuilder[Pending]
+    val done = Vector.newBuilder[(Int, String, Long)]
     val opened = scala.collection.mutable.ArrayBuffer.empty[String]
     var writer: OutputWriter = null
     var cell = 0
@@ -844,7 +677,7 @@ private[graft] object CellStore {
     })
     def close(): Unit = {
       writer.close()
-      done += Pending(cell, writer.path(), s"$part-$stmt$ext", n)
+      done += ((cell, writer.path(), n))
       writer = null
     }
     it.foreach { r =>
@@ -853,8 +686,7 @@ private[graft] object CellStore {
         if (writer != null) close()
         cell = c
         n = 0L
-        val f = s"$root/$cellCol=$c/.pending-$part-" +
-          s"${task.taskAttemptId()}-$stmt$ext"
+        val f = s"$root/$cellCol=$c/$part-${task.taskAttemptId()}-$stmt$ext"
         opened += f
         writer = factory.newInstance(f, dataSchema, attempt)
       }

@@ -114,20 +114,16 @@ private[graft] object IndexMaintenance {
     * fold of a layout — the artifact's record ([[IndexManifest]]) or a
     * recount — into per-cell (files, rows). A routine DESCRIBE folds the
     * record on the driver and runs no job; the [[recount]] job runs only
-    * for `INDEX DESCRIBE … VERIFY`, when the record is absent (DESCRIBE's
-    * fallback, `INDEX MANIFEST`'s snapshot), and for the cells a sweep
-    * restored after a crash, whose rows no writer report holds.
+    * for `INDEX DESCRIBE … VERIFY` and when the record is absent
+    * (DESCRIBE's fallback, the snapshot `INDEX MANIFEST` or a first
+    * mutation takes).
     */
   private[graft] object Stats {
 
     /** Every data file of each store in `stores`, with its rows, in ONE
       * Spark job: the live layout, never the record — the truth that
-      * VERIFY, an absent record and a restored cell all need.
-      * `cells` None reads every cell (the store roots); Some(touched)
-      * reads only each store's listed cells, as EXPLICIT cell paths (the
-      * probes' partition-pruning idiom — never a listing of the whole
-      * store). A store without data files, or without a listed cell
-      * present, has no entry.
+      * VERIFY and an absent record need. A store without data files has
+      * no entry.
       *
       * The scan reads ONLY the cell column, with that schema given (no
       * schema-inference job): row counts come from parquet row-group
@@ -142,29 +138,19 @@ private[graft] object IndexMaintenance {
       * store it is a round-trip storm). Hidden/staged paths are skipped
       * by the reader. Files are FILES WITH ≥ 1 ROW (input_file_name
       * only surfaces for files that yield rows) — a zero-row data file
-      * carries no entries and no probe cost, and is left out; only
-      * COMPACT's own dirty-cell listing, which must see every physical
-      * file, still lists directories.
+      * carries no entries and no probe cost, and is left out.
       */
     def recount(spark: org.apache.spark.sql.SparkSession, dir: String,
-        stores: Seq[(String, String)],
-        cells: Option[Map[String, Seq[Int]]] = None)
-        : IndexManifest.Layout = {
+        stores: Seq[(String, String)]): IndexManifest.Layout = {
       import org.apache.hadoop.fs.Path
       val fs = new Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val scans = stores.zipWithIndex.flatMap { case ((sub, cellCol), i) =>
         val root = s"$dir/$sub"
-        val paths = cells match {
-          case None =>
-            if (fs.exists(new Path(root))) Seq(root) else Seq.empty
-          case Some(t) => IndexManifest.liveCellPaths(spark, root, cellCol,
-            t.getOrElse(sub, Seq.empty).distinct.sorted)
-        }
-        if (paths.isEmpty) None
+        if (!fs.exists(new Path(root))) None
         else Some(spark.read
           .schema(new StructType().add(cellCol, IntegerType))
-          .option("basePath", root).parquet(paths: _*)
+          .option("basePath", root).parquet(root)
           .select(lit(i).as("s"), col(cellCol).as("c"),
             input_file_name().as("f")))
       }
@@ -302,9 +288,10 @@ private[graft] object IndexMaintenance {
     * not an option). Routing reuses each family's own content math
     * (band keys / bucket keys / variant hashes / frozen-centroid
     * assignment — geometry from `meta/`, same option algebra as
-    * APPEND), so ONLY the batch's routed cell directories are
-    * rewritten ([[CellStore.delete]]'s staging + per-cell swap;
-    * untouched cells are never listed or read) and the cost is
+    * APPEND), so ONLY the batch's routed cells are rewritten
+    * ([[CellStore.delete]]: survivors written beside the cells' files,
+    * one layout-record commit; untouched cells are never listed or
+    * read) and the cost is
     * governed by the batch, never the index. LSH/COSINE/TYPO deletes
     * are CONTENT-KEYED like their stores — deleting a text/vector
     * removes its membership however many rows or appends carried it
@@ -513,9 +500,9 @@ private[graft] object IndexMaintenance {
     * round 12 (≈ 5 min at half the cell cap on local[32] — the cost the
     * record replaces with a fold of the mutations' own writer reports).
     * The per-cell collect is bounded by the 65 536-cell cap. Read-only —
-    * no maintenance lock taken: each concurrent cell swap is atomic, so
-    * a racing DESCRIBE sees each cell before or after its rewrite, never
-    * half-written, and a record it reads is a whole version.
+    * no maintenance lock taken: a record it reads is a whole committed
+    * version, and a racing VERIFY sees a mutation's new files beside the
+    * ones it supersedes until their delete.
     */
   final case class IndexDescribeVerb(dir: String,
       verify: Boolean = false) extends Verb {
@@ -582,12 +569,12 @@ private[graft] object IndexMaintenance {
       // Round-12 DESCRIBE cost lesson (SCALING.md): the footer-only
       // recount is measured ∝ cells (exponent 0.93–0.96), so it runs
       // here only as the FALLBACK/VERIFY path; the default folds the
-      // record every mutating statement commits (and every mutation
-      // drops first — absent means recount, never lie). An absent record
-      // WARNs naming the statement that restores it: a writer crashed
-      // between invalidation and commit, a mutation found no record, or
-      // the record was removed. Under VERIFY stats_served is false and
-      // no warning fires — the recount was the explicit ask.
+      // record every mutating statement commits — absent means recount,
+      // never lie. An absent record WARNs naming the statement that
+      // restores it: the artifact predates the record, a build crashed
+      // before its commit, or the record was removed. Under VERIFY
+      // stats_served is false and no warning fires — the recount was the
+      // explicit ask.
       val served = if (verify) None else record
       if (!verify && record.isEmpty)
         Warnings.emit(
@@ -673,13 +660,13 @@ private[graft] object IndexMaintenance {
     * record ([[IndexManifest]]). Every writer commits the record itself
     * (a build `v1`, each mutation the next version), so on a readable
     * record this statement returns it unchanged: no listing, no job, no
-    * new version. When the record is absent — a writer crashed between
-    * invalidation and commit, a mutation found no record, or it was
-    * removed — or malformed, it snapshots the live layout (one recount
-    * job, [[Stats.recount]]) as the next version, after which probes
-    * resolve cells from it again and DESCRIBE is served. Runs under the
+    * new version. When the record is absent — the artifact predates it,
+    * a build crashed before its commit, or it was removed — or
+    * malformed, it snapshots the live layout (one recount job,
+    * [[Stats.recount]]) as the next version, after which probes resolve
+    * cells from it again and DESCRIBE is served. Runs under the
     * single-writer maintenance lock so the snapshot cannot interleave
-    * with a writer's cell swap. Output: (path, kind, version, files).
+    * with a writer's files. Output: (path, kind, version, files).
     */
   final case class IndexManifestVerb(dir: String) extends Verb {
     def build(sources: Map[String, DataFrame], primary: DataFrame)
@@ -772,13 +759,13 @@ private[graft] object IndexMaintenance {
     * Swap: the new artifact is staged COMPLETE as a sibling
     * (`.rebuild_stage_<name>`), then swapped in with two directory
     * renames (live → `.rebuild_old_<name>`, stage → live). Geometry
-    * spans every store plus meta, so unlike DELETE/COMPACT there is no
-    * per-cell consistency to offer mid-swap — instead the artifact is
+    * spans every store plus meta, which the layout record that commits
+    * APPEND/DELETE/COMPACT does not hold — so the artifact is
     * ABSENT between the two renames and a racing probe fails loudly
     * ("no stored index") rather than silently mis-routing against
     * half-swapped geometry. A crash between the renames self-heals: the
     * next REBUILD restores `.rebuild_old_` before starting — UNDER the
-    * lock (round 15), so the sweep cannot race a live statement's swap
+    * lock (round 15), so the self-heal cannot race a live statement's swap
     * and "restore" the doomed old artifact mid-rename; a contender
     * errors naming the holder without touching `.rebuild_old_` (and any
     * maintenance statement in the window reports the artifact missing,
@@ -788,10 +775,10 @@ private[graft] object IndexMaintenance {
     * renames: the swapped-in artifact stays locked for the statement's
     * tail (a racing streaming append fails fast instead of writing
     * into the doomed `.rebuild_old_`), and a crash between the renames
-    * cannot resurrect a stale lock through self-heal. Cells that a
-    * crashed DELETE or COMPACT left in `.old_` siblings are restored
-    * ([[CellStore.sweep]]) before any store is read, so their rows
-    * reach the rebuilt artifact.
+    * cannot resurrect a stale lock through self-heal. Every store is
+    * read from the files the layout record lists (snapshotted first
+    * when the artifact has none), so files a failed statement left are
+    * not rebuilt into the artifact.
     */
   final case class IndexRebuildVerb(dir: String,
       reThreshold: Option[Double] = None,
@@ -808,13 +795,12 @@ private[graft] object IndexMaintenance {
       val parent = dirPath.getParent
       val stage = new Path(parent, s".rebuild_stage_${dirPath.getName}")
       val oldP = new Path(parent, s".rebuild_old_${dirPath.getName}")
-      // The WHOLE statement — crash-recovery sweep included — runs
-      // under the single-writer lock (round 15): a second REBUILD
-      // sweeping while the first held the lock mid-swap would see
+      // The WHOLE statement — crash self-heal included — runs under
+      // the single-writer lock (round 15): a second REBUILD healing
+      // while the first held the lock mid-swap would see
       // live-absent/old-present, "restore" the doomed old artifact
       // between the first's two renames, and make its stage→live
-      // rename fail spuriously. COMPACT already swept under its lock;
-      // REBUILD now matches: a contender errors naming the holder
+      // rename fail spuriously. A contender errors naming the holder
       // WITHOUT having touched `.rebuild_old_` (AqlSpec pins this).
       withMaintLock(spark, dir, "REBUILD") {
         // self-heal a crashed swap: live absent + old present ⇒ the crash
@@ -860,28 +846,23 @@ private[graft] object IndexMaintenance {
         val derivedMinusCells =
           if (reCells.isDefined) derivedSeq.filterNot(_ == "cells")
           else derivedSeq
-        def requireData(sub: String): Unit = {
-          val found = CellStore.listCells(fs, new Path(s"$dir/$sub"),
-              stores.toMap.apply(sub))
-            .exists(_._2.exists(st => MetaParquet.visible(st.getPath.getName)))
-          if (!found) throw TransformError(
+        // every store is read from the record's files: files no version
+        // lists are a failed statement's, and stay out
+        val record = IndexManifest.current(spark, dir, stores)
+        def stored(sub: String): DataFrame = {
+          val cellCol = stores.toMap.apply(sub)
+          val files = record.paths(dir, sub,
+            record.layout.getOrElse(sub, Map.empty).keys.toSeq.sorted)
+          if (files.isEmpty) throw TransformError(
             s"INDEX REBUILD: artifact at $dir has no entries ($sub is " +
               "empty) — APPEND entries first, or rebuild from source " +
               "with INDEX … INTO")
+          MetaParquet.readCells(spark, s"$dir/$sub", cellCol, files)
         }
-        // restore the cells a crashed DELETE or COMPACT swap left in
-        // `.old_` siblings before reading the stores: the reader skips
-        // dot-paths, so those rows would be missing from the rebuilt
-        // artifact, and the old one is deleted after the swap. Restored
-        // rows are absent from any record committed since the crash.
-        if (CellStore.sweep(spark, dir, stores).exists(_.nonEmpty))
-          IndexManifest.invalidate(spark.sparkContext.hadoopConfiguration,
-            dir)
         val (cellsAfter, entries) = {
           val res: (Int, Long) = kind match {
             case "lsh_text" =>
-              requireData("shingles")
-              val sh = MetaParquet.scan(spark, s"$dir/shingles")
+              val sh = stored("shingles")
                 .select(col("id"), col("shs")).localCheckpoint(false)
               val n = sh.count()
               val c = resolveCells(IndexGeometry.storeCells, n)
@@ -916,13 +897,13 @@ private[graft] object IndexMaintenance {
                       "num_bands" -> b, "rows_per_band" -> r,
                       "derived" -> derivedAfter))
                 case None =>
-                  val stored = MetaParquet.scan(spark, s"$dir/bands")
+                  val bands = stored("bands")
                     .select(col("id"), col("band"), col("bh"))
                   val metaBase = MetaParquet.updated(metaRow, "cells" -> c)
                   // a pinned CELLS leaves the derived list; legacy
                   // pre-derived-flag metas are left schema-unchanged
                   // unless the pin demands the column
-                  ((_: DataFrame) => stored,
+                  ((_: DataFrame) => bands,
                     if (reCells.isDefined)
                       MetaParquet.updated(metaBase,
                         "derived" -> derivedMinusCells.mkString(","))
@@ -933,8 +914,7 @@ private[graft] object IndexMaintenance {
               MetaParquet.write(spark, s"$stage/meta", meta)
               (c, n)
             case "typo_text" =>
-              requireData("strings")
-              val strs = MetaParquet.scan(spark, s"$dir/strings")
+              val strs = stored("strings")
                 .select(col("id"), col("txt")).localCheckpoint(false)
               val n = strs.count()
               val c = resolveCells(IndexGeometry.storeCells, n)
@@ -942,8 +922,7 @@ private[graft] object IndexMaintenance {
                 derived = derivedMinusCells)
               (c, n)
             case "cosine_vec" =>
-              requireData("vectors")
-              val vecs = MetaParquet.scan(spark, s"$dir/vectors")
+              val vecs = stored("vectors")
                 .select(col("id"), col("v"), col("nrm"))
                 .localCheckpoint(false)
               val n = vecs.count()
@@ -966,8 +945,7 @@ private[graft] object IndexMaintenance {
                 tb, bi, c, derived = derivedAfter)
               (c, n)
             case "ivf_vec" =>
-              requireData("index")
-              val e = MetaParquet.scan(spark, s"$dir/index")
+              val e = stored("index")
                 .select(col("vec_id"), col("v"), col("nrm"))
                 .localCheckpoint(false)
               val n = e.count()
@@ -1030,24 +1008,22 @@ private[graft] object IndexMaintenance {
     }
   }
 
-  /** One store's COMPACT scan: data files per present cell, where a
-    * cell holding ≥ 2 is dirty — one `listStatus` of the store and one
+  /** One store's COMPACT listing: one `listStatus` of the store and one
     * per cell dir ([[CellStore.listCells]]; metadata ops ∝ cells, no data
-    * read). `.pending-` files a failed writer left in a listed cell are
-    * deleted: COMPACT holds the lock, so no writer is live. Extracted so
-    * [[IndexCompactVerb]] can decide up front whether ANY rewrite is
-    * coming (the idempotent no-op contract: a re-COMPACT with nothing
-    * dirty must leave every byte alone, the layout record included).
+    * read), deleting every file in a cell that `listed` (the store's
+    * cells in the layout record) does not name — a crashed statement's
+    * files, a losing speculative attempt's, or the superseded files a
+    * crash after a commit left. COMPACT holds the lock, so no writer is
+    * live, and no version lists them, so no reader reads them.
     */
-  private def compactScan(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      sub: String, cellCol: String): Map[Int, Long] =
-    CellStore.listCells(fs, new org.apache.hadoop.fs.Path(s"$dir/$sub"),
-        cellCol).map { case (c, entries) =>
-      entries.filter(CellStore.isPending).foreach(st =>
-        fs.delete(st.getPath, false))
-      c -> entries.count(st => MetaParquet.visible(st.getPath.getName))
-        .toLong
-    }.toMap
+  private def reclaim(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      sub: String, cellCol: String,
+      listed: Map[Int, Map[String, Long]]): Unit =
+    for ((c, entries) <- CellStore.listCells(fs,
+          new org.apache.hadoop.fs.Path(s"$dir/$sub"), cellCol);
+        st <- entries if st.isFile && !listed.getOrElse(c, Map.empty)
+          .contains(s"$sub/$cellCol=$c/${st.getPath.getName}"))
+      fs.delete(st.getPath, false)
 
   /** INDEX COMPACT '<dir>' — rewrite MULTI-FILE cells of a stored
     * artifact back to one file per cell. Every `INDEX … APPEND`
@@ -1057,34 +1033,28 @@ private[graft] object IndexMaintenance {
     * COMPACT is the maintenance statement that caps that growth — run
     * it on whatever cadence appends accumulate (the small-file
     * compaction every warehouse format schedules, as an explicit
-    * language operator). Cells already holding ≤ 1 data file are
-    * NEVER listed into the rewrite, read, or touched — so compaction
-    * cost is ∝ the cells appends actually dirtied since the last
-    * COMPACT, not the artifact size (at 100 TB a full-artifact rewrite
-    * per invocation would be a corpus-sized job; the AqlSpec case pins
-    * the skip by running COMPACT twice — the second pass rewrites
-    * nothing and every file path survives byte-identical). Rows, cells
-    * and `meta/` are untouched — probe answers are IDENTICAL before
-    * and after (q158 pins this bit-for-bit on the oracle of the
+    * language operator). Dirty cells (two or more files) and the file
+    * counts come from the layout record, snapshotted first when the
+    * artifact has none. Cells already holding ≤ 1 data file are NEVER
+    * read or rewritten — so compaction cost is ∝ the cells appends
+    * actually dirtied since the last COMPACT, not the artifact size (at
+    * 100 TB a full-artifact rewrite per invocation would be a
+    * corpus-sized job; the AqlSpec case pins the skip by running
+    * COMPACT twice — the second pass rewrites nothing, commits no
+    * version, and every file path survives byte-identical). Rows,
+    * cells and `meta/` are untouched — probe answers are IDENTICAL
+    * before and after (q158 pins this bit-for-bit on the oracle of the
     * build→append→probe chain; the AqlSpec case additionally pins
     * files_after < files_before after a double append). Dirty cells
-    * are rewritten through [[CellStore.rewrite]]'s staging + per-cell
-    * swap (DELETE's machinery with an identity transform), every
-    * store's stage written concurrently — atomic per cell on
-    * HDFS/posix; object-store schemes without
-    * atomic rename are REFUSED up front ([[requireAtomicRenameFs]]).
-    * The layout record is maintained like APPEND/DELETE's: the dirty
-    * set IS the touched set, so only the rewritten cells change in the
-    * record, taken from the rewrite's own reports
-    * ([[IndexManifest.merge]], no job), and the whole statement —
-    * listing, rewrite, AND record commit — is ∝ the cells appends
-    * dirtied. An absent record stays absent (`INDEX MANIFEST` restores
-    * it).
-    * A crash mid-swap leaves `.old_…`
-    * cells intact and re-running COMPACT completes the rest. The
-    * block's input frame is ignored (the artifact is the operand);
-    * output is a one-row summary (path, kind, files_before,
-    * files_after).
+    * are rewritten through [[CellStore.compact]] (DELETE's rewrite with
+    * an identity transform) inside [[IndexManifest.maintained]]: every
+    * store's cells written concurrently beside their files, one commit
+    * of the next record version, then the superseded files deleted.
+    * Before that, COMPACT lists every cell directory once and reclaims
+    * the files no version lists ([[reclaim]]). The block's input frame
+    * is ignored (the artifact is the operand); output is a one-row
+    * summary (path, kind, files_before, files_after), the record's file
+    * counts.
     */
   final case class IndexCompactVerb(dir: String) extends Verb {
     def build(sources: Map[String, DataFrame], primary: DataFrame)
@@ -1094,43 +1064,28 @@ private[graft] object IndexMaintenance {
       val spark = primary.sparkSession
       val fs = new Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (metaRow, kind, stores) = storedIndexLayout(spark, dir,
-        "INDEX COMPACT")
-      val _ = metaRow // COMPACT needs only the layout
+      val (_, kind, stores) = storedIndexLayout(spark, dir, "INDEX COMPACT")
       val (before, after) = withMaintLock(spark, dir, "COMPACT") {
-        // phase 1, SERIAL: sweep crashed cells, then list dirty cells
-        // (cheap metadata ops). Sweeping FIRST matters: a restored cell
-        // takes part in this COMPACT's own dirty listing, and the record
-        // refresh recounts it. Serial because the sweep and listing
-        // decide whether anything is rewritten at all — an idempotent
-        // re-COMPACT must stay a byte-stable no-op, layout record
-        // included, so the record is dropped and recommitted only when
-        // a rewrite is coming.
-        val restored = CellStore.sweep(spark, dir, stores)
-        val scans = stores.map { case (sub, cellCol) =>
-          (sub, cellCol, compactScan(fs, dir, sub, cellCol)) }
-        val dirty = scans.map { case (sub, cellCol, files) =>
-          (sub, cellCol, files.collect { case (c, n) if n > 1 => c }
-            .toSeq.sorted) }
-        // phase 2: the dirty cells' rewrites, every store's stage in one
-        // concurrent write; a dirty cell's files become its report's,
-        // folded into the prior record ∝ the dirtied cells, with no job
-        val landed =
-          if (restored.forall(_.isEmpty) && dirty.forall(_._3.isEmpty))
-            Map.empty[String, CellStore.Landed]
-          else IndexManifest.maintained(spark, dir, stores) {
-            val compacted = CellStore.surfaced(
-              keep = restored.forall(_.isEmpty))(
-              CellStore.compact(spark, dir, dirty))
-            stores.lazyZip(restored).map { case ((sub, _), r) =>
-              sub -> compacted.getOrElse(sub, CellStore.Landed())
-                .copy(restored = r) }.toMap
-          }
-        scans.map { case (sub, _, files) =>
-          val l = landed.getOrElse(sub, CellStore.Landed())
-          val n = files.values.sum
-          (n, n - l.rewritten.map(files.getOrElse(_, 0L)).sum + l.files.size)
-        }.foldLeft((0L, 0L)) { case ((b, a), (nb, na)) => (b + nb, a + na) }
+        // serial: reclaim, then decide from the record whether anything
+        // is rewritten at all — an idempotent re-COMPACT must stay a
+        // byte-stable no-op, layout record included
+        val prior = IndexManifest.current(spark, dir, stores)
+        val dirty = stores.map { case (sub, cellCol) =>
+          val cells = prior.layout.getOrElse(sub, Map.empty)
+          reclaim(fs, dir, sub, cellCol, cells)
+          (sub, cellCol,
+            cells.collect { case (c, files) if files.size > 1 => c }
+              .toSeq.sorted)
+        }.filter(_._3.nonEmpty)
+        if (dirty.isEmpty) (prior.files, prior.files)
+        else {
+          val landed = IndexManifest.maintained(spark, dir, stores)(
+            CellStore.compact(spark, dir, _, dirty))
+          val dropped = for ((sub, l) <- landed.toSeq; c <- l.rewritten)
+            yield prior.layout(sub)(c).size.toLong
+          (prior.files, prior.files - dropped.sum +
+            landed.values.map(_.files.size.toLong).sum)
+        }
       }
       import spark.implicits._
       Seq((dir, kind, before, after))
@@ -1141,11 +1096,12 @@ private[graft] object IndexMaintenance {
   /** Schemes with no atomic rename / create-exclusive contract. The
     * maintenance statements' correctness rests on BOTH: the
     * single-writer `.maint_lock` is an atomic create (or hard link),
-    * and every cell/artifact swap is a rename that a racing probe sees
-    * entirely or not at all. On S3-style stores neither holds —
-    * "rename" is copy+delete and create is last-writer-wins — so two
-    * concurrent writers could silently interleave and a probe could
-    * read a half-copied cell. Refusing with a clear contract statement
+    * and each commit — a layout-record version, or REBUILD's artifact
+    * swap — is a rename that a racing probe sees entirely or not at
+    * all. On S3-style stores neither holds — "rename" is copy+delete
+    * and create is last-writer-wins — so two concurrent writers could
+    * silently interleave and a probe could read a half-copied record.
+    * Refusing with a clear contract statement
     * beats undefined behavior a user only discovers as corruption.
     * Probes and DESCRIBE stay scheme-agnostic: they are read-only.
     */
@@ -1162,8 +1118,9 @@ private[graft] object IndexMaintenance {
       s"$what: stored-index MAINTENANCE requires atomic-rename storage " +
         s"(HDFS/posix) and $dir is on '$scheme', where rename is " +
         "copy+delete and create is last-writer-wins — the single-writer " +
-        "lock and the per-cell swap cannot hold. Keep maintained " +
-        "artifacts on HDFS-like storage, or rebuild from source with " +
+        "lock and the layout record's commit rename cannot hold. Keep " +
+        "maintained artifacts on HDFS-like storage, or rebuild from " +
+        "source with " +
         "INDEX … INTO (a plain overwrite) in a scheduled maintenance " +
         "window and copy the finished artifact out")
   }
@@ -1238,7 +1195,7 @@ private[graft] object IndexMaintenance {
     * operator discipline; before that, a streaming appender racing
     * REBUILD's two-rename swap could land a microbatch in the doomed
     * `.rebuild_old_` directory and silently lose it). Two concurrent
-    * writers interleaving their cell writes or rename swaps on one
+    * writers interleaving their file writes and record commits on one
     * artifact is undefined, so each acquires the artifact's lock
     * first — an atomic create-if-absent (create-exclusive on HDFS-like
     * schemes; on local filesystems a pre-populated hard link, since
@@ -1251,11 +1208,11 @@ private[graft] object IndexMaintenance {
     * per microbatch on the streaming path). Contention is a clear
     * error naming the holder, not a corrupted artifact. The lock
     * guards WRITERS against each other only: probes stay lock-free —
-    * each cell swap is atomic, so a probe racing maintenance sees each
-    * cell either before or after its rewrite (never half-written), but
-    * may see a MIX of old and new cells across one scan; deployments
-    * that need a fully consistent view schedule probes around
-    * maintenance windows. A crashed maintenance job leaves the lock
+    * a probe reads one committed version of the layout record, so it
+    * sees every cell before or after a mutation, never a mix; a
+    * mutation that commits while the probe runs may delete a file the
+    * probe named, and the probe then fails rather than answer from two
+    * versions. A crashed maintenance job leaves the lock
     * behind by design — the error tells the operator to verify no job
     * is running and remove it (a TTL that silently self-expired
     * mid-job would be worse than the ask).
@@ -1543,14 +1500,13 @@ private[graft] object IndexMaintenance {
       // the summary row's entry count is folded from the layout record
       // every writer commits from its own file reports (a build's v1,
       // a mutation's next version) — a driver-side read, no Spark job.
-      // A mutation that found no record left none, and this statement
-      // snapshots it (one recount job, under the same lock), so a verb
-      // APPEND or DELETE restores the record-served path.
+      // Only a batch with nothing indexable against an artifact without
+      // a record leaves none: the record is snapshotted then, under the
+      // same lock.
       def writeAndCount(): (String, Int, Long) = {
         val (kind, entriesPath, cellCount, _) = writeStores()
-        val stores = CellStore.storesFor(kind, s"INDEX INTO '$dir'")
-        val record = IndexManifest.read(spark, dir)
-          .getOrElse(IndexManifest.snapshot(spark, dir, stores))
+        val record = IndexManifest.current(spark, dir,
+          CellStore.storesFor(kind, s"INDEX INTO '$dir'"))
         val entriesSub =
           new org.apache.hadoop.fs.Path(entriesPath).getName
         val n = record.layout.getOrElse(entriesSub, Map.empty)

@@ -10,12 +10,13 @@ import CellStore.Landed
 
 /** The layout record of a stored index: which data files each cell of
   * each store holds, with each file's row count. It is the artifact's
-  * one derived copy of its own layout. Probes resolve their routed cells
-  * from it, one read per statement ([[CellStore.snapshot]]), DESCRIBE
-  * folds its per-cell (files, rows) from it
-  * ([[IndexMaintenance.Stats.fold]]), and every writer commits it from
-  * the cell-store writer's file reports ([[CellStore.Landed]]), so no
-  * job re-reads a store to learn what it holds.
+  * commit: a data file is part of the index exactly when the current
+  * version lists it. Probes resolve their routed cells from it, one read
+  * per statement ([[CellStore.snapshot]]), DESCRIBE folds its per-cell
+  * (files, rows) from it ([[IndexMaintenance.Stats.fold]]), and every
+  * writer commits it from the cell-store writer's file reports
+  * ([[CellStore.Landed]]), so no job re-reads a store to learn what it
+  * holds.
   *
   * Layout: `<dir>/manifest/v<0-padded version>.txt`, one UTF-8 text
   * object per committed version. Line 1 is the format header
@@ -28,34 +29,34 @@ import CellStore.Landed
   * A file headed `graft-index-manifest 1` (paths without rows) reads as
   * absent; any other header is an error.
   *
-  * Consistency contract:
-  *  - ABSENT, NEVER STALE. Every mutation drops the record
-  *    ([[invalidate]]) before it touches a row. A writer that dies
-  *    mid-statement leaves it absent; probes then resolve cells from the
-  *    live directory layout and DESCRIBE recounts, both honest.
-  *  - MAINTAINED. A build and a REBUILD stage commit `v1` from their
-  *    reports. APPEND, DELETE and COMPACT read the prior record under
-  *    the artifact's single-writer lock, drop it, mutate, and commit the
-  *    prior folded with their reports as the next version ([[merge]]):
-  *    rewritten cells take their new files, published files join their
-  *    cells, untouched cells carry over. Only cells a sweep restored
-  *    after a crash are recounted ([[IndexMaintenance.Stats.recount]]),
-  *    as no report holds their rows. A mutation that found no record
-  *    leaves none.
-  *  - RECOVERED by `INDEX MANIFEST '<dir>'`: on an absent or malformed
-  *    record it snapshots the live layout (one recount job) as the next
-  *    version; on a readable record it is a no-op.
+  * Consistency contract — the record is the commit:
+  *  - A build and a REBUILD stage commit `v1` from their reports after
+  *    dropping every older version ([[invalidate]]).
+  *  - APPEND, DELETE and COMPACT run inside [[maintained]], under the
+  *    artifact's single-writer lock: the prior record is never dropped,
+  *    the statement adds files beside the listed ones, and the prior
+  *    folded with its reports ([[merge]]) is committed as the next
+  *    version. Only then are the prior version and the files of the
+  *    cells it rewrote deleted. A statement that fails before its
+  *    commit leaves the prior version current, and its files, listed by
+  *    no version, are ignored by every reader (COMPACT reclaims any a
+  *    crash left).
+  *  - An artifact without a record gets one before its first mutation
+  *    ([[snapshot]] of the live layout, one recount job); until then its
+  *    probes read the live layout. `INDEX MANIFEST '<dir>'` takes the same
+  *    snapshot on an absent or malformed record, and is a no-op on a
+  *    readable one.
   *  - WHOLE. A version is written complete to a temporary name and
   *    committed with one rename, so a racing reader sees the previous
   *    version or the new one, never a truncated list (a half-read
   *    record would silently drop candidate files).
   *  - REBUILD needs no special case: the record lives inside the
-  *    artifact, so the swap carries the stage's `v1` in.
+  *    artifact, so its whole-artifact swap carries the stage's `v1` in.
   *
   * On object stores the record is the whole plan: S3-style stores have
-  * no atomic rename for data directories, but a one-object record
-  * commits with a conditional put. The read side is already
-  * scheme-agnostic; the write side still commits by rename.
+  * no atomic rename, but a one-object record commits with a conditional
+  * put. The read side is already scheme-agnostic; the write side still
+  * commits by rename.
   */
 object IndexManifest {
 
@@ -70,6 +71,17 @@ object IndexManifest {
   final case class Record(version: Long, layout: Layout) {
     def files: Long =
       layout.valuesIterator.flatMap(_.valuesIterator).map(_.size.toLong).sum
+
+    /** The data files of the `wanted` cells of `store`, as paths under
+      * the artifact at `base`; cells without a file are skipped.
+      */
+    def paths(base: String, store: String, wanted: Iterable[Int])
+        : Seq[String] = {
+      val cells = layout.getOrElse(store, Map.empty)
+      wanted.toSeq
+        .flatMap(c => cells.getOrElse(c, Map.empty).keys.toSeq.sorted)
+        .map(rel => new Path(base, rel).toString)
+    }
   }
 
   /** A present record that does not parse: external interference with a
@@ -106,13 +118,11 @@ object IndexManifest {
   private def fsOf(spark: SparkSession, base: String): FileSystem =
     new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Drop every committed version — the first step of every
-    * row-writing mutation, so the record can be absent but never stale.
-    * Versions are deleted NEWEST-first, so a lock-free reader racing the
-    * sweep can only land on an older committed version (still a
-    * consistent snapshot of a pre-mutation layout). Deliberately not
-    * swallowed: mutating after a failed invalidation would leave a
-    * stale record, which is worse than failing the mutation.
+  /** Drop every committed version — the first step of a build, which
+    * overwrites every store. Versions are deleted NEWEST-first, so a
+    * lock-free reader racing the drop can only land on an older
+    * committed version. Deliberately not swallowed: overwriting the
+    * stores under a surviving record would leave it stale.
     */
   def invalidate(conf: Configuration, base: String): Unit = {
     val d = manifestDir(base)
@@ -136,25 +146,34 @@ object IndexManifest {
       .sortBy(_._1)
   }
 
-  /** The current record, or None when none is committed (or the current
-    * version is rowless) — probes then fall back to the live layout.
-    * A read racing an invalidation (the version file vanishing between
-    * the listing and the open) resolves to None: the mutation won. A
-    * present but malformed record throws [[Malformed]].
+  private def versionPath(base: String, version: Long): Path =
+    new Path(manifestDir(base), f"v$version%016d.txt")
+
+  /** The current record, or None when no version is committed (or the
+    * current one is rowless) — probes then fall back to the live layout.
+    * A version file that vanishes between the listing and the open was
+    * superseded by a newer commit, which deleted it: the directory is
+    * listed again. A present but malformed record throws [[Malformed]].
     */
-  def read(spark: SparkSession, base: String): Option[Record] = try {
+  @scala.annotation.tailrec
+  def read(spark: SparkSession, base: String): Option[Record] = {
     val fs = fsOf(spark, base)
-    versions(fs, base).lastOption.flatMap { case (v, st) =>
-      val key = (fs.makeQualified(st.getPath).toString,
-        st.getModificationTime, st.getLen)
-      val cached = parseCache.synchronized(Option(parseCache.get(key)))
-      cached.getOrElse {
-        val parsed = parse(fs, base, v, st.getPath)
-        parseCache.synchronized(parseCache.put(key, parsed))
-        parsed
-      }.map(Record(v, _))
+    val current = try Right(versions(fs, base).lastOption.flatMap {
+        case (v, st) =>
+          val key = (fs.makeQualified(st.getPath).toString,
+            st.getModificationTime, st.getLen)
+          val cached = parseCache.synchronized(Option(parseCache.get(key)))
+          cached.getOrElse {
+            val parsed = parse(fs, base, v, st.getPath)
+            parseCache.synchronized(parseCache.put(key, parsed))
+            parsed
+          }.map(Record(v, _))
+      }) catch { case e: java.io.FileNotFoundException => Left(e) }
+    current match {
+      case Right(record) => record
+      case Left(_) => read(spark, base)
     }
-  } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   private def parse(fs: FileSystem, base: String, v: Long, p: Path)
       : Option[Layout] = {
@@ -190,37 +209,6 @@ object IndexManifest {
     }
   }
 
-  /** The `wanted` cells of the store at `root` as explicit paths, from
-    * one probe statement's record ([[CellStore.snapshot]]): the cells'
-    * data FILES, with no per-cell existence check and no footer-discovery
-    * listing. Without a record, the live layout ([[liveCellPaths]]).
-    * Cells with no files are skipped.
-    */
-  private[transforms] def cellPaths(spark: SparkSession,
-      record: Option[Record], root: String, pcol: String,
-      wanted: Seq[Int]): Seq[String] = record match {
-    case Some(r) =>
-      val rootPath = new Path(root)
-      val cells = r.layout.getOrElse(rootPath.getName, Map.empty)
-      wanted.flatMap(c => cells.getOrElse(c, Map.empty).keys.toSeq.sorted)
-        .map(rel => new Path(rootPath.getParent, rel).toString)
-    case None => liveCellPaths(spark, root, pcol, wanted)
-  }
-
-  /** The `wanted` cell directories of the store at `root` that exist,
-    * one existence probe each, through the path's OWN Hadoop
-    * FileSystem — java.io.File would report every hdfs://… or s3a://…
-    * cell absent, and a probe would match nothing on exactly the
-    * distributed deployments the artifacts exist for.
-    */
-  private[transforms] def liveCellPaths(spark: SparkSession, root: String,
-      pcol: String, wanted: Seq[Int]): Seq[String] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    wanted.map(c => new Path(rootPath, s"$pcol=$c"))
-      .filter(fs.exists).map(_.toString)
-  }
-
   /** A data file's key in a record line: its path relative to the
     * artifact.
     */
@@ -230,18 +218,12 @@ object IndexManifest {
 
   /** `prior` with one statement's reports folded in, per (store, cell
     * column) of `stores`: a rewritten cell's prior files are gone, each
-    * published file joins its cell, untouched cells carry over because
-    * the statement never opened their files. Cells a sweep restored and
-    * the statement did not rewrite are recounted from the live layout:
-    * no report holds their rows. A build folds into an empty prior.
+    * written file joins its cell, untouched cells carry over because
+    * the statement never opened their files. A build folds into an
+    * empty prior.
     */
-  def merge(spark: SparkSession, base: String, stores: Seq[(String, String)],
-      prior: Layout, landed: Map[String, Landed]): Layout = {
-    val restored = landed.map { case (sub, l) =>
-      sub -> l.restored.filterNot(l.rewritten.contains) }.filter(_._2.nonEmpty)
-    val recounted =
-      if (restored.isEmpty) Map.empty[String, Map[Int, Map[String, Long]]]
-      else IndexMaintenance.Stats.recount(spark, base, stores, Some(restored))
+  def merge(stores: Seq[(String, String)], prior: Layout,
+      landed: Map[String, Landed]): Layout =
     stores.map { case (sub, pcol) =>
       val l = landed.getOrElse(sub, Landed())
       val kept = prior.getOrElse(sub, Map.empty) -- l.rewritten
@@ -249,52 +231,80 @@ object IndexManifest {
         c -> (kept.getOrElse(c, Map.empty) ++ fs.map { case (_, f, n) =>
           relPath(sub, pcol, c, new Path(f)) -> n })
       }
-      sub -> ((kept ++ added) -- restored.getOrElse(sub, Nil) ++
-        recounted.getOrElse(sub, Map.empty))
+      sub -> (kept ++ added)
     }.filter(_._2.nonEmpty).toMap
-  }
 
-  /** A mutation wrapped in the record's maintenance: read the prior
-    * record, drop it, run `mutate`, and — when a prior existed — commit
-    * the prior folded with the mutation's reports as the next version.
-    * Callers hold the artifact's maintenance lock, so the prior is exact
-    * and the read → mutate → commit sequence cannot interleave with
-    * another writer. A malformed prior stops the writer before it
-    * touches a row. A mutation that fails before it published a file
-    * ([[CellStore.Unpublished]]) left the stores as the prior describes
-    * them: the prior is recommitted as the next version and the cause
-    * rethrown (a failed recommit is suppressed on it, and the record
-    * stays absent). Returns the mutation's reports.
+  /** The current record of the artifact at `base`, snapshotted from the
+    * live layout of `stores` first when it has none. Caller holds the
+    * maintenance lock.
+    */
+  def current(spark: SparkSession, base: String,
+      stores: Seq[(String, String)]): Record =
+    read(spark, base).getOrElse(snapshot(spark, base, stores))
+
+  /** A mutation committed through the record: `mutate` gets the prior
+    * ([[current]]) and writes its files beside the ones it lists; the
+    * prior folded with its reports is committed as the next version;
+    * then the prior version and the prior files of the cells it
+    * rewrote are deleted (a rewritten cell left without a file is
+    * deleted whole), found from the two records with no listing.
+    * Callers hold the artifact's maintenance lock, so the prior is
+    * exact and the read → mutate → commit sequence cannot interleave
+    * with another writer. A malformed prior stops the writer before it
+    * touches a row. A failed mutation or commit leaves the prior
+    * current: a failed commit deletes the statement's reported files
+    * (best effort) and rethrows. Returns the mutation's reports.
     */
   def maintained(spark: SparkSession, base: String,
       stores: Seq[(String, String)])(
-      mutate: => Map[String, Landed]): Map[String, Landed] = {
-    val prior = read(spark, base)
-    invalidate(spark.sparkContext.hadoopConfiguration, base)
-    val landed = try mutate catch {
-      case u: CellStore.Unpublished =>
-        val cause = u.getCause
-        prior.foreach { p =>
-          try commit(spark, base, p.version + 1, p.layout)
-          catch { case NonFatal(e) => cause.addSuppressed(e) }
-        }
-        throw cause
+      mutate: Record => Map[String, Landed]): Map[String, Landed] = {
+    val prior = current(spark, base, stores)
+    val landed = mutate(prior)
+    val fs = fsOf(spark, base)
+    try commit(spark, base, prior.version + 1,
+      merge(stores, prior.layout, landed))
+    catch { case NonFatal(e) =>
+      for (l <- landed.values; (_, f, _) <- l.files)
+        try fs.delete(new Path(f), false)
+        catch { case NonFatal(d) => e.addSuppressed(d) }
+      throw e
     }
-    prior.foreach(p =>
-      commit(spark, base, p.version + 1,
-        merge(spark, base, stores, p.layout, landed)))
+    fs.delete(versionPath(base, prior.version), false)
+    for ((sub, pcol) <- stores; l <- landed.get(sub).toSeq;
+        c <- l.rewritten) {
+      val gone = prior.layout.getOrElse(sub, Map.empty)
+        .getOrElse(c, Map.empty).keys
+      if (l.files.exists(_._1 == c))
+        gone.foreach(rel => fs.delete(new Path(base, rel), false))
+      else fs.delete(new Path(base, s"$sub/$pcol=$c"), true)
+    }
     landed
   }
 
   /** Snapshot the live layout of `stores` ([[IndexMaintenance.Stats.recount]],
     * one job) as the next version: `INDEX MANIFEST`'s recovery of an
-    * absent or malformed record, and a verb APPEND's or DELETE's when it
-    * found none. Caller holds the maintenance lock.
+    * absent or malformed record, and the prior of a mutation that found
+    * none ([[current]]). Caller holds the maintenance lock. Refused
+    * while a store holds a `.old_<col>_<cell>` directory, which a cell
+    * swap of an earlier version of this writer left when it crashed:
+    * such a directory may be the only copy of its cell's rows, and the
+    * live layout leaves it out.
     */
   def snapshot(spark: SparkSession, base: String,
       stores: Seq[(String, String)]): Record = {
-    val next = versions(fsOf(spark, base), base).lastOption
-      .map(_._1 + 1).getOrElse(1L)
+    val fs = fsOf(spark, base)
+    val moved = for ((sub, pcol) <- stores;
+        root = new Path(base, sub) if fs.exists(root);
+        st <- fs.listStatus(root)
+          if st.getPath.getName.startsWith(s".old_${pcol}_"))
+      yield st.getPath
+    if (moved.nonEmpty) throw new IllegalStateException(
+      s"stored index at $base holds cells a crashed cell swap moved " +
+        s"aside: ${moved.mkString(", ")} — for each `.old_<col>_<c>`, " +
+        "rename it back to `<col>=<c>` when that cell directory is " +
+        "absent (it holds the cell's only copy), else delete it (its " +
+        "swap finished), then re-run the statement")
+    val next = versions(fs, base).lastOption.map(_._1 + 1).getOrElse(1L)
     commit(spark, base, next,
       IndexMaintenance.Stats.recount(spark, base, stores))
   }
@@ -314,7 +324,7 @@ object IndexManifest {
     try out.write(
       (Header +: lines).mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
-    val target = new Path(d, f"v$version%016d.txt")
+    val target = versionPath(base, version)
     if (!fs.rename(tmp, target)) {
       fs.delete(tmp, false)
       throw new IllegalStateException(

@@ -545,9 +545,8 @@ object NearDup {
     * collapse to distinct texts first, as the INDEX verb does.
     *
     * This is the path a streaming ingest job calls per microbatch; it
-    * commits through [[CellStore.append]] (single-writer lock, crashed
-    * cells restored first, layout record maintained). Returns the
-    * store → touched-cells routing.
+    * commits through [[CellStore.append]] (single-writer lock, one
+    * layout-record commit). Returns the store → touched-cells routing.
     */
   def bandStoreAppend(base: String, shC: DataFrame)
       : Map[String, Seq[Int]] =

@@ -1830,9 +1830,8 @@ class AqlSpec extends AnyFunSuite {
       val m = locked(b)
       assert(m.contains("single-writer") && m.contains("test-holder"), m)
     }
-    // …while probes are lock-free by contract (per-cell swaps are
-    // atomic; a probe racing maintenance sees each cell before or
-    // after, never half-written)
+    // …while probes are lock-free by contract (a probe reads one
+    // committed version of the layout record)
     val kept = Aql.run(spark,
       s"""DATA 'B' ([[10, "the quick brown fox jumps over the lazy dog"]])
          |  WITH (COLUMNS = 'Id, Txt')
@@ -2206,125 +2205,116 @@ class AqlSpec extends AnyFunSuite {
     assert(m.contains("no stored index"), m)
   }
 
-  test("INDEX maintenance crash recovery: the rewrite sweep restores a " +
-      "crashed cell's prior rows and reaps stale .old_ dirs") {
+  test("INDEX maintenance crash recovery: files no layout record version " +
+      "lists stay out of probes and served DESCRIBE, show in VERIFY, and " +
+      "COMPACT reclaims them") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_aqlspec_crash")
     graft.queries.Advanced.registerTmpDir(dir)
+    val docs = (0L until 40L).map(i => (i,
+      s"crash recovery document $i alpha beta gamma delta epsilon zeta"))
+    val stray = (900L, "a stray sentence whose statement never committed")
     val docsPq = dir.resolve("docs.parquet").toString
-    spark.range(40)
-      .selectExpr("id", "concat('crash recovery document ', id, " +
-        "' alpha beta gamma delta epsilon zeta') AS txt")
-      .write.parquet(docsPq)
+    docs.toDF("id", "txt").write.parquet(docsPq)
+    val strayPq = dir.resolve("stray.parquet").toString
+    Seq(stray).toDF("id", "txt").write.parquet(strayPq)
+    val probePq = dir.resolve("probe.parquet").toString
+    (docs :+ stray).toDF("id", "txt").write.parquet(probePq)
     val idx = dir.resolve("lsh").toString
-    Aql.run(spark,
-      s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$docsPq',
+    def onFile(pq: String, body: String) = Aql.run(spark,
+      s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$pq',
          |  FORMAT = 'parquet')
          |TRANSFORM 'T' FROM CONNECTION D (
-         |  INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 INTO '$idx'
-         |) INTO CONSOLE""".stripMargin)
-    // simulate a swap that crashed between its two renames: one live
-    // cell staged out (live ABSENT, .old_ holds the only copy of its
-    // rows) — plus a stale .old_ whose swap completed (live present)
-    val bands = java.nio.file.Paths.get(idx, "bands")
-    val cells = java.nio.file.Files.list(bands).iterator()
-    val live = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    while (cells.hasNext) {
-      val p = cells.next()
-      if (p.getFileName.toString.startsWith("pc=")) live += p
+         |  $body
+         |) INTO CONSOLE""".stripMargin).outputs("T").collect()
+    def kept(): Set[Long] = onFile(probePq, s"NEARDEDUP D AGAINST STORED " +
+      s"'$idx' ON txt KEY id THRESHOLD 0.5 METHOD LSH").map(_.getLong(0)).toSet
+    // modulo stats_served — served vs VERIFY differ there by design
+    def describeRows(verify: Boolean): Seq[String] = onFile(docsPq,
+        s"INDEX DESCRIBE '$idx'${if (verify) " VERIFY" else ""}")
+      .map(r => r.schema.fieldNames.filterNot(_ == "stats_served")
+        .map(f => r.getAs[Any](f)).mkString(",")).sorted.toSeq
+    def entries(verify: Boolean): Long = onFile(docsPq,
+        s"INDEX DESCRIBE '$idx'${if (verify) " VERIFY" else ""}")
+      .find(_.getAs[String]("store") == "shingles").get.getAs[Long]("entries")
+    val stores = Seq("bands" -> "pc", "shingles" -> "sc")
+    def exact(): Unit = {
+      assert(describeRows(false) == describeRows(true))
+      assert(graft.transforms.IndexManifest.read(spark, idx).map(_.layout)
+        .contains(graft.transforms.IndexMaintenance.Stats.recount(spark,
+          idx, stores)))
     }
-    assert(live.size >= 3, s"need >= 3 cells, got ${live.size}")
-    val crashed = live.head
-    val crashedCell = crashed.getFileName.toString.stripPrefix("pc=")
-    java.nio.file.Files.move(crashed,
-      bands.resolve(s".old_pc_$crashedCell")) // crash: live gone
-    val staleCell = live(1).getFileName.toString.stripPrefix("pc=")
-    val stale = bands.resolve(s".old_pc_$staleCell")
-    java.nio.file.Files.createDirectory(stale) // stale: live present
-    java.nio.file.Files.writeString(stale.resolve("junk"), "x")
-    // any rewrite of the store runs the sweep first: DELETE one doc
+    /** The data files under the stores of the index at `root`. */
+    def files(root: String): Seq[java.nio.file.Path] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.filter(p =>
+          java.nio.file.Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet") &&
+          !p.getFileName.toString.startsWith(".") &&
+          stores.exists(s => p.toString.contains(s"/${s._1}/"))).toSeq
+      finally walk.close()
+    }
+    onFile(docsPq,
+      s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 INTO '$idx'")
+    assert(kept() == Set(stray._1))
+    val served = describeRows(false)
+
+    // a crash before the commit: a statement wrote the stray text's rows
+    // into its routed cells under its own names, and no version lists
+    // them (the rows come from the same build of the stray text alone)
+    val side = dir.resolve("side").toString
+    onFile(strayPq,
+      s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 INTO '$side'")
+    val strays = files(side).map { f =>
+      val cell = f.getParent.getFileName.toString
+      val store = f.getParent.getParent.getFileName.toString
+      val to = java.nio.file.Paths.get(idx, store, cell,
+        s"part-00000-7-${java.util.UUID.randomUUID()}.c000.snappy.parquet")
+      java.nio.file.Files.createDirectories(to.getParent)
+      java.nio.file.Files.copy(f, to)
+    }
+    assert(strays.nonEmpty)
+    assert(kept() == Set(stray._1), "a probe read an unlisted file")
+    assert(describeRows(false) == served)
+    assert(entries(verify = true) == 41L, "VERIFY misses the stray file")
+    onFile(docsPq, s"INDEX COMPACT '$idx'")
+    assert(strays.forall(p => !java.nio.file.Files.exists(p)))
+    assert(describeRows(false) == served)
+    exact()
+
+    // a crash after a DELETE's commit, before its superseded files were
+    // deleted: copies of the pre-DELETE files put back where they were
+    val aside = dir.resolve("aside")
+    val before = files(idx).map { f =>
+      val to = aside.resolve(java.nio.file.Paths.get(idx).relativize(f))
+      java.nio.file.Files.createDirectories(to.getParent)
+      f -> java.nio.file.Files.copy(f, to)
+    }
     Aql.run(spark,
-      s"""DATA 'One' ([[0, "crash recovery document 0 alpha beta gamma delta epsilon zeta"]])
-         |  WITH (COLUMNS = 'Id, Txt')
+      s"""DATA 'One' ([[0, "${docs.head._2}"]]) WITH (COLUMNS = 'Id, Txt')
          |TRANSFORM 'T' FROM BLOCK One (
          |  INDEX ON Txt KEY Id METHOD LSH INTO '$idx' DELETE
-         |) INTO CONSOLE""".stripMargin)
-    // the crashed cell is restored (live back, .old_ consumed), the
-    // stale .old_ reaped, and probe answers are whole again: every
-    // surviving doc matches its own stored copy, doc 0 does not
-    assert(java.nio.file.Files.exists(crashed), "crashed cell not restored")
-    assert(!java.nio.file.Files.exists(
-      bands.resolve(s".old_pc_$crashedCell")))
-    assert(!java.nio.file.Files.exists(stale), "stale .old_ not reaped")
-    val kept = Aql.run(spark,
-      s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$docsPq',
-         |  FORMAT = 'parquet')
-         |TRANSFORM 'K' FROM CONNECTION D (
-         |  NEARDEDUP D AGAINST STORED '$idx' ON txt KEY id
-         |    THRESHOLD 0.5 METHOD LSH
-         |) INTO CONSOLE""".stripMargin)
-      .outputs("K").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(0L), s"expected only doc 0 kept, got $kept")
-
-    // round 14 — the APPEND path sweeps too: an append must RESTORE a
-    // downed cell before writing (re-creating the live dir with only
-    // the batch's rows would make the next sweep reap the `.old_`
-    // prior rows as provably-stale — silent data loss), and the
-    // incremental stats merge must recompute restored cells, so the
-    // served DESCRIBE equals the VERIFY ground truth afterwards (a
-    // merge that carried the prior forward past a restore would be
-    // present-but-stale, the one combination the invariant forbids)
-    def describeRows(verify: Boolean): Seq[String] = Aql.run(spark,
-      s"""DATA 'One' ([[1]]) WITH (COLUMNS = 'X')
-         |TRANSFORM 'D' FROM BLOCK One (
-         |  INDEX DESCRIBE '$idx'${if (verify) " VERIFY" else ""}
-         |) INTO CONSOLE""".stripMargin).outputs("D")
-      // modulo stats_served — served vs VERIFY differ there by design
-      .drop("stats_served")
-      .collect().map(_.toString).sorted.toSeq
-    val crash2 = live(1)
-    val crash2Cell = crash2.getFileName.toString.stripPrefix("pc=")
-    java.nio.file.Files.move(crash2, bands.resolve(s".old_pc_$crash2Cell"))
-    Aql.run(spark,
-      s"""DATA 'N' ([[900, "a freshly appended sentence about crash sweeps"]])
-         |  WITH (COLUMNS = 'Id, Txt')
-         |TRANSFORM 'T' FROM BLOCK N (
-         |  INDEX ON Txt KEY Id METHOD LSH INTO '$idx' APPEND
-         |) INTO CONSOLE""".stripMargin)
-    assert(java.nio.file.Files.exists(crash2),
-      "append did not restore the crashed cell")
-    assert(!java.nio.file.Files.exists(bands.resolve(s".old_pc_$crash2Cell")))
-    assert(describeRows(false) == describeRows(true),
-      "stats stale after append-path restore")
-    // …and COMPACT heals unconditionally (even when no cell is dirty
-    // in that store), merging the restored cell into the stats
-    val crash3 = live(2)
-    val crash3Cell = crash3.getFileName.toString.stripPrefix("pc=")
-    java.nio.file.Files.move(crash3, bands.resolve(s".old_pc_$crash3Cell"))
-    Aql.run(spark,
-      s"""DATA 'One' ([[1]]) WITH (COLUMNS = 'X')
-         |TRANSFORM 'T' FROM BLOCK One (
-         |  INDEX COMPACT '$idx'
-         |) INTO CONSOLE""".stripMargin)
-    assert(java.nio.file.Files.exists(crash3),
-      "COMPACT did not restore the crashed cell")
-    assert(describeRows(false) == describeRows(true),
-      "stats stale after COMPACT restore")
-    // probe answers are whole again after both restores
-    val kept2 = Aql.run(spark,
-      s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$docsPq',
-         |  FORMAT = 'parquet')
-         |TRANSFORM 'K' FROM CONNECTION D (
-         |  NEARDEDUP D AGAINST STORED '$idx' ON txt KEY id
-         |    THRESHOLD 0.5 METHOD LSH
-         |) INTO CONSOLE""".stripMargin)
-      .outputs("K").collect().map(_.getLong(0)).toSet
-    assert(kept2 == Set(0L), s"expected only doc 0 kept, got $kept2")
+         |) INTO CONSOLE""".stripMargin).outputs("T").collect()
+    val superseded = before.collect { case (f, copy)
+        if !java.nio.file.Files.exists(f) =>
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.copy(copy, f)
+    }
+    assert(superseded.nonEmpty)
+    assert(kept() == Set(0L, stray._1), "a probe read a superseded file")
+    assert(entries(verify = false) == 39L)
+    assert(entries(verify = true) > 39L, "VERIFY misses a superseded file")
+    val servedAfterDelete = describeRows(false)
+    onFile(docsPq, s"INDEX COMPACT '$idx'")
+    assert(superseded.forall(p => !java.nio.file.Files.exists(p)))
+    assert(kept() == Set(0L, stray._1))
+    // no cell held two listed files: COMPACT only reclaimed
+    assert(describeRows(false) == servedAfterDelete)
+    exact()
   }
 
-  test("INDEX REBUILD restores the cells a crashed swap left in .old_ " +
-      "siblings before reading the stores") {
-    import org.apache.spark.sql.functions.{col, xxhash64}
+  test("INDEX REBUILD, MANIFEST and a first mutation refuse a record-less " +
+      "artifact holding .old_ cells a crashed swap left, naming the restore") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_aqlspec_rbcrash")
     graft.queries.Advanced.registerTmpDir(dir)
@@ -2348,29 +2338,38 @@ class AqlSpec extends AnyFunSuite {
     val built = onDocs("T", s"INDEX ON txt KEY id METHOD LSH THRESHOLD " +
       s"0.5 CELLS 8 INTO '$idx'").head.getAs[Long]("indexed_rows")
     assert(built == 40L)
-    // a DELETE or COMPACT that crashed between a cell's two renames, in
-    // each store: the live cell is absent and `.old_` holds the only
-    // copy of its rows
-    def crash(store: String, cellCol: String): java.nio.file.Path = {
-      val root = java.nio.file.Paths.get(idx, store)
+    // an earlier writer's DELETE or COMPACT that crashed between a cell's
+    // two renames: it had dropped the layout record, the live cell is
+    // absent and `.old_` holds the only copy of its rows
+    graft.transforms.IndexManifest.invalidate(
+      spark.sparkContext.hadoopConfiguration, idx)
+    val root = java.nio.file.Paths.get(idx, "shingles")
+    val cell = {
       val cells = java.nio.file.Files.list(root)
-      val cell =
-        try cells.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith(s"$cellCol=")).toSeq.min
-        finally cells.close()
-      val old = root.resolve(s".old_${cellCol}_${cell.stripPrefix(s"$cellCol=")}")
-      java.nio.file.Files.move(root.resolve(cell), old)
-      old
+      try cells.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("sc=")).toSeq.min
+      finally cells.close()
     }
-    val crashedShingles = crash("shingles", "sc")
-    crash("bands", "pc")
-    // the docs whose only stored copy sits in the crashed shingle cell
-    val crashedIds = spark.read.parquet(crashedShingles.toString)
-      .select("id").as[Long].collect().toSet
-    val crashedDocs = spark.read.parquet(docsPq)
-      .where(xxhash64(col("txt")).isin(crashedIds.toSeq: _*))
-      .select("id").as[Long].collect().toSet
-    assert(crashedDocs.nonEmpty)
+    val old = root.resolve(s".old_sc_${cell.stripPrefix("sc=")}")
+    java.nio.file.Files.move(root.resolve(cell), old)
+    // every statement that would snapshot the live layout refuses, names
+    // the directory and the restore, and leaves the artifact as it was
+    def refused(m: String): Unit = assert(m.contains(old.toString) &&
+      m.contains("rename it back"), m)
+    refused(intercept[Exception](maintain("REBUILD")).getMessage)
+    refused(intercept[Exception](maintain("MANIFEST")).getMessage)
+    refused(intercept[Exception](maintain("COMPACT")).getMessage)
+    refused(intercept[Exception](graft.transforms.NearDup.bandStoreAppend(
+      idx, graft.transforms.NearDup.shingled(
+        Seq((90L, "an append refused while a cell sits aside"))
+          .toDF("id", "txt"), "id", "txt"))).getMessage)
+    assert(java.nio.file.Files.exists(old))
+    assert(graft.transforms.IndexManifest.read(spark, idx).isEmpty)
+    assert(graft.transforms.IndexMaintenance.maintLockHolder(
+      spark.sparkContext.hadoopConfiguration, idx) == "")
+    // restored by the rename the message names, the artifact rebuilds
+    // whole: every doc still matches its copy
+    java.nio.file.Files.move(old, root.resolve(cell))
     val rebuilt = maintain("REBUILD").head
     assert(rebuilt.getAs[Long]("indexed_rows") == built, rebuilt)
     val served = maintain("DESCRIBE").map(r =>
@@ -2383,10 +2382,8 @@ class AqlSpec extends AnyFunSuite {
       .map(r => r.getAs[String]("store") -> r.getAs[Long]("entries")).toMap
     assert(verify("shingles") == built, verify)
     assert(served == verify)
-    // every doc, the crashed cell's included, still matches its copy
     val kept = onDocs("K", s"NEARDEDUP D AGAINST STORED '$idx' ON txt " +
       "KEY id THRESHOLD 0.5 METHOD LSH").map(_.getLong(0)).toSet
-    assert(kept.intersect(crashedDocs).isEmpty, s"crashed docs kept: $kept")
     assert(kept.isEmpty, s"expected no doc kept, got $kept")
   }
 
@@ -2943,8 +2940,8 @@ class AqlSpec extends AnyFunSuite {
   }
 
   test("INDEX DESCRIBE: serves from the stats maintained by every " +
-      "mutating writer (verb AND direct API), VERIFY recomputes, " +
-      "absent stats stay absent under batch-sized API mutations") {
+      "mutating writer (verb AND direct API), VERIFY recomputes, an API " +
+      "mutation of a record-less artifact commits one") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_aqlspec_st")
     graft.queries.Advanced.registerTmpDir(dir)
@@ -2986,8 +2983,8 @@ class AqlSpec extends AnyFunSuite {
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 4L)
     // a DIRECT API append (the streaming ingestion path) maintains the
-    // record itself (IndexManifest.maintained: prior read → drop →
-    // mutate → fold the batch's file reports), so DESCRIBE stays
+    // record itself (IndexManifest.maintained: prior read → mutate →
+    // commit the batch's file reports folded in), so DESCRIBE stays
     // SERVED under continuous direct-API ingest — and the served rows
     // must equal the VERIFY ground truth, which proves the carried-over
     // cells are not stale
@@ -2998,14 +2995,14 @@ class AqlSpec extends AnyFunSuite {
     assert(recordAt())
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 5L)
-    // with the record ABSENT, a batch-sized API mutation must NOT pay
-    // the artifact-sized recount: it leaves it absent (DESCRIBE takes
-    // the honest fallback, which sees the deletion)
+    // with the record ABSENT, an API mutation first snapshots the live
+    // layout as its prior, then commits its reports over it
     mf.invalidate(spark.sparkContext.hadoopConfiguration, idx)
     graft.transforms.NearDup.bandStoreDelete(idx, sh)
-    assert(!recordAt())
+    assert(mf.read(spark, idx).map(_.version).contains(2L))
+    assert(describe(false) == describe(true))
     assert(entries("shingles") == 4L)
-    // the next verb APPEND or DELETE snapshots it again
+    // and the next verb DELETE folds into it
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' DELETE")
     assert(recordAt())
     assert(describe(false) == describe(true))
@@ -3057,51 +3054,42 @@ class AqlSpec extends AnyFunSuite {
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' DELETE")
     assert(describe(false) == describe(true))
     assert(entries("shingles") == 2L)
-    // recount edge case 2: a cell whose swap crashed between its two
-    // renames (live cell moved to `.old_`), with a record exact for the
-    // crashed state — the next writer's sweep restores the cell, and
-    // the record refresh must recount it although the batch never
-    // routed there. The shingle store routes an entry by
-    // pmod(xxhash64(id), 8) with id = xxhash64(text), so the crashed
-    // cell is one bPq's texts miss (the band store is not used: 2 texts
-    // x 32 bands route to every one of its 8 cells)
+    // recount edge case 2: a file a crashed statement left in a cell the
+    // batch routes to, under a statement-style name — before its commit
+    // (no version ever listed it) or after it (a superseded file it did
+    // not delete): a copy of a listed file. The shingle store routes an
+    // entry by pmod(xxhash64(id), 8) with id = xxhash64(text)
     val routed = spark.read.parquet(bPq)
       .select(org.apache.spark.sql.functions.expr(
         "cast(pmod(xxhash64(xxhash64(txt)), 8) as int)"))
       .collect().map(_.getInt(0)).toSet
-    // aPq's entries sit in routed cells; a direct API append adds one
-    // that does not (its id picked by the same routing expression)
-    val extraId = spark.range(1000, 1100)
-      .select(org.apache.spark.sql.functions.expr(
-        "cast(pmod(xxhash64(id), 8) as int)"), $"id")
-      .collect().find(r => !routed(r.getInt(0))).get.getLong(1)
-    graft.transforms.NearDup.bandStoreAppend(idx,
-      graft.transforms.NearDup.shingled(Seq((extraId,
-        "an extra entry kept in a cell the batch never routes to"))
-        .toDF("id", "txt"), "id", "txt"))
-    assert(entries("shingles") == 3L)
-    def crashOneCellPerStore(): Unit = {
-      val root = java.nio.file.Paths.get(idx, "shingles")
-      val cell = java.nio.file.Files.list(root).toArray.toSeq
-        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-        .filter(_.startsWith("sc="))
-        .map(_.stripPrefix("sc=").toInt).filterNot(routed).sorted
-        .headOption.getOrElse(fail(s"every shingle cell is routed: $routed"))
-      java.nio.file.Files.move(root.resolve(s"sc=$cell"),
-        root.resolve(s".old_sc_$cell"))
-      // the record of the crashed state: dropped, then snapshotted
-      mf.invalidate(spark.sparkContext.hadoopConfiguration, idx)
-      run(aPq, s"INDEX MANIFEST '$idx'").collect()
-      assert(describe(false) == describe(true))
-    }
-    crashOneCellPerStore()
+    val listed = mf.read(spark, idx).get.layout("shingles")
+      .filter { case (c, _) => routed(c) }.values.flatMap(_.keys).toSeq.sorted
+    assert(listed.nonEmpty, s"no listed file in routed cells $routed")
+    val from = java.nio.file.Paths.get(idx, listed.head)
+    val strayRows = mf.read(spark, idx).get.layout("shingles")
+      .values.flatMap(_.toSeq).toMap.apply(listed.head)
+    val stray = from.resolveSibling(
+      s"part-00000-7-${java.util.UUID.randomUUID()}.c000.snappy.parquet")
+    java.nio.file.Files.copy(from, stray)
+    def verified(): Long = run(aPq, s"INDEX DESCRIBE '$idx' VERIFY")
+      .collect().find(_.getAs[String]("store") == "shingles").get
+      .getAs[Long]("entries")
+    // probes and served DESCRIBE are exact; VERIFY shows the extra file
+    assert(entries("shingles") == 2L)
+    assert(verified() == 2L + strayRows)
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' APPEND")
-    assert(describe(false) == describe(true))
-    assert(entries("shingles") == 5L)
-    crashOneCellPerStore()
+    assert(entries("shingles") == 4L)
+    assert(verified() == 4L + strayRows)
+    assert(java.nio.file.Files.exists(stray))
     run(bPq, s"INDEX ON txt KEY id METHOD LSH INTO '$idx' DELETE")
+    assert(entries("shingles") == 2L)
+    // COMPACT reclaims it: served equals VERIFY again, and the record
+    // equals the recount file for file
+    run(aPq, s"INDEX COMPACT '$idx'")
+    assert(!java.nio.file.Files.exists(stray))
     assert(describe(false) == describe(true))
-    assert(entries("shingles") == 3L)
+    assert(entries("shingles") == 2L)
     assert(mf.read(spark, idx).map(_.layout).contains(
       stats.recount(spark, idx, stores)))
   }
@@ -3238,24 +3226,29 @@ class AqlSpec extends AnyFunSuite {
         .toDF("id", "txt"), "id", "txt")
     graft.transforms.NearDup.bandStoreAppend(idx, sh)
     assert(served() == Seq(true))
-    // invalidation WITHOUT a prior: the record removed out-of-band, then
-    // an API mutation (no prior to fold into ⇒ leaves it absent) — the
+    // invalidation WITHOUT a prior: the record removed out-of-band — the
     // DESCRIBE pays the recount, says so, and WARNs ONCE with the remedy
-    new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"$idx/manifest"), true)
-    graft.transforms.NearDup.bandStoreAppend(idx,
-      graft.transforms.NearDup.shingled(
-        Seq((10L, "a fourth document appended while stats were absent"))
-          .toDF("id", "txt"), "id", "txt"))
+    def dropRecord(): Unit = {
+      new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(s"$idx/manifest"), true)
+      ()
+    }
+    dropRecord()
     assert(served() == Seq(false))
     val fired = graft.transforms.IndexMaintenance.Warnings.recent
       .filter(_.contains("is absent"))
     assert(fired.size == w0 + 1, fired.toString)
     assert(fired.last.contains(s"INDEX MANIFEST '$idx'"), fired.last)
-    // COMPACT maintains a present record but does not restore an absent
-    // one: still unserved
-    run(s"INDEX COMPACT '$idx'")
+    // the next mutation snapshots the live layout as its prior and
+    // commits over it: served again, no warning
+    graft.transforms.NearDup.bandStoreAppend(idx,
+      graft.transforms.NearDup.shingled(
+        Seq((10L, "a fourth document appended while stats were absent"))
+          .toDF("id", "txt"), "id", "txt"))
+    assert(served() == Seq(true))
+    assert(absentWarns() == w0 + 1)
+    dropRecord()
     assert(served() == Seq(false))
     // the named remedy snapshots the record and the advisory stops
     run(s"INDEX MANIFEST '$idx'")
@@ -3339,7 +3332,7 @@ class AqlSpec extends AnyFunSuite {
     assert(manifest() == (1L, files1))
     assert(probe() == served)
     // MAINTAINED: an API mutation commits the next version as its last
-    // step (prior read → drop → mutate → fold its reports), so the
+    // step (prior read → mutate → commit its reports folded in), so the
     // probe stays record-served AND sees the appended row
     graft.transforms.NearDup.bandStoreAppend(idx,
       graft.transforms.NearDup.shingled(
@@ -3360,8 +3353,9 @@ class AqlSpec extends AnyFunSuite {
     assert(descVersion() == 1L)
     assert(resolved().size == bandFiles())
     assert(probe() == Seq.empty)
-    // the record removed out-of-band ⇒ a mutation leaves it absent
-    // (live-layout fallback, absent-never-stale) until INDEX MANIFEST
+    // the record removed out-of-band ⇒ the next mutation snapshots the
+    // live layout as its prior (v1) and commits over it (v2), deleting
+    // the prior version
     new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$idx/manifest"), true)
@@ -3369,13 +3363,14 @@ class AqlSpec extends AnyFunSuite {
       graft.transforms.NearDup.shingled(
         Seq((21L, "yet another entirely unrelated appended sentence"))
           .toDF("id", "txt"), "id", "txt"))
-    assert(descVersion() == 0L)
+    assert(descVersion() == 2L)
+    assert(resolved().size == bandFiles())
     assert(probe() == Seq.empty)
     // a malformed record is an ERROR naming the recovery statement,
     // never a silent fallback (probing the live layout could silently
     // disagree with what the operator believes is pinned) — for probes
     // and writers alike
-    assert(manifest()._1 == 1L)
+    assert(manifest()._1 == 2L)
     val mdir = java.nio.file.Paths.get(idx, "manifest")
     val v = {
       val s = java.nio.file.Files.list(mdir)
@@ -3397,8 +3392,8 @@ class AqlSpec extends AnyFunSuite {
           .toDF("id", "txt"), "id", "txt"))).getMessage
     assert(wm.contains("malformed") && wm.contains("INDEX MANIFEST"), wm)
     // the recovery statement snapshots over it as the next version
-    assert(manifest()._1 == 2L)
-    assert(descVersion() == 2L)
+    assert(manifest()._1 == 3L)
+    assert(descVersion() == 3L)
     assert(probe() == Seq.empty)
     // the MANIFEST statement is a writer: a held maintenance lock
     // excludes it

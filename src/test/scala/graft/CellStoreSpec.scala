@@ -31,9 +31,9 @@ object FaultOnce {
   }
 }
 
-/** The cell-store writer: task-side files under hidden names, published
-  * by rename, reported with their row counts — and the layout record,
-  * touched cells and artifacts built from those reports.
+/** The cell-store writer: task-side files under their final names,
+  * reported with their row counts — and the layout record, touched cells
+  * and artifacts built from those reports.
   */
 class CellStoreSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -54,15 +54,18 @@ class CellStoreSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** Entries a writer must not leave under `dir` (the cell stores of an
-    * artifact of `kind` when given): pending files and committer trees.
+  /** Files under the cell stores of the artifact at `idx` (of `kind`)
+    * that its layout record does not list, checksum sidecars aside: a
+    * writer's leftovers, committer trees included.
     */
-  private def leftovers(dir: String, kind: Option[String] = None)
-      : Set[String] = {
-    val stores = kind.map(CellStore.storesFor(_, "spec").map(_._1))
-    entries(dir).filter(e => stores.forall(_.contains(e.split('/').head)))
-      .filter(e => e.contains(".pending-") ||
-        e.split('/').exists(n => n == "_temporary" || n == "_SUCCESS"))
+  private def unlisted(idx: String, kind: String): Set[String] = {
+    val listed = IndexManifest.read(spark, idx).toSeq
+      .flatMap(_.layout.values.flatMap(_.values.flatMap(_.keys))).toSet
+    val stores = CellStore.storesFor(kind, "spec").map(_._1).toSet
+    entries(idx).filter(e => stores(e.split('/').head) &&
+        java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(idx, e)) &&
+        !e.endsWith(".crc"))
+      .filterNot(listed)
   }
 
   private def footerRows(file: String): Long = {
@@ -123,33 +126,31 @@ class CellStoreSpec extends AnyFunSuite {
     Array(math.sin(i.toDouble), math.cos(i * 0.7), (i % 5).toDouble,
       (i % 3) + 0.5)
 
-  test("writeCells publishes one file per cell, reported with its footer " +
-      "row count; pending files stay hidden until published") {
+  test("writeCells writes one file per cell under its final, " +
+      "statement-scoped name, reported with its footer row count") {
     val dir = tmp("graft_cellstore_w")
     val rows = spark.range(0, 200).select(col("id"),
       (col("id") * 3).as("x"), pmod(col("id"), lit(7)).cast("int").as("c"))
-
-    val shipped = CellStore.writeConf(spark)
-    val pending =
-      try CellStore.writePending(rows, s"$dir/p", "c", 4, "stmt", shipped)
-      finally shipped.destroy()
-    assert(pending.map(_.cell).sorted == (0 until 7))
-    assert(pending.map(_.rows).sum == 200L)
-    val hidden = entries(s"$dir/p").filter(_.contains(".parquet"))
-    assert(hidden.nonEmpty && hidden.forall(e =>
-      !MetaParquet.visible(e.split('/').last)), hidden)
 
     val files = CellStore.writeCells(rows, s"$dir/w", "c", 4)
     assert(files.map(_._1).sorted == (0 until 7))
     for ((c, f, n) <- files) {
       val p = new Path(f)
       assert(p.getParent.getName == s"c=$c", f)
-      assert(p.getName.matches("part-\\d{5}-[0-9a-f-]{36}\\.c000\\..*parquet"),
-        f)
+      assert(p.getName.matches(
+        "part-\\d{5}-\\d+-[0-9a-f-]{36}\\.c000\\..*parquet"), f)
       assert(footerRows(f) == n, f)
     }
     assert(files.map(_._3).sum == 200L)
-    assert(leftovers(s"$dir/w").isEmpty, leftovers(s"$dir/w"))
+    // one statement id names every file, and nothing else is left
+    val Named = "part-\\d{5}-\\d+-([0-9a-f-]{36})\\.c000\\..*".r
+    assert(files.map(f => new Path(f._2).getName)
+      .collect { case Named(stmt) => stmt }.distinct.size == 1, files)
+    val written = entries(s"$dir/w").filter(e =>
+      java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(s"$dir/w", e))
+        && !e.endsWith(".crc"))
+    assert(written == files.map(f =>
+      s"c=${f._1}/${new Path(f._2).getName}").toSet, written)
     val back = spark.read.parquet(s"$dir/w").select("id", "x", "c")
     assert(back.collect().map(_.toString).sorted.toSeq ==
       rows.collect().map(_.toString).sorted.toSeq)
@@ -173,6 +174,8 @@ class CellStoreSpec extends AnyFunSuite {
     test(s"$name: after build, APPEND, DELETE and COMPACT the stats match " +
         "the files' footers, no pending file is left and DESCRIBE equals " +
         "VERIFY") {
+      // "no pending file": every data file on disk is listed in the
+      // layout record
       val dir = tmp("graft_cellstore_k")
       val text = name == "LSH" || name == "TYPO"
       val corpus = items(dir, "a.parquet", text, 1 to 40)
@@ -181,8 +184,7 @@ class CellStoreSpec extends AnyFunSuite {
       val idx = dir.resolve("idx").toString
       val method = geometry.split(" ")(1)
       def check(step: String): Unit = {
-        assert(leftovers(idx, Some(kind)).isEmpty,
-          s"$step: ${leftovers(idx, Some(kind))}")
+        assert(unlisted(idx, kind).isEmpty, s"$step: ${unlisted(idx, kind)}")
         assert(IndexManifest.read(spark, idx).map(_.layout).contains(
           onDisk(idx, kind)), step)
         assert(describe(idx, verify = false) == describe(idx, verify = true),
@@ -215,12 +217,9 @@ class CellStoreSpec extends AnyFunSuite {
     val idx = dir.resolve("idx").toString
     statement(s"INDEX ON item KEY id METHOD IVF CELLS 8 PQ 2 INTO '$idx'",
       Some(corpus)).collect()
-    // the VERIFY rows apart from manifest_version: a statement that
-    // failed before publishing recommits the prior layout record
     def verifiedRows(): Seq[String] =
       statement(s"INDEX DESCRIBE '$idx' VERIFY")
-        .drop("stats_served", "manifest_version").collect()
-        .map(_.toString).sorted.toSeq
+        .drop("stats_served").collect().map(_.toString).sorted.toSeq
     val verified = verifiedRows()
     val stored = entries(idx).filter(e =>
       e.startsWith("index") || e.startsWith("codes"))
@@ -236,16 +235,14 @@ class CellStoreSpec extends AnyFunSuite {
       graft.queries.Similarity.ivfStoreAppend(idx, batch))
     assert(FaultOnce.fired.get, e.toString)
     // the failure came from a store leg's write job, not the checkpoint
-    assert(e.getStackTrace.exists(_.getMethodName == "writePending"), e)
+    assert(e.getStackTrace.exists(_.getMethodName == "writeFiles"), e)
 
     assert(entries(idx).filter(e =>
       e.startsWith("index") || e.startsWith("codes")) == stored)
     assert(verifiedRows() == verified)
-    // nothing was published, so the prior layout is still exact: it is
-    // recommitted as the next version, and DESCRIBE is served from it
-    val kept = IndexManifest.read(spark, idx)
-    assert(kept.map(_.layout).contains(prior.layout), kept)
-    assert(kept.map(_.version).contains(prior.version + 1), kept)
+    // nothing was committed: the prior version is still current, and
+    // DESCRIBE is served from it
+    assert(IndexManifest.read(spark, idx).contains(prior))
     assert(statement(s"INDEX DESCRIBE '$idx'").collect()
       .forall(_.getAs[Boolean]("stats_served")))
     assert(IndexMaintenance.maintLockHolder(conf, idx) == "")
@@ -254,7 +251,7 @@ class CellStoreSpec extends AnyFunSuite {
     val appended = graft.queries.Similarity.ivfStoreAppend(idx,
       v.withColumn("nrm", graft.functions.Vectors.l2norm(col("v"))))
     assert(appended.keySet == Set("index", "codes"), appended)
-    assert(leftovers(idx, Some("ivf_vec")).isEmpty)
+    assert(unlisted(idx, "ivf_vec").isEmpty)
     assert(statement(s"INDEX DESCRIBE '$idx' VERIFY").collect()
       .find(_.getAs[String]("store") == "index").get
       .getAs[Long]("entries") == 60L)
@@ -298,7 +295,9 @@ class CellStoreSpec extends AnyFunSuite {
       assert(contents(legacy) == contents(fresh), step)
       assert(describe(legacy, verify = false) ==
         describe(legacy, verify = true), step)
-      assert(!entries(legacy).exists(_.contains(".pending-")), step)
+      // the DataFrameWriter's markers sit at the store roots
+      assert(unlisted(legacy, "lsh_text")
+        .filterNot(_.endsWith("/_SUCCESS")).isEmpty, step)
     }
     same("build")
     for (idx <- Seq(fresh, legacy))

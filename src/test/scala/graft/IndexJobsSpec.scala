@@ -5,27 +5,7 @@ import graft.transforms.IndexMaintenance
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Replaces a stored index's `manifest/` directory with a plain file the
-  * first time an armed batch row is evaluated — inside a mutation, after
-  * it dropped the layout record and before it commits the next version.
-  */
-object RecordCommitFault {
-  @volatile private var target: String = null
-
-  def arm(idx: String): Unit = target = idx
-
-  def pass(id: Long): Long = {
-    synchronized {
-      if (target != null) {
-        val d = java.nio.file.Paths.get(target, "manifest")
-        org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
-        java.nio.file.Files.writeString(d, "not a directory\n")
-        target = null
-      }
-    }
-    id
-  }
-}
+import scala.jdk.CollectionConverters._
 
 /** Spark jobs per INDEX statement: metadata (`meta/` and the layout
   * record) is read and written on the driver, so the statements that only
@@ -98,10 +78,11 @@ class IndexJobsSpec extends AnyFunSuite {
     assert(maintain("DESCRIBE").forall(_.getAs[Boolean]("stats_served")))
   }
 
-  test("an API APPEND whose record commit fails leaves the record absent, " +
-      "not stale; INDEX MANIFEST restores it with one job") {
+  test("an API APPEND whose record commit fails leaves the prior version " +
+      "served, deletes the batch's files and releases the lock; a re-run " +
+      "APPEND succeeds") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, udf, xxhash64}
+    import org.apache.spark.sql.functions.{col, xxhash64}
     val dir = java.nio.file.Files.createTempDirectory("graft_recordfault")
     graft.queries.Advanced.registerTmpDir(dir)
     val aPq = dir.resolve("a.parquet").toString
@@ -116,38 +97,61 @@ class IndexJobsSpec extends AnyFunSuite {
              else "CONNECTION"} D (
            |  $body
            |) INTO CONSOLE""".stripMargin).outputs("T").collect().toSeq
+    // modulo stats_served — served vs VERIFY differ there by design
+    def described(verify: String): Seq[String] =
+      run(s"INDEX DESCRIBE '$idx'$verify").map(r =>
+        r.schema.fieldNames.filterNot(_ == "stats_served")
+          .map(f => r.getAs[Any](f)).mkString(",")).sorted
     def entries(verify: String): Long = run(s"INDEX DESCRIBE '$idx'$verify")
       .find(_.getAs[String]("store") == "shingles").get
       .getAs[Long]("entries")
+    /** The data files under the index's stores, relative to it. */
+    def stored(): Set[String] = {
+      val root = java.nio.file.Paths.get(idx)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator.asScala.filter(p =>
+          java.nio.file.Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet") &&
+          !p.getFileName.toString.startsWith("."))
+        .map(root.relativize(_).toString)
+        .filterNot(_.startsWith("meta/")).toSet
+      finally walk.close()
+    }
     run(s"INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8 INTO '$idx'",
       s"CONNECTION 'D' (DRIVER = 'file', FILE = '$aPq', FORMAT = 'parquet')")
-    assert(graft.transforms.IndexManifest.read(spark, idx).isDefined)
+    val prior = graft.transforms.IndexManifest.read(spark, idx).get
+    val priorFiles = stored()
+    assert(priorFiles == prior.layout.values.flatMap(_.values)
+      .flatMap(_.keys).toSet)
 
     val texts = (41 to 44).map(i => s"appended text $i on subject " +
       s"${i % 4} carrying u${i % 6} and marker m$i")
-    val fault = udf((id: Long) => RecordCommitFault.pass(id))
-      .asNondeterministic()
     val batch = graft.transforms.NearDup.shingled(
-        texts.toDF("txt").select(xxhash64(col("txt")).as("th"), col("txt")),
-        "th", "txt")
-      .withColumn("id", fault(col("id")))
-    RecordCommitFault.arm(idx)
-    intercept[Exception](graft.transforms.NearDup.bandStoreAppend(idx, batch))
-    // the commit failed after the rows landed: the record is absent, not
-    // stale, and the lock is released
-    assert(graft.transforms.IndexManifest.read(spark, idx).isEmpty)
+      texts.toDF("txt").select(xxhash64(col("txt")).as("th"), col("txt")),
+      "th", "txt")
+    val e = ManifestListingFs.using(spark) {
+      ManifestListingFs.failCommits = true
+      intercept[IllegalStateException](
+        graft.transforms.NearDup.bandStoreAppend(idx, batch))
+    }
+    assert(e.getMessage.contains("cannot commit version 2"), e.getMessage)
+    // the prior version is current and served, the batch's files are
+    // gone, and the lock is released
+    assert(graft.transforms.IndexManifest.read(spark, idx).contains(prior))
+    assert(stored() == priorFiles)
     assert(IndexMaintenance.maintLockHolder(
       spark.sparkContext.hadoopConfiguration, idx) == "")
-    // the live layout holds the appended rows: VERIFY counts them, and
-    // the served DESCRIBE recounts and warns once
-    assert(entries(" VERIFY") == 44L)
-    val warned = IndexMaintenance.Warnings.recent
-      .count(_.contains("layout record is absent"))
+    assert(run(s"INDEX DESCRIBE '$idx'")
+      .forall(_.getAs[Boolean]("stats_served")))
+    assert(entries("") == 40L && entries(" VERIFY") == 40L)
+
+    // the same batch appends on a re-run: the next version is committed,
+    // served DESCRIBE equals VERIFY, and a probe sees the appended texts
+    graft.transforms.NearDup.bandStoreAppend(idx, batch)
+    assert(graft.transforms.IndexManifest.read(spark, idx).map(_.version)
+      .contains(prior.version + 1))
     assert(entries("") == 44L)
-    assert(IndexMaintenance.Warnings.recent
-      .count(_.contains("layout record is absent")) == warned + 1)
-    // a probe resolves cells from the live layout and sees them: the
-    // appended texts match their stored copies, the new one is kept
+    assert(described("") == described(" VERIFY"))
     val probeRows = (texts.zipWithIndex.map { case (t, i) =>
         s"[${100 + i}, \"$t\"]" } :+
       "[200, \"a sentence no stored document resembles in any way\"]")
@@ -157,9 +161,10 @@ class IndexJobsSpec extends AnyFunSuite {
       s"DATA 'D' ($probeRows) WITH (COLUMNS = 'Id, Txt')")
       .map(_.getLong(0))
     assert(kept == Seq(200L), kept)
-    // with the junk removed, INDEX MANIFEST snapshots the record in one
-    // job, and DESCRIBE is served from it again
-    java.nio.file.Files.delete(java.nio.file.Paths.get(idx, "manifest"))
+    // with the record removed out-of-band, INDEX MANIFEST snapshots it in
+    // one job, and DESCRIBE is served from it again
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      java.nio.file.Paths.get(idx, "manifest").toFile)
     var restored = Seq.empty[Row]
     val manifestJobs = jobsOf { restored = run(s"INDEX MANIFEST '$idx'") }
     assert(manifestJobs.size == 1, manifestJobs.mkString("; "))

@@ -2,24 +2,72 @@ package graft
 
 import graft.engine.Aql
 import graft.transforms.{IndexManifest, NearDup}
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem,
+  Path}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The local file system, counting the listings of any directory named
-  * `manifest` — where a stored index keeps its layout record.
+  * `manifest` — where a stored index keeps its layout record — and of
+  * any cell directory (`<col>=<c>`), and recording the target path of
+  * every rename. Armed, it fails the renames into `manifest/` (a
+  * layout record commit that cannot land) or runs a hook before opening
+  * a file.
   */
 class ManifestListingFs extends LocalFileSystem {
+  import ManifestListingFs._
+
   override def listStatus(f: Path): Array[FileStatus] = {
-    if (f.getName == "manifest") ManifestListingFs.listed.incrementAndGet()
+    if (f.getName == "manifest") listed.incrementAndGet()
+    if (f.getName.matches("[A-Za-z_]\\w*=-?\\d+"))
+      cellsListed.incrementAndGet()
     super.listStatus(f)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    renamed.add(dst.toUri.getPath)
+    if (failCommits && dst.getParent.getName == "manifest") false
+    else super.rename(src, dst)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    beforeOpen(f)
+    super.open(f, bufferSize)
   }
 }
 
 object ManifestListingFs {
   val listed = new AtomicInteger
+  val cellsListed = new AtomicInteger
+  val renamed = new ConcurrentLinkedQueue[String]
+  @volatile var failCommits = false
+  @volatile var beforeOpen: Path => Unit = _ => ()
+
+  /** `body` with this file system serving the `file` scheme of `spark`'s
+    * Hadoop conf and every counter reset.
+    */
+  def using[A](spark: SparkSession)(body: => A): A = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prior = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[ManifestListingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    listed.set(0)
+    cellsListed.set(0)
+    renamed.clear()
+    try body
+    finally {
+      failCommits = false
+      beforeOpen = _ => ()
+      prior.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    }
+  }
 }
 
 /** A stored probe resolves every stage of its statement from one read of
@@ -31,19 +79,8 @@ class ProbeSnapshotSpec extends AnyFunSuite {
   import SparkTestSession._
 
   /** The `manifest/` listings made while `body` runs. */
-  private def manifestListings(body: => Unit): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
-    val prior = keys.map(k => k -> Option(conf.get(k)))
-    conf.set("fs.file.impl", classOf[ManifestListingFs].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    ManifestListingFs.listed.set(0)
-    try { body; ManifestListingFs.listed.get }
-    finally prior.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
+  private def manifestListings(body: => Unit): Int =
+    ManifestListingFs.using(spark) { body; ManifestListingFs.listed.get }
 
   test("each stored probe lists the layout record once per statement") {
     import spark.implicits._
@@ -114,7 +151,9 @@ class ProbeSnapshotSpec extends AnyFunSuite {
       val built = probe()
       NearDup.bandStoreAppend(idx,
         shingled(fresh.map { case (id, t) => (id + 1000L, t) }))
-      assert(IndexManifest.read(spark, idx).isDefined == record)
+      // the APPEND commits a record either way: without one, it first
+      // snapshots the layout the probe read
+      assert(IndexManifest.read(spark, idx).isDefined)
       def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
         df.collect().map(_.getLong(0)).toSeq.sorted
       assert(ids(built) == Seq(100L), s"record=$record")
