@@ -882,8 +882,7 @@ object Similarity {
   private def ivfRouted(s: SparkSession, snap: CellStore.Snapshot,
       queries: DataFrame, nprobe: Int): (DataFrame, String => DataFrame) = {
     val probes = ivfProbeCells(s, snap.base, queries, nprobe)
-    val cells = probes.select("cluster").distinct().collect()
-      .map(_.getInt(0)).toSeq.sorted
+    val cells = CellStore.cellsOf(probes.select("cluster"))
     (probes, store => snap.read(store, cells).getOrElse(
       MetaParquet.scan(s, s"${snap.base}/$store").where(lit(false))))
   }

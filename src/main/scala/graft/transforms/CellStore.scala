@@ -3,7 +3,7 @@ package graft.transforms
 import graft.functions.Text
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
@@ -30,8 +30,10 @@ private[graft] final case class CellStore(name: String, cellCol: String,
   * commit through it. The commit protocol, stated once:
   *  - Every kind is an ordered list of [[CellStore]]s over one shared
   *    frame. A statement materializes that frame once (an eager local
-  *    checkpoint; an IVF build's trained assignment stays a plan), then
-  *    writes one leg per store concurrently ([[land]]); each leg
+  *    checkpoint; an IVF build's trained assignment stays a plan) and
+  *    nothing else: DELETE routes it with one collect job ([[routes]])
+  *    and anti-joins the routed cells against its broadcast ids. Then
+  *    it writes one leg per store concurrently ([[land]]); each leg
   *    repartitions its rows to [[cellWriteParts]] tasks on the cell
   *    column and sorts each task by cell, so a cell lands whole in one
   *    task — one file per touched cell per write.
@@ -260,19 +262,19 @@ private[graft] object CellStore {
 
   /** Remove a batch from an existing artifact of `kind`: each store's
     * routed cells ([[routes]]) are rewritten without the batch's `idCol`
-    * values ([[rewrite]], a broadcast anti-join); untouched cells are
-    * never listed, read or rewritten. Returns each store's touched cells.
+    * values ([[rewrite]], an anti-join against the broadcast ids of the
+    * materialized shared frame, whose duplicate ids change no answer);
+    * untouched cells are never listed, read or rewritten. Returns each
+    * store's touched cells.
     */
   def delete(base: String, kind: String, batch: DataFrame, idCol: String)
       : Map[String, Seq[Int]] =
     maintain(base, kind, batch, "DELETE") {
         (spark, shared, stores, _, prior) =>
-      val ids =
-        if (preRouted(shared, stores)) shared.select(col(idCol))
-        else shared.select(col(idCol)).distinct().localCheckpoint()
       rewrite(spark, base, prior, stores.zip(routes(shared, stores)).map {
           case (st, cells) => (st.name, st.cellCol, cells) })(
-        _.join(broadcast(ids), Seq(idCol), "left_anti"))
+        _.join(broadcast(shared.select(col(idCol))), Seq(idCol),
+          "left_anti"))
     }
 
   /** APPEND's and DELETE's shared shape: lock, meta and kind check, the
@@ -372,15 +374,17 @@ private[graft] object CellStore {
     *    kind's own store list ([[batchOf]]: scheme, geometry from meta,
     *    the cosine dims check), so it reads exactly the cells an APPEND
     *    of the same batch would write. The batch's routing-store rows
-    *    are checkpointed: they feed the cell collect and the candidate
-    *    join.
+    *    are checkpointed: they feed the cell collect ([[cellsOf]], one
+    *    job) and the candidate join.
     *  - [[Snapshot.candidates]] joins the routed cells' stored rows to
     *    the broadcast batch rows on the store's keys (every column but
     *    `id` and the cell column), keeps the distinct (b_id, c_id)
     *    pairs that pass the kind's optional filter, and checkpoints them:
     *    they feed the id routing and the kind's verify.
     *  - Stage 2 routes the candidates' stored ids into the id-keyed
-    *    store's cells and reads them from the same snapshot.
+    *    store's cells (one collect job, [[cellsOf]]) and reads them from
+    *    the same snapshot. Both collects run while the statement is
+    *    built.
     *  - The kind supplies only its verify or rank step. IVF routes by
     *    centroid itself and reads `index`, or `codes` then `index`,
     *    through [[Snapshot.read]].
@@ -438,8 +442,8 @@ private[graft] object CellStore {
     def route(batch: DataFrame): Option[Routed] =
       batchOf(base, kind, meta, batch, what).map { case (frame, stores) =>
         val rows = stores.head.rows(frame).localCheckpoint(false)
-        Routed(frame, stores, rows, rows.select(col(stores.head.cellCol))
-          .distinct().collect().map(_.getInt(0)).toSeq.sorted)
+        Routed(frame, stores, rows, cellsOf(rows.select(
+          col(stores.head.cellCol))))
       }
 
     /** Both stages over `batch`, the candidate pairs filtered by `keep`;
@@ -457,9 +461,8 @@ private[graft] object CellStore {
               .join(broadcast(keyed(r.rows, "b_id")), keys))
             .select(col("b_id"), col("c_id")).distinct()
             .localCheckpoint(false)
-          val ids = pairs
-            .select(idCell(col("c_id"), meta.getAs[Int]("cells"))).distinct()
-            .collect().map(_.getInt(0)).toSeq.sorted
+          val ids = cellsOf(
+            pairs.select(idCell(col("c_id"), meta.getAs[Int]("cells"))))
           read(byId.name, ids).map(Candidates(r.cells, pairs, ids, _,
             byId.rows(r.frame).drop(byId.cellCol)))
         }
@@ -479,24 +482,37 @@ private[graft] object CellStore {
   private[graft] final case class Candidates(routed: Seq[Int],
       pairs: DataFrame, ids: Seq[Int], stored: DataFrame, batch: DataFrame)
 
-  /** A shared frame that already carries the stores' cell column (IVF's
-    * frozen-centroid assignment, one row per vec_id) is routed once for
-    * every store, and is its own id set.
+  /** The distinct rows of `df`, in one Spark job: each task dedupes its
+    * own partition and the driver dedupes what the tasks send — at most
+    * partitions × distinct rows, a few small cell numbers for a routing
+    * collect. A `distinct()` before the collect would plan a shuffle
+    * stage and a result stage, two jobs.
     */
-  private def preRouted(shared: DataFrame, stores: Seq[CellStore])
-      : Boolean = stores.forall(st => shared.columns.contains(st.cellCol))
+  private def collectDistinct(df: DataFrame): Seq[Row] =
+    df.mapPartitions(_.distinct)(Encoders.row(df.schema)).collect()
+      .toSeq.distinct
 
-  /** Each store's routed cells of `shared`, in order, from ONE distinct
-    * collect over the union of the stores' (store, cell) pairs.
+  /** The distinct cells of a one-column frame of cell numbers, sorted,
+    * in one Spark job ([[collectDistinct]]).
+    */
+  private[graft] def cellsOf(cells: DataFrame): Seq[Int] =
+    collectDistinct(cells).map(_.getInt(0)).sorted
+
+  /** Each store's routed cells of `shared`, in order, from ONE collect
+    * ([[collectDistinct]]) over the union of the stores' (store, cell)
+    * pairs. A shared frame that already carries the stores' cell column
+    * (IVF's frozen-centroid assignment, one row per vec_id) is routed
+    * once for every store.
     */
   private def routes(shared: DataFrame, stores: Seq[CellStore])
       : Seq[Seq[Int]] = {
-    val routed = preRouted(shared, stores)
-    val pairs = (if (routed) Seq(shared -> stores.head.cellCol)
-      else stores.map(st => st.rows(shared) -> st.cellCol))
-      .zipWithIndex.map { case ((rows, cellCol), i) =>
-        rows.select(lit(i).as("s"), col(cellCol).cast("int").as("c")) }
-      .reduce(_ union _).distinct().collect()
+    val routed = stores.forall(st => shared.columns.contains(st.cellCol))
+    val routing = if (routed) Seq(shared -> stores.head.cellCol)
+      else stores.map(st => st.rows(shared) -> st.cellCol)
+    val pairs = collectDistinct(routing.zipWithIndex
+        .map { case ((rows, cellCol), i) =>
+          rows.select(lit(i).as("s"), col(cellCol).cast("int").as("c")) }
+        .reduce(_ union _))
       .map(r => r.getInt(0) -> r.getInt(1))
     stores.indices.map { i =>
       val s = if (routed) 0 else i

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import TransformParser.TransformError
-import VerbSupport.{intOption, spreadForCpu, CosineDefaults}
+import VerbSupport.{intOption, exactFirst, spreadForCpu, CosineDefaults}
 
 /** Stored-index build + maintenance surface, extracted from
   * [[TransformParser]] in round 13: the INDEX verb family
@@ -1297,7 +1297,6 @@ private[graft] object IndexMaintenance {
       named(key) // must exist on every method (see scaladoc)
       val onField = named(onCol)
       val spark = primary.sparkSession
-      val par = spark.sparkContext.defaultParallelism
       val maintWord = if (append) "APPEND" else "DELETE"
       // APPEND/DELETE pre-flight: a clear error beats Spark's "path does
       // not exist" mid-job — and the artifact's meta supplies the cell
@@ -1372,11 +1371,9 @@ private[graft] object IndexMaintenance {
           // distinct on (th, txt) — a pure HashAggregate (th determines
           // txt), not the SortAggregate a first(txt) buffer would force
           // on every index build
-          val reps = spreadForCpu(primary,
-              primary.select(xxhash64(col(onField.name)).as("th"),
-                col(onField.name).as("txt")))
-            .distinct()
-            .repartition(par)
+          val reps = exactFirst(primary.select(
+            xxhash64(col(onField.name)).as("th"),
+            col(onField.name).as("txt")), "th")
           val sh0 = NearDup.shingled(reps, "th", "txt")
           val (cc, tch) =
             if (delete) (metaCells.get, NearDup.bandStoreDelete(dir, sh0))
@@ -1442,16 +1439,14 @@ private[graft] object IndexMaintenance {
           // degenerate vectors (null/empty/zero/NaN/Inf norm) leave the
           // index exactly as they leave every cosine probe side — they
           // can never verify, so storing them would only add dead bytes
-          val vf = spreadForCpu(primary,
-              primary.select(col(onField.name).cast("array<double>").as("v")))
+          val vf = primary
+            .select(col(onField.name).cast("array<double>").as("v"))
             .where(col("v").isNotNull && size(col("v")) > 0)
             .withColumn("nrm", graft.functions.Vectors.l2norm(col("v")))
             .where(col("nrm") > 0 && !isnan(col("nrm")) &&
               col("nrm") < lit(Double.PositiveInfinity))
-          val reps = vf.withColumn("vh", xxhash64(col("v")))
-            .select(col("vh"), col("v"), col("nrm")).distinct()
-            .select(col("vh").as("id"), col("v"), col("nrm"))
-            .repartition(par)
+          val reps = exactFirst(vf.select(xxhash64(col("v")).as("id"),
+            col("v"), col("nrm")), "id")
           val (cosCc, cosTch) =
             if (delete) (metaCells.get, VecKnn.cosineStoreDelete(dir, reps))
             else if (append)
@@ -1475,11 +1470,9 @@ private[graft] object IndexMaintenance {
           if (onField.dataType != StringType) throw TransformError(
             s"INDEX METHOD TYPO ON ${onField.name} must be string, got " +
               onField.dataType.simpleString)
-          val reps = spreadForCpu(primary,
-              primary.select(col(onField.name).as("txt")))
-            .where(col("txt").isNotNull).distinct()
-            .select(xxhash64(col("txt")).as("id"), col("txt"))
-            .repartition(par)
+          val reps = exactFirst(primary.select(col(onField.name).as("txt"))
+            .where(col("txt").isNotNull)
+            .select(xxhash64(col("txt")).as("id"), col("txt")), "id")
           val (typoCc, typoTch) =
             if (delete) (metaCells.get, NearDup.typoStoreDelete(dir, reps))
             else if (append)

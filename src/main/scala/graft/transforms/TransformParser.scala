@@ -579,19 +579,19 @@ object TransformParser {
       val cText = named(corpus, corpusName, textCol)
       named(corpus, corpusName, key) // corpus key must exist for symmetry
       val par = batch.sparkSession.sparkContext.defaultParallelism
-      val bKeyed = spreadForCpu(batch, batch.select(col(bKey).as("id"),
-          col(bText).as("txt"), xxhash64(col(bText)).as("th")))
+      val bKeyed = batch.select(col(bKey).as("id"), col(bText).as("txt"),
+          xxhash64(col(bText)).as("th"))
         .localCheckpoint(false)
       // exact-first collapse as a DISTINCT on (hash, text) — rows in a
       // th-group are identical by construction, so this equals the old
-      // groupBy(th).agg(first(txt)) but stays a pure HashAggregate with
-      // map-side partial agg (first() over a string buffer disqualifies
-      // hash aggregation and forced an external sort of the corpus —
-      // the round-8 hier-IVF lesson applied to every verb-layer site)
-      val bReps = bKeyed.select(col("th"), col("txt")).distinct()
-        .repartition(par) // AQE would coalesce below the CPU stage
+      // groupBy(th).agg(first(txt)) but stays a pure HashAggregate
+      // (first() over a string buffer disqualifies hash aggregation and
+      // forced an external sort of the corpus — the round-8 hier-IVF
+      // lesson applied to every verb-layer site)
+      val bReps = exactFirst(bKeyed.select(col("th"), col("txt")), "th")
       val shB = NearDup.shingled(bReps, "th", "txt")
-      // corpus reps keyed by text hash too — the id never surfaces
+      // corpus reps keyed by text hash too — the id never surfaces; a
+      // corpus collapse keeps its map-side distinct (see exactFirst)
       val cReps = spreadForCpu(corpus, corpus.select(
           xxhash64(col(cText)).as("cth"), col(cText).as("txt")))
         .distinct()
@@ -642,15 +642,13 @@ object TransformParser {
             s"NEARDEDUP: unknown column $n in $batchName"))
       val bKey = named(key)
       val bText = named(textCol)
-      val par = batch.sparkSession.sparkContext.defaultParallelism
-      val bKeyed = spreadForCpu(batch, batch.select(col(bKey).as("id"),
-          col(bText).as("txt"), xxhash64(col(bText)).as("th")))
+      val bKeyed = batch.select(col(bKey).as("id"), col(bText).as("txt"),
+          xxhash64(col(bText)).as("th"))
         .localCheckpoint(false)
       // distinct-on-(th, txt) = the hash-agg exact-first collapse (see
       // buildAgainst) — the probe side of the stored index must not pay
       // a corpus-wide external sort just to dedupe its batch
-      val bReps = bKeyed.select(col("th"), col("txt")).distinct()
-        .repartition(par)
+      val bReps = exactFirst(bKeyed.select(col("th"), col("txt")), "th")
       val shB = NearDup.shingled(bReps, "th", "txt")
       val (b, r) = bandsRows.getOrElse(NearDup.autoBands(threshold))
       val matched = NearDup.minhashCrossMatchesStored(batch.sparkSession,
@@ -681,13 +679,11 @@ object TransformParser {
       val bKey = batch.schema.find(_.name.equalsIgnoreCase(key))
         .map(_.name).getOrElse(throw TransformError(
           s"NEARDEDUP: unknown column $key in $batchName"))
-      val par = batch.sparkSession.sparkContext.defaultParallelism
-      val bKeyed = spreadForCpu(batch, vecFrame(batch, batchName))
+      val bKeyed = vecFrame(batch, batchName)
         .withColumn("vh", xxhash64(col("v")))
         .localCheckpoint(false)
-      val bReps = bKeyed.select(col("vh"), col("v"), col("nrm")).distinct()
-        .select(col("vh").as("id"), col("v"), col("nrm"))
-        .repartition(par)
+      val bReps = exactFirst(bKeyed.select(col("vh").as("id"), col("v"),
+          col("nrm")), "id")
         .localCheckpoint(false)
       // absent TABLES/BITS adopt the ARTIFACT's geometry (meta is the
       // source of truth — the INDEX verb derives bits from the corpus,
@@ -714,13 +710,12 @@ object TransformParser {
       val batch = sources.getOrElse(batchName.toUpperCase,
         throw TransformError(s"unknown NEARDEDUP source $batchName"))
       val (bKey, bTextName) = typoCols(batch, batchName)
-      val par = batch.sparkSession.sparkContext.defaultParallelism
-      val bKeyed = spreadForCpu(batch, batch.select(col(bKey).as("id"),
-          col(bTextName).as("txt"), xxhash64(col(bTextName)).as("th")))
+      val bKeyed = batch.select(col(bKey).as("id"), col(bTextName).as("txt"),
+          xxhash64(col(bTextName)).as("th"))
         .where(col("txt").isNotNull)
         .localCheckpoint(false)
-      val bReps = bKeyed.select(col("th").as("id"), col("txt")).distinct()
-        .repartition(par)
+      val bReps = exactFirst(bKeyed.select(col("th").as("id"), col("txt")),
+          "id")
         .localCheckpoint(false)
       val matched = NearDup.typoCrossMatchesStored(batch.sparkSession,
         base, bReps).toDF("th")
@@ -860,15 +855,15 @@ object TransformParser {
           s"NEARDEDUP: unknown column $key in $batchName"))
       val (t2, b2) = tablesBits.getOrElse(CosineDefaults)
       val par = batch.sparkSession.sparkContext.defaultParallelism
-      val bKeyed = spreadForCpu(batch, vecFrame(batch, batchName))
+      val bKeyed = vecFrame(batch, batchName)
         .withColumn("vh", xxhash64(col("v")))
         .localCheckpoint(false)
       // rep checkpoints: each side feeds cosineCrossMatches' bucket
       // frame AND its rerank join (same multi-consumer rationale as
-      // buildSelfCosine's reps)
-      val bReps = bKeyed.select(col("vh"), col("v"), col("nrm")).distinct()
-        .select(col("vh").as("id"), col("v"), col("nrm"))
-        .repartition(par)
+      // buildSelfCosine's reps); the corpus collapse keeps its map-side
+      // distinct (see exactFirst)
+      val bReps = exactFirst(bKeyed.select(col("vh").as("id"), col("v"),
+          col("nrm")), "id")
         .localCheckpoint(false)
       val cReps = spreadForCpu(corpus, vecFrame(corpus, corpusName))
         .withColumn("vh", xxhash64(col("v")))
@@ -1017,13 +1012,13 @@ object TransformParser {
       // batch collapse: verdicts compute once per distinct string and
       // fan back through the hash (keyed feeds the rep agg AND the
       // fan-back → checkpoint; each rep frame now feeds its variant
-      // fan-out AND the candidate-sized text rejoin → checkpoint too)
-      val bKeyed = spreadForCpu(batch, batch.select(col(bKey).as("id"),
-          col(bTextName).as("txt"), xxhash64(col(bTextName)).as("th")))
+      // fan-out AND the candidate-sized text rejoin → checkpoint too);
+      // the corpus collapse keeps its map-side distinct (see exactFirst)
+      val bKeyed = batch.select(col(bKey).as("id"), col(bTextName).as("txt"),
+          xxhash64(col(bTextName)).as("th"))
         .where(col("txt").isNotNull)
         .localCheckpoint(false)
-      val bReps = bKeyed.select(col("th"), col("txt")).distinct()
-        .repartition(par)
+      val bReps = exactFirst(bKeyed.select(col("th"), col("txt")), "th")
         .localCheckpoint(false)
       val cReps = spreadForCpu(corpus,
           corpus.select(col(cTextName).as("txt")))
@@ -1354,9 +1349,9 @@ object TransformParser {
             if (cField.dataType != StringType) throw TransformError(
               s"KNN METHOD JACCARD ON ${cField.name} must be string, " +
                 s"got ${cField.dataType.simpleString} (corpus)")
-            // the corpus side: the INDEX build's own exact-first
-            // collapse (distinct on (th, txt) — th determines txt, a
-            // pure HashAggregate)
+            // the corpus side: an exact-first collapse (distinct on
+            // (th, txt) — th determines txt, a pure HashAggregate) that
+            // keeps its map-side distinct (see exactFirst)
             val shC = NearDup.shingled(
               spreadForCpu(cDf,
                 cDf.select(xxhash64(col(cField.name)).as("th"),

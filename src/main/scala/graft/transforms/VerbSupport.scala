@@ -1,6 +1,7 @@
 package graft.transforms
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import TransformParser.{KnnVerb, NearDedupVerb, TransformError}
 import VerbSupport.{CosineDefaults, intOption}
@@ -41,8 +42,8 @@ trait Verb {
 /** Shared verb-grammar and frame-prep helpers, extracted from
   * [[TransformParser]] (round 14, mechanical move): the top-level
   * clause splitters the verb parsers share, the bounded option parses,
-  * and the CPU-spread guard the shingle/minhash/dot-product stages
-  * apply before fan-out work.
+  * the CPU-spread guard the shingle/minhash/dot-product stages apply
+  * before fan-out work, and the exact-first collapse.
   */
 private[transforms] object VerbSupport {
 
@@ -103,6 +104,32 @@ private[transforms] object VerbSupport {
     if (small || unknown || scanCapped) projected.repartition(par)
     else projected
   }
+
+  /** EXACT-FIRST collapse of an INDEX or NEARDEDUP batch: one row per
+    * distinct row of `rows`, whose column `hash` is a hash of the row's
+    * content, `defaultParallelism` tasks wide. One hash exchange on
+    * `hash` both spreads the CPU stage that follows and meets the
+    * distinct's clustering, so the collapse is one HashAggregate over
+    * that exchange and AQE leaves its width alone (a repartition to a
+    * fixed count is never coalesced): one job under the checkpoint that
+    * follows. A map-side distinct's exchange is coalesced below the CPU
+    * stage and needs a repartition after it, a second job. `rows` needs
+    * no spread of its own when it only projects and hashes.
+    *
+    * The aggregate runs after the exchange, so every input row is
+    * shuffled and every copy of a text lands in the same task. Against
+    * a map-side distinct that costs more bytes once exact duplicates
+    * pass half the input, and one heavily repeated text loads one task.
+    * The inputs measured so far hold under 1% exact duplicates
+    * (BASELINE.md, "Exact duplicates at the collapse"); a highly
+    * duplicated batch is unmeasured. The corpus-side collapses of
+    * NEARDEDUP AGAINST and KNN JACCARD keep their map-side distinct for
+    * that reason.
+    */
+  private[transforms] def exactFirst(rows: DataFrame, hash: String)
+      : DataFrame =
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism,
+      col(hash)).distinct()
 
   /** Bounded integer option parse: the verb grammars match `\d+`, which
     * admits values beyond Int.MaxValue — surface those as TransformError

@@ -1,7 +1,17 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+  RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression tests: the *shape* of key plans is part of the
   * 100 TB contract (pushdown to the parquet scan, broadcast for dimension
@@ -992,6 +1002,80 @@ class PlanSpec extends AnyFunSuite {
     // sandwich (an external sort of the corpus per statement)
     assert(!p.contains("SortAggregate"),
       s"exact-first collapse must stay a hash aggregate:\n$p")
+  }
+
+  /** The exact-first collapses — a HashAggregate grouping on exactly
+    * (`hash`, `text`) — in the final plans of every query `body` runs,
+    * each with its plan's exchanges and the exchanges below it. The
+    * collapse runs under a checkpoint, so its plan is caught from the
+    * query execution listener and walked through AQE's query stages.
+    */
+  private def collapses(hash: String, text: String)(body: => Unit)
+      : Seq[(Seq[ShuffleExchangeExec], Seq[ShuffleExchangeExec])] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    object Stages extends AdaptiveSparkPlanHelper
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      Stages.collect(p) { case e: ShuffleExchangeExec => e }
+    plans.asScala.toSeq.flatMap { p =>
+      Stages.collectFirst(p) {
+        case a: HashAggregateExec
+            if a.groupingExpressions.map(_.name) == Seq(hash, text) => a
+      }.map(a => (exchanges(p), exchanges(a)))
+    }
+  }
+
+  test("exact-first collapse is one hash exchange on the content hash: " +
+      "INDEX LSH batch prep and q148's stored-probe batch") {
+    import spark.implicits._
+    // one round-robin spread, a distinct's exchange and a repartition
+    // were three AQE jobs under the checkpoint; the collapse's own hash
+    // exchange on the content hash spreads the CPU stage and meets the
+    // distinct's clustering, so the aggregate needs no second exchange
+    def check(what: String,
+        found: Seq[(Seq[ShuffleExchangeExec], Seq[ShuffleExchangeExec])])
+        : Unit = {
+      assert(found.nonEmpty, s"$what: no exact-first collapse was planned")
+      found.foreach { case (all, below) =>
+        assert(!all.exists(_.outputPartitioning
+            .isInstanceOf[RoundRobinPartitioning]),
+          s"$what: no round-robin spread around the collapse:\n" +
+            all.mkString("\n"))
+        assert(below.size == 1 && (below.head.outputPartitioning match {
+            case HashPartitioning(Seq(a: Attribute), _) => a.name == "th"
+            case _ => false
+          }), s"$what: one exchange, hashpartitioning(th), below the " +
+            s"collapse:\n${below.mkString("\n")}")
+      }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_planspec_ef")
+    graft.queries.Advanced.registerTmpDir(dir)
+    val pq = dir.resolve("a.parquet").toString
+    (1 to 40).map(i => (i.toLong, s"document ${i % 30} about topic " +
+        s"${i % 7} with words w${i % 5} and tail"))
+      .toDF("id", "txt").write.parquet(pq)
+    check("INDEX LSH", collapses("th", "txt") {
+      graft.engine.Aql.run(spark,
+        s"""CONNECTION 'D' (DRIVER = 'file', FILE = '$pq',
+           |  FORMAT = 'parquet')
+           |TRANSFORM 'T' FROM CONNECTION D (
+           |  INDEX ON txt KEY id METHOD LSH THRESHOLD 0.5 CELLS 8
+           |    INTO '${dir.resolve("lsh")}'
+           |) INTO CONSOLE""".stripMargin)
+      ()
+    })
+    check("q148", collapses("th", "txt") {
+      SparkEntry.queries("q148_aql_neardedup_stored_verb")(spark, sfDir)
+      ()
+    })
   }
 
   test("stored COSINE/TYPO probes keep the anti-join shape, never all-pairs") {

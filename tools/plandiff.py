@@ -9,8 +9,8 @@ Run-specific text is normalized before comparing: temp paths
 (`/tmp/graft_*<digits>`), Catalyst expression ids (`#<n>`), the session
 counters a plan prints (exchange `plan_id=<n>`, `RDD[<n>]`, lambda
 variables `x_<n>`), the call site of a checkpointed scan
-(`<File>.scala:<line>`) and the write-job UUID in data file names
-(`part-<task>-<uuid>`). Prints a unified diff per differing query and
+(`<File>.scala:<line>`) and, in data file names, the task attempt id
+and the write's UUID (`part-<task>-[<attempt>-]<uuid>`). Prints a unified diff per differing query and
 the queries that match only after normalization. Exits 1 on any
 difference, or on a query present on one side only; 0 otherwise.
 """
@@ -26,7 +26,7 @@ RULES = [
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(lambda \w+?_)\d+"), r"\1N"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
-    (re.compile(r"(part-\d+-)[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"),
+    (re.compile(r"(part-\d+-)(\d+-)?[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"),
      r"\1UUID"),
 ]
 
